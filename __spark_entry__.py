@@ -278,10 +278,10 @@ def _q_knn_join_indexed(spark, sf_dir):
 
 def _q_knn_join(spark, sf_dir):
     """Bulk ANN: top-5 neighbors for each of the first 5 vectors —
-    multi-table banded sign-LSH (4 bands × 4 bits) + salted pre-top-k,
-    no unbounded window (the oracle replays the simple equivalent:
-    candidates sharing ≥1 band, global per-query top-k — the band-level
-    pre-top-k is lossless)."""
+    multi-table banded sign-LSH (4 bands × 4 bits) + per-bucket GEMM
+    top-k, no unbounded window (the oracle replays the simple
+    equivalent: candidates sharing ≥1 band, global per-query top-k —
+    the bucket-level pre-top-k is lossless)."""
     from doccrawler_spark.ops.similarity import knn_join
 
     emb = _doc(spark, sf_dir, "embeddings")
@@ -369,64 +369,39 @@ def _q_chunk_documents(spark, sf_dir):
     closed form holds for ARBITRARY driver text — an un-sanitized doc
     containing heading/fence markers or leading '#' lines would chunk
     differently than the closed form predicts."""
-    from doccrawler_spark.ops.dedup import (
-        _ARROW_MIN_BYTES,
-        _fan_out,
-        _plan_bytes,
-    )
-    from doccrawler_spark.pipeline import chunk_pages
-
-    docs = _doc(spark, sf_dir, "documents")
-    if _plan_bytes(docs) < _ARROW_MIN_BYTES:
-        # small corpus: the extra Python stage costs more than the
-        # single-task JVM regex it avoids — keep the expr synthesis
-        body = F.concat(
-            F.lit("x"),
-            F.trim(F.regexp_replace("text", "[^a-zA-Z0-9]+", " ")),
-        )
-        md = F.concat(
-            F.lit("# Guide\n"), body, F.lit("\n## Usage\n"), body
-        )
-        return chunk_pages(docs.select(
-            F.col("doc_id").cast("string").alias("url"),
-            F.col("source").alias("site_id"),
-            F.col("source").alias("base_url"),
-            md.alias("text"),
-        )).select(
-            "url", "site_id", "chunk_ix",
-            F.length("chunked_data").alias("chunk_chars"), "is_summary",
-        ).orderBy("url", "chunk_ix")
+    from doccrawler_spark.ops.dedup import _fan_out
+    from doccrawler_spark.pipeline import CHUNKS_SCHEMA, _chunk_frames
 
     # markdown synthesis in Python workers (r9): the JVM
     # regexp_replace form ran in the single-file scan task (and
     # parallel JVM regex measured slower than one thread — the
     # exact_dedup pathology), while re.sub in fanned-out workers is a
     # C regex in separate processes.  Identical strings: the replace
-    # leaves only ASCII alnum+space, so strip()==trim().
+    # leaves only ASCII alnum+space, so strip()==trim().  NULL text
+    # gives NULL markdown, as the oracle's 'x' || NULL does.  The
+    # synthesized frames feed chunk_pages' loop in the SAME Python
+    # stage: one fan-out, no second exchange of the ~2x-body markdown.
     def _synth(batches):
         import re as _re
 
-        import pandas as pd
-
         pat = _re.compile(r"[^a-zA-Z0-9]+")
         for pdf in batches:
-            body = ["x" + pat.sub(" ", t).strip() for t in pdf["text"]]
-            yield pd.DataFrame({
-                "url": pdf["url"], "site_id": pdf["site_id"],
-                "base_url": pdf["base_url"],
-                "text": [f"# Guide\n{b}\n## Usage\n{b}" for b in body],
-            })
+            body = ["x" + pat.sub(" ", t).strip()
+                    if isinstance(t, str) else None for t in pdf["text"]]
+            yield pdf.assign(text=[
+                f"# Guide\n{b}\n## Usage\n{b}" if b is not None else None
+                for b in body
+            ])
 
-    raw = docs.select(
+    raw = _doc(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("url"),
         F.col("source").alias("site_id"),
         F.col("source").alias("base_url"),
         "text",
     )
-    crawled_like = _fan_out(raw, "url").mapInPandas(
-        _synth, "url string, site_id string, base_url string, text string"
-    )
-    return chunk_pages(crawled_like).select(
+    return _fan_out(raw, "url").mapInPandas(
+        lambda batches: _chunk_frames(_synth(batches)), CHUNKS_SCHEMA
+    ).select(
         "url", "site_id", "chunk_ix", F.length("chunked_data").alias("chunk_chars"),
         "is_summary",
     ).orderBy("url", "chunk_ix")

@@ -8,7 +8,7 @@ frontier crawl (fetch-join, extract UDF, discover, dedup, snapshots).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1   (query corpus)
-  SPARK_GRAFT_CPUS     default 32                     (local[N])
+  SPARK_GRAFT_CPUS     default os.cpu_count()         (local[N])
   BENCH_PAGES          default 240000                 (crawl corpus)
   BENCH_SKIP_QUERIES   set to skip the per-query section
   BENCH_CRAWL_REPEATS  default 3   (max crawl legs, best-of)
@@ -93,14 +93,11 @@ def run_crawl_bench(spark, n_pages: int) -> dict:
         # tracks the production gate instead of a duplicated literal.
         bloom_min_seen=0 if os.environ.get("BENCH_BLOOM_FORCE")
         else CrawlConfig.bloom_min_seen,
-        # resize-cost A/B (r7): BENCH_BLOOM_BITS_PER_URL big enough to
-        # cross several pow-4 auto-size steps mid-crawl, then compare
-        # BENCH_BLOOM_UNCHAINED=1 (full from-history rebuild per step,
-        # the pre-r7 behavior) against the default generation-chained
-        # resizes (O(new-delta)) on adjacent legs
+        # resize cost (r7): BENCH_BLOOM_BITS_PER_URL big enough to
+        # cross several pow-4 auto-size steps mid-crawl, each opening
+        # a new generation (O(new-delta))
         bloom_bits_per_url=int(os.environ.get(
             "BENCH_BLOOM_BITS_PER_URL", CrawlConfig.bloom_bits_per_url)),
-        bloom_chained=not os.environ.get("BENCH_BLOOM_UNCHAINED"),
     )
     # the host shows bursty CPU steal (up to 10x on identical jobs) —
     # PROBE-GATED best-of-N (the repo's artifact protocol, BASELINE.md):
@@ -232,8 +229,8 @@ def run_http_fetch_bench(spark, cpus: int) -> dict:
     so the number is the orchestration seam's overhead, not the
     network's.  Reported OUTSIDE the headline total (the bench crawl
     uses the table fetcher; this is the other S3 implementation).
-    Deeper cells (per-host sweep, 8-vs-32 pair) live in
-    scripts/http_fetch_probe.py → BENCH/HTTP_FETCH.md."""
+    The banked per-host sweep and 8-vs-32 pair are in
+    BENCH/HTTP_FETCH.md."""
     from pyspark.sql import functions as F
 
     from doccrawler_spark.fetch import HttpFetchConfig, http_fetcher
@@ -305,7 +302,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from doccrawler_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_pages = int(os.environ.get("BENCH_PAGES", "240000"))
 

@@ -9,7 +9,7 @@ query when asked — the plan evidence committed under ``plans/r09/``.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   default /root/testdata/sf1.0
-  SPARK_GRAFT_CPUS     default 32
+  SPARK_GRAFT_CPUS     default os.cpu_count()
   BENCH_QUERY_REPEATS  default 2 (same best-of protocol as bench.py)
   BENCH_ONLY           comma-separated query-name filter
   BENCH_PLANS_DIR      if set, write <dir>/<query>_<suffix>.txt explains
@@ -30,7 +30,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from doccrawler_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     shuffle_parts = int(os.environ.get("BENCH_SHUFFLE_PARTITIONS", "64"))
     spark = get_spark(app_name="doccrawler_bench_extra",

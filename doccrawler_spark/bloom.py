@@ -35,12 +35,13 @@ are bulk/batched, and the or-merge of two Bloom arrays is associative
 — which is what makes the incremental snapshot protocol one zip_with.
 A cuckoo filter's displacement loops would need row-level state.
 
-Resizing (r7): the filter is GENERATION-CHAINED by default (scalable
-Bloom) — when the auto sizer steps m, new deltas open a new
-generation at the new size (rows keyed by their own ``m_bits``) and
-the probe consults every generation, so a resize costs O(new-delta)
-instead of a full frontier-history rescan; see
-:func:`split_maybe_chained` and ``crawl.fold_bloom``.
+Resizing (r7): the filter is GENERATION-CHAINED (scalable Bloom) —
+when the auto sizer steps m, new deltas open a new generation at the
+new size (rows keyed by their own ``m_bits``) and the probe consults
+every generation, so a resize costs O(new-delta) instead of a full
+frontier-history rescan; see :func:`split_maybe_chained` and
+``crawl.fold_bloom``.  A single-generation filter is the classic
+one-array Bloom.
 """
 
 from __future__ import annotations
@@ -151,32 +152,6 @@ def bloom_delta(
     )
 
 
-def bloom_merge(frames: list[DataFrame], m_bits: int) -> DataFrame:
-    """OR-merge bloom tables (associative, order-free): union → fold
-    each bucket's arrays with zip_with(bitwiseOR)."""
-    m_words = m_bits // 64
-    if len(frames) == 1:
-        return frames[0]
-    allf = frames[0]
-    for f in frames[1:]:
-        allf = allf.unionByName(f)
-    zero = F.transform(
-        F.sequence(F.lit(0), F.lit(m_words - 1)),
-        lambda _: F.lit(0).cast("bigint"),
-    )
-    return allf.groupBy("bucket").agg(
-        F.aggregate(
-            F.collect_list("words"),
-            zero,
-            lambda acc, w: F.zip_with(acc, w, lambda a, b: a.bitwiseOR(b)),
-        ).alias("words"),
-        # params are identical across merged frames (callers guarantee
-        # it via params_match before merging) — min is just a
-        # deterministic carry-through
-        *[F.min(c).alias(c) for c in _PARAM_COLS],
-    )
-
-
 def bloom_merge_gens(frames: list[DataFrame]) -> DataFrame:
     """OR-merge bloom tables that may span several GENERATIONS (rows
     with different ``m_bits``): arrays only ever fold within their own
@@ -219,102 +194,6 @@ def chain_params_match(bloom_df: DataFrame, n_buckets: int, k: int) -> bool:
     return (len(rows) == 1 and rows[0]["k"] == k
             and rows[0]["n_buckets"] == n_buckets
             and rows[0]["fmt"] == _BLOOM_FMT)
-
-
-def params_match(
-    bloom_df: DataFrame, n_buckets: int, m_bits: int, k: int
-) -> bool:
-    """True iff a committed bloom snapshot was built with exactly the
-    given parameters AND the current hash format — across EVERY row.
-    A chained snapshot (bloom_chained=True, the default) commits
-    multi-generation rows with mixed ``m_bits``; a flat-mode resume
-    over such a snapshot must NOT pass just because the one sampled
-    row happened to match (probing old-generation arrays at the new m
-    yields silent false negatives).  Pre-fmt snapshots (no param
-    columns) report False → the caller rebuilds from frontier history,
-    which is always safe (cost ∝ |history|, correctness guaranteed).
-    One LIMIT-2 driver-side read of a tiny distinct — resume-time
-    only."""
-    if not set(_PARAM_COLS) <= set(bloom_df.columns):
-        return False
-    rows = bloom_df.select(*_PARAM_COLS).distinct().limit(2).collect()
-    if not rows:  # empty filter: vacuously compatible
-        return True
-    if len(rows) != 1:  # mixed params (e.g. a generation chain)
-        return False
-    r = rows[0]
-    return (r["m_bits"] == m_bits and r["k"] == k
-            and r["n_buckets"] == n_buckets and r["fmt"] == _BLOOM_FMT)
-
-
-def maybe_seen_sql(
-    url_col: str, words_col: str, m_bits: int, k: int
-) -> str:
-    """SQL boolean: ALL k bits set (possibly seen → must take the exact
-    anti-join); any bit clear OR no bloom row for the bucket (NULL
-    words) → definitely never enqueued.  element_at is 1-based; every
-    index < m_bits/64 by construction, so dense arrays never
-    range-error under ANSI."""
-    tests = []
-    for i in range(k):
-        p = _pos_sql(url_col, i, m_bits)
-        tests.append(
-            f"((element_at({words_col}, CAST(({p}) DIV 64 AS INT) + 1)"
-            f" >> CAST(({p}) % 64 AS INT)) & 1) = 1"
-        )
-    return "coalesce(" + " AND ".join(tests) + ", false)"
-
-
-def split_maybe(
-    candidates: DataFrame, bloom: DataFrame,
-    n_buckets: int, m_bits: int, k: int, url_col: str = "url",
-) -> tuple[DataFrame, DataFrame]:
-    """(definitely_new, maybe_seen): the Bloom ROUTING primitive, shared
-    by both seen-dedup branches.  A candidate with any probe bit clear
-    (or no bloom row for its bucket) has definitely never been enqueued;
-    the rest — true dups + the fp rate — must take the exact check.
-    The Bloom only routes rows, it never decides membership."""
-    if m_bits <= 0 or k <= 0 or n_buckets <= 0:
-        # pmod(hash, 0) is NULL, which routes every row to NEITHER
-        # branch — a silently row-dropping filter.  Callers sizing via
-        # the auto path (CrawlConfig.bloom_m_bits=0) must resolve the
-        # actual m (crawl._bloom_m_bits) before probing.
-        raise ValueError(
-            f"split_maybe needs positive bloom params, got "
-            f"m_bits={m_bits} k={k} n_buckets={n_buckets}")
-    # probe needs only (bucket, words); the persisted param columns
-    # (and anything else a future snapshot carries) stay out of the join
-    bloom = bloom.select("bucket", "words")
-    cb = candidates.withColumn(
-        "_bloom_bucket", F.expr(bucket_expr(url_col, n_buckets))
-    )
-    jb = cb.join(
-        bloom.withColumnRenamed("bucket", "_bloom_bucket"),
-        "_bloom_bucket", "left",
-    ).withColumn(
-        "_maybe", F.expr(maybe_seen_sql(url_col, "words", m_bits, k))
-    )
-    definitely_new = jb.filter(~F.col("_maybe")).drop(
-        "_bloom_bucket", "words", "_maybe"
-    )
-    maybe = jb.filter(F.col("_maybe")).drop("_bloom_bucket", "words", "_maybe")
-    return definitely_new, maybe
-
-
-def prefilter_new(
-    candidates: DataFrame, bloom: DataFrame, seen: DataFrame,
-    n_buckets: int, m_bits: int, k: int, url_col: str = "url",
-) -> DataFrame:
-    """The F8 split over the bucketed seen TABLE: definitely-new
-    candidates pass straight through; maybe-seen candidates anti-join
-    the exact seen table.  Result set is EXACTLY ``candidates ANTI
-    seen``."""
-    definitely_new, maybe = split_maybe(
-        candidates, bloom, n_buckets, m_bits, k, url_col
-    )
-    return definitely_new.unionByName(
-        maybe.join(seen, url_col, "left_anti")
-    )
 
 
 # ---- generation-chained probe (r7) ---------------------------------
@@ -364,7 +243,12 @@ def split_maybe_chained(
     structs), so the candidate side still pays a single join no matter
     how many resizes the crawl has been through; the probe tests
     k·generations bits per row, all inside codegen.  With a single
-    generation this routes rows exactly like :func:`split_maybe`."""
+    generation this is the classic single-array Bloom probe.
+
+    The Bloom only ROUTES rows, it never decides membership: a
+    candidate with any probe bit clear in every generation (or no
+    bloom row for its bucket) has definitely never been enqueued; the
+    rest — true dups + the fp rate — must take the exact check."""
     if k <= 0 or n_buckets <= 0:
         raise ValueError(
             f"split_maybe_chained needs positive bloom params, got "
@@ -396,8 +280,10 @@ def prefilter_new_chained(
     candidates: DataFrame, bloom: DataFrame, seen: DataFrame,
     n_buckets: int, k: int, url_col: str = "url",
 ) -> DataFrame:
-    """:func:`prefilter_new` over a generation-chained bloom.  Result
-    set is EXACTLY ``candidates ANTI seen`` — the chain only routes."""
+    """The F8 split over the seen table: definitely-new candidates pass
+    straight through; maybe-seen candidates anti-join the exact seen
+    table.  Result set is EXACTLY ``candidates ANTI seen`` — the chain
+    only routes."""
     definitely_new, maybe = split_maybe_chained(
         candidates, bloom, n_buckets, k, url_col
     )

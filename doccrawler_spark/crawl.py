@@ -87,24 +87,24 @@ class CrawlConfig:
     # number of probe bits
     bloom_prefilter: bool = True
     # 0 = auto: per-bucket array sized from the CURRENT seen-set size
-    # (see _bloom_m_bits — amortized power-of-two doubling via the
-    # params-drift rebuild); >0 pins it explicitly
+    # (see _bloom_m_bits — pow-4 steps, each opening a new
+    # generation); >0 pins it explicitly
     bloom_m_bits: int = 0
     bloom_k: int = 6
     # auto-sizing targets: ~10 bits/url ≈ 0.8% fp at k=6, with 4×
-    # growth headroom so a resize (full rebuild from history) happens
-    # only each time the seen set quadruples
+    # growth headroom so a resize happens only each time the seen set
+    # quadruples
     bloom_bits_per_url: int = 10
     bloom_headroom: int = 4
-    # generation-chained resizes (scalable Bloom, r7): when the auto
-    # sizer steps m, new deltas open a NEW generation at the new size
-    # — O(new-delta) — instead of rebuilding the whole filter from
-    # frontier history (at 10^10 seen URLs that rescan is the most
-    # expensive maintenance op in the engine).  The full rebuild is
-    # retained for k/bucketing/hash-format drift (those change bit
-    # positions inside a generation) and for bloom_chained=False.
-    # fold_bloom() collapses an old chain at vacuum time.
-    bloom_chained: bool = True
+    # resizes are generation-chained (scalable Bloom, r7): when the
+    # auto sizer steps m, new deltas open a NEW generation at the new
+    # size — O(new-delta) — instead of rebuilding the whole filter
+    # from frontier history (at 10^10 seen URLs that rescan is the
+    # most expensive maintenance op in the engine).  The full rebuild
+    # is kept for k/bucketing/hash-format drift (those change bit
+    # positions inside a generation); fold_bloom() collapses an old
+    # chain at vacuum time.
+    #
     # self-maintaining fold cadence (r8): when the committed chain
     # reaches this many generations, the crawl loop folds it back to
     # one generation sized for today's seen set.  Generations only
@@ -431,21 +431,20 @@ def _bloom_m_bits(cfg: CrawlConfig, seen_size: int) -> int:
     and capped at 2^27 (16 MB/bucket row — past that, raise
     seen_buckets instead of the row size).  The rounding makes m a
     step function of seen growth: it changes only when the seen set
-    outgrows capacity, the params-drift machinery in _ensure_bloom
-    then rebuilds the filter from frontier history — cost ∝ |seen|,
-    paid O(log |seen|) times over a crawl (amortized doubling).  A
-    FIXED m would instead saturate to all-ones at 10^10 URLs and pass
-    everything to the exact check.
+    outgrows capacity, and _ensure_bloom then opens a new generation
+    at the new size (O(new-delta)), O(log |seen|) times over a crawl.
+    A FIXED m would instead saturate to all-ones at 10^10 URLs and
+    pass everything to the exact check.
 
     Sizes step in powers of FOUR (even exponents): power-of-two steps
     would resize on every doubling of the seen set no matter the
     headroom (headroom only phase-shifts the crossing), while pow-4
-    stepping halves the number of full rebuilds between 10^6 and
-    10^10 URLs for at most a transient 4× memory overshoot — and a
-    rebuild at 10^10 is a rescan of all frontier history, by far the
-    expensive side of that trade (measured: forcing the filter on at
-    240k seen with min_seen=0 costs ~35% of a bench round, resize
-    rebuilds included — the 10^6 gate + this cadence bound that)."""
+    stepping halves the number of generations between 10^6 and 10^10
+    URLs — and so the probe width and the summed fp rate the chain
+    carries until fold_bloom collapses it — for at most a transient
+    4× memory overshoot (measured: forcing the filter on at 240k seen
+    with min_seen=0 costs ~35% of a bench round — the 10^6 gate +
+    this cadence bound that)."""
     if cfg.bloom_m_bits:
         return cfg.bloom_m_bits
     per_bucket = (cfg.bloom_bits_per_url * cfg.bloom_headroom
@@ -466,12 +465,11 @@ def _ensure_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
     atomic-manifest protocol as every table, so a torn build is
     invisible and simply rebuilt).
 
-    ``m_bits`` sizes the NEW deltas.  Under ``cfg.bloom_chained`` a
-    step of the auto sizer just opens a new GENERATION at the new size
-    (rows keyed by their own m_bits; probe = any-generation), so a
-    resize costs O(new-delta); the full from-history rebuild fires
-    only on k/bucketing/hash-format drift.  Unchained, any param
-    mismatch — resizes included — rebuilds the whole filter."""
+    ``m_bits`` sizes the NEW deltas.  A step of the auto sizer just
+    opens a new GENERATION at the new size (rows keyed by their own
+    m_bits; probe = any-generation), so a resize costs O(new-delta);
+    the full from-history rebuild fires only on k/bucketing/
+    hash-format drift."""
     from . import bloom as B
 
     if m_bits is None:
@@ -486,14 +484,8 @@ def _ensure_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
     latest_df = None
     if latest is not None:
         latest_df = catalog.read(spark, B.BLOOM_TABLE, latest)
-        compatible = (
-            B.chain_params_match(latest_df, cfg.seen_buckets,
-                                 cfg.bloom_k)
-            if cfg.bloom_chained else
-            B.params_match(latest_df, cfg.seen_buckets,
-                           m_bits, cfg.bloom_k)
-        )
-        if not compatible:
+        if not B.chain_params_match(latest_df, cfg.seen_buckets,
+                                    cfg.bloom_k):
             # resume with changed bloom params (or a pre-fmt snapshot):
             # OR-merging incompatible bit patterns would yield FALSE
             # NEGATIVES (NULL-padded zip_with words / probes of
@@ -515,9 +507,7 @@ def _ensure_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
             B.bloom_delta(delta, cfg.seen_buckets, m_bits,
                           cfg.bloom_k)
         )
-    merged = (B.bloom_merge_gens(frames) if cfg.bloom_chained
-              else B.bloom_merge(frames, m_bits))
-    catalog.write(merged, B.BLOOM_TABLE, upto_round)
+    catalog.write(B.bloom_merge_gens(frames), B.BLOOM_TABLE, upto_round)
     # read BACK from the committed snapshot: downstream consumers get a
     # plain pruned parquet scan (with accurate size stats for the
     # broadcast decision), not the whole merge lineage re-executed
@@ -578,7 +568,7 @@ def fold_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
         )
         for r in rounds
     ]
-    catalog.write(B.bloom_merge(frames, m), B.BLOOM_TABLE, upto)
+    catalog.write(B.bloom_merge_gens(frames), B.BLOOM_TABLE, upto)
     return catalog.read(spark, B.BLOOM_TABLE, upto)
 
 
@@ -839,15 +829,9 @@ def run_round(
             if bloom_df is not None:
                 from . import bloom as B
 
-                if cfg.bloom_chained:
-                    definitely_new, maybe = B.split_maybe_chained(
-                        firsts, bloom_df, cfg.seen_buckets, cfg.bloom_k,
-                    )
-                else:
-                    definitely_new, maybe = B.split_maybe(
-                        firsts, bloom_df, cfg.seen_buckets,
-                        bloom_m, cfg.bloom_k,
-                    )
+                definitely_new, maybe = B.split_maybe_chained(
+                    firsts, bloom_df, cfg.seen_buckets, cfg.bloom_k,
+                )
             else:
                 definitely_new, maybe = None, firsts
             hits = seen.join(F.broadcast(maybe.select("url")), "url", "left_semi")
@@ -878,16 +862,10 @@ def run_round(
                 # the bucket key instead).
                 from . import bloom as B
 
-                if cfg.bloom_chained:
-                    new_items = B.prefilter_new_chained(
-                        firsts, bloom_df, seen_tbl, cfg.seen_buckets,
-                        cfg.bloom_k,
-                    )
-                else:
-                    new_items = B.prefilter_new(
-                        firsts, bloom_df, seen_tbl, cfg.seen_buckets,
-                        bloom_m, cfg.bloom_k,
-                    )
+                new_items = B.prefilter_new_chained(
+                    firsts, bloom_df, seen_tbl, cfg.seen_buckets,
+                    cfg.bloom_k,
+                )
             else:
                 new_items = firsts.join(seen_tbl, "url", "left_anti")
 
@@ -1035,8 +1013,7 @@ def crawl(
         # decides whether the chain earned its vacuum-cadence collapse;
         # the fold itself is the rewrite-safe catalog.write (fresh dir
         # + manifest swap)
-        if (cfg.bloom_fold_gens and cfg.bloom_chained
-                and cfg.bloom_prefilter):
+        if cfg.bloom_fold_gens and cfg.bloom_prefilter:
             from . import bloom as B
 
             br = catalog.latest_round(B.BLOOM_TABLE)

@@ -5,8 +5,7 @@ below the politeness ceilings the fetch benchmarks measure — so the
 benchmark servers are a farm of independent *processes*, each printing
 its ephemeral port on stdout, with the 127.0.0.x host identities
 sharded across them.  This module is the single home of that plumbing
-(bench.py's ``http_fetch`` cell, ``scripts/http_fetch_probe.py``, and
-``scripts/crawl_http_probe.py`` all spawn through it) so a fix to the
+(bench.py's ``http_fetch`` cell spawns through it) so a fix to the
 server or the farm lifecycle reaches every measurement.
 
 Server sources are plain strings run via ``python -c`` (the farm must

@@ -19,12 +19,11 @@ from pyspark.sql import functions as F
 from ..functions import tokens_col
 
 
-def _norm_text(col="text"):
-    return F.trim(F.lower(F.regexp_replace(col, "[^a-zA-Z0-9]+", " ")))
-
-
 def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst's optimizer size estimate (Long.Max sentinel → huge)."""
+    """Catalyst's optimizer size estimate of a plan — the one size
+    probe behind every plan-side stats gate (``_fan_out``, knn_join's
+    salted windows).  Unknown stats come back as Catalyst's Long.Max
+    sentinel, and a failed probe as 2^60: both read as "huge"."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -33,64 +32,43 @@ def _plan_bytes(df: DataFrame) -> int:
         return 1 << 60
 
 
-# input-size cutoff between the Arrow kernels and the all-JVM expr
-# paths (r9): below it the Python stages' fixed costs (worker
-# dispatch, fan-out exchange, one pandas frame per bucket group)
-# outweigh the per-row win — measured at sf0.1 the expr paths are
-# ~2x faster, at sf1.0 the Arrow paths are 2-7x faster.  Same
-# stats-gate family as _fan_out and knn_join's salted windows.
-_ARROW_MIN_BYTES = 2 << 20
-
-
-def exact_dedup(documents: DataFrame, impl: str = "auto") -> DataFrame:
+def exact_dedup(documents: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) docs: keeper + group size.
 
-    ``impl='auto'`` (r9 default) picks 'arrow' for inputs past the
-    ``_ARROW_MIN_BYTES`` stats gate, else 'expr' — identical results,
-    different physical plan.
+    The normalize+md5 fingerprint — the measured cost of this
+    operator — runs as re.sub + hashlib in Python workers.  The JVM
+    regexp_replace rebuilds the string through
+    Matcher.appendReplacement per doc and measured SLOWER with 32
+    threads than with one on this allocation pattern (heap contention;
+    the same pathology tokens_col's docstring records), while Python
+    workers are separate processes with a C regex.  Digests equal the
+    SQL ``md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9]+', ' '))))``:
+    the replace runs BEFORE lower, so lower/trim only ever see ASCII
+    alnum+space, and md5 is over the same UTF-8 bytes.  NULL text has
+    a NULL fingerprint (SQL's md5(NULL)), so NULL docs form their own
+    group instead of merging with empty ones."""
+    import re as _re
 
-    ``impl='arrow'``: the normalize+md5 fingerprint — the
-    measured cost of this operator — runs as re.sub + hashlib in
-    Python workers.  The JVM regexp_replace rebuilds the string
-    through Matcher.appendReplacement per doc and measured SLOWER
-    with 32 threads than with one on this allocation pattern (heap
-    contention; the same pathology tokens_col's docstring records),
-    while Python workers are separate processes with a C regex.
-    Byte-identical digests: the replace runs BEFORE lower, so lower/
-    trim only ever see ASCII alnum+space, and md5 is over the same
-    UTF-8 bytes.  ``impl='expr'`` keeps the all-JVM projection."""
-    if impl == "auto":
-        impl = "arrow" if _plan_bytes(documents) >= _ARROW_MIN_BYTES \
-            else "expr"
-    if impl == "arrow":
-        import re as _re
+    d_t = dict(documents.dtypes)["doc_id"]
+    pat = _re.compile(r"[^a-zA-Z0-9]+")
 
-        d_t = dict(documents.dtypes)["doc_id"]
-        pat = _re.compile(r"[^a-zA-Z0-9]+")
+    def run(batches):
+        import hashlib as _hl
 
-        def run(batches):
-            import hashlib as _hl
+        import pandas as pd
 
-            import pandas as pd
+        for pdf in batches:
+            fps = [
+                _hl.md5(pat.sub(" ", t).lower().strip().encode("utf-8"))
+                .hexdigest() if isinstance(t, str) else None
+                for t in pdf["text"]
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "fingerprint": fps})
 
-            for pdf in batches:
-                fps = [
-                    _hl.md5(
-                        pat.sub(" ", t if isinstance(t, str) else "")
-                        .lower().strip().encode("utf-8")
-                    ).hexdigest()
-                    for t in pdf["text"]
-                ]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                    "fingerprint": fps})
-
-        fp = _fan_out(documents, "doc_id").select(
-            "doc_id", "text"
-        ).mapInPandas(run, f"doc_id {d_t}, fingerprint string")
-    else:
-        fp = documents.select(
-            "doc_id", F.md5(_norm_text()).alias("fingerprint")
-        )
+    fp = _fan_out(documents, "doc_id").select(
+        "doc_id", "text"
+    ).mapInPandas(run, f"doc_id {d_t}, fingerprint string")
     return (
         fp.groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_docs"))
@@ -111,16 +89,11 @@ def _fan_out(df: DataFrame, *cols: str) -> DataFrame:
     untouched — no gratuitous full shuffle of 100 TB."""
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # stats unavailable → assume small, spread it
-        size = 0
+    size = _plan_bytes(df)
     # parquet splits inputs at spark.sql.files.maxPartitionBytes
     # (default 128 MB); a >= n*that input already fans out on read.
-    # Absurd sizes are Catalyst's Long.Max "unknown" sentinel — treat
-    # as small (a wasted repartition of a small table beats one task).
+    # Absurd sizes are the "unknown" sentinels — treat as small (a
+    # wasted repartition of a small table beats one task).
     if n * (128 << 20) <= size < (1 << 50):
         return df
     try:
@@ -252,10 +225,9 @@ def _shingle_key_arrays_arrow(
 
 def _shingle_key_arrays(
     documents: DataFrame, n: int = 3, key_fn: str = "md5",
-    engine: str = "arrow",
 ) -> DataFrame:
-    """(doc_id, skey BIGINT) — word-n-gram shingle keys computed WITHOUT
-    ever materializing a shingle string.
+    """(doc_id, sk ARRAY<BIGINT>) — each doc's distinct word-n-gram
+    shingle keys, computed WITHOUT ever materializing a shingle string.
 
     r2 measured the md5-per-shingle path allocation-bound (stage scaling
     0.25 at 8→32 cores: 3 string allocations per shingle row).  Now each
@@ -268,38 +240,28 @@ def _shingle_key_arrays(
     DuckDB oracle replays the identical integer math, so results stay
     bit-equal either way.
 
-    ``key_fn``: 'md5' (default) keeps the token base oracle-replayable;
+    ``key_fn``: 'md5' (default) keeps the token base oracle-replayable
+    and runs as the Arrow kernel :func:`_shingle_key_arrays_arrow`
+    (one memoized digest per DISTINCT token per worker; np.unique's
+    sort order vs array_distinct's first-occurrence order is invisible
+    to every consumer, which aggregates or explodes the set).
     'xxhash64' (bench/scale path) computes the base as a native 64-bit
-    digest with NO string allocation at all — same downstream math, not
-    SQL-oracle-replayable (DuckDB lacks xxhash64).
-
-    The md5 path runs as an Arrow kernel (r9): the JVM expression chain
-    recomputed one md5 digest per token OCCURRENCE (2.7M digests at
-    sf1.0 for a 31-token vocabulary), where the Python worker memoizes
-    the 60-bit base per DISTINCT token and builds each doc's key array
-    with vectorized int64 multiply/xor — identical keys (same digest
-    prefix, same modulus, same positional constants; np.unique's
-    sort-order difference vs array_distinct's first-occurrence order
-    is invisible to every consumer, which aggregates or explodes the
-    set).  ``engine='expr'`` keeps the all-JVM chain."""
-    if key_fn == "md5" and engine == "arrow":
+    digest in the JVM with NO string allocation at all — same
+    downstream math, not SQL-oracle-replayable (DuckDB lacks
+    xxhash64)."""
+    if key_fn == "md5":
         return _shingle_key_arrays_arrow(documents, n)
+    if key_fn != "xxhash64":
+        raise ValueError(f"unknown shingle key_fn {key_fn!r}")
     toked = _fan_out(documents, "doc_id").select(
         "doc_id", tokens_col("text").alias("toks")
     )
-    if key_fn == "xxhash64":
-        tkey = lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
-    elif key_fn == "md5":
-        tkey = lambda t: (
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-            % F.lit(_MERSENNE)
-        )
-    else:
-        raise ValueError(f"unknown shingle key_fn {key_fn!r}")
     # base array materialized as its OWN column first: referencing an
     # unaliased transform(...) inside the next lambda would re-run it
     # once per sequence element (no CSE across lambda scopes)
-    based = toked.select("doc_id", F.transform("toks", tkey).alias("bk"))
+    based = toked.select("doc_id", F.transform(
+        "toks", lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
+    ).alias("bk"))
     consts = _pos_consts(n)
 
     def _skey(i):
@@ -310,8 +272,7 @@ def _shingle_key_arrays(
 
     # Guard short docs: sequence(0, size-n) DESCENDS when size < n.  A
     # doc with fewer than n tokens has zero shingles (oracle: empty
-    # range).  Distinct per doc on the KEY array (the oracle dedups the
-    # same keys, so collision behavior matches bit-for-bit).
+    # range).  Distinct per doc on the KEY array.
     sk = F.when(
         F.size("bk") >= n,
         F.array_distinct(
@@ -319,17 +280,6 @@ def _shingle_key_arrays(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     return based.select("doc_id", _opt_barrier(sk).alias("sk"))
-
-
-def _shingle_keys(
-    documents: DataFrame, n: int = 3, key_fn: str = "md5"
-) -> DataFrame:
-    """(doc_id, skey BIGINT) — the exploded posting-list form of
-    :func:`_shingle_key_arrays` (self-joins want rows; minhash wants
-    the array form to avoid the explode+shuffle entirely)."""
-    return _shingle_key_arrays(documents, n, key_fn).select(
-        "doc_id", F.explode("sk").alias("skey")
-    )
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -343,137 +293,20 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _ngram_jaccard_prefix(
-    documents: DataFrame, n: int, threshold: float,
-    max_df: int | None, key_fn: str, pair_budget: int | None,
-) -> DataFrame:
-    """Prefix-filtered exact n-gram Jaccard (r9) — the PPJoin/All-Pairs
-    candidate generation (Bayardo et al. 2007, Xiao et al. 2008)
-    applied to the posting-list join.
-
-    The r8 shape joined the FULL capped posting list against itself:
-    at sf1.0 that is 127M candidate join rows aggregated into 114M
-    distinct (doc_a, doc_b) groups for 25 surviving pairs — the
-    aggregation of pairs that can never pass the threshold was ~75% of
-    the operator.  Prefix filtering is the standard exact fix: under
-    any GLOBAL total order on shingles (here: ascending document
-    frequency, ties by key — rarest first), two docs with
-    jaccard ≥ t MUST share a shingle within their first
-    |d| − ⌈t·|d|⌉ + 1 shingles, so only those prefixes enter the
-    self-join.  Because prefixes hold each doc's RAREST shingles, the
-    candidate volume collapses (measured 127M → ~1M join rows at
-    sf1.0).  Survivors are verified EXACTLY: n_common =
-    |array_intersect| of the two docs' capped key arrays — the same
-    count the join+groupBy produced — and the same
-    round-then-threshold filter runs on the same |A|+|B|−|A∩B| union.
-
-    Exactness notes: (1) the intersection is over shingles with
-    2 ≤ df ≤ max_df exactly as before (df=1 shingles cannot be
-    common; df>max_df shingles were excluded from n_common by the
-    capped join — sizes n_a/n_b stay FULL counts, both unchanged);
-    (2) the jaccard ≥ t bound gives n_common ≥ t·max(n_a,n_b) ≥
-    t·|capped|, which is the overlap bound the prefix theorem needs;
-    (3) the prefix length uses floor(t·s + 1e-9) — one element LONGER
-    than the tight ⌈⌉ form whenever t·s is fractional and immune to
-    double-rounding at integer boundaries, so it can only widen the
-    candidate set; (4) the size-ratio prune (jaccard ≤ min/max) is
-    relaxed by a whole unit for the same double-safety reason.
-    ``pair_budget`` guards the PREFIX join's fan-out (the actual join
-    row count this shape generates)."""
-    spark = documents.sparkSession
-    arrays = _materialize(_shingle_key_arrays(documents, n, key_fn))
-    sh = arrays.select(
-        "doc_id", F.size("sk").alias("n_sh"), F.explode("sk").alias("skey")
-    )
-    dfs = sh.groupBy("skey").count()
-    keep = dfs.filter(F.col("count") > 1)
-    if max_df is not None:
-        keep = keep.filter(F.col("count") <= max_df)
-    shk = sh.join(keep, "skey")
-    # per-doc capped key array, globally ordered by (df asc, skey asc)
-    docagg = shk.groupBy("doc_id").agg(
-        F.first("n_sh").alias("n_sh"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(
-                F.col("count").alias("df"), F.col("skey")))),
-            lambda s: s["skey"],
-        ).alias("ck"),
-    ).localCheckpoint(eager=True)
-    p_len = F.greatest(
-        F.lit(1),
-        (F.size("ck")
-         - F.floor(F.lit(float(threshold)) * F.size("ck") + F.lit(1e-9))
-         + 1).cast("int"),
-    )
-    post = docagg.select(
-        "doc_id", "n_sh", F.explode(F.slice("ck", F.lit(1), p_len)).alias("skey")
-    )
-    if pair_budget is not None:
-        st = (post.groupBy("skey").count().filter(F.col("count") > 1)
-              .agg(
-                  F.sum(F.col("count").cast("double")
-                        * (F.col("count") - 1).cast("double") / 2)
-                  .alias("pairs"),
-                  F.max("count").alias("hottest"),
-              ).collect()[0])
-        total = int(st["pairs"] or 0)
-        if total > pair_budget:
-            raise ValueError(
-                f"ngram_jaccard_pairs: prefix shingles would generate "
-                f"{total:,} candidate join rows (> pair_budget="
-                f"{pair_budget:,}; hottest prefix shingle df="
-                f"{st['hottest']:,}, max_df={max_df}).  Lower max_df, "
-                f"raise pair_budget, or use the minhash_verified path, "
-                f"whose LSH banding bounds candidates regardless of "
-                f"shingle heat."
-            )
-    post = post.repartition(
-        spark.sparkContext.defaultParallelism, "skey"
-    )
-    a = post.alias("a")
-    b = post.alias("b")
-    t = float(threshold)
-    cand = (
-        a.join(b, (F.col("a.skey") == F.col("b.skey"))
-               & (F.col("a.doc_id") < F.col("b.doc_id"))
-               # jaccard ≤ min/max size-ratio prune, relaxed by 1 so
-               # double rounding can never drop a boundary pair
-               & (F.col("a.n_sh") >= F.lit(t) * F.col("b.n_sh") - 1)
-               & (F.col("b.n_sh") >= F.lit(t) * F.col("a.n_sh") - 1))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    da = docagg.select(F.col("doc_id").alias("doc_a"),
-                       F.col("n_sh").alias("n_a"), F.col("ck").alias("ck_a"))
-    db = docagg.select(F.col("doc_id").alias("doc_b"),
-                       F.col("n_sh").alias("n_b"), F.col("ck").alias("ck_b"))
-    return (
-        cand.join(da, "doc_a").join(db, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("ck_a", "ck_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def _round6_half_up(x):
-    """numpy HALF_UP 6-decimal rounding matching Spark's ``F.round``
-    (np.round is half-to-even — a jaccard of exactly 77/128 =
-    0.6015625 would differ).  floor(x·1e6 + 0.5)/1e6 reproduces
-    BigDecimal HALF_UP for these rationals: exact 7th-decimal halves
-    are dyadic (…/2^7·c) whose ×1e6 product is exactly representable,
-    and non-half values of small-denominator rationals sit ≥ ~2.5e-9
-    from a half boundary — far beyond the ~1e-10 multiply error."""
+    """numpy 6-decimal rounding, half away from zero — Spark's
+    ``F.round`` (HALF_UP) and DuckDB's ``round``, where np.round is
+    half-to-even (a jaccard of exactly 77/128 = 0.6015625 would
+    differ).  Sign-symmetric, so negative cosines round like their
+    magnitude: sign(x)·floor(|x|·1e6 + 0.5)/1e6.  For the jaccard
+    rationals this is exact: 7th-decimal halves are dyadic
+    (…/2^7·c) whose ×1e6 product is exactly representable, and
+    non-half values of small-denominator rationals sit ≥ ~2.5e-9 from
+    a half boundary — far beyond the ~1e-10 multiply error.  NaN (a
+    zero-norm cosine) stays NaN."""
     import numpy as np
 
-    return np.floor(x * 1e6 + 0.5) / 1e6
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
 
 def _ngram_pair_gemm_scorer(threshold: float):
@@ -590,16 +423,12 @@ def ngram_jaccard_pairs(
     measured blast radius and the knobs to turn instead of launching
     a job that cannot finish.  ``None`` disables either guard.
 
-    ``shape`` picks the physical plan — results identical in all of
-    them: ``'auto'`` (default, r9) runs the blocked-matmul
-    pair-counting shape (:func:`_ngram_pair_gemm_scorer`) whenever the
-    capped posting list is block-replicable (≤ 64M rows, ≤ 4·10⁹ pair
+    ``shape`` picks the physical plan — results identical in both:
+    ``'auto'`` (default, r9) runs the blocked-matmul pair-counting
+    shape (:func:`_ngram_pair_gemm_scorer`) whenever the posting rows
+    it would ship are block-replicable (≤ 64M rows, ≤ 4·10⁹ pair
     contributions) and falls back to the join otherwise; ``'gemm'`` /
-    ``'join'`` force a shape; ``'prefix'`` runs the PPJoin-style
-    prefix-filtered join (:func:`_ngram_jaccard_prefix` — wins on
-    zipfian-df corpora where prefixes hold rare shingles, loses on
-    flat-df corpora where every candidate survives to the verify
-    join).
+    ``'join'`` force a shape.
 
     Why blocked matmul is the r9 default: the join shape's cost is the
     pair AGGREGATION — at sf1.0, 127M join rows hash-aggregated into
@@ -612,10 +441,6 @@ def ngram_jaccard_pairs(
     B² block pairs (classic blocked-matmul communication trade), so
     the shape is gated to posting lists where that stays cheap, and
     B adapts to the measured pair count."""
-    if shape == "prefix":
-        return _ngram_jaccard_prefix(
-            documents, n, threshold, max_df, key_fn, pair_budget
-        )
     spark = documents.sparkSession
     # the materialized posting now carries the doc's FULL shingle count
     # on every row (union sizes for the in-worker jaccard; projected
@@ -639,8 +464,9 @@ def ngram_jaccard_pairs(
     shared_df = df_per_shingle.filter(surviving)
     # one tiny aggregate drives the budget guard AND the shape/block
     # sizing: Σ df·(df−1)/2 is the exact pair-contribution count both
-    # shapes perform, Σ df the capped posting rows the gemm shape
-    # would replicate; hottest is the max over ALL shingles so the
+    # shapes perform; Σ df over the surviving shingles and over ALL of
+    # them are the posting rows the gemm shape ships with and without
+    # the semi-join prune; hottest is the max over ALL shingles so the
     # gemm branch can tell whether the stop-shingle cap excludes
     # anything at all
     st = df_per_shingle.agg(
@@ -651,6 +477,7 @@ def ngram_jaccard_pairs(
         )).alias("pairs"),
         F.max("count").alias("hottest"),
         F.sum(F.when(surviving, F.col("count"))).alias("rows"),
+        F.sum("count").alias("all_rows"),
     ).collect()[0]
     total = int(st["pairs"] or 0)
     if pair_budget is not None and total > pair_budget:
@@ -662,24 +489,31 @@ def ngram_jaccard_pairs(
             f"use the minhash_verified path, whose LSH banding bounds "
             f"candidates regardless of shingle heat."
         )
+    # the gemm shape skips the semi-join when nothing exceeds the
+    # stop-shingle cap (see below) and then ships EVERY posting row,
+    # singletons included — gate and block sizing on what it ships
+    no_hot = max_df is None or int(st["hottest"] or 0) <= max_df
+    shipped = int(st["all_rows" if no_hot else "rows"] or 0)
     use_gemm = shape == "gemm" or (
         shape == "auto"
-        and int(st["rows"] or 0) <= 64_000_000
+        and shipped <= 64_000_000
         and total <= 4_000_000_000
     )
     if use_gemm:
         cores = spark.sparkContext.defaultParallelism
         import math as _math
 
-        if total < 4_000_000:
+        # a block pair's frame holds ~2·shipped/B posting rows: ≥ 1
+        # block per 2M shipped rows keeps one worker frame ≤ ~4M rows
+        if total < 4_000_000 and shipped <= 2_000_000:
             n_blocks = 1
         else:
             n_blocks = min(64, max(
                 _math.ceil(_math.sqrt(total / 2_000_000)),
                 _math.ceil(_math.sqrt(2 * cores)),
+                _math.ceil(shipped / 2_000_000),
             ))
         blk = F.pmod(F.xxhash64("doc_id"), F.lit(n_blocks)).alias("_blk")
-        no_hot = max_df is None or int(st["hottest"] or 0) <= max_df
         if no_hot:
             # nothing exceeds the stop-shingle cap, so the semi-join
             # would only strip SINGLETON shingles — and a singleton
@@ -766,7 +600,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc_id, sig ARRAY<BIGINT>[k]) — MinHash over word-n-gram
     shingles; hash family h_i(s) = (base(s)·(2i+1) + i·C) mod (2^31-1)
-    with base(s) = the integer shingle key (see _shingle_keys — one
+    with base(s) = the integer shingle key (see _shingle_key_arrays — one
     token digest + positional-XOR combine, no shingle strings).
 
     Plan shape (r3): NO explode, NO shuffle — each doc's signature is
@@ -920,109 +754,59 @@ def minhash_verified_pairs(
     )
 
 
-def simhash64(documents: DataFrame, impl: str = "auto") -> DataFrame:
+def simhash64(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash BIGINT) — 32-bit SimHash over unigram tokens.
 
-    ``impl='auto'`` (r9 default): 'arrow' past the ``_ARROW_MIN_BYTES``
-    stats gate, else 'expr' — identical results.
+    Per-bit majority vote: bit b of md5(token) contributes ±1 per
+    DISTINCT token; the sign of the sum sets bit b.  Kept at 32 bits so
+    the whole thing stays in exact integer arithmetic everywhere.
 
-    ``impl='arrow'``: the per-bit majority vote runs as a
-    vectorized numpy kernel in an Arrow batch — one md5 per DISTINCT
-    token per worker (the shared kernels.embed memo; the hash is the
-    same first-4-bytes-of-md5 the JVM chain computes), a (tokens×32)
-    bit matrix summed per doc.  The JVM expr path evaluated the
-    32-wide zip_with accumulator through interpreted HOF eval per
-    token (~48M interpreted ops at sf1.0).  Identical results: same
-    distinct-token set, same integer votes, same bit rule.
-    ``impl='expr'`` keeps the all-JVM single-pass aggregate below.
+    Plan shape (r9): NO explode, NO shuffle — one vectorized numpy
+    kernel per Arrow batch: one md5 per DISTINCT token per worker (the
+    shared kernels.embed memo; the hash is the first 4 bytes of md5,
+    as the oracle's ``substr(md5(tok), 1, 8)``), a (tokens×32) bit
+    matrix summed per doc, bit b set iff 2·count_b > n_tokens
+    (algebraically the vote_b = 2c_b − n > 0 majority).  The r4 JVM
+    form folded the same counts through a 32-wide zip_with accumulator
+    in interpreted HOF eval per token (~48M interpreted ops at
+    sf1.0); the r3 form exploded 32 bit-rows per token through a
+    (doc_id, bit) groupBy.  Docs with zero tokens (NULL, empty or
+    punctuation-only text) vanish from the output, as the oracle's
+    unnest of an empty token list yields no rows."""
+    import re as _re
 
-    Per-bit majority vote: bit b of md5(token) contributes ±1; the
-    sign of the sum sets bit b.  Kept at 32 bits so the whole thing
-    stays in exact integer arithmetic everywhere.
+    from ..kernels.embed import _token_hash
 
-    Plan shape (r4): NO explode, NO shuffle — the same per-doc
-    array-arithmetic trick as the minhash rework.  One md5 digest per
-    distinct token materialized as a per-doc hash array, then ONE
-    aggregate pass folds the array into 32 per-bit set-counts (a
-    32-long accumulator updated with zip_with), and bit b of the
-    simhash is ``2·count_b > n_tokens`` — algebraically the same
-    majority vote (vote_b = 2c_b − n > 0).  The r3 formulation
-    exploded 32 bit-rows per token through a (doc_id, bit) groupBy
-    (~32× the token count through one shuffle); an intermediate r4
-    draft ran 32 separate interpreted aggregate passes and measured
-    2.5× slower than this single-pass form at sf0.1 (1.26 s vs
-    0.50 s — the per-pass HOF dispatch dominates).  Bit-identical to
-    both and to the DuckDB oracle; docs with zero tokens vanish from
-    the output in all shapes (explode produced no rows; here an
-    explicit size filter)."""
-    if impl == "auto":
-        impl = "arrow" if _plan_bytes(documents) >= _ARROW_MIN_BYTES \
-            else "expr"
-    if impl == "arrow":
-        import re as _re
+    d_t = dict(documents.dtypes)["doc_id"]
+    tok_re = _re.compile(r"[a-z0-9]+")
 
-        from ..kernels.embed import _token_hash
+    def run(batches):
+        import numpy as np
+        import pandas as pd
 
-        d_t = dict(documents.dtypes)["doc_id"]
-        tok_re = _re.compile(r"[a-z0-9]+")
+        bitpos = np.arange(32, dtype=np.int64)
+        for pdf in batches:
+            ids, sims = [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                toks = set(tok_re.findall(text.lower())) \
+                    if isinstance(text, str) else ()
+                if not toks:
+                    continue
+                h = np.fromiter((_token_hash(t)[0] for t in toks),
+                                dtype=np.int64, count=len(toks))
+                cnt = ((h[:, None] >> bitpos) & 1).sum(axis=0)
+                sim = int(((2 * cnt > len(toks)).astype(np.int64)
+                           << bitpos).sum())
+                ids.append(doc_id)
+                sims.append(sim)
+            yield pd.DataFrame({
+                "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
+                "simhash": pd.Series(sims, dtype="int64"),
+            })
 
-        def run(batches):
-            import numpy as np
-            import pandas as pd
-
-            bitpos = np.arange(32, dtype=np.int64)
-            for pdf in batches:
-                ids, sims = [], []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    toks = set(tok_re.findall(text.lower())) \
-                        if isinstance(text, str) else ()
-                    if not toks:
-                        continue  # zero-token docs vanish (expr parity)
-                    h = np.fromiter((_token_hash(t)[0] for t in toks),
-                                    dtype=np.int64, count=len(toks))
-                    cnt = ((h[:, None] >> bitpos) & 1).sum(axis=0)
-                    sim = int(((2 * cnt > len(toks)).astype(np.int64)
-                               << bitpos).sum())
-                    ids.append(doc_id)
-                    sims.append(sim)
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(ids, dtype=pdf["doc_id"].dtype),
-                    "simhash": pd.Series(sims, dtype="int64"),
-                })
-
-        return _fan_out(documents, "doc_id").select(
-            "doc_id", "text"
-        ).mapInPandas(run, f"doc_id {d_t}, simhash bigint")
-    based = _fan_out(documents, "doc_id").select(
-        "doc_id", F.array_distinct(tokens_col("text")).alias("toks")
-    )
-    # hash array materialized as its OWN column (lambda-scope CSE rule:
-    # an unaliased transform referenced inside the vote aggregate
-    # would re-run the md5 pass per accumulator step)
-    hashed = based.select(
-        "doc_id",
-        F.transform(
-            "toks",
-            lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast(
-                "long"
-            ),
-        ).alias("hk"),
-    ).select("doc_id", _opt_barrier(F.col("hk")).alias("hk"))
-    counts = F.expr(
-        "aggregate(hk, array_repeat(0L, 32), (acc, x) -> "
-        "zip_with(acc, sequence(0L, 31L), (a, i) -> a + ((x >> i) & 1)))"
-    )
-    voted = hashed.filter(F.size("hk") > 0).select(
-        "doc_id",
-        F.size("hk").alias("n"),
-        _opt_barrier(counts).alias("c"),
-    )
-    sim = F.expr(
-        "aggregate(zip_with(c, sequence(0L, 31L), (cnt, i) -> "
-        "IF(2*cnt > n, shiftleft(1L, CAST(i AS INT)), 0L)), "
-        "0L, (a, x) -> a + x)"
-    )
-    return voted.select("doc_id", sim.alias("simhash"))
+    return _fan_out(documents, "doc_id").select(
+        "doc_id", "text"
+    ).mapInPandas(run, f"doc_id {d_t}, simhash bigint")
 
 
 def _band_keys(emb_col, n_bands: int, band_bits: int):
@@ -1047,16 +831,16 @@ def _band_keys(emb_col, n_bands: int, band_bits: int):
 
 
 def _neardup_bucket_scorer(threshold: float):
-    """Per-(band,key)-bucket pair scorer for the Arrow path of
+    """Per-(band,key)-bucket pair scorer of
     :func:`embedding_neardup_pairs`: the bucket's vectors are one
     float64 matrix, all within-bucket pair cosines are one chunked
     GEMM, and only pairs passing ``cosine ≥ threshold`` (rounded to 6
-    decimals BEFORE the compare, exactly like the expr path's
-    ``F.round(cos, 6)``) ever leave the Python worker.  Rows are
-    sorted by vec_id first so the strict upper triangle IS the
+    decimals HALF_UP BEFORE the compare, as SQL's ``round(cos, 6)``
+    — see :func:`_round6_half_up`) ever leave the Python worker.  Rows
+    are sorted by vec_id first so the strict upper triangle IS the
     ``vec_a < vec_b`` pair set; zero-norm vectors produce NaN cosines,
-    which fail the threshold compare and drop — the same semantics as
-    the expr path's try_divide→NULL→filter."""
+    which fail the threshold compare and drop, as a NULL cosine
+    does in SQL."""
 
     def score(pdf):
         import numpy as np
@@ -1083,7 +867,7 @@ def _neardup_bucket_scorer(threshold: float):
             for j0 in range(i0, m, CH):
                 B, bn, bid = M[j0:j0 + CH], nrm[j0:j0 + CH], vid[j0:j0 + CH]
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos6 = np.round((A @ B.T) / np.outer(an, bn), 6)
+                    cos6 = _round6_half_up((A @ B.T) / np.outer(an, bn))
                     mask = cos6 >= threshold  # NaN compares False
                 if i0 == j0:  # diagonal block: strict upper triangle
                     mask &= np.triu(
@@ -1101,7 +885,7 @@ def _neardup_bucket_scorer(threshold: float):
 
 def embedding_neardup_pairs(
     embeddings: DataFrame, threshold: float = 0.95,
-    n_bands: int = 4, band_bits: int = 8, score: str = "auto",
+    n_bands: int = 4, band_bits: int = 8,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold, blocked by banded
     sign-bit LSH buckets — candidate pairs collide in ≥1 of ``n_bands``
@@ -1110,84 +894,28 @@ def embedding_neardup_pairs(
     LSH recall semantics (a true pair that differs in every band is
     missed — more bands trade compute for recall).
 
-    ``score='auto'`` (default, r9): 'arrow' past the
-    ``_ARROW_MIN_BYTES`` stats gate (below it, one pandas frame per
-    tiny bucket group costs more than the interpreted cosines it
-    saves), else 'expr' — identical results.
-
-    ``score='arrow'``: each (band,key) bucket is scored
-    as ONE chunked numpy float64 GEMM via ``applyInPandas`` — the expr
-    path evaluated dot + both norms through Catalyst's INTERPRETED
-    higher-order-function eval per candidate pair (~192 interpreted
-    element-ops per pair at dim 64), which dominated the operator at
-    scale (measured 12.0 s → GEMM path at sf1.0; same r8 argument as
-    the knn_join GEMM scorer).  The threshold filter runs INSIDE the
-    worker, so only passing pairs cross the Arrow boundary, and both
-    paths round to 6 decimals before the compare, so results are
-    identical (the r8 knn GEMM precedent).  Bucket width is governed
-    by ``band_bits`` exactly as before — the scorer materializes one
-    bucket's vectors per task.  ``score='expr'`` keeps the all-JVM
-    shape."""
-    if score == "auto":
-        score = "arrow" if _plan_bytes(embeddings) >= _ARROW_MIN_BYTES \
-            else "expr"
-    if score == "arrow":
-        v_t = dict(embeddings.dtypes)["vec_id"]
-        banded = embeddings.select(
-            "vec_id", "embedding",
-            F.explode(
-                _band_keys(F.col("embedding"), n_bands, band_bits)
-            ).alias("bk"),
-        ).select("vec_id", "embedding", "bk.band", "bk.key")
-        scored = banded.groupBy("band", "key").applyInPandas(
-            _neardup_bucket_scorer(threshold),
-            f"vec_a {v_t}, vec_b {v_t}, cosine double",
-        )
-        # a pair colliding in several bands scores identically in each
-        # bucket — dedup on the pair key alone is value-stable
-        return scored.dropDuplicates(["vec_a", "vec_b"])
-    banded = _materialize(embeddings.select(
+    Each (band,key) bucket is scored as ONE chunked numpy float64 GEMM
+    via ``applyInPandas`` (r9, :func:`_neardup_bucket_scorer`).  The
+    r8 bucket self-join evaluated dot + both norms through Catalyst's
+    INTERPRETED higher-order-function eval per candidate pair (~192
+    interpreted element-ops per pair at dim 64), which dominated the
+    operator at scale (measured 12.0 s → GEMM path at sf1.0; same
+    argument as the knn_join GEMM scorer).  The threshold filter runs
+    INSIDE the worker, so only passing pairs cross the Arrow boundary,
+    and no candidate-pair relation is ever shuffled.  Bucket width is
+    governed by ``band_bits`` — the scorer materializes one bucket's
+    vectors per task."""
+    v_t = dict(embeddings.dtypes)["vec_id"]
+    banded = embeddings.select(
         "vec_id", "embedding",
-        F.explode(_band_keys(F.col("embedding"), n_bands, band_bits)).alias("bk"),
-    ).select("vec_id", "embedding", "bk.band", "bk.key"))
-    # singleton-bucket prune: a (band,key) held by one vector yields no pair
-    shared = (
-        banded.groupBy("band", "key").count()
-        .filter(F.col("count") > 1).select("band", "key")
+        F.explode(
+            _band_keys(F.col("embedding"), n_bands, band_bits)
+        ).alias("bk"),
+    ).select("vec_id", "embedding", "bk.band", "bk.key")
+    scored = banded.groupBy("band", "key").applyInPandas(
+        _neardup_bucket_scorer(threshold),
+        f"vec_a {v_t}, vec_b {v_t}, cosine double",
     )
-    banded = banded.join(shared, ["band", "key"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"),
-            F.col("a.embedding").alias("emb_a"), F.col("b.embedding").alias("emb_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    # cast float32 → double BEFORE multiplying so the arithmetic matches
-    # the (double-precision) DuckDB oracle bit-for-bit
-    dot = F.aggregate(
-        F.zip_with("emb_a", "emb_b",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0), lambda a_, x: a_ + x,
-        )
-    )
-    return (
-        cand
-        # try_divide: zero-norm embeddings (empty documents) have no
-        # cosine — NULL fails the threshold and the pair drops, where
-        # ANSI `/` would throw on the first empty page in the corpus
-        .withColumn("cosine", F.round(F.try_divide(
-            dot, norm(F.col("emb_a")) * norm(F.col("emb_b"))), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-    )
+    # a pair colliding in several bands scores identically in each
+    # bucket — dedup on the pair key alone is value-stable
+    return scored.dropDuplicates(["vec_a", "vec_b"])

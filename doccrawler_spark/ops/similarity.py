@@ -2,15 +2,20 @@
 label)``: brute-force cosine top-k (the exact baseline) and a
 sign-bucketed LSH variant (the scale path).
 
-Everything is JVM-native (zip_with/aggregate HOFs) — no Python in the
-scoring loop.  At cluster scale the brute-force path is a single
-map-side scan + TakeOrderedAndProject (per-partition top-k then merge,
-which Catalyst emits for orderBy+limit automatically)."""
+The per-query operators are JVM-native (zip_with/aggregate HOFs) — no
+Python in their scoring loop; the bulk ``knn_join`` scores each LSH
+bucket as one numpy GEMM in an Arrow worker, where per-pair
+interpreted HOF eval would dominate.  At cluster scale the
+brute-force path is a single map-side scan + TakeOrderedAndProject
+(per-partition top-k then merge, which Catalyst emits for
+orderBy+limit automatically)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import _plan_bytes, _round6_half_up
 
 
 def _dot(a, b):
@@ -657,7 +662,6 @@ def compact_index(spark, path: str, target_bytes: int = 128 << 20) -> dict:
 def knn_join(
     embeddings: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 4,
     n_tables: int = 4, salt: int = 16, salted: bool | None = None,
-    score: str = "arrow",
 ) -> DataFrame:
     """Bulk ANN: for every query vector, its top-k neighbors from the
     corpus.  queries: (q_id, q_emb ARRAY<FLOAT>).
@@ -670,46 +674,30 @@ def knn_join(
     target-candidates; with band keys as write-time cluster columns
     the join prunes to matching buckets).
 
-    No unbounded window anywhere: a salted per-(query, band) pre-top-k
-    caps every first-window partition at ~bucket/salt rows (same
-    two-phase trick as shuffle.topk_per_group), the per-(query, band)
-    merge sees ≤ salt·k rows, and the final per-query window sees
-    ≤ n_tables·k deduped candidates.  The pre-top-k is lossless: a
-    global-top-k candidate outranked by < k vectors globally is
-    outranked by < k inside any band bucket containing it.
+    Each (band,key) bucket is scored by :func:`_knn_gemm_topk` as one
+    numpy GEMM with a per-query top-k inside the bucket, so no bucket
+    ever yields more than |Q|·k rows and the final per-query window
+    sees ≤ n_tables·k deduped candidates.  The per-bucket top-k is
+    lossless: a global-top-k candidate outranked by < k vectors
+    globally is outranked by < k inside any band bucket containing it.
 
-    ``salted`` gates the pre-top-k PLAN-SIDE (r4, same stats gate
-    family as dedup._fan_out): the two extra windows exist to bound
-    per-task sort memory when a band bucket holds millions of rows,
-    but at small input they cost two full window passes for nothing
-    (r3 measured 2× at sf0.1).  Default (None) reads the corpus's
-    optimizer-estimated size: below one shuffle-partition's worth of
-    data (64 MB) every window partition is trivially task-sized, so
-    the join output feeds the final per-query window directly —
-    identical results (the pre-top-k is lossless by construction).
-    Unknown stats (Catalyst's Long.Max sentinel) keep the salted
-    scale shape — the conservative default for 100 TB inputs.
+    ``salted`` sub-splits hot buckets (r4, same stats gate family as
+    dedup._fan_out): a band bucket holding millions of rows would
+    otherwise land in one worker frame, but at small input the salt
+    replicates every query ``salt`` times for nothing.  Default (None)
+    reads the corpus's optimizer-estimated size: below one
+    shuffle-partition's worth of data (64 MB) every bucket is
+    trivially task-sized — identical results either way (the salted
+    pre-top-k is lossless by the same argument).  Unknown stats keep
+    the salted scale shape — the conservative default for 100 TB
+    inputs.
     """
     if salted is None:
-        salted = _plan_size_bytes(embeddings) >= (64 << 20)
+        salted = _plan_bytes(embeddings) >= (64 << 20)
 
     c = _banded(embeddings, "embedding", n_bits, n_tables)
     q = _banded(queries, "q_emb", n_bits, n_tables)
-    if score == "arrow":
-        return _knn_rank_arrow(q, c, k=k, salt=salt, salted=salted)
-    joined = q.join(c, ["band", "key"])
-    return _knn_rank(joined, k=k, salt=salt, salted=salted)
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimizer size estimate for a plan (Long.Max sentinel
-    → very large, keeping callers on their conservative branch)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 1 << 60
+    return _knn_gemm_topk(q, c, k=k, salt=salt, salted=salted)
 
 
 def _banded(df: DataFrame, vec_col: str, n_bits: int, n_tables: int,
@@ -734,14 +722,13 @@ def _banded(df: DataFrame, vec_col: str, n_bits: int, n_tables: int,
 
 
 def _make_bucket_scorer(k: int):
-    """Per-bucket scorer for :func:`_knn_rank_arrow`: queries × bucket
+    """Per-bucket scorer for :func:`_knn_gemm_topk`: queries × bucket
     candidates as one float64 GEMM (numpy, Arrow-batched), per-query
     top-k WITHIN the bucket before anything leaves the Python worker.
-    The within-bucket top-k is lossless for the global top-k by the
-    same argument as the salted pre-top-k windows (see
-    :func:`knn_join`); rounding to 6 decimals BEFORE selection keeps
-    the selection order identical to the expr path's
-    ``F.round(cos, 6)``."""
+    The within-bucket top-k is lossless for the global top-k (see
+    :func:`knn_join`); rounding to 6 decimals HALF_UP BEFORE selection
+    (SQL's ``round(cos, 6)``, :func:`dedup._round6_half_up`) fixes the
+    ranking ties exactly as the oracle sees them."""
 
     def score(qpdf, cpdf):
         import numpy as np
@@ -784,7 +771,7 @@ def _make_bucket_scorer(k: int):
             bn = np.sqrt((B * B).sum(axis=1))
             for A, qn, qid in a_chunks:
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos6 = np.round((A @ B.T) / np.outer(qn, bn), 6)
+                    cos6 = _round6_half_up((A @ B.T) / np.outer(qn, bn))
                 for i in range(len(qid)):
                     row = cos6[i]
                     idx = np.nonzero(np.isfinite(row))[0]  # zero-norm → drop
@@ -811,31 +798,26 @@ def _make_bucket_scorer(k: int):
     return score
 
 
-def _knn_rank_arrow(q: DataFrame, c: DataFrame, k: int, salt: int,
-                    salted: bool) -> DataFrame:
-    """Arrow-GEMM variant of :func:`_knn_rank` (r8, the default): the
-    expr path evaluates the cosine through Catalyst's INTERPRETED
-    higher-order-function path — ~2 µs per array element, i.e. hours
-    for the ~10^8 query×candidate pairs a bulk batch produces when the
-    corpus's embedding space is clustered and LSH buckets run hot
-    (measured: two executor threads burned 40+ CPU-minutes inside
+def _knn_gemm_topk(q: DataFrame, c: DataFrame, k: int, salt: int,
+                   salted: bool) -> DataFrame:
+    """The knn tail (r8): cosine-score banded queries against banded
+    candidates and emit the per-query top-k.  Catalyst evaluates a
+    cosine expression through its INTERPRETED higher-order-function
+    path — ~2 µs per array element, i.e. hours for the ~10^8
+    query×candidate pairs a bulk batch produces when the corpus's
+    embedding space is clustered and LSH buckets run hot (measured:
+    two executor threads burned 40+ CPU-minutes inside
     ``ArrayTransform.nullSafeEval`` on a 300k-doc crawl corpus).  Here
     each (band,key[,_salt]) bucket is scored as ONE numpy float64
     GEMM via cogrouped ``applyInPandas``, with per-query top-k applied
     inside the bucket, so (a) the per-element interpreter dispatch
     becomes a BLAS inner loop and (b) only ≤ |Q|·k rows per bucket
     ever leave the Python worker — the Arrow transfer is matrices in,
-    top-k out, never per-pair rows.  Results are identical to the expr
-    path: both round to 6 decimals before any selection (float64 GEMM
-    vs sequential-fold LSB drift cannot survive the rounding except
-    within ~1e-16 of a decimal boundary), and the within-bucket
-    pre-top-k is lossless by :func:`knn_join`'s argument.  ``salted``
-    sub-splits hot buckets by ``pmod(xxhash64(vec_id), salt)`` exactly
-    like the expr path's salted windows — queries replicate across the
-    salt range (a |Q|×salt explode, query side only) so every
-    sub-bucket still sees every probing query."""
-    from pyspark.sql import functions as F
-
+    top-k out, never per-pair rows.  ``salted`` sub-splits hot
+    buckets by ``pmod(xxhash64(vec_id), salt)`` — queries replicate
+    across the salt range (a |Q|×salt explode, query side only) so
+    every sub-bucket still sees every probing query.  Zero-norm
+    vectors (empty documents) have no cosine and never match."""
     q_t = dict(q.dtypes)["q_id"]
     v_t = dict(c.dtypes)["vec_id"]
     keys = ["band", "key"]
@@ -862,49 +844,9 @@ def _knn_rank_arrow(q: DataFrame, c: DataFrame, k: int, salt: int,
             .select("q_id", "vec_id", "rank", "cosine"))
 
 
-def _knn_rank(joined: DataFrame, k: int, salt: int, salted: bool) -> DataFrame:
-    """The shared knn tail: cosine-score a (band,key)-joined
-    query×candidate relation, optionally bound per-task sort memory
-    with the lossless salted per-(query, band) pre-top-k, dedup
-    multi-band collisions, and emit the per-query top-k.  See
-    :func:`knn_join` for the losslessness argument."""
-    from pyspark.sql import Window
-
-    # try_divide + NULL-drop: zero-norm vectors (empty documents'
-    # hash embeddings) have no cosine and never match — ANSI `/`
-    # would instead kill the whole job on the first empty page
-    cos = F.try_divide(
-        _dot(F.col("embedding"), F.col("q_emb")),
-        _norm(F.col("embedding")) * _norm(F.col("q_emb")),
-    )
-    joined = (joined.withColumn("cosine", F.round(cos, 6))
-              .filter(F.col("cosine").isNotNull()))
-    order = [F.desc("cosine"), F.asc("vec_id")]
-    w_q = Window.partitionBy("q_id").orderBy(*order)
-    if salted:
-        w_sub = Window.partitionBy("q_id", "band", "_salt").orderBy(*order)
-        w_band = Window.partitionBy("q_id", "band").orderBy(*order)
-        joined = (
-            joined
-            .withColumn("_salt", F.pmod(F.xxhash64("vec_id"), F.lit(salt)))
-            .withColumn("_srn", F.row_number().over(w_sub))
-            .filter(F.col("_srn") <= k)
-            .withColumn("_brn", F.row_number().over(w_band))
-            .filter(F.col("_brn") <= k)
-        )
-    return (
-        joined
-        .select("q_id", "vec_id", "cosine")
-        .dropDuplicates(["q_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w_q))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", "cosine")
-    )
-
-
 def knn_join_indexed(
     spark, path: str, queries: DataFrame, k: int = 5, salt: int = 16,
-    salted: bool | None = None, score: str = "arrow",
+    salted: bool | None = None,
 ) -> DataFrame:
     """Bulk ANN over a :func:`write_lsh_index` layout — the index-side
     search a 100-TB dedup pipeline actually runs (reference analogue:
@@ -922,7 +864,7 @@ def knn_join_indexed(
     the 4×4-bit default), not a data-scale quantity.  Directories are
     then addressed directly (see :func:`_read_partitions` — no full
     layout listing).  ``salted`` defaults from the PRUNED scan's
-    file-size stats, so small probe sets skip the pre-top-k windows
+    file-size stats, so small probe sets skip the salt split
     automatically while big buckets keep the bounded-memory shape."""
     meta = _read_index_meta(path)
     n_bits, n_tables = meta["n_bits"], meta["n_tables"]
@@ -947,13 +889,7 @@ def knn_join_indexed(
         c = _read_partitions(spark, path, dirs)
     if c is None:  # no probed bucket exists — no candidates at all
         emp = _read_index_empty(spark, path)
-        if score == "arrow":
-            return _knn_rank_arrow(q, emp, k=k, salt=salt, salted=False)
-        joined = q.join(emp, ["band", "key"])
-        return _knn_rank(joined, k=k, salt=salt, salted=False)
+        return _knn_gemm_topk(q, emp, k=k, salt=salt, salted=False)
     if salted is None:
-        salted = _plan_size_bytes(c) >= (64 << 20)
-    if score == "arrow":
-        return _knn_rank_arrow(q, c, k=k, salt=salt, salted=salted)
-    joined = q.join(c, ["band", "key"])
-    return _knn_rank(joined, k=k, salt=salt, salted=salted)
+        salted = _plan_bytes(c) >= (64 << 20)
+    return _knn_gemm_topk(q, c, k=k, salt=salt, salted=salted)

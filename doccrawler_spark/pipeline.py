@@ -29,28 +29,39 @@ CHUNKS_SCHEMA = (
 )
 
 
+def _chunk_frames(batches):
+    """The per-batch chunk loop of :func:`chunk_pages`: frames of
+    (url, site_id, base_url, text) in, CHUNKS_SCHEMA frames out.  A
+    NULL text is one NULL chunk (chunk_ix 0), as SQL's NULL
+    propagation gives — never an exception that fails the job."""
+    for pdf in batches:
+        rows = []
+        for r in pdf.itertuples(index=False):
+            if not isinstance(r.text, str):
+                rows.append({
+                    "url": r.url, "site_id": r.site_id, "chunk_ix": 0,
+                    "chunked_data": None, "metadata": None,
+                    "is_summary": False,
+                })
+                continue
+            for c in chunk_text(
+                r.text, href=r.url, base_url=r.base_url, site_id=r.site_id
+            ):
+                rows.append({
+                    "url": r.url, "site_id": r.site_id,
+                    "chunk_ix": c["chunk_ix"],
+                    "chunked_data": c["chunked_data"],
+                    "metadata": c["metadata"],
+                    "is_summary": False,
+                })
+        yield pd.DataFrame(rows) if rows else pd.DataFrame(
+            columns=["url", "site_id", "chunk_ix", "chunked_data",
+                     "metadata", "is_summary"]
+        )
+
+
 def chunk_pages(crawled: DataFrame) -> DataFrame:
     """Deterministic chunking of crawled pages (X5) via mapInPandas."""
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for c in chunk_text(
-                    r.text, href=r.url, base_url=r.base_url, site_id=r.site_id
-                ):
-                    rows.append({
-                        "url": r.url, "site_id": r.site_id,
-                        "chunk_ix": c["chunk_ix"],
-                        "chunked_data": c["chunked_data"],
-                        "metadata": c["metadata"],
-                        "is_summary": False,
-                    })
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                columns=["url", "site_id", "chunk_ix", "chunked_data",
-                         "metadata", "is_summary"]
-            )
-
     # fan out before the Python chunker (r9): a single-file/driver
     # corpus otherwise runs the whole per-doc chunk loop in ONE task
     # (measured 2.3 s single-threaded at sf1.0); multi-file crawl
@@ -59,7 +70,7 @@ def chunk_pages(crawled: DataFrame) -> DataFrame:
 
     return _fan_out(
         crawled.select("url", "site_id", "base_url", "text"), "url"
-    ).mapInPandas(run, CHUNKS_SCHEMA)
+    ).mapInPandas(_chunk_frames, CHUNKS_SCHEMA)
 
 
 def summary_chunks(crawled: DataFrame, top_n: int = 4) -> DataFrame:

@@ -7,6 +7,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_heap() -> str:
+    """Half the memory this process may use, in [1, 48] GiB: physical
+    RAM, or the cgroup limit when a tighter one is set.  A local-mode
+    driver holds every executor's heap, so a fixed default either
+    wastes a big box or gets OOM-killed on a small one."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            lim = f.read().strip()
+        if lim.isdigit():
+            mem = min(mem, int(lim))
+    except OSError:
+        pass
+    return f"{max(1024, min(48 << 10, (mem >> 20) // 2))}m"
+
+
 def get_spark(
     app_name: str = "doccrawler_spark",
     master: str | None = None,
@@ -18,9 +34,12 @@ def get_spark(
 
     AQE stays ON (runtime coalesce + skew-join split), Arrow ON (all
     Python is pandas-UDF), timezone pinned UTC for oracle comparisons.
+    Sized from the machine unless the environment says otherwise:
+    ``SPARK_GRAFT_CPUS`` (default: all cores) and
+    ``SPARK_GRAFT_DRIVER_MEM`` (default: see :func:`_driver_heap`).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"
     )
     cores = 32
     if master.startswith("local["):
@@ -43,7 +62,8 @@ def get_spark(
         # runtime bloom-filter join: prunes the web_pages scan by
         # frontier keys before the shuffle (big win for fetch-join)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_heap())
         # ParallelGC: the crawl allocates a storm of ~10-100 KB byte[]
         # (html pages) per scan; G1's concurrent machinery collapses
         # under it at high thread counts (measured 6x slower decode at

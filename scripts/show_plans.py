@@ -95,19 +95,11 @@ def main() -> None:
 
     sections.append((
         "Embedding near-dup (banded sign-bit LSH buckets scored by the "
-        "per-bucket Arrow-GEMM pair kernel, r9 — the stats-gated "
-        "default above _ARROW_MIN_BYTES; threshold applied in-worker "
-        "— never all-pairs, no candidate-pair shuffle)",
-        plan_of(embedding_neardup_pairs(emb, threshold=0.3,
-                                        score="arrow")),
+        "per-bucket Arrow-GEMM pair kernel, r9; threshold applied "
+        "in-worker — never all-pairs, no candidate-pair shuffle)",
+        plan_of(embedding_neardup_pairs(emb, threshold=0.3)),
         ["FlatMapGroupsInPandas", "!CartesianProduct",
          "!BroadcastNestedLoopJoin"],
-    ))
-    sections.append((
-        "  ... expr path of the same operator (retained: banded bucket "
-        "self-join with singleton LeftSemi prune)",
-        plan_of(embedding_neardup_pairs(emb, threshold=0.3, score="expr")),
-        ["LeftSemi", "!CartesianProduct", "!BroadcastNestedLoopJoin"],
     ))
 
     # 6. bulk ANN knn_join: bucket equi-join + bounded per-query window
@@ -118,8 +110,7 @@ def main() -> None:
     )
     sections.append((
         "knn_join (multi-band cogrouped Arrow-GEMM scorer + bounded "
-        "per-query window, no cartesian; r8 — the expr join+window "
-        "path remains under score='expr')",
+        "per-query window, no cartesian; r8)",
         plan_of(knn_join(emb, q, k=5, n_bits=4, n_tables=4)),
         ["FlatMapCoGroupsInPandas", "Window", "!CartesianProduct",
          "!BroadcastNestedLoopJoin"],
@@ -214,20 +205,6 @@ def main() -> None:
         plan_of(minhash_signatures(docs)),
         ["MapInPandas", "!ENSURE_REQUIREMENTS", "!Generate"],
     ))
-    from doccrawler_spark.ops.dedup import (
-        _shingle_key_arrays,
-        _sigs_from_arrays,
-    )
-
-    sections.append((
-        "  ... expr path of the same operator (retained: token-digest "
-        "integer keys, shuffle-free array_min)",
-        plan_of(_sigs_from_arrays(
-            _shingle_key_arrays(docs, 3, "md5", engine="expr"), 16)),
-        ["conv(substring(md5(", "array_min", "!ENSURE_REQUIREMENTS",
-         "!Generate"],
-    ))
-
     # 8. cluster-scale seen-set path, generated from the crawl's OWN
     # bucketed seen table (not a hand-made one): run the tiny web with
     # broadcast_dedup_max_frontier=0 so every round takes the bucketed
@@ -270,53 +247,31 @@ def main() -> None:
     ))
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
-    # 9. partitioned Bloom seen-prefilter (north_rule bloom/cuckoo):
-    # _ensure_bloom heals the filter from the crawl's frontier history
-    # (the tiny crawl itself stays under bloom_min_seen); the split
-    # plan must broadcast the (tiny, committed) bloom table, keep the
-    # bit probe in codegen, and send ONLY the maybe-seen branch into
-    # the exact LeftAnti against the seen table
+    # 9. partitioned, generation-chained Bloom seen-prefilter
+    # (north_rule bloom/cuckoo): _ensure_bloom heals the filter from the
+    # crawl's frontier history (the tiny crawl itself stays under
+    # bloom_min_seen); one row of <m_bits, words> structs per bucket,
+    # any-generation EXISTS probe evaluated in codegen, and ONLY the
+    # maybe-seen branch enters the exact LeftAnti against the seen
+    # table.  The static plan may show SMJ for the tiny agg side (stats
+    # unknown post-aggregate) — AQE converts it at runtime from actual
+    # sizes, and at 10^10 the filter co-partitions on bucket instead
     from doccrawler_spark import bloom as B
     from doccrawler_spark.crawl import CrawlConfig as _CC
     from doccrawler_spark.crawl import _ensure_bloom
 
-    # bloom_m_bits is PINNED here: under the r6 auto-sizing default
-    # (bloom_m_bits=0) _ensure_bloom heals the snapshot at the auto
-    # size while a raw 0 passed to prefilter_new degenerates the probe
-    # to pmod(hash, 0) = NULL — a filter that drops every candidate.
-    # Pinning makes both sides use the same m by construction; the
-    # auto-sizing path itself is covered by tests (on==off e2e,
-    # mid-crawl resize).
     bcfg = _CC(broadcast_dedup_max_frontier=0, seen_buckets=8,
                bloom_m_bits=1 << 16)
     upto = catalog.committed_rounds("frontier")[-1]
     bloom_df = _ensure_bloom(spark, catalog, bcfg, upto)
-    pre = B.prefilter_new(
-        cand, bloom_df, catalog.seen_table(spark, 8),
-        bcfg.seen_buckets, bcfg.bloom_m_bits, bcfg.bloom_k,
-    )
-    sections.append((
-        "Bloom seen-prefilter split (definitely-new ∪ (maybe-seen "
-        "LeftAnti seen); bloom broadcasts, probe stays in codegen)",
-        plan_of(pre),
-        ["BroadcastHashJoin", "LeftAnti", "Union", "xxhash64",
-         "!CartesianProduct"],
-    ))
-
-    # 9b. the chained-generation probe (production default,
-    # cfg.bloom_chained): one row of <m_bits, words> structs per
-    # bucket, any-generation EXISTS probe evaluated in codegen; the
-    # static plan may show SMJ for the tiny agg side (stats unknown
-    # post-aggregate) — AQE converts it at runtime from actual sizes,
-    # and at 10^10 the filter co-partitions on bucket instead
-    pre_ch = B.prefilter_new_chained(
+    pre = B.prefilter_new_chained(
         cand, bloom_df, catalog.seen_table(spark, 8),
         bcfg.seen_buckets, bcfg.bloom_k,
     )
     sections.append((
-        "Chained-generation Bloom prefilter (any-generation probe; "
-        "maybe-seen branch into the exact LeftAnti)",
-        plan_of(pre_ch),
+        "Bloom seen-prefilter split (definitely-new ∪ (maybe-seen "
+        "LeftAnti seen); any-generation probe stays in codegen)",
+        plan_of(pre),
         ["LeftAnti", "Union", "xxhash64", "exists",
          "!CartesianProduct"],
     ))

@@ -25,21 +25,17 @@ def test_bloom_no_false_negatives_and_incremental_merge(spark):
     bl_a = B.bloom_delta(a, nb, m_bits, k)
     bl_b = B.bloom_delta(b, nb, m_bits, k)
     merged = {r["bucket"]: list(r["words"])
-              for r in B.bloom_merge([bl_a, bl_b], m_bits).collect()}
+              for r in B.bloom_merge_gens([bl_a, bl_b]).collect()}
     bulk = {r["bucket"]: list(r["words"])
             for r in B.bloom_delta(a.unionByName(b), nb, m_bits, k).collect()}
     assert merged == bulk
 
-    probe = (
-        a.withColumn("_b", F.expr(B.bucket_expr("url", nb)))
-        .join(bl_a.withColumnRenamed("bucket", "_b"), "_b", "left")
-        .withColumn("m", F.expr(B.maybe_seen_sql("url", "words", m_bits, k)))
-    )
-    assert probe.filter(~F.col("m")).count() == 0  # no false negatives
+    new, _maybe = B.split_maybe_chained(a, bl_a, nb, k)
+    assert new.count() == 0  # no false negatives
 
 
 def test_bloom_prefilter_is_exact(spark):
-    """prefilter_new == plain anti-join, bit-for-bit, including when
+    """prefilter_new_chained == plain anti-join, bit-for-bit, including when
     the filter is deliberately tiny (high fp rate → everything routes
     through the exact check) and when a bucket has no bloom row."""
     for m_bits in (64, 1 << 12):  # 64 bits for 400 urls → fp-saturated
@@ -48,7 +44,7 @@ def test_bloom_prefilter_is_exact(spark):
         bl = B.bloom_delta(seen, nb, m_bits, k)
         cand = _urls(spark, "a", 150).unionByName(_urls(spark, "c", 250))
         got = {r["url"]
-               for r in B.prefilter_new(cand, bl, seen, nb, m_bits, k).collect()}
+               for r in B.prefilter_new_chained(cand, bl, seen, nb, k).collect()}
         want = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
         assert got == want, m_bits
 
@@ -61,12 +57,7 @@ def test_bloom_routes_definitely_new_off_the_anti_join(spark):
     seen = _urls(spark, "a", 500)
     bl = B.bloom_delta(seen, nb, m_bits, k)
     fresh = _urls(spark, "z", 500)
-    probe = (
-        fresh.withColumn("_b", F.expr(B.bucket_expr("url", nb)))
-        .join(bl.withColumnRenamed("bucket", "_b"), "_b", "left")
-        .withColumn("m", F.expr(B.maybe_seen_sql("url", "words", m_bits, k)))
-    )
-    n_maybe = probe.filter(F.col("m")).count()
+    n_maybe = B.split_maybe_chained(fresh, bl, nb, k)[1].count()
     # 2^14 bits per bucket for ~63 urls/bucket at k=6 → fp ~0
     assert n_maybe <= 5
 
@@ -190,8 +181,8 @@ def test_bloom_param_drift_rebuilds_not_merges(spark, tmp_path):
     assert got == bulk
     # no false negatives under the rebuilt filter (exactness intact)
     assert {
-        r["url"] for r in B.prefilter_new(
-            seen_urls, healed, seen_urls, 8, 1 << 10, 4).collect()
+        r["url"] for r in B.prefilter_new_chained(
+            seen_urls, healed, seen_urls, 8, 4).collect()
     } == set()
 
     # a pre-fmt snapshot (no param columns) is also rebuilt, not merged
@@ -209,7 +200,7 @@ def test_bloom_param_drift_rebuilds_not_merges(spark, tmp_path):
 def test_bloom_prefilter_exact_hypothesis(spark):
     """Property (hypothesis): for generated seen/candidate url sets —
     arbitrary overlap, percent-escapes, dotted/dashed hosts — and any
-    (m_bits, k) down to a 2-word filter, prefilter_new equals the
+    (m_bits, k) down to a 2-word filter, prefilter_new_chained equals the
     plain anti-join exactly."""
     from hypothesis import given, settings, strategies as st
 
@@ -233,7 +224,7 @@ def test_bloom_prefilter_exact_hypothesis(spark):
         )
         bl = B.bloom_delta(seen, nb, m_bits, k)
         got = {r["url"]
-               for r in B.prefilter_new(cand, bl, seen, nb, m_bits, k).collect()}
+               for r in B.prefilter_new_chained(cand, bl, seen, nb, k).collect()}
         want = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
         assert got == want
 
@@ -295,10 +286,8 @@ def test_bloom_auto_resize_mid_crawl_rebuilds_exactly(spark, tmp_path):
     while the crawl is still running: later bloom snapshots must carry
     a LARGER max m_bits than round-1's (the resize actually fired),
     and the final seen set must equal the bloom-off crawl (resizes can
-    never cost exactness).  Both resize mechanisms are pinned: the
-    default CHAINED mode must show ≥2 generations in the final
-    snapshot (the resize appended, O(new-delta)); the unchained mode
-    must show exactly one (the legacy full from-history rebuild)."""
+    never cost exactness).  The resize must APPEND a generation
+    (O(new-delta)): the final snapshot shows ≥2 of them."""
     from doccrawler_spark.crawl import CrawlConfig, crawl, seen_all
     from doccrawler_spark.webgen import gen_seeds, tiny_spec, web_pages_pandas
 
@@ -318,26 +307,20 @@ def test_bloom_auto_resize_mid_crawl_rebuilds_exactly(spark, tmp_path):
 
     _, off = run("off", bloom_prefilter=False)
 
-    for arm, chained in (("chained", True), ("rebuild", False)):
-        cat, auto = run(arm, bloom_m_bits=0, bloom_min_seen=0,
-                        bloom_bits_per_url=50_000, bloom_chained=chained)
-        assert off and auto == off, arm
+    cat, auto = run("chained", bloom_m_bits=0, bloom_min_seen=0,
+                    bloom_bits_per_url=50_000)
+    assert off and auto == off
 
-        ms = []
-        for r in cat.committed_rounds(B.BLOOM_TABLE):
-            df = cat.read(spark, B.BLOOM_TABLE, r)
-            gens = sorted(x["m_bits"] for x in
-                          df.select("m_bits").distinct().collect())
-            ms.append(gens)
-        assert len(ms) >= 2, f"{arm}: crawl too short to observe a resize"
-        assert max(ms[-1]) > max(ms[0]), f"{arm}: resize never fired: {ms}"
-        assert all(max(b) >= max(a) for a, b in zip(ms, ms[1:])), (arm, ms)
-        if chained:
-            assert len(ms[-1]) >= 2, \
-                f"chained resize rebuilt instead of appending: {ms}"
-        else:
-            assert all(len(g) == 1 for g in ms), \
-                f"unchained crawl grew generations: {ms}"
+    ms = []
+    for r in cat.committed_rounds(B.BLOOM_TABLE):
+        df = cat.read(spark, B.BLOOM_TABLE, r)
+        gens = sorted(x["m_bits"] for x in
+                      df.select("m_bits").distinct().collect())
+        ms.append(gens)
+    assert len(ms) >= 2, "crawl too short to observe a resize"
+    assert max(ms[-1]) > max(ms[0]), f"resize never fired: {ms}"
+    assert all(max(b) >= max(a) for a, b in zip(ms, ms[1:])), ms
+    assert len(ms[-1]) >= 2, f"resize rebuilt instead of appending: {ms}"
 
 
 def test_bloom_chained_no_false_negatives_and_exact(spark):
@@ -378,18 +361,30 @@ def test_bloom_chained_no_false_negatives_and_exact(spark):
 
 def test_bloom_chained_single_gen_routes_like_flat(spark):
     """With exactly one generation the chained probe partitions
-    candidates identically to the flat split_maybe — the chain is a
-    strict generalization, not a different filter."""
+    candidates identically to the flat one-array Bloom test — all k
+    of bloom_delta's own bit positions set in the bucket's words —
+    so the chain is a strict generalization, not a different filter."""
     nb, m, k = 8, 1 << 12, 6
     seen = _urls(spark, "s", 400)
     cand = seen.unionByName(_urls(spark, "c", 400))
     bl = B.bloom_delta(seen, nb, m, k)
 
-    new_f, maybe_f = B.split_maybe(cand, bl, nb, m, k)
+    def bit(i):
+        p = B._pos_sql("url", i, m)
+        return (f"((element_at(words, CAST(({p}) DIV 64 AS INT) + 1)"
+                f" >> CAST(({p}) % 64 AS INT)) & 1) = 1")
+
+    flat = (
+        cand.withColumn("_b", F.expr(B.bucket_expr("url", nb)))
+        .join(bl.select(F.col("bucket").alias("_b"), "words"), "_b", "left")
+        .withColumn("m", F.expr(
+            "coalesce(" + " AND ".join(bit(i) for i in range(k)) + ", false)"
+        ))
+    )
     new_c, maybe_c = B.split_maybe_chained(cand, bl, nb, k)
-    assert ({r["url"] for r in new_f.collect()}
+    assert ({r["url"] for r in flat.filter(~F.col("m")).collect()}
             == {r["url"] for r in new_c.collect()})
-    assert ({r["url"] for r in maybe_f.collect()}
+    assert ({r["url"] for r in flat.filter(F.col("m")).collect()}
             == {r["url"] for r in maybe_c.collect()})
 
 
@@ -434,65 +429,6 @@ def test_fold_bloom_collapses_generations(spark, tmp_path):
     healed = _ensure_bloom(spark, cat, cfg, last)
     new, _maybe = B.split_maybe_chained(seen_urls, healed, 8, cfg.bloom_k)
     assert new.count() == 0
-
-
-def test_params_match_rejects_mixed_generation_snapshot(spark):
-    """ADVICE r7: a chained snapshot commits rows at MIXED m_bits; a
-    flat-mode (bloom_chained=False) resume must never pass params_match
-    just because the one sampled row happened to match — probing
-    old-generation arrays at the new m yields silent false negatives.
-    Mixed-param frames must fail for EVERY candidate m, forcing the
-    safe full rebuild."""
-    nb, k = 8, 6
-    a, b = _urls(spark, "pm-a", 200), _urls(spark, "pm-b", 200)
-    chain = B.bloom_merge_gens([
-        B.bloom_delta(a, nb, 1 << 10, k),
-        B.bloom_delta(b, nb, 1 << 12, k),
-    ])
-    assert not B.params_match(chain, nb, 1 << 10, k)
-    assert not B.params_match(chain, nb, 1 << 12, k)
-    # single-generation snapshots still pass/fail on exact equality
-    flat = B.bloom_delta(a, nb, 1 << 12, k)
-    assert B.params_match(flat, nb, 1 << 12, k)
-    assert not B.params_match(flat, nb, 1 << 10, k)
-
-
-def test_unchained_resume_over_chained_snapshot_rebuilds(spark, tmp_path):
-    """The ADVICE failure end-to-end: crawl chained with a mid-run
-    resize (≥2 generations committed), then heal with
-    bloom_chained=False at a fixed m.  The heal must produce a fresh
-    single-generation rebuild that routes EVERY seen url to the exact
-    check — the r7 limit(1) params_match could accept the mixed
-    snapshot and route ~99% of seen urls definitely_new."""
-    from doccrawler_spark.crawl import (
-        CrawlConfig, _ensure_bloom, crawl, seen_all,
-    )
-    from doccrawler_spark.webgen import gen_seeds, tiny_spec, web_pages_pandas
-
-    spec = tiny_spec()
-    web = spark.createDataFrame(
-        web_pages_pandas(spec),
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    seeds = [s["seed_url"] for s in gen_seeds(spec)]
-    cfg = CrawlConfig(max_depth=3, broadcast_dedup_max_frontier=0,
-                      seen_buckets=8, bloom_m_bits=0, bloom_min_seen=0,
-                      bloom_bits_per_url=50_000)
-    cat = crawl(spark, web, seeds, os.path.join(str(tmp_path), "c"), cfg)
-    last = cat.committed_rounds(B.BLOOM_TABLE)[-1]
-    chained = cat.read(spark, B.BLOOM_TABLE, last)
-    assert chained.select("m_bits").distinct().count() >= 2
-
-    flat_cfg = CrawlConfig(max_depth=3, broadcast_dedup_max_frontier=0,
-                           seen_buckets=8, bloom_m_bits=1 << 16,
-                           bloom_min_seen=0, bloom_chained=False)
-    healed = _ensure_bloom(spark, cat, flat_cfg, last)
-    ms = [r["m_bits"] for r in healed.select("m_bits").distinct().collect()]
-    assert ms == [1 << 16]
-    seen_urls = seen_all(spark, cat).select("url").distinct()
-    new, _maybe = B.split_maybe(seen_urls, healed, 8, 1 << 16,
-                                flat_cfg.bloom_k)
-    assert new.count() == 0  # zero false negatives through the rebuild
 
 
 def test_bloom_auto_fold_fires_mid_crawl(spark, tmp_path):

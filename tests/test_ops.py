@@ -54,10 +54,9 @@ def test_ngram_jaccard(spark, docs):
 
 
 def test_ngram_jaccard_shapes_agree(spark):
-    """The r9 blocked-matmul shape (and the prefix-filtered shape) must
-    return results IDENTICAL to the posting-list join on a random
-    corpus with planted near-dups — every threshold, including values
-    where size-ratio and prefix pruning are active."""
+    """The r9 blocked-matmul shape must return results IDENTICAL to the
+    posting-list join on a random corpus with planted near-dups, at
+    every threshold — forced and auto-selected."""
     import random
 
     from doccrawler_spark.ops.dedup import ngram_jaccard_pairs
@@ -82,7 +81,7 @@ def test_ngram_jaccard_shapes_agree(spark):
     for thr in (0.3, 0.6):
         base = rows_of(ngram_jaccard_pairs(docs, threshold=thr, shape="join"))
         assert len(base) > 0
-        for shape in ("gemm", "prefix", "auto"):
+        for shape in ("gemm", "auto"):
             got = rows_of(ngram_jaccard_pairs(docs, threshold=thr,
                                               shape=shape))
             assert got == base, f"shape={shape} thr={thr}"
@@ -225,42 +224,6 @@ def test_embedding_ops(spark):
                               "q_id long, q_emb array<float>")
     kj = knn_join(emb, q, k=1, n_bits=2).collect()
     assert kj[0]["vec_id"] == 2
-
-
-def test_embedding_neardup_arrow_matches_expr(spark):
-    """The per-bucket Arrow-GEMM pair scorer (r9 default) must return
-    results IDENTICAL to the expr path — both round cosine to 6
-    decimals before the threshold compare, zero-norm vectors drop on
-    both (NaN fails the compare / try_divide yields NULL), and a pair
-    colliding in several bands dedups to one row either way."""
-    import random
-
-    from doccrawler_spark.ops.dedup import embedding_neardup_pairs
-
-    rng = random.Random(41)
-    dim = 16
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)])
-            for i in range(200)]
-    # near-dup cluster: guaranteed pairs above any threshold
-    base = [rng.uniform(-1, 1) for _ in range(dim)]
-    rows += [(500 + j, [x + rng.uniform(-1e-3, 1e-3) for x in base])
-             for j in range(5)]
-    rows.append((900, [0.0] * dim))  # zero-norm: never pairs
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    def rows_of(df):
-        return [(r["vec_a"], r["vec_b"], r["cosine"])
-                for r in df.orderBy("vec_a", "vec_b").collect()]
-
-    for thr in (-1.0, 0.5, 0.95):
-        a = rows_of(embedding_neardup_pairs(
-            emb, threshold=thr, n_bands=2, band_bits=4, score="arrow"))
-        e = rows_of(embedding_neardup_pairs(
-            emb, threshold=thr, n_bands=2, band_bits=4, score="expr"))
-        assert a == e, f"threshold={thr}"
-        if thr <= 0.5:
-            assert len(a) > 0
-        assert all(r[0] != 900 and r[1] != 900 for r in a)
 
 
 def test_ivf_topk_probes_nearest_cells(spark):
@@ -461,13 +424,11 @@ def test_knn_join_indexed_matches_and_prunes(spark, tmp_path):
     assert int(m.group(1)) < n_dirs  # strictly fewer than the layout
 
 
-def test_knn_join_arrow_scorer_matches_expr(spark):
-    """The Arrow-GEMM scorer (r8 default) must return results
-    IDENTICAL to the expr path — both round cosine to 6 decimals
-    before any selection, so float64-GEMM vs sequential-fold LSB
-    drift cannot change a value or a rank.  Covers salted and
-    unsalted, plus zero-norm (empty-doc) vectors dropping on both
-    paths."""
+def test_knn_join_salted_matches_unsalted(spark):
+    """The salted sub-bucket split (the stats-gated scale shape) must
+    return results IDENTICAL to the unsalted one — the per-bucket
+    top-k is lossless either way — including zero-norm (empty-doc)
+    vectors and queries, which never match."""
     import random
 
     from doccrawler_spark.ops.similarity import knn_join
@@ -489,13 +450,12 @@ def test_knn_join_arrow_scorer_matches_expr(spark):
         return [(r["q_id"], r["vec_id"], r["rank"], r["cosine"])
                 for r in df.orderBy("q_id", "vec_id").collect()]
 
-    for salted in (False, True):
-        a = rows_of(knn_join(emb, qdf, k=4, n_bits=2, n_tables=3,
-                             salted=salted, score="arrow"))
-        e = rows_of(knn_join(emb, qdf, k=4, n_bits=2, n_tables=3,
-                             salted=salted, score="expr"))
-        assert a == e and len(a) > 0, f"salted={salted}"
-        assert all(r[0] != 1999 and r[1] != 900 for r in a)
+    plain, salted = (
+        rows_of(knn_join(emb, qdf, k=4, n_bits=2, n_tables=3, salted=s))
+        for s in (False, True)
+    )
+    assert plain == salted and len(plain) > 0
+    assert all(r[0] != 1999 and r[1] != 900 for r in plain)
 
 
 def test_knn_join_indexed_bulk_batch_root_read(spark, tmp_path):
