@@ -59,11 +59,11 @@ def _q_crawl_tiny(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_crawl_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME deterministic tiny crawl as crawl_tiny_e2e, forced down
-    the cluster-scale F8 path every round (hash-bucketed seen TABLE +
-    the partitioned Bloom prefilter; broadcast cutoff 0) — identical
-    results through a different physical dedup plan, so it shares
-    crawl_tiny's VALUES-golden oracle.  This puts the 10^10-scale
-    seen-set machinery itself under the driver correctness gate."""
+    the cluster-scale F8 path every round (the hash-bucketed seen TABLE
+    anti-join; broadcast cutoff 0) — identical results through a
+    different physical dedup plan, so it shares crawl_tiny's
+    VALUES-golden oracle.  This puts the cluster-scale seen-set
+    machinery itself under the driver correctness gate."""
     from doccrawler_spark.crawl import CrawlConfig, crawl, crawled_all
     from doccrawler_spark.webgen import gen_seeds, tiny_spec, web_pages_pandas
 
@@ -77,7 +77,7 @@ def _q_crawl_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog = crawl(
         spark, web, seeds, root,
         CrawlConfig(max_depth=3, broadcast_dedup_max_frontier=0,
-                    seen_buckets=8, bloom_min_seen=0),
+                    seen_buckets=8),
     )
     return crawled_all(spark, catalog).orderBy("priority").select(
         "url", "site_id", "depth", "round", "priority",
@@ -958,6 +958,9 @@ def oracle_sql() -> dict[str, str]:
                            (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) *
                             sqrt(list_dot_product(q_emb::DOUBLE[], q_emb::DOUBLE[]))), 6) AS cosine
               FROM cand
+              -- a zero-norm side makes 0/0, NULL here: such a pair
+              -- matches nothing and is never ranked, as in the engine
+              WHERE cosine IS NOT NULL
             ), ranked AS (
               SELECT q_id, vec_id, cosine,
                      row_number() OVER (PARTITION BY q_id
@@ -1235,7 +1238,7 @@ def oracle_sql() -> dict[str, str]:
     out["ivf_topk_indexed"] = out["ivf_topk"]
     out["lsh_topk_indexed"] = out["lsh_topk"]
     out["knn_join_indexed"] = out["knn_join"]
-    # the bucketed+Bloom crawl is result-identical to the broadcast
-    # crawl — one golden, two physical seen-set plans
+    # the bucketed-seen-table crawl is result-identical to the
+    # broadcast crawl — one golden, two physical seen-set plans
     out["crawl_bucketed_e2e"] = out["crawl_tiny_e2e"]
     return out

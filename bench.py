@@ -79,25 +79,6 @@ def run_crawl_bench(spark, n_pages: int) -> dict:
         budget_per_site=2**31,  # ≥2**30 ⇒ takes the unlimited-budget fast path
         politeness=True,                # robots checked; no crawl delays set
         max_rounds=16,
-        # BENCH_NO_ERRORS=1 disables the S8 error sink (A/B probe for
-        # its per-round cost; the default bench keeps it on — honest)
-        track_errors=not os.environ.get("BENCH_NO_ERRORS"),
-        # BENCH_NO_BLOOM=1 disables the Bloom prefilter (A/B probe for
-        # the r5 broadcast-branch routing's per-round build cost)
-        bloom_prefilter=not os.environ.get("BENCH_NO_BLOOM"),
-        # BENCH_BLOOM_FORCE=1 drops the cost gate so the Bloom path
-        # actually engages at bench scale (~240k seen, below the
-        # production gate) — the meaningful A/B pair is FORCE vs
-        # default (r5's NO_BLOOM-vs-default compared two dormant arms).
-        # The non-FORCE arm takes the dataclass default so the bench
-        # tracks the production gate instead of a duplicated literal.
-        bloom_min_seen=0 if os.environ.get("BENCH_BLOOM_FORCE")
-        else CrawlConfig.bloom_min_seen,
-        # resize cost (r7): BENCH_BLOOM_BITS_PER_URL big enough to
-        # cross several pow-4 auto-size steps mid-crawl, each opening
-        # a new generation (O(new-delta))
-        bloom_bits_per_url=int(os.environ.get(
-            "BENCH_BLOOM_BITS_PER_URL", CrawlConfig.bloom_bits_per_url)),
     )
     # the host shows bursty CPU steal (up to 10x on identical jobs) —
     # PROBE-GATED best-of-N (the repo's artifact protocol, BASELINE.md):
@@ -132,11 +113,11 @@ def run_crawl_bench(spark, n_pages: int) -> dict:
     shutil.rmtree(tmp, ignore_errors=True)
     rounds_s = timings.get("rounds_sec") or crawl_s
     # the headline metric is URLs fetched+extracted/sec — the post-loop
-    # compact_on_done maintenance pass (r8) runs inside crawl()'s wall
-    # clock but is not fetch/extract work, so it is reported as its own
-    # component and excluded from the throughput denominators (same
-    # treatment rounds_sec already gives it); crawl_wall_sec keeps the
-    # raw wall time honest
+    # compaction pass (r8) runs inside crawl()'s wall clock but is not
+    # fetch/extract work, so it is reported as its own component and
+    # excluded from the throughput denominators (same treatment
+    # rounds_sec already gives it); crawl_wall_sec keeps the raw wall
+    # time honest
     compact_s = timings.get("compact_sec") or 0.0
     fetch_s = max(crawl_s - compact_s, 1e-9)
     return {

@@ -32,7 +32,7 @@ Spark-first physical design:
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -65,7 +65,6 @@ class CrawlConfig:
     budget_per_site: int = 50          # MAX_LLM_REQUEST_COUNT (readme.md:86)
     filter_batch_size: int = 180       # crawler_service.py:103
     politeness: bool = True            # north_rule addition (absent in ref)
-    track_errors: bool = True          # S8 error sink (error_repository.py:14-21)
     round_seconds: float = 60.0        # per-host quota = round_seconds/delay
     max_rounds: int = 64
     salt: int = 32                     # skew salt for hot-host windows
@@ -78,59 +77,10 @@ class CrawlConfig:
     # bucket count of the seen table (cluster sizing: ≈ total seen
     # bytes / 256 MB; sandbox default keeps files small)
     seen_buckets: int = 64
-    # partitioned Bloom prefilter over the bucketed seen path (the
-    # north-rule's bloom/cuckoo seen set; bloom.py): definitely-new
-    # candidates skip the exact anti-join entirely; exactness is
-    # untouched (maybe-seen rows still anti-join).  m_bits is PER
-    # url-hash bucket (cluster sizing: ~10-13 bits per expected url in
-    # the bucket; 2^16 bits = 8 KB/bucket sandbox default), k the
-    # number of probe bits
-    bloom_prefilter: bool = True
-    # 0 = auto: per-bucket array sized from the CURRENT seen-set size
-    # (see _bloom_m_bits — pow-4 steps, each opening a new
-    # generation); >0 pins it explicitly
-    bloom_m_bits: int = 0
-    bloom_k: int = 6
-    # auto-sizing targets: ~10 bits/url ≈ 0.8% fp at k=6, with 4×
-    # growth headroom so a resize happens only each time the seen set
-    # quadruples
-    bloom_bits_per_url: int = 10
-    bloom_headroom: int = 4
-    # resizes are generation-chained (scalable Bloom, r7): when the
-    # auto sizer steps m, new deltas open a NEW generation at the new
-    # size — O(new-delta) — instead of rebuilding the whole filter
-    # from frontier history (at 10^10 seen URLs that rescan is the
-    # most expensive maintenance op in the engine).  The full rebuild
-    # is kept for k/bucketing/hash-format drift (those change bit
-    # positions inside a generation); fold_bloom() collapses an old
-    # chain at vacuum time.
-    #
-    # self-maintaining fold cadence (r8): when the committed chain
-    # reaches this many generations, the crawl loop folds it back to
-    # one generation sized for today's seen set.  Generations only
-    # appear on pow-4 auto-resize steps, so hitting the threshold
-    # needs ~4^(n-1) growth past the floor — the history-proportional
-    # fold stays amortized-rare, exactly like the resizes that caused
-    # it.  0 disables (operator folds manually at vacuum time).
-    bloom_fold_gens: int = 8
-    # seen-set size below which the Bloom prefilter stays dormant:
-    # the per-round delta-build + snapshot commit measured ~7% of a
-    # small-corpus round (240k-URL seen set, r5 A/B) while routing
-    # buys nothing until the exact check is expensive — the same
-    # stats-gate family as knn_join's salted windows.  At 10^6+ seen
-    # URLs the filter engages automatically; tests force 0.
-    bloom_min_seen: int = 1_000_000
-    # small-file maintenance (r8): when the crawl finishes, rewrite
-    # each committed crawled/errors round into right-sized files via
-    # catalog.compact (footer-planned, atomic manifest swap — the
-    # Iceberg rewrite_data_files analogue).  A round is written with
-    # shuffle-partition-many files; over hundreds of rounds the
-    # downstream crawled_all scan pays thousands of file opens/footer
-    # reads before the first row.  Runs AFTER the loop (the table is
-    # read-heavy from then on) and is timed separately
-    # (timings["compact_sec"]), so rounds_sec stays comparable.
-    # False disables (operator compacts manually at vacuum cadence).
-    compact_on_done: bool = True
+    # a class constant, not a field: benchmark/trace.py reads it in its
+    # per-round gate record.  It goes when gate recording moves into
+    # the engine (ROADMAP item 1).
+    bloom_prefilter = False
     # frontier-size cutoff below which fetch uses an IN-list point
     # lookup (parquet row-group stats pruning — the CDX-index pattern:
     # a 12-URL round must not decode the whole corpus) instead of
@@ -398,10 +348,7 @@ def seed_round(
 
     n_frontier = catalog.count("frontier", 0)
     state = {"next_priority": n_frontier, "round": 0,
-             "done": n_frontier == 0, "frontier_size": n_frontier,
-             # cumulative is_new URLs — drives the bloom_min_seen gate
-             "seen_size": catalog.count_true("frontier", 0, "is_new",
-                                             spark=spark)}
+             "done": n_frontier == 0, "frontier_size": n_frontier}
     catalog.write_state(0, state)
     return state
 
@@ -422,154 +369,6 @@ def _ensure_seen_table(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
             )
             catalog.seen_append(spark, delta, r, cfg.seen_buckets)
     return catalog.seen_table(spark, cfg.seen_buckets)
-
-
-def _bloom_m_bits(cfg: CrawlConfig, seen_size: int) -> int:
-    """Per-bucket Bloom array size.  Explicit when cfg.bloom_m_bits>0;
-    else auto: ``bits_per_url × headroom × seen ÷ buckets`` rounded up
-    to a power of two, floored at 2^16 (the 8 KB/bucket sandbox size)
-    and capped at 2^27 (16 MB/bucket row — past that, raise
-    seen_buckets instead of the row size).  The rounding makes m a
-    step function of seen growth: it changes only when the seen set
-    outgrows capacity, and _ensure_bloom then opens a new generation
-    at the new size (O(new-delta)), O(log |seen|) times over a crawl.
-    A FIXED m would instead saturate to all-ones at 10^10 URLs and
-    pass everything to the exact check.
-
-    Sizes step in powers of FOUR (even exponents): power-of-two steps
-    would resize on every doubling of the seen set no matter the
-    headroom (headroom only phase-shifts the crossing), while pow-4
-    stepping halves the number of generations between 10^6 and 10^10
-    URLs — and so the probe width and the summed fp rate the chain
-    carries until fold_bloom collapses it — for at most a transient
-    4× memory overshoot (measured: forcing the filter on at 240k seen
-    with min_seen=0 costs ~35% of a bench round — the 10^6 gate +
-    this cadence bound that)."""
-    if cfg.bloom_m_bits:
-        return cfg.bloom_m_bits
-    per_bucket = (cfg.bloom_bits_per_url * cfg.bloom_headroom
-                  * max(seen_size, 1)) // max(cfg.seen_buckets, 1)
-    per_bucket = min(max(per_bucket, 1 << 16), 1 << 27)
-    n = (per_bucket - 1).bit_length()
-    n += n & 1  # even exponent → resizes only per 4× seen growth
-    return 1 << min(n, 27)
-
-
-def _ensure_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
-                  upto_round: int, m_bits: int | None = None):
-    """Heal the partitioned seen-Bloom snapshot through ``upto_round``
-    and return it (None before any frontier commit).  Incremental: the
-    latest committed bloom snapshot is OR-merged with the delta blooms
-    of only the frontier rounds it predates — cost ∝ missed deltas,
-    never ∝ |seen| — then committed at ``upto_round`` (the same
-    atomic-manifest protocol as every table, so a torn build is
-    invisible and simply rebuilt).
-
-    ``m_bits`` sizes the NEW deltas.  A step of the auto sizer just
-    opens a new GENERATION at the new size (rows keyed by their own
-    m_bits; probe = any-generation), so a resize costs O(new-delta);
-    the full from-history rebuild fires only on k/bucketing/
-    hash-format drift."""
-    from . import bloom as B
-
-    if m_bits is None:
-        m_bits = _bloom_m_bits(cfg, 0)
-    rounds = [r for r in catalog.committed_rounds("frontier")
-              if r <= upto_round]
-    if not rounds:
-        return None
-    have = [r for r in catalog.committed_rounds(B.BLOOM_TABLE)
-            if r <= upto_round]
-    latest = have[-1] if have else None
-    latest_df = None
-    if latest is not None:
-        latest_df = catalog.read(spark, B.BLOOM_TABLE, latest)
-        if not B.chain_params_match(latest_df, cfg.seen_buckets,
-                                    cfg.bloom_k):
-            # resume with changed bloom params (or a pre-fmt snapshot):
-            # OR-merging incompatible bit patterns would yield FALSE
-            # NEGATIVES (NULL-padded zip_with words / probes of
-            # never-set bits) and silently break exactness — discard
-            # and rebuild the whole filter from frontier history
-            latest, latest_df = None, None
-    missing = [r for r in rounds if latest is None or r > latest]
-    if not missing:
-        return latest_df
-    frames = []
-    if latest_df is not None:
-        frames.append(latest_df)
-    for r in missing:
-        delta = (
-            catalog.read(spark, "frontier", r)
-            .filter(F.col("is_new")).select("url")
-        )
-        frames.append(
-            B.bloom_delta(delta, cfg.seen_buckets, m_bits,
-                          cfg.bloom_k)
-        )
-    catalog.write(B.bloom_merge_gens(frames), B.BLOOM_TABLE, upto_round)
-    # read BACK from the committed snapshot: downstream consumers get a
-    # plain pruned parquet scan (with accurate size stats for the
-    # broadcast decision), not the whole merge lineage re-executed
-    return catalog.read(spark, B.BLOOM_TABLE, upto_round)
-
-
-def _bloom_generations(catalog: SnapshotCatalog, round_: int) -> int:
-    """Distinct m_bits count of a committed bloom snapshot — the chain
-    length.  Driver-side pyarrow read of the m_bits column only (the
-    table has ≤ buckets·generations rows; the wide words arrays are
-    never materialized), so the per-round fold-cadence check costs no
-    Spark job."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    from . import bloom as B
-
-    d = catalog.data_path(B.BLOOM_TABLE, round_)
-    vals: set[int] = set()
-    for name in _os.listdir(d):
-        if name.endswith(".parquet"):
-            vals.update(
-                pq.read_table(_os.path.join(d, name),
-                              columns=["m_bits"])["m_bits"].to_pylist()
-            )
-    return len(vals)
-
-
-def fold_bloom(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
-               upto_round: int | None = None):
-    """Collapse a generation-chained Bloom back to ONE generation sized
-    for the current seen set: rebuild every committed frontier round's
-    delta at today's auto m and commit the merge at ``upto_round``.
-    This is the MAINTENANCE op (run it at vacuum cadence, like
-    snapshot vacuuming) that bounds the chain's summed fp rate and
-    probe width; the crawl loop itself never pays it — resizes there
-    are O(new-delta) generation appends.  Returns the folded frame, or
-    None before any frontier commit."""
-    from . import bloom as B
-
-    rounds = catalog.committed_rounds("frontier")
-    if upto_round is not None:
-        rounds = [r for r in rounds if r <= upto_round]
-    if not rounds:
-        return None
-    upto = rounds[-1] if upto_round is None else upto_round
-    seen_size = sum(
-        catalog.count_true("frontier", r, "is_new", spark=spark)
-        for r in rounds
-    )
-    m = _bloom_m_bits(cfg, seen_size)
-    frames = [
-        B.bloom_delta(
-            catalog.read(spark, "frontier", r)
-            .filter(F.col("is_new")).select("url"),
-            cfg.seen_buckets, m, cfg.bloom_k,
-        )
-        for r in rounds
-    ]
-    catalog.write(B.bloom_merge_gens(frames), B.BLOOM_TABLE, upto)
-    return catalog.read(spark, B.BLOOM_TABLE, upto)
 
 
 def run_round(
@@ -787,25 +586,12 @@ def run_round(
         # ---- global seen-set anti-join (F8).  Only rounds strictly
         # before this one — a partially-committed attempt of THIS
         # round must not dedup against itself on resume.
-        # Bloom gate: cumulative seen size from state (falls back to
-        # parquet-footer sums for pre-r5 resumes — no Spark job)
-        seen_size = state.get("seen_size")
-        if seen_size is None:
-            seen_size = sum(
-                catalog.count_true("frontier", r, "is_new", spark=spark)
-                for r in catalog.committed_rounds("frontier")
-                if r < round_
-            )
-        use_bloom = cfg.bloom_prefilter and seen_size >= cfg.bloom_min_seen
-        bloom_m = _bloom_m_bits(cfg, seen_size) if use_bloom else None
         if frontier_size < cfg.broadcast_dedup_max_frontier:
-            # Bloom-prefiltered dedup: the seen-set (which grows every
-            # round) is NEVER shuffled — it is scanned once (url column
-            # only, is_new filter pushed into the parquet scan) against
-            # a broadcast semi-join with this round's candidates, and
-            # the small hit-set broadcasts back into a map-side
-            # anti-join.  SURVEY §4.2: Bloom/anti-join split —
-            # exactness always comes from the anti-join.
+            # the seen-set (which grows every round) is NEVER shuffled —
+            # it is scanned once (url column only, is_new filter pushed
+            # into the parquet scan) against a broadcast semi-join with
+            # this round's candidates, and the small hit-set broadcasts
+            # back into a map-side anti-join
             seen_paths = [
                 catalog.data_path("frontier", r)
                 for r in catalog.committed_rounds("frontier")
@@ -816,28 +602,8 @@ def run_round(
                 .filter(F.col("is_new"))
                 .select("url")
             )
-            # Bloom routing in the broadcast branch too (r5): only
-            # maybe-seen candidates enter the double-broadcast exact
-            # check, shrinking both broadcasts (early rounds: almost
-            # everything is definitely-new and skips them entirely).
-            # The seen scan + double-broadcast shape is unchanged —
-            # the seen side is still never shuffled.
-            bloom_df = (
-                _ensure_bloom(spark, catalog, cfg, round_ - 1, bloom_m)
-                if use_bloom else None
-            )
-            if bloom_df is not None:
-                from . import bloom as B
-
-                definitely_new, maybe = B.split_maybe_chained(
-                    firsts, bloom_df, cfg.seen_buckets, cfg.bloom_k,
-                )
-            else:
-                definitely_new, maybe = None, firsts
-            hits = seen.join(F.broadcast(maybe.select("url")), "url", "left_semi")
-            new_items = maybe.join(F.broadcast(hits), "url", "left_anti")
-            if definitely_new is not None:
-                new_items = definitely_new.unionByName(new_items)
+            hits = seen.join(F.broadcast(firsts.select("url")), "url", "left_semi")
+            new_items = firsts.join(F.broadcast(hits), "url", "left_anti")
         else:
             # cluster-scale path: hash-bucketed seen TABLE.  The
             # SortMergeJoin reads the (huge, ever-growing) seen side
@@ -848,26 +614,7 @@ def run_round(
             # and a crash between frontier commit and append is
             # invisible (manifest-committed appends only + vacuum).
             seen_tbl = _ensure_seen_table(spark, catalog, cfg, round_ - 1)
-            bloom_df = (
-                _ensure_bloom(spark, catalog, cfg, round_ - 1, bloom_m)
-                if use_bloom else None
-            )
-            if bloom_df is not None:
-                # Bloom split (bloom.py): definitely-new candidates
-                # never touch the seen table; only maybe-seen rows
-                # (true dups + fp rate) pay the exact anti-join.  The
-                # bloom side is a committed parquet snapshot, so the
-                # stats-based broadcast decision is accurate (sandbox
-                # sizes broadcast; a 10^10-url filter co-partitions on
-                # the bucket key instead).
-                from . import bloom as B
-
-                new_items = B.prefilter_new_chained(
-                    firsts, bloom_df, seen_tbl, cfg.seen_buckets,
-                    cfg.bloom_k,
-                )
-            else:
-                new_items = firsts.join(seen_tbl, "url", "left_anti")
+            new_items = firsts.join(seen_tbl, "url", "left_anti")
 
         # size the range exchange to the data: early rounds are tiny and
         # a single-partition window beats the two-phase sampling jobs
@@ -917,25 +664,24 @@ def run_round(
         # re-snapshotted into frontier(r) with is_new=false).
         # Extraction itself is total (regex scanner), so fetch misses
         # are the only failure class here.
-        if cfg.track_errors:
-            prev = (
-                catalog.read(spark, "frontier", round_ - 1)
-                .filter(F.col("depth") < cfg.max_depth)
-                .select("url", "host", "site_id", "depth", "priority")
+        prev = (
+            catalog.read(spark, "frontier", round_ - 1)
+            .filter(F.col("depth") < cfg.max_depth)
+            .select("url", "host", "site_id", "depth", "priority")
+        )
+        not_missed = crawled_back.select("url")
+        if cfg.politeness and has_delays:
+            not_missed = not_missed.unionByName(
+                catalog.read(spark, "frontier", round_)
+                .filter(~F.col("is_new")).select("url")
             )
-            not_missed = crawled_back.select("url")
-            if cfg.politeness and has_delays:
-                not_missed = not_missed.unionByName(
-                    catalog.read(spark, "frontier", round_)
-                    .filter(~F.col("is_new")).select("url")
-                )
-            misses = prev.join(not_missed, "url", "left_anti").select(
-                "url", "host", "site_id", "depth",
-                F.lit(round_).alias("round"), "priority",
-                F.lit("fetch_miss").alias("reason"),
-            )
-            catalog.write(misses, "errors", round_)
-            _mark("errors")
+        misses = prev.join(not_missed, "url", "left_anti").select(
+            "url", "host", "site_id", "depth",
+            F.lit(round_).alias("round"), "priority",
+            F.lit("fetch_miss").alias("reason"),
+        )
+        catalog.write(misses, "errors", round_)
+        _mark("errors")
 
         # counts straight from the committed parquet footers / a single
         # driver-side column read — zero Spark jobs
@@ -946,11 +692,8 @@ def run_round(
             "round": round_,
             "done": n_next == 0,
             "frontier_size": n_next,
-            "seen_size": seen_size + n_new,
             # surfaced error count (parquet-footer read, no Spark job)
-            "n_errors": (
-                catalog.count("errors", round_) if cfg.track_errors else None
-            ),
+            "n_errors": catalog.count("errors", round_),
         }
         _mark("counts")
         if _timing:
@@ -1007,27 +750,6 @@ def crawl(
         dt = time.time() - t0
         rounds_sec += dt
         print(f"[crawl] round {state['round']} in {dt:.1f}s done={state['done']}")
-        # self-maintaining chain fold (r8): a driver-side column-pruned
-        # read of ONLY m_bits (the snapshot has ≤ buckets·generations
-        # rows, so this is a few KB — the fat words arrays never load)
-        # decides whether the chain earned its vacuum-cadence collapse;
-        # the fold itself is the rewrite-safe catalog.write (fresh dir
-        # + manifest swap)
-        if cfg.bloom_fold_gens and cfg.bloom_prefilter:
-            from . import bloom as B
-
-            br = catalog.latest_round(B.BLOOM_TABLE)
-            if (br is not None
-                    and _bloom_generations(catalog, br)
-                    >= cfg.bloom_fold_gens):
-                tf = time.time()
-                fold_bloom(spark, catalog, cfg, upto_round=br)
-                fold_dt = time.time() - tf
-                if timings is not None:
-                    timings["fold_sec"] = round(
-                        timings.get("fold_sec", 0.0) + fold_dt, 2)
-                print(f"[crawl] folded bloom chain at round {br} "
-                      f"in {fold_dt:.1f}s")
     if timings is not None:
         timings["rounds_sec"] = round(rounds_sec, 2)
     # finalize maintenance (r8): the crawl output flips read-heavy the
@@ -1036,7 +758,9 @@ def crawl(
     # right-sized files instead of rounds×shuffle-partitions tiny ones.
     # Planning is parquet-footer-only and already-compacted rounds are
     # skipped, so a resume that adds nothing costs only footer reads.
-    if cfg.compact_on_done and state["done"]:
+    # A partial run (max_rounds reached) is still being appended to
+    # across resumes and is left as it is.
+    if state["done"]:
         tc = time.time()
         stats = {}
         for table in ("crawled", "errors", "frontier"):

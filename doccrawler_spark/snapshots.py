@@ -69,9 +69,8 @@ class SnapshotCatalog:
     def write(self, df, table: str, round_: int, partition_by: list[str] | None = None) -> None:
         """Write a snapshot and atomically publish its manifest.
 
-        Rewriting an ALREADY-COMMITTED round (maintenance ops:
-        ``fold_bloom`` at vacuum cadence, ``_ensure_bloom``'s
-        param-drift rebuild) never touches the committed bytes: the
+        Rewriting an ALREADY-COMMITTED round (the maintenance op
+        :meth:`compact`) never touches the committed bytes: the
         data lands in a fresh uuid-suffixed directory and the manifest
         ``os.replace`` is the commit point.  A crash anywhere before
         the replace leaves the old snapshot fully readable; a reader
@@ -187,8 +186,8 @@ class SnapshotCatalog:
 
         A round's first complete publication is sealed with a
         ``_published.json`` marker (its file list) and is IMMUTABLE
-        from then on: a later rewrite of the committed round (compact,
-        fold_bloom) must NOT re-publish, because Spark's
+        from then on: a later rewrite of the committed round
+        (:meth:`compact`) must NOT re-publish, because Spark's
         FileStreamSource tracks files by path — renamed content-equal
         files would be delivered as new rows (duplicates) and unlinking
         listed-but-unread old files fails the micro-batch.  The sealed

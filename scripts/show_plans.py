@@ -247,35 +247,6 @@ def main() -> None:
     ))
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
-    # 9. partitioned, generation-chained Bloom seen-prefilter
-    # (north_rule bloom/cuckoo): _ensure_bloom heals the filter from the
-    # crawl's frontier history (the tiny crawl itself stays under
-    # bloom_min_seen); one row of <m_bits, words> structs per bucket,
-    # any-generation EXISTS probe evaluated in codegen, and ONLY the
-    # maybe-seen branch enters the exact LeftAnti against the seen
-    # table.  The static plan may show SMJ for the tiny agg side (stats
-    # unknown post-aggregate) — AQE converts it at runtime from actual
-    # sizes, and at 10^10 the filter co-partitions on bucket instead
-    from doccrawler_spark import bloom as B
-    from doccrawler_spark.crawl import CrawlConfig as _CC
-    from doccrawler_spark.crawl import _ensure_bloom
-
-    bcfg = _CC(broadcast_dedup_max_frontier=0, seen_buckets=8,
-               bloom_m_bits=1 << 16)
-    upto = catalog.committed_rounds("frontier")[-1]
-    bloom_df = _ensure_bloom(spark, catalog, bcfg, upto)
-    pre = B.prefilter_new_chained(
-        cand, bloom_df, catalog.seen_table(spark, 8),
-        bcfg.seen_buckets, bcfg.bloom_k,
-    )
-    sections.append((
-        "Bloom seen-prefilter split (definitely-new ∪ (maybe-seen "
-        "LeftAnti seen); any-generation probe stays in codegen)",
-        plan_of(pre),
-        ["LeftAnti", "Union", "xxhash64", "exists",
-         "!CartesianProduct"],
-    ))
-
     md = [f"# BENCH/PLANS — physical plans of key operators ({datetime.date.today()})",
           "", "Regenerate with `python scripts/show_plans.py`. Each section lists",
           "the plan properties asserted (`!x` = must be ABSENT; present/absent",

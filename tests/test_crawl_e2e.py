@@ -39,14 +39,17 @@ def _load(spark, spec):
 
 
 def _run_both(spark, tmp_path, spec, *, max_depth, politeness, round_seconds=60.0,
-              budget=50, resume_after=None):
+              budget=50, resume_after=None, **engine_cfg):
+    """The oracle and the engine over the same web; ``engine_cfg`` sets
+    engine-only CrawlConfig fields (physical gates, never semantics)."""
     web, pages, golden, seeds = _load(spark, spec)
     ocfg = OracleConfig(max_depth=max_depth, budget_per_site=budget,
                         politeness=politeness, round_seconds=round_seconds)
     oracle = SequentialOracle(pages, ocfg).run(seeds)
 
     ecfg = CrawlConfig(max_depth=max_depth, budget_per_site=budget,
-                       politeness=politeness, round_seconds=round_seconds)
+                       politeness=politeness, round_seconds=round_seconds,
+                       **engine_cfg)
     root = os.path.join(str(tmp_path), "snap")
     if resume_after is not None:
         # run only N rounds, then resume to completion from the snapshot
@@ -94,9 +97,16 @@ def test_tiny_bfs_and_sitemap(spark, tmp_path):
     _assert_equivalent(spark, oracle, catalog, golden)
 
 
-def test_deeper_crawl_multi_round(spark, tmp_path):
+@pytest.mark.parametrize("engine_cfg", [
+    {},
+    # every round takes the streamed-join fetch instead of the IN-list
+    # point lookup that tiny frontiers get by default
+    {"point_lookup_max_frontier": 0},
+], ids=["default", "streamed_fetch"])
+def test_deeper_crawl_multi_round(spark, tmp_path, engine_cfg):
     oracle, catalog, _, golden = _run_both(
-        spark, tmp_path, tiny_spec(), max_depth=4, politeness=True
+        spark, tmp_path, tiny_spec(), max_depth=4, politeness=True,
+        **engine_cfg,
     )
     assert oracle.rounds >= 3
     _assert_equivalent(spark, oracle, catalog, golden)
@@ -358,12 +368,13 @@ def test_iceberg_backend_roundtrip(spark, tmp_path):
 
 
 def test_rewrite_committed_round_is_atomic(spark, tmp_path):
-    """ADVICE r7 (fold_bloom torn-write): rewriting an already-
-    committed round must publish into a FRESH directory with the
-    manifest replace as the commit point — the original bytes stay
-    intact until the new manifest is visible, so a crash mid-rewrite
-    can never leave a committed manifest pointing at a torn dir, and
-    a reader mid-scan never has files deleted under it."""
+    """Torn-write safety of the rewrite path catalog.compact takes:
+    rewriting an already-committed round must publish into a FRESH
+    directory with the manifest replace as the commit point — the
+    original bytes stay intact until the new manifest is visible, so a
+    crash mid-rewrite can never leave a committed manifest pointing at
+    a torn dir, and a reader mid-scan never has files deleted under
+    it."""
     from doccrawler_spark.snapshots import SnapshotCatalog
 
     catalog = SnapshotCatalog(str(tmp_path / "snap"))
@@ -453,8 +464,8 @@ def test_compact_snapshots(spark, tmp_path):
 
 
 def test_crawl_compacts_on_done(spark, tmp_path):
-    """compact_on_done (the default) leaves every committed crawled
-    round as ONE right-sized file after the crawl finishes, with the
+    """A finished crawl (state done) compacts: every committed crawled
+    round is ONE right-sized file after the crawl finishes, with the
     oracle equivalence fully intact and the cost timed separately."""
     web, pages, golden, seeds = _load(spark, tiny_spec())
     from tests.oracle import OracleConfig, SequentialOracle

@@ -1,9 +1,10 @@
 """Driver queries vs their DuckDB ``oracle_sql()`` replay on synthesized
 edge-case tables: NULL, empty, whitespace-only and non-ASCII text with
-planted duplicates, and embeddings with zero-norm vectors and a
-near-dup cluster.  No testdata tier carries any of these, so the
-tables are written here; each leaf must return exactly the rows the
-oracle computes over the same parquet files."""
+planted duplicates, and embeddings with zero-norm vectors (one of
+them a knn_join query) and a near-dup cluster.  No testdata tier
+carries any of these, so the tables are written here; each leaf must
+return exactly the rows the oracle computes over the same parquet
+files."""
 
 import math
 import os
@@ -13,7 +14,8 @@ import pandas as pd
 import pytest
 
 LEAVES = ("exact_dedup", "simhash", "chunk_documents", "ngram_jaccard",
-          "embedding_neardup", "knn_join")
+          "embedding_neardup", "knn_join", "minhash_lsh", "minhash_verified",
+          "token_stats", "quality_scores", "lang_id", "fingerprint")
 
 EDGE_TEXTS = [
     None,
@@ -63,6 +65,9 @@ def _embeddings() -> pd.DataFrame:
     base = [rng.gauss(0, 1) for _ in range(dim)]
     vecs += [[x + rng.gauss(0, 1e-3) for x in base] for _ in range(6)]
     vecs += [[0.0] * dim, [0.0] * dim]  # zero-norm: never pairs
+    # vec_id 0 is zero-norm too: knn_join's 5 queries are the lowest
+    # vec_ids, so one of them has no neighbour at all
+    vecs.insert(0, [0.0] * dim)
     return pd.DataFrame({
         "vec_id": pd.Series(range(len(vecs)), dtype="int64"),
         "embedding": [[float(x) for x in v] for v in vecs],
