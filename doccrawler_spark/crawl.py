@@ -36,6 +36,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import functions as Fx
 from .shuffle import global_sequence, topk_per_group
@@ -258,47 +259,24 @@ def seed_round(
         probe_pages = catalog.read(spark, "seed_probes", 0)
         maybe_bc = lambda df: df  # too big to broadcast; AQE picks
 
-    titled = (
-        probes.join(
-            maybe_bc(probe_pages),
-            probes.seed_url == probe_pages.url, "left",
-        )
-        .drop("url")
-        .select("seed_url", "seed_ix", "sm1", "sm2",
-                Fx.title_udf(F.col("html")).alias("title"))
-    )
-    sid = Fx.site_id_udf()
-    sites = titled.select(
-        "seed_url", "seed_ix", "sm1", "sm2",
-        sid(F.coalesce(F.col("title"), F.lit("")), F.col("seed_url")).alias("site_id"),
-    )
-
     # sitemap probe: /sitemap.xml then /sitemap_index.xml (helper.py:215-226)
-    p1 = probe_pages.withColumnRenamed("html", "html1")
-    p2 = probe_pages.withColumnRenamed("html", "html2")
+    # — the three probe pages join onto their seed, then ONE Python
+    # stage derives site_id and the sitemap <loc> list together
+    def probe(key: str, html: str) -> DataFrame:
+        return maybe_bc(probe_pages.select(F.col("url").alias(key),
+                                           F.col("html").alias(html)))
+
     probed = (
-        sites.join(maybe_bc(p1), sites.sm1 == p1.url, "left").drop(p1.url)
-        .join(maybe_bc(p2), sites.sm2 == p2.url, "left").drop(p2.url)
-        # fall through on PARSE RESULT, not file presence: an existing
-        # sitemap.xml with zero <loc> urls falls back to
-        # /sitemap_index.xml (helper.py:219-225 — "if urls_found: break")
-        .withColumn(
-            "locs1",
-            F.when(F.col("html1").isNotNull(), Fx.parse_sitemap_udf(F.col("html1"))),
-        )
-        .withColumn(
-            "locs2",
-            F.when(F.col("html2").isNotNull(), Fx.parse_sitemap_udf(F.col("html2"))),
-        )
-        .withColumn(
-            "locs",
-            F.when(F.size("locs1") > 0, F.col("locs1")).otherwise(F.col("locs2")),
-        )
-        .select("seed_url", "seed_ix", "site_id", "locs")
+        probes.join(probe("seed_url", "html"), "seed_url", "left")
+        .join(probe("sm1", "html1"), "sm1", "left")
+        .join(probe("sm2", "html2"), "sm2", "left")
+        .select("seed_url", "seed_ix", Fx.seed_probe_udf(
+            "seed_url", "html", "html1", "html2").alias("probe"))
     ).cache()
+    sites = probed.select("seed_url", "seed_ix", "probe.site_id", "probe.locs")
 
     sitemap_entries = (
-        probed.filter(F.size("locs") > 0)
+        sites.filter(F.size("locs") > 0)
         .select(
             "seed_ix", "site_id", F.col("seed_url").alias("home_url"),
             F.posexplode("locs").alias("loc_ix", "url"),
@@ -306,7 +284,7 @@ def seed_round(
         .withColumn("sitemap_mode", F.lit(True))
     )
     bfs_entries = (
-        probed.filter(F.col("locs").isNull() | (F.size("locs") == 0))
+        sites.filter(F.col("locs").isNull() | (F.size("locs") == 0))
         .select(
             "seed_ix", "site_id", F.col("seed_url").alias("home_url"),
             F.lit(-1).alias("loc_ix"), F.col("seed_url").alias("url"),
@@ -338,6 +316,7 @@ def seed_round(
     )
     catalog.write(frontier, "frontier", 0)
 
+    # from the cached probe results: the probe UDF never re-runs
     budget0 = (
         sites.select("site_id").distinct()
         .withColumn("used", F.lit(0))
@@ -378,7 +357,8 @@ def run_round(
     cfg: CrawlConfig,
     round_: int,
     state: dict,
-    has_delays: bool | None = None,
+    *,
+    has_delays: bool,
 ) -> dict:
     """One fetch→extract→discover→dedup round; commits round snapshots."""
     import os
@@ -401,8 +381,6 @@ def run_round(
     budget_gated = cfg.budget_per_site < 2**30
     budget = catalog.read_upto(spark, "budget", round_ - 1) if budget_gated else None
     robots = catalog.read(spark, "robots", 0)
-    if has_delays is None:
-        has_delays = not robots.filter(F.col("crawl_delay").isNotNull()).isEmpty()
 
     # ---- politeness: per-host quota, defer the rest (priority kept)
     if cfg.politeness and has_delays:
@@ -458,9 +436,20 @@ def run_round(
         if 0 < frontier_size <= cfg.point_lookup_max_frontier:
             # point-lookup fetch: push the round's URL list into the
             # scan as an IN filter so parquet row-group stats prune the
-            # corpus (decodes only the row groups containing the URLs)
-            fetch_urls = [r["url"] for r in fetch_now.select("url").collect()]
-            corpus = corpus.filter(F.col("url").isin(fetch_urls))
+            # corpus (decodes only the row groups containing the URLs).
+            # Both halves of the politeness cut (≤ the frontier's
+            # point_lookup_max_frontier rows) are collected in ONE
+            # action and re-enter the plan as local relations, so
+            # neither the crawled nor the frontier write re-runs the cut.
+            tagged = fetch_now.withColumn("_now", F.lit(True)).unionByName(
+                deferred.withColumn("_now", F.lit(False)))
+            cut = tagged.collect()
+            schema = StructType(tagged.schema.fields[:-1])
+            now = [r for r in cut if r["_now"]]
+            fetch_now = spark.createDataFrame([r[:-1] for r in now], schema)
+            deferred = spark.createDataFrame(
+                [r[:-1] for r in cut if not r["_now"]], schema)
+            corpus = corpus.filter(F.col("url").isin([r["url"] for r in now]))
     fetched = (
         fetch_now.join(corpus, "url", "inner")
         .withColumn("page", Fx.extract_page_udf(F.col("html")))
@@ -474,234 +463,230 @@ def run_round(
             F.col("page.links").alias("raw_links"),
         )
     )
-    try:
-        _mark("plan")
-        catalog.write(fetched, "crawled", round_)
-        _mark("fetch_extract_write")
-        crawled_back = catalog.read(spark, "crawled", round_)
+    _mark("plan")
+    catalog.write(fetched, "crawled", round_)
+    _mark("fetch_extract_write")
+    crawled_back = catalog.read(spark, "crawled", round_)
 
-        # ---- per-partition lineage + fetch metrics (S9/O5 analogue)
-        lineage = crawled_back.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(
-            F.count("*").alias("pages_fetched"),
-            F.sum("html_len").alias("bytes_fetched"),
-        ).withColumn("round", F.lit(round_))
-        catalog.write(lineage, "metrics", round_)
-        _mark("metrics")
+    # ---- per-partition lineage + fetch metrics (S9/O5 analogue)
+    lineage = crawled_back.groupBy(
+        F.spark_partition_id().alias("partition_id")
+    ).agg(
+        F.count("*").alias("pages_fetched"),
+        F.sum("html_len").alias("bytes_fetched"),
+    ).withColumn("round", F.lit(round_))
+    catalog.write(lineage, "metrics", round_)
+    _mark("metrics")
 
+    # ---- discover (X2) on expanding pages only (F2/F3 gates)
+    expanding = crawled_back.filter(
+        (~F.col("sitemap_mode")) & (F.col("depth") + 1 < cfg.max_depth)
+    )
+    links = expanding.select(
+        "url", "host", "site_id",
+        F.col("base_url").alias("home_url"), "depth", "priority",
+        "raw_links",
+    )
+    # F4 fragment strip → in-page dedup F6 → same-host F5 → canonical sort
+    links = links.withColumn(
+        "internal",
+        F.array_sort(
+            F.filter(
+                F.array_distinct(
+                    F.transform("raw_links", lambda u: Fx.strip_fragment_col(u))
+                ),
+                lambda u: Fx.host_col(u) == F.col("host"),
+            )
+        ),
+    ).withColumn(
+        "n_batches",
+        F.ceil(F.size("internal") / F.lit(cfg.filter_batch_size)).cast("int"),
+    ).drop("raw_links")
+    # materialize once WHEN budget-gated: `links` then feeds BOTH
+    # the children pipeline and the budget-spend aggregate, and
+    # broadcast-exchange jobs would re-execute this whole lineage
+    # per consumer.  Unlimited budget has a single consumer — the
+    # checkpoint would only add a full materialization job.
+    if budget_gated:
+        links = links.localCheckpoint(eager=True)
 
-        # ---- discover (X2) on expanding pages only (F2/F3 gates)
-        expanding = crawled_back.filter(
-            (~F.col("sitemap_mode")) & (F.col("depth") + 1 < cfg.max_depth)
+    # ---- budget (F9): only the first `budget` consuming pages per
+    # site can spend; bounded window after a salted top-k.
+    # Fast path: an effectively-unlimited budget (throughput bench)
+    # can never gate a batch, so the dim join + two windows vanish.
+    if not budget_gated:
+        kept = links.filter(F.col("n_batches") > 0).withColumn(
+            "kept_links", Fx.rule_filter_links(F.col("internal"))
         )
-        links = expanding.select(
-            "url", "host", "site_id",
-            F.col("base_url").alias("home_url"), "depth", "priority",
-            "raw_links",
+    else:
+        consuming = links.filter(F.col("n_batches") > 0).join(
+            F.broadcast(budget), "site_id", "left"
         )
-        # F4 fragment strip → in-page dedup F6 → same-host F5 → canonical sort
-        links = links.withColumn(
-            "internal",
-            F.array_sort(
-                F.filter(
-                    F.array_distinct(
-                        F.transform("raw_links", lambda u: Fx.strip_fragment_col(u))
-                    ),
-                    lambda u: Fx.host_col(u) == F.col("host"),
+        cand, _over = topk_per_group(
+            consuming, "site_id", ["priority"], F.col("max"), salt=cfg.salt,
+            unique_col="url",
+        )
+        w = Window.partitionBy("site_id").orderBy("priority").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        cand = cand.withColumn(
+            "cum_before", F.coalesce(F.sum("n_batches").over(w), F.lit(0))
+        ).withColumn(
+            "allowed_batches",
+            F.greatest(
+                F.lit(0),
+                F.least(
+                    F.col("n_batches"),
+                    F.col("max") - F.col("used") - F.col("cum_before"),
+                ),
+            ).cast("int"),
+        )
+        kept = cand.filter(F.col("allowed_batches") > 0).withColumn(
+            "kept_links",
+            Fx.rule_filter_links(
+                F.slice(
+                    F.col("internal"), 1,
+                    F.col("allowed_batches") * F.lit(cfg.filter_batch_size),
                 )
             ),
-        ).withColumn(
-            "n_batches",
-            F.ceil(F.size("internal") / F.lit(cfg.filter_batch_size)).cast("int"),
-        ).drop("raw_links")
-        # materialize once WHEN budget-gated: `links` then feeds BOTH
-        # the children pipeline and the budget-spend aggregate, and
-        # broadcast-exchange jobs would re-execute this whole lineage
-        # per consumer.  Unlimited budget has a single consumer — the
-        # checkpoint would only add a full materialization job.
-        if budget_gated:
-            links = links.localCheckpoint(eager=True)
-
-        # ---- budget (F9): only the first `budget` consuming pages per
-        # site can spend; bounded window after a salted top-k.
-        # Fast path: an effectively-unlimited budget (throughput bench)
-        # can never gate a batch, so the dim join + two windows vanish.
-        if not budget_gated:
-            kept = links.filter(F.col("n_batches") > 0).withColumn(
-                "kept_links", Fx.rule_filter_links(F.col("internal"))
-            )
-        else:
-            consuming = links.filter(F.col("n_batches") > 0).join(
-                F.broadcast(budget), "site_id", "left"
-            )
-            cand, _over = topk_per_group(
-                consuming, "site_id", ["priority"], F.col("max"), salt=cfg.salt,
-                unique_col="url",
-            )
-            w = Window.partitionBy("site_id").orderBy("priority").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-            cand = cand.withColumn(
-                "cum_before", F.coalesce(F.sum("n_batches").over(w), F.lit(0))
-            ).withColumn(
-                "allowed_batches",
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.col("n_batches"),
-                        F.col("max") - F.col("used") - F.col("cum_before"),
-                    ),
-                ).cast("int"),
-            )
-            kept = cand.filter(F.col("allowed_batches") > 0).withColumn(
-                "kept_links",
-                Fx.rule_filter_links(
-                    F.slice(
-                        F.col("internal"), 1,
-                        F.col("allowed_batches") * F.lit(cfg.filter_batch_size),
-                    )
-                ),
-            )
-
-        # ---- children candidates (enqueue at depth+1, crawler_service.py:114-121)
-        children = kept.select(
-            "site_id", "home_url",
-            (F.col("depth") + 1).alias("depth"),
-            F.col("priority").alias("parent_priority"),
-            F.explode("kept_links").alias("url"),
-        )
-        children = _with_host(children)
-        children = _drop_disallowed(children, robots, cfg.politeness)
-
-        # first-enqueuer wins within the round (FIFO semantics).
-        # Materialized once — it is consumed three times (semi-join
-        # broadcast, anti-join, sequence numbering).
-        firsts = children.groupBy("url").agg(
-            F.min(
-                F.struct("parent_priority", "site_id", "home_url", "depth", "host")
-            ).alias("w")
-        ).select("url", "w.*").localCheckpoint(eager=True)
-
-        # ---- global seen-set anti-join (F8).  Only rounds strictly
-        # before this one — a partially-committed attempt of THIS
-        # round must not dedup against itself on resume.
-        if frontier_size < cfg.broadcast_dedup_max_frontier:
-            # the seen-set (which grows every round) is NEVER shuffled —
-            # it is scanned once (url column only, is_new filter pushed
-            # into the parquet scan) against a broadcast semi-join with
-            # this round's candidates, and the small hit-set broadcasts
-            # back into a map-side anti-join
-            seen_paths = [
-                catalog.data_path("frontier", r)
-                for r in catalog.committed_rounds("frontier")
-                if r < round_
-            ]
-            seen = (
-                spark.read.parquet(*seen_paths)
-                .filter(F.col("is_new"))
-                .select("url")
-            )
-            hits = seen.join(F.broadcast(firsts.select("url")), "url", "left_semi")
-            new_items = firsts.join(F.broadcast(hits), "url", "left_anti")
-        else:
-            # cluster-scale path: hash-bucketed seen TABLE.  The
-            # SortMergeJoin reads the (huge, ever-growing) seen side
-            # bucket-in-place with ZERO exchange; only this round's
-            # candidates shuffle (to the bucket count).  Appends are
-            # healed lazily up to round_-1, so crawls that crossed the
-            # broadcast threshold mid-run bulk-load their history once,
-            # and a crash between frontier commit and append is
-            # invisible (manifest-committed appends only + vacuum).
-            seen_tbl = _ensure_seen_table(spark, catalog, cfg, round_ - 1)
-            new_items = firsts.join(seen_tbl, "url", "left_anti")
-
-        # size the range exchange to the data: early rounds are tiny and
-        # a single-partition window beats the two-phase sampling jobs
-        npart = 1 if frontier_size < 100_000 else None
-        new_frontier_items = global_sequence(
-            new_items, ["parent_priority", "url"], "priority",
-            start=state["next_priority"], num_partitions=npart,
-        ).withColumn("sitemap_mode", F.lit(False)).select(
-            *_FRONTIER_COLS,
-            F.xxhash64("url").alias("url_hash"),
-            F.lit(round_).alias("round"),
-            F.lit(True).alias("is_new"),
         )
 
-        # deferred rows entered the seen set when first enqueued —
-        # re-snapshotting them must not re-mark them as deltas
-        next_frontier = deferred.select(*_FRONTIER_COLS).select(
-            "*",
-            F.xxhash64("url").alias("url_hash"),
-            F.lit(round_).alias("round"),
-            F.lit(False).alias("is_new"),
-        ).unionByName(new_frontier_items)
-        catalog.write(next_frontier, "frontier", round_)
-        _mark("discover_dedup_frontier")
+    # ---- children candidates (enqueue at depth+1, crawler_service.py:114-121)
+    children = kept.select(
+        "site_id", "home_url",
+        (F.col("depth") + 1).alias("depth"),
+        F.col("priority").alias("parent_priority"),
+        F.explode("kept_links").alias("url"),
+    )
+    children = _with_host(children)
+    children = _drop_disallowed(children, robots, cfg.politeness)
 
-        # ---- budget update: used' = min(max, used + Σ n_batches)
-        # (skipped entirely for unlimited budget — table stays at r0)
-        if budget_gated:
-            spend = links.groupBy("site_id").agg(F.sum("n_batches").alias("spent"))
-            new_budget = (
-                budget.join(spend, "site_id", "left")
-                .withColumn(
-                    "used",
-                    F.least(F.col("max"), F.col("used") + F.coalesce("spent", F.lit(0)).cast("int")),
-                )
-                .select("site_id", "used", "max")
-            )
-            catalog.write(new_budget, "budget", round_)
+    # first-enqueuer wins within the round (FIFO semantics).
+    # Materialized once — it is consumed three times (semi-join
+    # broadcast, anti-join, sequence numbering).
+    firsts = children.groupBy("url").agg(
+        F.min(
+            F.struct("parent_priority", "site_id", "home_url", "depth", "host")
+        ).alias("w")
+    ).select("url", "w.*").localCheckpoint(eager=True)
 
-        # ---- error sink (S8): fetch misses — frontier rows that found
-        # no corpus page — land in a per-round `errors` snapshot instead
-        # of silently vanishing (ref error_repository.py:14-21, producer
-        # crawler_service.py:62-70).  Computed ENTIRELY from committed
-        # snapshots (pruned column reads, no UDF/window lineage
-        # re-execution): missed = frontier(r-1) under the depth gate,
-        # minus crawled(r), minus politeness-deferred rows (which were
-        # re-snapshotted into frontier(r) with is_new=false).
-        # Extraction itself is total (regex scanner), so fetch misses
-        # are the only failure class here.
-        prev = (
-            catalog.read(spark, "frontier", round_ - 1)
-            .filter(F.col("depth") < cfg.max_depth)
-            .select("url", "host", "site_id", "depth", "priority")
+    # ---- global seen-set anti-join (F8).  Only rounds strictly
+    # before this one — a partially-committed attempt of THIS
+    # round must not dedup against itself on resume.
+    if frontier_size < cfg.broadcast_dedup_max_frontier:
+        # the seen-set (which grows every round) is NEVER shuffled —
+        # it is scanned once (url column only, is_new filter pushed
+        # into the parquet scan) against a broadcast semi-join with
+        # this round's candidates, and the small hit-set broadcasts
+        # back into a map-side anti-join
+        seen_paths = [
+            catalog.data_path("frontier", r)
+            for r in catalog.committed_rounds("frontier")
+            if r < round_
+        ]
+        seen = (
+            spark.read.schema(FRONTIER_SCHEMA).parquet(*seen_paths)
+            .filter(F.col("is_new"))
+            .select("url")
         )
-        not_missed = crawled_back.select("url")
-        if cfg.politeness and has_delays:
-            not_missed = not_missed.unionByName(
-                catalog.read(spark, "frontier", round_)
-                .filter(~F.col("is_new")).select("url")
-            )
-        misses = prev.join(not_missed, "url", "left_anti").select(
-            "url", "host", "site_id", "depth",
-            F.lit(round_).alias("round"), "priority",
-            F.lit("fetch_miss").alias("reason"),
-        )
-        catalog.write(misses, "errors", round_)
-        _mark("errors")
+        hits = seen.join(F.broadcast(firsts.select("url")), "url", "left_semi")
+        new_items = firsts.join(F.broadcast(hits), "url", "left_anti")
+    else:
+        # cluster-scale path: hash-bucketed seen TABLE.  The
+        # SortMergeJoin reads the (huge, ever-growing) seen side
+        # bucket-in-place with ZERO exchange; only this round's
+        # candidates shuffle (to the bucket count).  Appends are
+        # healed lazily up to round_-1, so crawls that crossed the
+        # broadcast threshold mid-run bulk-load their history once,
+        # and a crash between frontier commit and append is
+        # invisible (manifest-committed appends only + vacuum).
+        seen_tbl = _ensure_seen_table(spark, catalog, cfg, round_ - 1)
+        new_items = firsts.join(seen_tbl, "url", "left_anti")
 
-        # counts straight from the committed parquet footers / a single
-        # driver-side column read — zero Spark jobs
-        n_new = catalog.count_true("frontier", round_, "is_new", spark=spark)
-        n_next = catalog.count("frontier", round_)
-        new_state = {
-            "next_priority": state["next_priority"] + n_new,
-            "round": round_,
-            "done": n_next == 0,
-            "frontier_size": n_next,
-            # surfaced error count (parquet-footer read, no Spark job)
-            "n_errors": catalog.count("errors", round_),
-        }
-        _mark("counts")
-        if _timing:
-            print(f"[phase] r{round_} {_phase_t}")
-        catalog.write_state(round_, new_state)
-        return new_state
-    finally:
-        pass
+    # size the range exchange to the data: early rounds are tiny and
+    # a single-partition window beats the two-phase sampling jobs
+    npart = 1 if frontier_size < 100_000 else None
+    new_frontier_items = global_sequence(
+        new_items, ["parent_priority", "url"], "priority",
+        start=state["next_priority"], num_partitions=npart,
+    ).withColumn("sitemap_mode", F.lit(False)).select(
+        *_FRONTIER_COLS,
+        F.xxhash64("url").alias("url_hash"),
+        F.lit(round_).alias("round"),
+        F.lit(True).alias("is_new"),
+    )
+
+    # deferred rows entered the seen set when first enqueued —
+    # re-snapshotting them must not re-mark them as deltas
+    next_frontier = deferred.select(*_FRONTIER_COLS).select(
+        "*",
+        F.xxhash64("url").alias("url_hash"),
+        F.lit(round_).alias("round"),
+        F.lit(False).alias("is_new"),
+    ).unionByName(new_frontier_items)
+    catalog.write(next_frontier, "frontier", round_)
+    _mark("discover_dedup_frontier")
+
+    # ---- budget update: used' = min(max, used + Σ n_batches)
+    # (skipped entirely for unlimited budget — table stays at r0)
+    if budget_gated:
+        spend = links.groupBy("site_id").agg(F.sum("n_batches").alias("spent"))
+        new_budget = (
+            budget.join(spend, "site_id", "left")
+            .withColumn(
+                "used",
+                F.least(F.col("max"), F.col("used") + F.coalesce("spent", F.lit(0)).cast("int")),
+            )
+            .select("site_id", "used", "max")
+        )
+        catalog.write(new_budget, "budget", round_)
+
+    # ---- error sink (S8): fetch misses — frontier rows that found
+    # no corpus page — land in a per-round `errors` snapshot instead
+    # of silently vanishing (ref error_repository.py:14-21, producer
+    # crawler_service.py:62-70).  Computed ENTIRELY from committed
+    # snapshots (pruned column reads, no UDF/window lineage
+    # re-execution): missed = frontier(r-1) under the depth gate,
+    # minus crawled(r), minus politeness-deferred rows (which were
+    # re-snapshotted into frontier(r) with is_new=false).
+    # Extraction itself is total (regex scanner), so fetch misses
+    # are the only failure class here.
+    prev = (
+        catalog.read(spark, "frontier", round_ - 1)
+        .filter(F.col("depth") < cfg.max_depth)
+        .select("url", "host", "site_id", "depth", "priority")
+    )
+    not_missed = crawled_back.select("url")
+    if cfg.politeness and has_delays:
+        not_missed = not_missed.unionByName(
+            catalog.read(spark, "frontier", round_)
+            .filter(~F.col("is_new")).select("url")
+        )
+    misses = prev.join(not_missed, "url", "left_anti").select(
+        "url", "host", "site_id", "depth",
+        F.lit(round_).alias("round"), "priority",
+        F.lit("fetch_miss").alias("reason"),
+    )
+    catalog.write(misses, "errors", round_)
+    _mark("errors")
+
+    # counts straight from the committed parquet footers / a single
+    # driver-side column read — zero Spark jobs
+    n_new = catalog.count_true("frontier", round_, "is_new", spark=spark)
+    n_next = catalog.count("frontier", round_)
+    new_state = {
+        "next_priority": state["next_priority"] + n_new,
+        "round": round_,
+        "done": n_next == 0,
+        "frontier_size": n_next,
+        # surfaced error count (parquet-footer read, no Spark job)
+        "n_errors": catalog.count("errors", round_),
+    }
+    _mark("counts")
+    if _timing:
+        print(f"[phase] r{round_} {_phase_t}")
+    catalog.write_state(round_, new_state)
+    return new_state
 
 
 def crawl(
@@ -734,11 +719,10 @@ def crawl(
             timings["seed_sec"] = round(time.time() - t0, 2)
 
     # politeness machinery is skipped wholesale when no host declares a
-    # crawl-delay (checked once, not per round)
-    has_delays = False
-    if cfg.politeness:
-        robots = catalog.read(spark, "robots", 0)
-        has_delays = not robots.filter(F.col("crawl_delay").isNotNull()).isEmpty()
+    # crawl-delay (checked once, not per round, from the robots
+    # snapshot's footer null counts — no Spark job)
+    has_delays = cfg.politeness and catalog.count_nonnull(
+        "robots", 0, "crawl_delay") > 0
 
     rounds_sec = 0.0
     while not state["done"] and state["round"] < cfg.max_rounds:
@@ -804,7 +788,7 @@ def seen_all(spark: SparkSession, catalog: SnapshotCatalog) -> DataFrame:
     (url, url_hash, site_id, depth, round)."""
     paths = [catalog.data_path("frontier", r) for r in catalog.committed_rounds("frontier")]
     return (
-        spark.read.parquet(*paths)
+        spark.read.schema(FRONTIER_SCHEMA).parquet(*paths)
         .filter(F.col("is_new"))
         .select("url", "url_hash", "site_id", "depth", "round")
     )

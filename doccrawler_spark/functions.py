@@ -175,26 +175,31 @@ def discover_links_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda b: None if b is None else discover_links(_decode(b)))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def parse_sitemap_udf(html: pd.Series) -> pd.Series:
-    """sitemap XML body → <loc> list in document order (S2)."""
-    return html.map(lambda b: None if b is None else parse_sitemap(_decode(b)))
+_SEED_PROBE_SCHEMA = T.StructType([
+    T.StructField("site_id", T.StringType()),
+    T.StructField("locs", T.ArrayType(T.StringType())),
+])
 
 
-@F.pandas_udf(T.StringType())
-def title_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: None if b is None else extract_title(_decode(b)))
-
-
-def site_id_udf():
-    @F.pandas_udf(T.StringType())
-    def _site_id(title: pd.Series, base_url: pd.Series) -> pd.Series:
-        return pd.Series(
-            [site_id_from_title(t if isinstance(t, str) else "", u)
-             for t, u in zip(title, base_url)]
-        )
-
-    return _site_id
+@F.pandas_udf(_SEED_PROBE_SCHEMA)
+def seed_probe_udf(seed_url: pd.Series, html: pd.Series, html1: pd.Series,
+                   html2: pd.Series) -> pd.DataFrame:
+    """One seed's probes → (site_id, sitemap <loc> list) in one Python
+    stage.  site_id comes from the seed page's <title>, netloc when the
+    page or its title is missing (helper.py:41-63).  The sitemap falls
+    through on the PARSE RESULT, not on file presence: a /sitemap.xml
+    with zero <loc> urls falls back to /sitemap_index.xml
+    (helper.py:215-226, "if urls_found: break"); locs is NULL when
+    neither file exists."""
+    site_ids, locs = [], []
+    for u, b, b1, b2 in zip(seed_url, html, html1, html2):
+        title = "" if b is None else extract_title(_decode(b))
+        site_ids.append(site_id_from_title(title, u))
+        found = None if b1 is None else parse_sitemap(_decode(b1))
+        if not found:
+            found = None if b2 is None else parse_sitemap(_decode(b2))
+        locs.append(found)
+    return pd.DataFrame({"site_id": site_ids, "locs": locs})
 
 
 _ROBOTS_SCHEMA = T.StructType([

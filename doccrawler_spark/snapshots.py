@@ -23,6 +23,27 @@ import time
 import uuid
 
 
+def _read_parquet(spark, path: str, schema_json: str | None):
+    """Read parquet with a recorded schema when there is one, else
+    infer it (inference runs a one-task Spark job over the footers)."""
+    if schema_json is None:
+        return spark.read.parquet(path)
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(path)
+
+
+def _leaf_index(metadata, column: str) -> int:
+    """Index of the column chunk of top-level primitive ``column`` in a
+    parquet file's row groups, -1 when absent.  The arrow field index
+    differs from it once a nested column comes first."""
+    schema = metadata.schema
+    for i in range(len(schema)):
+        if schema.column(i).path == column:
+            return i
+    return -1
+
+
 class SnapshotCatalog:
     """Per-crawl catalog rooted at one directory.
 
@@ -88,7 +109,11 @@ class SnapshotCatalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        self._publish(table, round_, {"path": path, "partition_by": partition_by or []})
+        # the schema rides in the manifest (as Iceberg table metadata
+        # carries it), so readers skip Spark's one-task footer-inference
+        # job per snapshot read
+        self._publish(table, round_, {"path": path, "partition_by": partition_by or [],
+                                      "schema": df.schema.json()})
         if prev is not None:
             old = prev.get("path") or self.data_dir(table, round_)
             if os.path.realpath(old) != os.path.realpath(path):
@@ -290,12 +315,16 @@ class SnapshotCatalog:
         return rounds[-1] if rounds else None
 
     def read(self, spark, table: str, round_: int | None = None):
-        """Read a table snapshot (latest when ``round_`` is None)."""
+        """Read a table snapshot (latest when ``round_`` is None) with
+        the schema its manifest records — no Spark job.  A manifest
+        without one (written before schemas were recorded) falls back
+        to inference."""
         if round_ is None:
             round_ = self.latest_round(table)
         if round_ is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        return spark.read.parquet(self.data_path(table, round_))
+        m = self._read_manifest(table, round_) or {}
+        return _read_parquet(spark, self.data_path(table, round_), m.get("schema"))
 
     def exists(self, table: str, round_: int) -> bool:
         return os.path.exists(self._manifest_path(table, round_))
@@ -322,6 +351,32 @@ class SnapshotCatalog:
         for name in os.listdir(d):
             if name.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
+        return total
+
+    def count_nonnull(self, table: str, round_: int, column: str) -> int:
+        """Rows where top-level primitive ``column`` is not null, from
+        the row groups' null-count statistics — no Spark job.  A row
+        group without the statistic has that one column read
+        driver-side."""
+        import pyarrow.parquet as pq
+
+        d = self.data_path(table, round_)
+        total = 0
+        for name in sorted(os.listdir(d)):
+            if not name.endswith(".parquet"):
+                continue
+            f = pq.ParquetFile(os.path.join(d, name))
+            ci = _leaf_index(f.metadata, column)
+            if ci < 0:
+                continue
+            for g in range(f.metadata.num_row_groups):
+                rg = f.metadata.row_group(g)
+                stats = rg.column(ci).statistics
+                if stats is not None and stats.has_null_count:
+                    total += rg.num_rows - stats.null_count
+                else:
+                    col = f.read_row_group(g, columns=[column])[column]
+                    total += len(col) - col.null_count
         return total
 
     # mixed row groups above this many total rows switch count_true to
@@ -353,10 +408,7 @@ class SnapshotCatalog:
                 continue
             path = os.path.join(d, name)
             f = pq.ParquetFile(path)
-            try:
-                ci = f.schema_arrow.get_field_index(column)
-            except KeyError:
-                ci = -1
+            ci = _leaf_index(f.metadata, column)
             file_stats = 0
             file_mixed: list[int] = []
             for g in range(f.metadata.num_row_groups):
@@ -426,7 +478,8 @@ class SnapshotCatalog:
         job whose fixed scheduling latency would otherwise be paid
         rounds-many times in sequence, which measured 30–42 s for a
         ~10-round 240k-page crawl at local[32]."""
-        plan: list[tuple[int, str, int, int]] = []  # (round, dir, before, n_files)
+        # (round, dir, files before, files after, manifest schema)
+        plan: list[tuple[int, str, int, int, str | None]] = []
         for r in (rounds if rounds is not None
                   else self.committed_rounds(table)):
             m = self._read_manifest(table, r)
@@ -441,13 +494,13 @@ class SnapshotCatalog:
             n_files = max(1, -(-n_bytes // max(1, target_bytes_per_file)))
             if n_files >= len(before):
                 continue
-            plan.append((r, d, len(before), n_files))
+            plan.append((r, d, len(before), n_files, m.get("schema")))
         if not plan:
             return {}
 
         def _one(item):
-            r, d, n_before, n_files = item
-            self.write(spark.read.parquet(d).coalesce(n_files), table, r)
+            r, d, n_before, n_files, schema = item
+            self.write(_read_parquet(spark, d, schema).coalesce(n_files), table, r)
             after = [n for n in os.listdir(self.data_path(table, r))
                      if n.endswith(".parquet")]
             return r, (n_before, len(after))
@@ -532,8 +585,12 @@ class SnapshotCatalog:
         before = {
             fn for fn in os.listdir(self._seen_dir()) if fn.startswith("part-")
         }
+        # hash-partitioning to the bucket count first uses the bucket
+        # id's own function (Murmur3 pmod), so each task holds exactly
+        # one bucket and writes one file — not one per bucket per task
         (
-            urls_df.select("url").write.mode("append").format("parquet")
+            urls_df.select("url").repartition(n_buckets, "url")
+            .write.mode("append").format("parquet")
             .bucketBy(n_buckets, "url").option("path", self._seen_dir())
             .saveAsTable(name)
         )

@@ -197,6 +197,84 @@ def test_resume_invisible_partial_round(spark, tmp_path):
     _assert_equivalent(spark, oracle, catalog, golden)
 
 
+def test_resume_over_manifests_without_schema(spark, tmp_path):
+    """Catalogs whose manifests carry no schema (written before
+    manifests recorded one) still resume: reads fall back to schema
+    inference, and the crawl still equals the oracle."""
+    import json
+
+    spec = tiny_spec()
+    web, pages, golden, seeds = _load(spark, spec)
+    oracle = SequentialOracle(pages, OracleConfig(max_depth=4)).run(seeds)
+
+    root = os.path.join(str(tmp_path), "snap")
+    ecfg = CrawlConfig(max_depth=4)
+    crawl(spark, web, seeds, root, CrawlConfig(**{**ecfg.__dict__, "max_rounds": 0}))
+
+    stripped = 0
+    for table in ("frontier", "robots", "budget"):
+        for name in os.listdir(os.path.join(root, table)):
+            if not name.endswith(".manifest.json"):
+                continue
+            path = os.path.join(root, table, name)
+            with open(path) as f:
+                m = json.load(f)
+            assert "schema" in m
+            del m["schema"]
+            with open(path, "w") as f:
+                json.dump(m, f)
+            stripped += 1
+    assert stripped == 3
+
+    catalog = crawl(spark, web, seeds, root, ecfg, resume=True)
+    _assert_equivalent(spark, oracle, catalog, golden)
+
+
+def test_seed_probe_kernel(spark, tmp_path):
+    """The fused seed-probe UDF on each probe outcome: a sitemap.xml
+    with <loc> entries wins over sitemap_index.xml; an empty
+    sitemap.xml falls through to sitemap_index.xml; no sitemap crawls
+    the seed BFS (pre-seen); a missing seed page takes the netloc site
+    id.  Budget rows come from the same probe results."""
+    def page(title):
+        return f"<html><head><title>{title}</title></head><body></body></html>"
+
+    def sitemap(*locs):
+        return "<urlset>" + "".join(f"<url><loc>{u}</loc></url>" for u in locs) + "</urlset>"
+
+    rows = {
+        "https://a.test/": page("Alpha Docs!"),
+        "https://a.test/sitemap.xml": sitemap("https://a.test/x", "https://a.test/y"),
+        "https://a.test/sitemap_index.xml": sitemap("https://a.test/never"),
+        "https://b.test/": page("Beta"),
+        "https://b.test/sitemap.xml": sitemap(),
+        "https://b.test/sitemap_index.xml": sitemap("https://b.test/z"),
+        "https://c.test/": page("Gamma Site"),
+        # d.test serves no page at all
+    }
+    web = spark.createDataFrame(
+        [(u, h.encode()) for u, h in rows.items()], "url string, html binary")
+    seeds = ["https://a.test/", "https://b.test/", "https://c.test/", "https://d.test/"]
+    root = os.path.join(str(tmp_path), "snap")
+    catalog = crawl(spark, web, seeds, root, CrawlConfig(max_rounds=0))
+
+    got = [
+        (r["url"], r["site_id"], r["home_url"], r["sitemap_mode"], r["is_new"])
+        for r in catalog.read(spark, "frontier", 0).orderBy("priority").collect()
+    ]
+    assert got == [
+        ("https://a.test/x", "Alpha_Docs", "https://a.test/", True, False),
+        ("https://a.test/y", "Alpha_Docs", "https://a.test/", True, False),
+        ("https://b.test/z", "Beta", "https://b.test/", True, False),
+        ("https://c.test/", "Gamma_Site", "https://c.test/", False, True),
+        ("https://d.test/", "d_test", "https://d.test/", False, True),
+    ]
+    budget = {r["site_id"]: (r["used"], r["max"])
+              for r in catalog.read(spark, "budget", 0).collect()}
+    assert budget == {s: (0, 50) for s in
+                      ("Alpha_Docs", "Beta", "Gamma_Site", "d_test")}
+
+
 def test_sitemap_index_fallthrough(spark, tmp_path):
     """An existing-but-empty /sitemap.xml must fall through to
     /sitemap_index.xml (helper.py:219-225 breaks only when urls were
@@ -249,6 +327,14 @@ def test_bucketed_seen_table_e2e(spark, tmp_path):
     catalog = crawl(spark, web, seeds, root, cfg)
     _assert_equivalent(spark, oracle, catalog, golden)
 
+    # each append writes one file per bucket at most, not one per
+    # bucket per write task
+    import json
+
+    for r in catalog.seen_appended_rounds():
+        with open(catalog._seen_append_manifest(r)) as f:
+            assert len(json.load(f)["files"]) <= cfg.seen_buckets, r
+
     # appends healed through the second-to-last frontier round
     frontier_rounds = catalog.committed_rounds("frontier")
     assert set(catalog.seen_appended_rounds()) >= set(frontier_rounds[:-1])
@@ -277,6 +363,36 @@ def test_bucketed_seen_table_e2e(spark, tmp_path):
                        str(64 * 1024 * 1024))
 
 
+def test_seen_append_one_file_per_bucket(spark, tmp_path):
+    """A multi-task append to the bucketed seen table writes at most
+    one file per bucket, and every url lands in its Murmur3 bucket."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    catalog = SnapshotCatalog(str(tmp_path / "snap"))
+    urls = spark.range(0, 4000).select(
+        F.concat(F.lit("https://h.test/p"), F.col("id").cast("string")).alias("url")
+    ).repartition(8)
+    catalog.seen_append(spark, urls, 0, 4)
+    with open(catalog._seen_append_manifest(0)) as f:
+        files = json.load(f)["files"]
+    assert 0 < len(files) <= 4
+    tbl = catalog.seen_table(spark, 4)
+    assert tbl.count() == 4000
+    # the scan's bucket id (from the file name) is the hash bucket
+    bad = tbl.select(
+        "url",
+        F.input_file_name().alias("f"),
+    ).select(
+        F.regexp_extract("f", r"_(\d{5})\.c\d+", 1).cast("int").alias("b"),
+        F.expr("pmod(hash(url), 4)").alias("want"),
+    ).filter("b IS NULL OR b != want").count()
+    assert bad == 0
+
+
 def test_count_true_stats_and_spark_fallback(spark, tmp_path):
     """count_true must agree with a full count across all three paths:
     pure row-group statistics (homogeneous groups), driver-side reads
@@ -303,6 +419,64 @@ def test_count_true_stats_and_spark_fallback(spark, tmp_path):
         assert catalog.count_true("t", 0, "flag", spark=spark) == expected
     finally:
         SnapshotCatalog.COUNT_TRUE_DRIVER_MAX_ROWS = old
+
+
+def test_snapshot_read_launches_no_job(spark, tmp_path):
+    """A committed snapshot's manifest carries its schema, so reading
+    it launches no Spark job (no footer-inference job per read)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    catalog = SnapshotCatalog(str(tmp_path / "snap"))
+    df = spark.range(0, 100).select(
+        "id", F.col("id").cast("string").alias("s")).repartition(3)
+    catalog.write(df, "t", 0)
+
+    sc = spark.sparkContext
+    group = f"snapshot-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "snapshot read")
+    try:
+        read = catalog.read(spark, "t", 0)
+        upto = catalog.read_upto(spark, "t", 5)
+        fields = [(f.name, f.dataType.simpleString()) for f in read.schema]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert fields == [("id", "bigint"), ("s", "string")]
+    assert sorted(r["id"] for r in read.collect()) == list(range(100))
+    assert upto.count() == 100
+
+
+def test_count_nonnull_matches_spark_count(spark, tmp_path):
+    """count_nonnull (footer null counts) equals Spark's count(col) on
+    columns whose nulls spread over several files — including one that
+    sits after a nested column, whose leaf index differs from its
+    field index."""
+    from pyspark.sql import functions as F
+
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    catalog = SnapshotCatalog(str(tmp_path / "snap"))
+    df = spark.range(0, 2000).select(
+        "id",
+        F.when(F.col("id") % 5 == 0, F.struct(F.col("id").alias("a"),
+                                              F.col("id").alias("b"))).alias("nested"),
+        F.when((F.col("id") % 3 == 0) | (F.col("id") < 300), None)
+        .otherwise(F.col("id") * 0.5).alias("v"),
+    ).repartition(4, "id")
+    catalog.write(df, "t", 0)
+    files = [n for n in os.listdir(catalog.data_path("t", 0)) if n.endswith(".parquet")]
+    assert len(files) >= 2
+    want = df.select(F.count("v"), F.count("id")).first()
+    assert 0 < want[0] < 2000
+    assert catalog.count_nonnull("t", 0, "v") == want[0]
+    assert catalog.count_nonnull("t", 0, "id") == want[1] == 2000
+    assert catalog.count_nonnull("t", 0, "no_such_column") == 0
 
 
 def test_invariants(spark, tmp_path):
