@@ -157,7 +157,7 @@ def _q_ivf_topk(spark, sf_dir):
 
 # bump when the index layout/quantizer logic changes — invalidates the
 # per-(input, params) on-disk index cache below
-_ANN_IDX_VERSION = "r6"  # bumped: versioned-pointer index layout
+_ANN_IDX_VERSION = "catalog"  # bumped: layouts as catalog snapshots
 
 
 def _ann_index_dir(sf_dir: str, kind: str, tag: str) -> str:
@@ -185,39 +185,18 @@ def _ann_index_dir(sf_dir: str, kind: str, tag: str) -> str:
 
 
 def _ensure_index(d: str, build) -> None:
-    """Atomically populate the shared /tmp ANN index cache: build into
-    a unique sibling dir, then rename into place, mirroring the
-    repo's atomic-manifest pattern — two concurrent driver/bench
-    processes can no longer interleave ``mode("overwrite")`` deletes
-    with a reader's scan (the cache path either doesn't exist or is a
-    complete committed layout).  Losing the rename race to another
-    builder is success."""
-    import shutil
-
+    """Build the shared /tmp ANN index cache entry ``d`` unless a
+    layout is committed there.  A build publishes through the layout's
+    snapshot manifest (``ops.similarity``), so concurrent builders are
+    safe: each writes its own directory, the manifest replace is the
+    one commit point, and a reader sees no layout or a complete one.
+    A torn entry (a build that crashed before its commit) has no
+    manifest and is rebuilt; its directory is reclaimed by a later
+    commit once the catalog's grace window has passed."""
     from doccrawler_spark.ops.similarity import index_exists
 
-    if index_exists(d):
-        return
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    # heal a torn cache entry (crash mid-build under old code): a dir
-    # at d with no resolvable committed layout would otherwise make
-    # the rename below fail with ENOTEMPTY forever
-    if os.path.isdir(d):
-        shutil.rmtree(d, ignore_errors=True)
-    tmp = f"{d}.build.{os.getpid()}"
-    try:
-        build(tmp)
-    except BaseException:
-        # ANY build failure (Py4J/AnalysisException included, not just
-        # OSError) must not strand the tmp dir in the shared cache
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not index_exists(d):
-            raise
+    if not index_exists(d):
+        build(d)
 
 
 def _q_ivf_topk_indexed(spark, sf_dir):

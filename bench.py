@@ -140,7 +140,8 @@ def run_ann_compact_bench(spark, sf_dir: str) -> dict:
     """Exercise compact_index at bench scale on the 1,030-dir LSH
     layout (8 bits × 4 tables over sf embeddings): build fresh,
     FRAGMENT it the way repeated delta appends would (12-way sliced
-    files per bucket dir, published as a normal new version), measure
+    files per bucket dir, published as a new snapshot of the layout's
+    catalog with the same meta), measure
     lsh_topk_indexed on the fragmented layout, compact, measure again.
     Reported separately from the query table — this is maintenance-op
     evidence (write path + file-count effect + read-latency recovery),
@@ -149,15 +150,13 @@ def run_ann_compact_bench(spark, sf_dir: str) -> dict:
     import tempfile
 
     from doccrawler_spark.ops.similarity import (
-        _new_version_dir,
-        _publish_index_version,
-        _read_index_meta,
-        _resolve_index_dir,
-        _write_index_meta,
+        _LAYOUT,
+        _layout,
         compact_index,
         lsh_topk_indexed,
         write_lsh_index,
     )
+    from doccrawler_spark.snapshots import SnapshotCatalog
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     qv = [float(x) for x in
@@ -173,14 +172,11 @@ def run_ann_compact_bench(spark, sf_dir: str) -> dict:
         write_lsh_index(emb, root, n_bits=8, n_tables=4)
         out["build_sec"] = round(time.time() - t0, 3)
 
-        base = _resolve_index_dir(root)
-        meta = _read_index_meta(root)
-        frag = spark.read.option("basePath", base).parquet(base)
-        vdir, vname = _new_version_dir(root)
-        (frag.repartition(12).write.mode("overwrite")
-             .partitionBy("band", "key").parquet(vdir))
-        _write_index_meta(vdir, meta)
-        _publish_index_version(root, vname)
+        m = _layout(root)
+        frag = spark.read.option("basePath", m["path"]).parquet(m["path"])
+        SnapshotCatalog(root).write(frag.repartition(12), _LAYOUT, 0,
+                                    partition_by=m["partition_by"],
+                                    meta=m["meta"])
 
         t0 = time.time()
         lsh_topk_indexed(spark, root, qv, k=10).count()

@@ -69,7 +69,6 @@ class CrawlConfig:
     round_seconds: float = 60.0        # per-host quota = round_seconds/delay
     max_rounds: int = 64
     salt: int = 32                     # skew salt for hot-host windows
-    embed_dim: int = 64
     # frontier-size cutoff below which seen-set dedup uses the
     # broadcast semi/anti path (seen never shuffled); above it, the
     # hash-bucketed seen TABLE (one append per round, anti-join reads

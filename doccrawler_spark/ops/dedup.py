@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import tokens_col
 
 
 def _plan_bytes(df: DataFrame) -> int:
@@ -158,22 +157,33 @@ def _token_base_md5(tok: str) -> int:
     return b
 
 
-def _shingle_key_arrays_arrow(
+def _shingle_key_arrays(
     documents: DataFrame, n: int, sig_k: int = 0
 ) -> DataFrame:
-    """(doc_id, sk ARRAY<BIGINT>[, sig ARRAY<BIGINT>]) — the Arrow form
-    of :func:`_shingle_key_arrays` (md5 key_fn).  Tokens via the same
-    regex as ``tokens_col`` (re.findall('[a-z0-9]+') over the lowered
-    text — token-for-token identical), base via
-    :func:`_token_base_md5`, shingle combine as vectorized int64
-    multiply/XOR over shifted views (products < 2^62, no wrap).
+    """(doc_id, sk ARRAY<BIGINT>[, sig ARRAY<BIGINT>]) — each doc's
+    distinct word-n-gram shingle keys, computed WITHOUT ever
+    materializing a shingle string, in one Arrow kernel.
+
+    r2 measured the md5-per-shingle path allocation-bound (stage scaling
+    0.25 at 8→32 cores: 3 string allocations per shingle row).  Now each
+    TOKEN hashes once to a 31-bit base b (:func:`_token_base_md5`, one
+    memoized digest per DISTINCT token per worker), and shingle i's key
+    is pure integer arithmetic over the base array:
+    skey_i = XOR_j (b[i+j] · C_j)  with per-position odd constants
+    C_j < 2^31 — products < 2^62, no wrap, ~62-bit keys, computed as
+    vectorized int64 multiply/XOR over shifted views.  Keys are 8 bytes
+    on the wire (vs ~90-byte 3-gram strings), collisions ~2^-62 per
+    pair, and the DuckDB oracle replays the identical integer math.
+    Tokens via the same regex as ``tokens_col`` (re.findall('[a-z0-9]+')
+    over the lowered text — token-for-token identical); np.unique's sort
+    order is invisible to every consumer, which aggregates or explodes
+    the set.
 
     ``sig_k > 0`` additionally emits the k-wide MinHash signature from
     the SAME pass (r9): sig_i = min((b·(2i+1) + i·C) mod M) over the
-    distinct keys — one (|sk|×k) numpy broadcast per doc, exactly the
-    integer family :func:`minhash_signatures`'s JVM transforms
-    evaluate (all intermediates < 2^36, int64-exact), saving the 16
-    interpreted array_min passes and a second materialization."""
+    distinct keys — one (|sk|×k) numpy broadcast per doc (all
+    intermediates < 2^36, int64-exact), with no second
+    materialization."""
     import re as _re
 
     consts = _pos_consts(n)
@@ -221,65 +231,6 @@ def _shingle_key_arrays_arrow(
     return _fan_out(documents, "doc_id").select("doc_id", "text").mapInPandas(
         run, schema
     )
-
-
-def _shingle_key_arrays(
-    documents: DataFrame, n: int = 3, key_fn: str = "md5",
-) -> DataFrame:
-    """(doc_id, sk ARRAY<BIGINT>) — each doc's distinct word-n-gram
-    shingle keys, computed WITHOUT ever materializing a shingle string.
-
-    r2 measured the md5-per-shingle path allocation-bound (stage scaling
-    0.25 at 8→32 cores: 3 string allocations per shingle row).  Now each
-    TOKEN hashes once to a 31-bit base b (one short-string digest), and
-    shingle i's key is pure integer arithmetic over the base
-    array:  skey_i = XOR_j (b[i+j] · C_j)  with per-position odd
-    constants C_j < 2^31 — products < 2^62, ANSI-overflow-safe, ~62-bit
-    keys, zero per-shingle allocations.  Keys are 8 bytes on the wire
-    (vs ~90-byte 3-gram strings), collisions ~2^-62 per pair, and the
-    DuckDB oracle replays the identical integer math, so results stay
-    bit-equal either way.
-
-    ``key_fn``: 'md5' (default) keeps the token base oracle-replayable
-    and runs as the Arrow kernel :func:`_shingle_key_arrays_arrow`
-    (one memoized digest per DISTINCT token per worker; np.unique's
-    sort order vs array_distinct's first-occurrence order is invisible
-    to every consumer, which aggregates or explodes the set).
-    'xxhash64' (bench/scale path) computes the base as a native 64-bit
-    digest in the JVM with NO string allocation at all — same
-    downstream math, not SQL-oracle-replayable (DuckDB lacks
-    xxhash64)."""
-    if key_fn == "md5":
-        return _shingle_key_arrays_arrow(documents, n)
-    if key_fn != "xxhash64":
-        raise ValueError(f"unknown shingle key_fn {key_fn!r}")
-    toked = _fan_out(documents, "doc_id").select(
-        "doc_id", tokens_col("text").alias("toks")
-    )
-    # base array materialized as its OWN column first: referencing an
-    # unaliased transform(...) inside the next lambda would re-run it
-    # once per sequence element (no CSE across lambda scopes)
-    based = toked.select("doc_id", F.transform(
-        "toks", lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
-    ).alias("bk"))
-    consts = _pos_consts(n)
-
-    def _skey(i):
-        k = F.get(F.col("bk"), i) * F.lit(consts[0])
-        for j in range(1, n):
-            k = k.bitwiseXOR(F.get(F.col("bk"), i + j) * F.lit(consts[j]))
-        return k
-
-    # Guard short docs: sequence(0, size-n) DESCENDS when size < n.  A
-    # doc with fewer than n tokens has zero shingles (oracle: empty
-    # range).  Distinct per doc on the KEY array.
-    sk = F.when(
-        F.size("bk") >= n,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(0), F.size("bk") - F.lit(n)), _skey)
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return based.select("doc_id", _opt_barrier(sk).alias("sk"))
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -391,7 +342,7 @@ def _ngram_pair_gemm_scorer(threshold: float):
 
 def ngram_jaccard_pairs(
     documents: DataFrame, n: int = 3, threshold: float = 0.6,
-    max_df: int | None = 2_000, key_fn: str = "md5",
+    max_df: int | None = 2_000,
     pair_budget: int | None = 1_000_000_000,
     shape: str = "auto",
 ) -> DataFrame:
@@ -446,7 +397,7 @@ def ngram_jaccard_pairs(
     # on every row (union sizes for the in-worker jaccard; projected
     # away wherever unused)
     sh = _materialize(
-        _shingle_key_arrays(documents, n, key_fn).select(
+        _shingle_key_arrays(documents, n).select(
             "doc_id", F.size("sk").alias("n_sh"),
             F.explode("sk").alias("skey"),
         )
@@ -596,67 +547,38 @@ def ngram_jaccard_pairs(
 
 
 def minhash_signatures(
-    documents: DataFrame, n: int = 3, k: int = 16, key_fn: str = "md5"
+    documents: DataFrame, n: int = 3, k: int = 16
 ) -> DataFrame:
     """(doc_id, sig ARRAY<BIGINT>[k]) — MinHash over word-n-gram
     shingles; hash family h_i(s) = (base(s)·(2i+1) + i·C) mod (2^31-1)
     with base(s) = the integer shingle key (see _shingle_key_arrays — one
     token digest + positional-XOR combine, no shingle strings).
 
-    Plan shape (r3): NO explode, NO shuffle — each doc's signature is
-    ``array_min(transform(shingle_keys, affine_i))`` per hash i, a
-    single narrow codegen'd projection over the per-doc key array.
-    The r2 formulation exploded ~100M shingle rows into a 16-column
-    min-aggregate (1.6B hash-agg updates + a shuffle) and was the
-    worst-scaling stage in the repo (0.25 at 8→32 cores); the history
-    before that: r1's md5(i||s)-per-i family (16 hex strings per
-    shingle row, GC-bound, 0.29), r2's md5-per-shingle (3 string
-    allocations per row).  All intermediates < 2^62, ANSI
-    overflow-safe, and the DuckDB oracle replays identical BIGINT
-    arithmetic (min over the same key set)."""
-    if key_fn == "md5":
-        # fused Arrow pass (r9): keys AND signatures in one kernel
-        return _shingle_key_arrays_arrow(documents, n, sig_k=k).filter(
-            F.size("sk") > 0
-        ).select("doc_id", "sig")
-    return _sigs_from_arrays(_shingle_key_arrays(documents, n, key_fn), k)
-
-
-def _sigs_from_arrays(arrays: DataFrame, k: int) -> DataFrame:
-    """Signatures from a (doc_id, sk) shingle-key-array relation —
-    split out (r9) so minhash_verified can derive signatures AND the
-    rescore intersection from ONE materialized tokenize pass."""
-    arrays = arrays.filter(F.size("sk") > 0)
-    # b = key mod 2^31-1, materialized as its own column (CSE rule)
-    based = arrays.select(
-        "doc_id",
-        F.transform("sk", lambda s: s % F.lit(_MERSENNE)).alias("bk"),
-    )
-    return based.select(
-        "doc_id",
-        F.array(*[
-            F.array_min(
-                F.transform(
-                    "bk",
-                    lambda b: (b * F.lit(2 * i + 1) + F.lit(i * _HASH_C))
-                    % F.lit(_MERSENNE),
-                )
-            )
-            for i in range(k)
-        ]).alias("sig"),
-    )
+    Plan shape: NO explode, NO shuffle — each doc's signature is the
+    min of the affine family over its key array, computed in the same
+    Arrow pass that derives the keys (one (|sk|×k) numpy broadcast per
+    doc).  The r2 formulation exploded ~100M shingle rows into a
+    16-column min-aggregate (1.6B hash-agg updates + a shuffle) and was
+    the worst-scaling stage in the repo (0.25 at 8→32 cores); the
+    history before that: r1's md5(i||s)-per-i family (16 hex strings
+    per shingle row, GC-bound, 0.29), r2's md5-per-shingle (3 string
+    allocations per row).  All intermediates < 2^62, int64-exact, and
+    the DuckDB oracle replays identical BIGINT arithmetic (min over the
+    same key set)."""
+    return _shingle_key_arrays(documents, n, sig_k=k).filter(
+        F.size("sk") > 0
+    ).select("doc_id", "sig")
 
 
 def minhash_lsh_pairs(
     documents: DataFrame, n: int = 3, k: int = 16, bands: int = 4,
-    key_fn: str = "md5",
 ) -> DataFrame:
     """Candidate near-dup pairs whose signatures collide in ≥1 LSH band
     (k/bands rows per band), with the estimated Jaccard = fraction of
     matching minhashes.  shingle→minhash→band→bucket-join."""
     # signatures feed the singleton-prune AND both self-join sides —
     # materialize once instead of re-deriving tokenize+hash per branch
-    sigs = _materialize(minhash_signatures(documents, n, k, key_fn))
+    sigs = _materialize(minhash_signatures(documents, n, k))
     return _minhash_band_cands(sigs, k, bands).select(
         "doc_a", "doc_b",
         F.round(
@@ -712,7 +634,7 @@ def _minhash_band_cands(sigs: DataFrame, k: int, bands: int) -> DataFrame:
 
 def minhash_verified_pairs(
     documents: DataFrame, n: int = 3, k: int = 16, bands: int = 4,
-    threshold: float = 0.6, key_fn: str = "md5",
+    threshold: float = 0.6,
 ) -> DataFrame:
     """Production near-dup shape: MinHash-LSH candidate generation
     (recall) + EXACT Jaccard re-scoring of only the candidates
@@ -727,14 +649,9 @@ def minhash_verified_pairs(
     two docs' key arrays per candidate pair (identical count: arrays
     are distinct per doc) instead of a double explode-join + groupBy
     — candidate-bounded work either way, two fewer shuffles."""
-    if key_fn == "md5":
-        both = _materialize(_shingle_key_arrays_arrow(documents, n,
-                                                      sig_k=k))
-        sigs = both.filter(F.size("sk") > 0).select("doc_id", "sig")
-        arrays = both.select("doc_id", "sk")
-    else:
-        arrays = _materialize(_shingle_key_arrays(documents, n, key_fn))
-        sigs = _materialize(_sigs_from_arrays(arrays, k))
+    both = _materialize(_shingle_key_arrays(documents, n, sig_k=k))
+    sigs = both.filter(F.size("sk") > 0).select("doc_id", "sig")
+    arrays = both.select("doc_id", "sk")
     cand = _minhash_band_cands(sigs, k, bands).select("doc_a", "doc_b")
     aa = arrays.select(F.col("doc_id").alias("doc_a"),
                        F.col("sk").alias("sk_a"))

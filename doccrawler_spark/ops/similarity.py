@@ -260,176 +260,55 @@ def ivf_topk(
 # analogue: Pinecone index search, pinecone_service.py:131-178).
 # BENCH/PLANS.md asserts PartitionFilters reach the FileScan and the
 # scan reads strictly fewer files than the table holds.
-
-
-def _index_meta_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_index_meta.json")
-
-
-def _write_index_meta(path: str, meta: dict) -> None:
-    import json
-    import os
-
-    final = _index_meta_path(path)
-    tmp = final + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, final)
-
-
-# ---- versioned layout protocol (r6) --------------------------------
 #
-# An index root holds immutable version directories ``vNNNNNN/`` (each
-# a complete Hive-partitioned layout + its ``_index_meta.json``) and a
-# ``_current`` pointer file naming the committed one.  Publication is
-# ONE atomic single-file replace — the same shape as the snapshot
-# manifest protocol (snapshots.py) and, unlike a directory rename, a
-# primitive object stores actually have (a single-key PUT).  At no
-# point does the live path stop resolving: a crash mid-build strands
-# only an uncommitted vNNNNNN dir (vacuumed by the next successful
-# commit), and a reader that resolved the previous pointer keeps a
-# complete layout because vacuum always spares the prior version.
-# Roots written by pre-r6 code (flat layout, meta at the root) still
-# resolve via the legacy fallback.
+# Each index root is a SnapshotCatalog holding one table, ``layout``,
+# whose round-0 snapshot is the Hive-partitioned layout; the layout's
+# meta (``kind``, plus ``centroids`` for IVF or ``n_bits``/``n_tables``
+# for LSH) rides in its manifest.  A build or a compaction publishes a
+# new snapshot through the catalog's one commit point (the manifest
+# replace): a reader sees the old layout or the new one, never a torn
+# one, a crashed build strands only an unreferenced directory, and the
+# superseded layout outlives the catalog's grace window for readers
+# still scanning it.
 
-_VERSION_RE = r"v\d{6}"
+_LAYOUT = "layout"
 
 
-def _resolve_index_dir(path: str) -> str:
-    """The committed layout directory for an index root: the
-    ``_current``-pointed version dir, else the root itself for a
-    legacy flat layout, else FileNotFoundError.
-
-    The pointed dir must contain its ``_index_meta.json`` — a pointer
-    whose target was lost (e.g. a racing publisher's vacuum under a
-    pre-r7 protocol) raises FileNotFoundError instead of returning a
-    dangling path, so ``index_exists`` goes False and the cache-layer
-    heal (:func:`_ensure_index`) rebuilds rather than failing reads
-    forever."""
+def _layout(path: str) -> dict:
+    """The committed layout manifest of the index at ``path``
+    (``path``, ``partition_by``, ``schema``, ``meta``).
+    FileNotFoundError when none is committed or the manifest names a
+    directory that is gone, so :func:`index_exists` goes False and a
+    cache rebuilds instead of reading a path with no files."""
     import os
 
-    ptr = os.path.join(path, "_current")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            vdir = os.path.join(path, f.read().strip())
-        if os.path.exists(_index_meta_path(vdir)):
-            return vdir
-        raise FileNotFoundError(
-            f"index pointer at {path} names an incomplete layout")
-    if os.path.exists(_index_meta_path(path)):
-        return path
-    raise FileNotFoundError(f"no committed index layout at {path}")
+    from ..snapshots import SnapshotCatalog
+
+    m = SnapshotCatalog(path).manifest(_LAYOUT, 0)
+    if m is None or not os.path.isdir(m["path"]):
+        raise FileNotFoundError(f"no committed index layout at {path}")
+    return m
 
 
 def index_exists(path: str) -> bool:
     try:
-        _resolve_index_dir(path)
+        _layout(path)
         return True
-    except (FileNotFoundError, OSError):
+    except FileNotFoundError:
         return False
 
 
-def _new_version_dir(path: str) -> tuple[str, str]:
-    """Claim the next ``vNNNNNN`` build directory under the root
-    (mkdir is the claim — a concurrent builder colliding on the same
-    number just bumps past it)."""
-    import os
-    import re
+def _write_layout(df: DataFrame, path: str, partition_by: list[str],
+                  meta: dict) -> None:
+    """Publish ``df`` as the index layout at ``path``.  Repartitioning
+    on the partition columns gives every partition directory files
+    from ONE task instead of one file per (task × directory) — at small
+    scale the difference between n_cells files and a small-file
+    explosion; at 100 TB the writer-sizing knob."""
+    from ..snapshots import SnapshotCatalog
 
-    os.makedirs(path, exist_ok=True)
-    taken = [int(d[1:]) for d in os.listdir(path)
-             if re.fullmatch(_VERSION_RE, d)]
-    n = max(taken, default=0) + 1
-    while True:
-        vname = f"v{n:06d}"
-        try:
-            os.makedirs(os.path.join(path, vname), exist_ok=False)
-            return os.path.join(path, vname), vname
-        except FileExistsError:
-            n += 1
-
-
-def _commit_index_version(path: str, vname: str) -> None:
-    import os
-
-    ptr = os.path.join(path, "_current")
-    tmp = ptr + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(vname)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, ptr)
-
-
-def _vacuum_index(path: str, keep: set[str],
-                  spare_flat: bool = False) -> None:
-    """Drop version dirs outside ``keep`` plus any legacy flat-layout
-    artifacts at the root (a pointer now owns resolution, so the flat
-    files are dead weight).  ``keep`` is re-widened with whatever
-    ``_current`` names AT VACUUM TIME — with two concurrent publishers
-    the loser's stale keep-set must never delete the version the
-    winner just committed (that would leave the live pointer
-    dangling).  ``spare_flat`` leaves the flat files in place for one
-    generation — set on the first versioned publish over a legacy
-    root, where the flat layout IS the previous version a concurrent
-    reader may still be scanning; the next publish vacuums them."""
-    import os
-    import re
-    import shutil
-
-    keep = set(keep)
-    try:
-        with open(os.path.join(path, "_current")) as f:
-            keep.add(f.read().strip())
-    except OSError:
-        pass
-    for d in os.listdir(path):
-        p = os.path.join(path, d)
-        if re.fullmatch(_VERSION_RE, d):
-            if d not in keep:
-                shutil.rmtree(p, ignore_errors=True)
-        elif spare_flat:
-            continue
-        elif os.path.isdir(p) and "=" in d:  # legacy flat partition dir
-            shutil.rmtree(p, ignore_errors=True)
-    if not spare_flat:
-        for f in ("_index_meta.json", "_SUCCESS"):
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
-
-
-def _publish_index_version(path: str, vname: str) -> None:
-    """Commit ``vname`` as the live layout, then vacuum everything but
-    it and the previously-committed version (still potentially mid-scan
-    in a concurrent reader).  A legacy flat root gets the same grace:
-    its flat partition dirs are the previous version, so the first
-    versioned publish leaves them untouched for one generation."""
-    import os
-
-    try:
-        resolved = _resolve_index_dir(path)
-    except (FileNotFoundError, OSError):
-        resolved = None
-    legacy_prev = (resolved is not None
-                   and os.path.abspath(resolved) == os.path.abspath(path))
-    _commit_index_version(path, vname)
-    keep = {vname}
-    if resolved is not None and not legacy_prev:
-        keep.add(os.path.basename(resolved))
-    _vacuum_index(path, keep, spare_flat=legacy_prev)
-
-
-def _read_index_meta(path: str) -> dict:
-    import json
-
-    with open(_index_meta_path(_resolve_index_dir(path))) as f:
-        return json.load(f)
+    SnapshotCatalog(path).write(df.repartition(*partition_by), _LAYOUT, 0,
+                                partition_by=partition_by, meta=meta)
 
 
 def write_ivf_index(
@@ -438,7 +317,7 @@ def write_ivf_index(
 ) -> None:
     """Lay the vectors table out as an IVF index: one Hive partition
     directory per quantizer cell (``cell=<id>/part-*.parquet``), with
-    the trained centroids stored alongside in a committed meta file.
+    the trained centroids stored in the layout's manifest.
     Cell assignment runs ONCE, at write time, as the same codegen'd
     max-dot expression queries would otherwise evaluate per scan.
 
@@ -453,48 +332,37 @@ def write_ivf_index(
     celled = embeddings.withColumn(
         "cell", _argmax_cell(F.col("embedding"), cents)
     )
-    # repartition on the partition column: every cell directory gets
-    # files from ONE task instead of one file per (task × cell) — at
-    # small scale that's the difference between n_cells files and a
-    # small-file explosion; at 100 TB it's the writer-sizing knob
-    vdir, vname = _new_version_dir(path)
-    (
-        celled.repartition("cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(vdir)
-    )
-    _write_index_meta(vdir, {"kind": "ivf", "centroids": cents})
-    _publish_index_version(path, vname)
+    _write_layout(celled, path, ["cell"], {"kind": "ivf", "centroids": cents})
 
 
-def _read_partitions(spark, path: str, subdirs: list[str]):
-    """Read ONLY the named Hive partition directories of a layout,
-    with ``basePath`` so the partition columns survive.  Listing cost
-    is ∝ probed directories — the full layout is never enumerated
-    (r4b: `spark.read.parquet(path).filter(partition_col...)` prunes
-    the SCAN but still LISTS every partition dir to build the file
-    index, which at 1030 LSH buckets cost ~1.5 s per query; at 10^9
-    objects on S3 it would be the whole query).  Missing directories
-    (empty buckets) are skipped driver-side — the same existence
-    check an object-store deployment does with one LIST per probed
-    prefix.  ``path`` is the index ROOT — the committed version dir is
-    resolved here (one pointer read), so callers stay version-blind."""
+def _read_layout(spark, m: dict, subdirs: list[str] | None = None) -> DataFrame:
+    """Read the committed layout of manifest ``m`` with the schema the
+    manifest records (partition columns included; no footer-inference
+    job): the whole layout, or ONLY the named Hive partition
+    directories, with ``basePath`` so the partition columns survive.
+    Listing cost is ∝ probed directories — the full layout is never
+    enumerated (r4b: `spark.read.parquet(path).filter(partition_col...)`
+    prunes the SCAN but still LISTS every partition dir to build the
+    file index, which at 1030 LSH buckets cost ~1.5 s per query; at
+    10^9 objects on S3 it would be the whole query).  Missing
+    directories (empty buckets) are skipped driver-side — the same
+    existence check an object-store deployment does with one LIST per
+    probed prefix; when none exists the result is a zero-row frame."""
+    import json
     import os
 
-    base = _resolve_index_dir(path)
-    existing = [
-        os.path.join(base, d) for d in subdirs
-        if os.path.isdir(os.path.join(base, d))
-    ]
-    if not existing:
-        return None
-    return spark.read.option("basePath", base).parquet(*existing)
+    from pyspark.sql.types import StructType
 
-
-def _read_index_empty(spark, path: str) -> DataFrame:
-    """A zero-row frame with the committed layout's full schema
-    (partition columns included) — the no-probed-bucket fallback."""
-    base = _resolve_index_dir(path)
-    return spark.read.option("basePath", base).parquet(base).limit(0)
+    base = m["path"]
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    if subdirs is None:
+        subdirs = [base]
+    else:
+        subdirs = [os.path.join(base, d) for d in subdirs
+                   if os.path.isdir(os.path.join(base, d))]
+        if not subdirs:
+            return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", base).parquet(*subdirs)
 
 
 def ivf_topk_indexed(
@@ -506,15 +374,12 @@ def ivf_topk_indexed(
     are addressed directly (no full partition discovery, no data files
     outside them opened).  Identical results to :func:`ivf_topk` with
     the same centroids."""
-    meta = _read_index_meta(path)
-    cents = meta["centroids"]
+    m = _layout(path)
+    cents = m["meta"]["centroids"]
     qscores = [sum(q * c for q, c in zip(query_vec, cc)) for cc in cents]
     probes = sorted(range(len(cents)),
                     key=lambda j: (-qscores[j], j))[:n_probe]
-    df = _read_partitions(spark, path, [f"cell={j}" for j in probes])
-    if df is None:  # probed cells all empty
-        return cosine_topk(_read_index_empty(spark, path).drop("cell"),
-                           query_vec, k, fan_out=False)
+    df = _read_layout(spark, m, [f"cell={j}" for j in probes])
     # belt-and-braces semantic filter (also what PLANS.md asserts as
     # PartitionFilters — the path selection already did the pruning)
     df = df.filter(F.col("cell").isin(probes))
@@ -548,17 +413,11 @@ def write_lsh_index(
             for t in range(n_tables)
         ])).alias("bk"),
     ).select(*embeddings.columns, "bk.band", "bk.key")
-    # one writing task per (band, key): without this every input task
+    # one writing task per (band, key): without it every input task
     # writes a sliver into every bucket dir it touches — measured 15 s
     # of small-file churn for a 2^8-bucket 4-table layout at sf0.1
-    vdir, vname = _new_version_dir(path)
-    (
-        banded.repartition("band", "key")
-        .write.mode("overwrite").partitionBy("band", "key").parquet(vdir)
-    )
-    _write_index_meta(vdir, {"kind": "lsh", "n_bits": n_bits,
-                             "n_tables": n_tables})
-    _publish_index_version(path, vname)
+    _write_layout(banded, path, ["band", "key"],
+                  {"kind": "lsh", "n_bits": n_bits, "n_tables": n_tables})
 
 
 def lsh_topk_indexed(
@@ -567,12 +426,12 @@ def lsh_topk_indexed(
     """Multi-table LSH top-k over a :func:`write_lsh_index` layout: the
     query's per-table keys address ≤ n_tables ``band=<t>/key=<pat>``
     bucket directories directly out of n_tables·2^n_bits (no full
-    partition discovery — see :func:`_read_partitions`); candidates
+    partition discovery — see :func:`_read_layout`); candidates
     dedup on vec_id (a vector can collide in several tables) before
     exact cosine + TakeOrdered.  Identical results to
     :func:`lsh_topk` at the same parameters."""
-    meta = _read_index_meta(path)
-    n_bits, n_tables = meta["n_bits"], meta["n_tables"]
+    m = _layout(path)
+    n_bits, n_tables = m["meta"]["n_bits"], m["meta"]["n_tables"]
     n_eff = max(1, min(n_tables, len(query_vec) // n_bits))
 
     def qkey(t: int) -> str:
@@ -581,15 +440,9 @@ def lsh_topk_indexed(
             for x in query_vec[t * n_bits:(t + 1) * n_bits]
         )
 
-    df = _read_partitions(
-        spark, path, [f"band={t}/key={qkey(t)}" for t in range(n_eff)]
+    df = _read_layout(
+        spark, m, [f"band={t}/key={qkey(t)}" for t in range(n_eff)]
     )
-    if df is None:  # no bucket holds any vector for this query
-        emp = _read_index_empty(spark, path)
-        return cosine_topk(
-            emp.drop("band", "key").dropDuplicates(["vec_id"]), query_vec, k,
-            fan_out=False,
-        )
     pred = None
     for t in range(n_eff):
         p = (F.col("band") == t) & (F.col("key") == qkey(t))
@@ -611,22 +464,14 @@ def compact_index(spark, path: str, target_bytes: int = 128 << 20) -> dict:
     request).  Operational target: files within a bucket dir at
     100-500 MB — compact after bulk builds, not per query.
 
-    Crash-safe and reader-safe via the versioned-layout protocol: the
-    compacted copy is written as a NEW version dir under the root and
-    published with the single atomic ``_current`` pointer replace —
-    the root never stops resolving, a concurrent reader holding the
-    old version keeps a complete layout (vacuum spares the previous
-    version — including a pre-versioning flat layout, whose files stay
-    in place at the root for one generation), and a crash at any point
-    strands at most one uncommitted build dir that the next commit
-    vacuums.  The meta rides along
-    unchanged — same quantizer/params, same results.  Returns
-    {files_before, files_after, bytes}."""
+    The compacted layout is published as a new snapshot of the index
+    catalog with the same meta (same quantizer/params, same results):
+    a crash before its manifest commit leaves the old layout live, and
+    a reader still scanning the old layout keeps it for the catalog's
+    grace window.  Returns {files_before, files_after, bytes}."""
     import os
 
-    base = _resolve_index_dir(path)
-    meta = _read_index_meta(path)
-    pcols = ["cell"] if meta["kind"] == "ivf" else ["band", "key"]
+    m = _layout(path)
 
     def _stats(p: str) -> tuple[int, int]:
         n, size = 0, 0
@@ -637,24 +482,16 @@ def compact_index(spark, path: str, target_bytes: int = 128 << 20) -> dict:
                     size += os.path.getsize(os.path.join(root, f))
         return n, size
 
-    files_before, total_bytes = _stats(base)
-    # read (and list) the live layout BEFORE claiming the build dir —
-    # for a legacy flat root base == path and a later listing would
-    # trip over the new vNNNNNN subdir
-    df = spark.read.option("basePath", base).parquet(base)
-    total_rows = df.count()
-    avg_row = max(1, total_bytes // max(1, total_rows))
-    rpf = max(1, target_bytes // avg_row)
-    vdir, vname = _new_version_dir(path)
-    (
-        df.repartition(*pcols)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", rpf)
-        .partitionBy(*pcols).parquet(vdir)
-    )
-    _write_index_meta(vdir, meta)
-    _publish_index_version(path, vname)
-    files_after, _ = _stats(vdir)
+    files_before, total_bytes = _stats(m["path"])
+    # the rows-per-file bound is a session conf, so the rewrite reads
+    # through a session of its own: the setting reaches this write only
+    session = spark.newSession()
+    df = _read_layout(session, m)
+    avg_row = max(1, total_bytes // max(1, df.count()))
+    session.conf.set("spark.sql.files.maxRecordsPerFile",
+                     str(max(1, target_bytes // avg_row)))
+    _write_layout(df, path, m["partition_by"], m["meta"])
+    files_after, _ = _stats(_layout(path)["path"])
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total_bytes}
 
@@ -862,12 +699,12 @@ def knn_join_indexed(
     queries — bounded by the KEYSPACE, min(n_tables·2^n_bits,
     n_tables·|Q|) rows of two small columns, a design parameter (64 for
     the 4×4-bit default), not a data-scale quantity.  Directories are
-    then addressed directly (see :func:`_read_partitions` — no full
+    then addressed directly (see :func:`_read_layout` — no full
     layout listing).  ``salted`` defaults from the PRUNED scan's
     file-size stats, so small probe sets skip the salt split
     automatically while big buckets keep the bounded-memory shape."""
-    meta = _read_index_meta(path)
-    n_bits, n_tables = meta["n_bits"], meta["n_tables"]
+    m = _layout(path)
+    n_bits, n_tables = m["meta"]["n_bits"], m["meta"]["n_tables"]
 
     q = _banded(queries, "q_emb", n_bits, n_tables, key_prefix="k")
     # consumed twice (probe-dir collect + the join); the banded batch is
@@ -883,13 +720,9 @@ def knn_join_indexed(
         # near-full coverage pruning saves nothing — the index's win
         # here is the PRECOMPUTED banding, not the scan cut.  The
         # (band,key) join still discards any unprobed buckets.
-        base = _resolve_index_dir(path)
-        c = spark.read.option("basePath", base).parquet(base)
+        c = _read_layout(spark, m)
     else:
-        c = _read_partitions(spark, path, dirs)
-    if c is None:  # no probed bucket exists — no candidates at all
-        emp = _read_index_empty(spark, path)
-        return _knn_gemm_topk(q, emp, k=k, salt=salt, salted=False)
+        c = _read_layout(spark, m, dirs)
     if salted is None:
         salted = _plan_bytes(c) >= (64 << 20)
     return _knn_gemm_topk(q, c, k=k, salt=salt, salted=salted)

@@ -6,7 +6,8 @@ the sandbox (no Iceberg runtime jar, no network) the offline backend is
 Parquet directories published by an atomic manifest rename.  Both give:
 
 * numbered snapshots per table (``round`` k → immutable directory),
-* atomic publish (write staging → fsync manifest → ``os.replace``),
+* atomic publish (data into a fresh directory → fsync manifest →
+  ``os.replace``; the replace is the one commit point),
 * time-travel (read table as of round k),
 * resume: ``latest_round()`` = max committed manifest, so a crawl
   killed mid-round restarts from the last published round with no
@@ -19,8 +20,42 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
+
+
+def _write_json(path: str, obj) -> None:
+    """Atomically replace ``path`` with ``obj`` as JSON: write a unique
+    sibling, fsync it, then ``os.replace``.  Every catalog file commits
+    through here (manifests, driver state, seen-append manifests,
+    stream markers, tombstones), so a crash leaves the old file or the
+    new one, never a torn one, and a fault injected here is a crash at
+    the commit point."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+# a snapshot data directory: r<round>, then .<uuid> for every write
+_DATA_DIR_RE = re.compile(r"r(\d{5})(\.[0-9a-f]+)?")
+
+
+def _newest_mtime(path: str) -> float:
+    """Newest mtime of ``path`` and everything under it: a write still
+    in progress keeps touching its files, so it always looks young."""
+    t = os.lstat(path).st_mtime
+    for dp, dns, fns in os.walk(path):
+        for n in dns + fns:
+            try:
+                t = max(t, os.lstat(os.path.join(dp, n)).st_mtime)
+            except OSError:
+                pass
+    return t
 
 
 def _read_parquet(spark, path: str, schema_json: str | None):
@@ -50,23 +85,25 @@ class SnapshotCatalog:
     Layout::
 
         root/
-          <table>/r00003/part-*.parquet      # data, written by Spark
-          <table>/_r00003.manifest.json      # atomic commit marker
-          _crawl_state/r00003.json           # driver-side loop state
+          <table>/r00003.<uuid>/part-*.parquet   # data, written by Spark
+          <table>/_r00003.manifest.json          # atomic commit marker
+          _crawl_state/r00003.json               # driver-side loop state
     """
 
     def __init__(self, root: str) -> None:
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     # ---------------------------------------------------------- paths
     def data_dir(self, table: str, round_: int) -> str:
+        """The stem of round ``round_``'s data directories; each write
+        adds a ``.<uuid>`` suffix (:meth:`write`)."""
         return os.path.join(self.root, table, f"r{round_:05d}")
 
     def _manifest_path(self, table: str, round_: int) -> str:
         return os.path.join(self.root, table, f"_r{round_:05d}.manifest.json")
 
-    def _read_manifest(self, table: str, round_: int) -> dict | None:
+    def manifest(self, table: str, round_: int) -> dict | None:
+        """The committed manifest of a snapshot, None if uncommitted."""
         try:
             with open(self._manifest_path(table, round_)) as f:
                 return json.load(f)
@@ -74,57 +111,55 @@ class SnapshotCatalog:
             return None
 
     def data_path(self, table: str, round_: int) -> str:
-        """The snapshot's COMMITTED data directory — follows the
-        manifest's recorded path (a rewrite of a committed round
-        publishes into a fresh uuid-suffixed dir, Iceberg-style),
-        falling back to the deterministic layout for uncommitted
-        rounds and pre-rewrite manifests.  Readers must resolve
-        through this, never ``data_dir``, or they can race a
-        maintenance rewrite."""
-        m = self._read_manifest(table, round_)
+        """The snapshot's COMMITTED data directory, as its manifest
+        records it (a manifest without a path, from a catalog written
+        before paths were recorded, means the bare stem).  Readers must
+        resolve through this, never ``data_dir``."""
+        m = self.manifest(table, round_)
         if m and m.get("path"):
             return m["path"]
         return self.data_dir(table, round_)
 
     # ---------------------------------------------------------- write
-    def write(self, df, table: str, round_: int, partition_by: list[str] | None = None) -> None:
+    def write(self, df, table: str, round_: int, partition_by: list[str] | None = None,
+              meta: dict | None = None) -> None:
         """Write a snapshot and atomically publish its manifest.
 
-        Rewriting an ALREADY-COMMITTED round (the maintenance op
-        :meth:`compact`) never touches the committed bytes: the
-        data lands in a fresh uuid-suffixed directory and the manifest
-        ``os.replace`` is the commit point.  A crash anywhere before
-        the replace leaves the old snapshot fully readable; a reader
-        mid-scan of the old dir never has files deleted under it — the
-        superseded dir is TOMBSTONED and reclaimed only once older
-        than :data:`SUPERSEDED_GRACE_S` (see
-        :meth:`vacuum_superseded`), so even a reader that resolved the
-        old path moments before the swap finishes its scan."""
-        prev = self._read_manifest(table, round_)
-        if prev is None:
-            path = self.data_dir(table, round_)
-        else:
-            path = self.data_dir(table, round_) + "." + uuid.uuid4().hex[:8]
+        Every write, a round's first included, lands in a fresh
+        ``r<round>.<uuid>`` directory, and the manifest replace is the
+        only commit point.  A crash anywhere before it leaves the
+        previously committed snapshot (or none) readable and the new
+        directory unreferenced, for :meth:`vacuum_superseded` to
+        reclaim; concurrent writers of one snapshot never share a
+        directory, and the last manifest replace wins.  The superseded
+        directory is TOMBSTONED, not deleted, so a reader that resolved
+        it just before the swap finishes its scan (reclaimed once older
+        than :data:`SUPERSEDED_GRACE_S`).
+
+        ``partition_by`` writes a Hive-partitioned layout (the ANN
+        index layouts); such a snapshot gets no stream view, which
+        holds flat file sets only.  ``meta`` is stored in the manifest
+        as given."""
+        path = f"{self.data_dir(table, round_)}.{uuid.uuid4().hex[:8]}"
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
+        prev = self.manifest(table, round_)
         # the schema rides in the manifest (as Iceberg table metadata
         # carries it), so readers skip Spark's one-task footer-inference
         # job per snapshot read
-        self._publish(table, round_, {"path": path, "partition_by": partition_by or [],
-                                      "schema": df.schema.json()})
+        _write_json(self._manifest_path(table, round_), {
+            "table": table, "round": round_, "path": path,
+            "partition_by": partition_by or [], "schema": df.schema.json(),
+            "meta": meta or {}, "committed_at": time.time(),
+            "snapshot_id": str(uuid.uuid4()),
+        })
+        if not partition_by:
+            self._publish_stream_entry(table, round_)
         if prev is not None:
-            old = prev.get("path") or self.data_dir(table, round_)
-            if os.path.realpath(old) != os.path.realpath(path):
-                # deferred deletion (the Iceberg expire-snapshots
-                # pattern): a reader that resolved data_path() just
-                # before the manifest swap may still be scanning the
-                # old dir — deleting it NOW fails that scan.  Record a
-                # tombstone instead; dirs are reclaimed once older than
-                # the grace window (swept opportunistically here and by
-                # vacuum_superseded()).
-                self._tombstone(old)
+            # deferred deletion (the Iceberg expire-snapshots pattern)
+            self._tombstone(prev.get("path") or self.data_dir(table, round_))
         self.vacuum_superseded()
 
     # superseded-snapshot grace window: longer than any reasonable
@@ -133,39 +168,42 @@ class SnapshotCatalog:
     SUPERSEDED_GRACE_S = 600.0
 
     def _tombstone(self, path: str) -> None:
-        d = os.path.join(self.root, "_trash")
-        os.makedirs(d, exist_ok=True)
-        final = os.path.join(d, uuid.uuid4().hex + ".json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"path": path, "ts": time.time()}, f)
-        os.replace(tmp, final)
+        _write_json(os.path.join(self.root, "_trash", uuid.uuid4().hex + ".json"),
+                    {"path": path, "ts": time.time()})
 
     def vacuum_superseded(self, grace_s: float | None = None) -> int:
-        """Delete superseded snapshot dirs whose tombstones are older
-        than ``grace_s`` (default :data:`SUPERSEDED_GRACE_S`); returns
-        the number reclaimed.  Pass 0 to force (tests, final cleanup —
-        only safe when no concurrent reader can hold a pre-rewrite
-        path)."""
+        """Reclaim snapshot directories no reader can still need, once
+        older than ``grace_s`` (default :data:`SUPERSEDED_GRACE_S`);
+        returns the number reclaimed.  Two kinds:
+
+        * superseded directories, aged by their tombstone;
+        * ``<table>/r*`` directories that no manifest names and no
+          tombstone holds, aged by their newest file: the leftovers of
+          a write that crashed before its commit, or of a concurrent
+          writer whose manifest lost the race (the Iceberg
+          remove-orphan-files pattern).
+
+        Pass 0 to force (tests, final cleanup — only safe when no
+        concurrent reader or writer is active)."""
         import shutil
 
         if grace_s is None:
             grace_s = self.SUPERSEDED_GRACE_S
-        d = os.path.join(self.root, "_trash")
-        if not os.path.isdir(d):
-            return 0
         now, n = time.time(), 0
         root_real = os.path.realpath(self.root)
-        for name in os.listdir(d):
-            if not name.endswith(".json") or name.endswith(".tmp"):
+        held: set[str] = set()
+        d = os.path.join(self.root, "_trash")
+        for name in os.listdir(d) if os.path.isdir(d) else []:
+            if not name.endswith(".json"):
                 continue
             p = os.path.join(d, name)
             try:
                 with open(p) as f:
                     t = json.load(f)
-                if now - float(t["ts"]) < grace_s:
-                    continue
                 victim = os.path.realpath(t["path"])
+                if now - float(t["ts"]) < grace_s:
+                    held.add(victim)
+                    continue
                 # never follow a tombstone outside this catalog
                 if victim.startswith(root_real + os.sep):
                     shutil.rmtree(victim, ignore_errors=True)
@@ -173,19 +211,33 @@ class SnapshotCatalog:
                 n += 1
             except (OSError, ValueError, KeyError):
                 continue
+        for table in os.listdir(self.root) if os.path.isdir(self.root) else []:
+            tdir = os.path.join(self.root, table)
+            if table.startswith("_") or table == "stream" or not os.path.isdir(tdir):
+                continue
+            names = os.listdir(tdir)
+            dirs: dict[int, list[str]] = {}
+            for name in names:
+                m = _DATA_DIR_RE.fullmatch(name)
+                if m:
+                    dirs.setdefault(int(m.group(1)), []).append(name)
+            for r, found in dirs.items():
+                committed = f"_r{r:05d}.manifest.json" in names
+                if committed and len(found) == 1:
+                    continue  # the one directory its manifest names
+                live = os.path.basename(self.data_path(table, r)) if committed else None
+                for name in found:
+                    p = os.path.join(tdir, name)
+                    if name == live or os.path.realpath(p) in held:
+                        continue
+                    try:
+                        if grace_s > 0 and now - _newest_mtime(p) < grace_s:
+                            continue
+                    except OSError:
+                        continue
+                    shutil.rmtree(p, ignore_errors=True)
+                    n += 1
         return n
-
-    def _publish(self, table: str, round_: int, payload: dict) -> None:
-        payload = dict(payload, table=table, round=round_,
-                       committed_at=time.time(), snapshot_id=str(uuid.uuid4()))
-        final = self._manifest_path(table, round_)
-        tmp = final + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)  # atomic on POSIX
-        self._publish_stream_entry(table, round_)
 
     # streaming-safe view: <root>/stream/<table>/rNNNNN/ holds a copy
     # of each COMMITTED round's data files, published ONLY AFTER the
@@ -226,7 +278,6 @@ class SnapshotCatalog:
         current snapshot (re-delivery possible only in that
         damaged-entry corner, where re-delivery beats data loss)."""
         import shutil
-        import uuid as _uuid
 
         src = self.data_path(table, round_)
         dst = os.path.join(self._stream_table_dir(table), f"r{round_:05d}")
@@ -285,10 +336,7 @@ class SnapshotCatalog:
                 os.replace(tmp, t)
         # seal AFTER every file is in place (crash before this line =
         # unsealed entry, healed idempotently on the next publish)
-        tmp = marker + f".tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"files": sorted(names)}, f)
-        os.replace(tmp, marker)
+        _write_json(marker, {"files": sorted(names)})
 
     def stream_dir(self, table: str) -> str:
         """Directory whose ``r*`` children are EXACTLY the committed
@@ -323,7 +371,7 @@ class SnapshotCatalog:
             round_ = self.latest_round(table)
         if round_ is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        m = self._read_manifest(table, round_) or {}
+        m = self.manifest(table, round_) or {}
         return _read_parquet(spark, self.data_path(table, round_), m.get("schema"))
 
     def exists(self, table: str, round_: int) -> bool:
@@ -455,10 +503,10 @@ class SnapshotCatalog:
         for the ANN layouts).  A crawl writes shuffle-partition-many
         files per round; over hundreds of rounds ``crawled_all`` reads
         thousands of tiny files whose open/footer cost dominates the
-        scan.  Each round is rewritten through :meth:`write`'s
-        committed-round path, so the swap is ATOMIC (fresh uuid dir +
-        manifest replace; a crash leaves the old snapshot readable) and
-        the stream view re-publishes to exactly the new bytes.
+        scan.  Each round is rewritten through :meth:`write`, so the
+        swap is ATOMIC (fresh uuid dir + manifest replace; a crash
+        leaves the old snapshot readable) and the sealed stream view
+        keeps the rows it first published.
 
         Per-round file targets come from on-disk BYTE size (stat, no
         Spark job for the planning pass) — bytes, not rows, because a
@@ -482,7 +530,7 @@ class SnapshotCatalog:
         plan: list[tuple[int, str, int, int, str | None]] = []
         for r in (rounds if rounds is not None
                   else self.committed_rounds(table)):
-            m = self._read_manifest(table, r)
+            m = self.manifest(table, r)
             if m is None or m.get("partition_by"):
                 continue
             d = self.data_path(table, r)
@@ -598,15 +646,8 @@ class SnapshotCatalog:
             fn for fn in os.listdir(self._seen_dir())
             if fn.startswith("part-") and fn not in before
         )
-        os.makedirs(os.path.dirname(self._seen_append_manifest(round_)),
-                    exist_ok=True)
-        final = self._seen_append_manifest(round_)
-        tmp = final + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"round": round_, "files": added}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)
+        _write_json(self._seen_append_manifest(round_),
+                    {"round": round_, "files": added})
 
     def seen_table(self, spark, n_buckets: int):
         """The bucketed seen table as a DataFrame (vacuumed: only
@@ -617,15 +658,7 @@ class SnapshotCatalog:
 
     # ------------------------------------------------- driver state
     def write_state(self, round_: int, state: dict) -> None:
-        d = os.path.join(self.root, "_crawl_state")
-        os.makedirs(d, exist_ok=True)
-        final = os.path.join(d, f"r{round_:05d}.json")
-        tmp = final + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)
+        _write_json(os.path.join(self.root, "_crawl_state", f"r{round_:05d}.json"), state)
 
     def latest_state(self) -> tuple[int, dict] | None:
         d = os.path.join(self.root, "_crawl_state")

@@ -167,10 +167,10 @@ def main() -> None:
     import re as _re
 
     m = _re.search(r"InMemoryFileIndex\((\d+) paths\)", kji_plan)
-    from doccrawler_spark.ops.similarity import _resolve_index_dir
+    from doccrawler_spark.ops.similarity import _layout
 
     n_layout_dirs = sum(
-        1 for b in os.scandir(_resolve_index_dir(f"{idx_root}/knn_lsh"))
+        1 for b in os.scandir(_layout(f"{idx_root}/knn_lsh")["path"])
         if b.is_dir() for _ in os.scandir(b.path)
     )
     pruned_note = (

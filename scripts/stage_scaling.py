@@ -102,11 +102,6 @@ def stage_minhash():
     minhash_signatures(docs_like, n=3, k=16).select(
         F.sum(F.size("sig"))).collect()
 
-def stage_minhash_xx():
-    from doccrawler_spark.ops.dedup import minhash_signatures
-    minhash_signatures(docs_like, n=3, k=16, key_fn="xxhash64").select(
-        F.sum(F.size("sig"))).collect()
-
 def stage_simhash():
     from doccrawler_spark.ops.dedup import simhash64
     simhash64(docs_like).select(F.sum("simhash")).collect()
@@ -210,8 +205,7 @@ def stage_knn_crawl_indexed():
 out = {}
 for name, fn in [("scan", stage_scan), ("extract", stage_extract),
                  ("vectorize", stage_vectorize), ("jvm_hash", stage_jvm_hash),
-                 ("minhash", stage_minhash), ("minhash_xx", stage_minhash_xx),
-                 ("simhash", stage_simhash),
+                 ("minhash", stage_minhash), ("simhash", stage_simhash),
                  ("minhash_crawl", stage_minhash_crawl),
                  ("simhash_crawl", stage_simhash_crawl),
                  ("knn_crawl", stage_knn_crawl),
@@ -440,7 +434,7 @@ def main() -> None:
     rows = "\n".join(
         f"| {k} | {lo[k]} | {hi[k]} | {effs[k]} |"
         for k in ["scan", "extract", "vectorize", "jvm_hash", "minhash",
-                  "minhash_xx", "simhash", "minhash_crawl",
+                  "simhash", "minhash_crawl",
                   "simhash_crawl", "knn_crawl", "knn_crawl_indexed"]
         if k in effs
     )
@@ -466,9 +460,7 @@ signatures over these ~2-3k-token pages); its r3 shape is ONE digest
 per token + integer shingle keys + a shuffle-free per-doc array_min
 projection — no explode, no min-aggregate shuffle (r2's
 explode+16-column-agg form measured 0.25 here; the rework plus
-single-pass tokenization cut its absolute time ~5x).  `minhash_xx` is
-the same operator on the xxhash64 zero-string-allocation key path
-(the bench/scale knob; md5 stays the oracle-replayable default).
+single-pass tokenization cut its absolute time ~5x).
 `simhash` (r4) is the shuffle-free SimHash: one md5 per distinct
 token + 32 per-doc array-aggregate bit votes, no explode and no
 groupBy shuffle.

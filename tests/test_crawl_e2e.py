@@ -197,6 +197,50 @@ def test_resume_invisible_partial_round(spark, tmp_path):
     _assert_equivalent(spark, oracle, catalog, golden)
 
 
+def test_crash_at_frontier_commit_resumes_to_oracle(spark, tmp_path,
+                                                   monkeypatch):
+    """A crash at a crawl round's one commit point (the ``frontier``
+    manifest replace, after the round's data is written): the round's
+    directory is left unreferenced and the catalog reclaims it, and a
+    resume gives the same seen set, crawl order, text and budget as a
+    run with no crash."""
+    from doccrawler_spark import snapshots
+
+    spec = tiny_spec()
+    web, pages, golden, seeds = _load(spark, spec)
+    oracle = SequentialOracle(pages, OracleConfig(max_depth=4)).run(seeds)
+
+    root = os.path.join(str(tmp_path), "snap")
+    ecfg = CrawlConfig(max_depth=4)
+    real = snapshots._write_json
+    fired = []
+
+    def crash(path, obj):
+        if not fired and path.endswith(
+                os.path.join("frontier", "_r00002.manifest.json")):
+            fired.append(path)
+            raise OSError("injected crash at the frontier commit")
+        real(path, obj)
+
+    monkeypatch.setattr(snapshots, "_write_json", crash)
+    with pytest.raises(OSError):
+        crawl(spark, web, seeds, root, ecfg)
+    monkeypatch.setattr(snapshots, "_write_json", real)
+    assert fired
+
+    catalog = snapshots.SnapshotCatalog(root)
+    assert not catalog.exists("frontier", 2)
+    fdir = os.path.join(root, "frontier")
+    stranded = [os.path.join(fdir, n) for n in os.listdir(fdir)
+                if n.startswith("r00002")]
+    assert len(stranded) == 1
+    assert catalog.vacuum_superseded(grace_s=0) == 1
+    assert not os.path.exists(stranded[0])
+
+    catalog = crawl(spark, web, seeds, root, ecfg, resume=True)
+    _assert_equivalent(spark, oracle, catalog, golden)
+
+
 def test_resume_over_manifests_without_schema(spark, tmp_path):
     """Catalogs whose manifests carry no schema (written before
     manifests recorded one) still resume: reads fall back to schema
@@ -543,19 +587,20 @@ def test_iceberg_backend_roundtrip(spark, tmp_path):
 
 def test_rewrite_committed_round_is_atomic(spark, tmp_path):
     """Torn-write safety of the rewrite path catalog.compact takes:
-    rewriting an already-committed round must publish into a FRESH
+    every write, a round's first included, publishes into a FRESH
     directory with the manifest replace as the commit point — the
     original bytes stay intact until the new manifest is visible, so a
     crash mid-rewrite can never leave a committed manifest pointing at
-    a torn dir, and a reader mid-scan never has files deleted under
-    it."""
+    a torn dir, a reader mid-scan never has files deleted under it,
+    and a crashed rewrite's directory is reclaimed once unreferenced
+    past the grace window."""
     from doccrawler_spark.snapshots import SnapshotCatalog
 
     catalog = SnapshotCatalog(str(tmp_path / "snap"))
     df1 = spark.range(0, 10).withColumnRenamed("id", "v")
     catalog.write(df1, "t", 3)
     first_dir = catalog.data_path("t", 3)
-    assert first_dir == catalog.data_dir("t", 3)
+    assert first_dir.startswith(catalog.data_dir("t", 3) + ".")
 
     df2 = spark.range(100, 105).withColumnRenamed("id", "v")
     catalog.write(df2, "t", 3)
@@ -590,6 +635,10 @@ def test_rewrite_committed_round_is_atomic(spark, tmp_path):
     os.makedirs(junk)
     assert catalog.data_path("t", 3) == second_dir
     assert catalog.count("t", 3) == 5
+    # ...and the unreferenced dir is reclaimed, after its grace window
+    assert catalog.vacuum_superseded() == 0 and os.path.isdir(junk)
+    assert catalog.vacuum_superseded(grace_s=0) == 1
+    assert not os.path.exists(junk) and os.path.isdir(second_dir)
 
 def test_compact_snapshots(spark, tmp_path):
     """catalog.compact rewrites multi-file committed rounds into few

@@ -415,10 +415,10 @@ def test_knn_join_indexed_matches_and_prunes(spark, tmp_path):
     assert m and int(m.group(1)) <= n_tables * (2 ** n_bits)
     from pathlib import Path
 
-    from doccrawler_spark.ops.similarity import _resolve_index_dir
+    from doccrawler_spark.ops.similarity import _layout
 
     n_dirs = sum(
-        1 for band in Path(_resolve_index_dir(d)).iterdir()
+        1 for band in Path(_layout(d)["path"]).iterdir()
         if band.is_dir() for _ in band.iterdir()
     )
     assert int(m.group(1)) < n_dirs  # strictly fewer than the layout
@@ -518,18 +518,20 @@ def test_knn_join_indexed_bulk_batch_root_read(spark, tmp_path):
 def test_compact_index_preserves_results_and_merges_files(spark, tmp_path):
     """compact_index rewrites a fragmented layout into one-big-file
     partition dirs (small-file compaction) without changing any query
-    result — same meta, same rows, fewer files."""
+    result — same meta, same rows, fewer files — and still splits an
+    oversized bucket at the per-file size bound."""
     import os
     import random
-    import shutil
 
     from doccrawler_spark.ops.similarity import (
-        _resolve_index_dir,
+        _LAYOUT,
+        _layout,
         compact_index,
         ivf_topk_indexed,
         kmeans_centroids,
         write_ivf_index,
     )
+    from doccrawler_spark.snapshots import SnapshotCatalog
 
     rng = random.Random(3)
     emb = spark.createDataFrame(
@@ -544,17 +546,13 @@ def test_compact_index_preserves_results_and_merges_files(spark, tmp_path):
     want = [(r["vec_id"], r["cosine"]) for r in
             ivf_topk_indexed(spark, clean, qv, k=10).collect()]
 
-    # fragment: rewrite the same rows with 12 non-aligned tasks → up to
-    # 12 files per cell dir (what repeated small appends produce).
-    # Built as a LEGACY flat layout (data + meta at the root, no
-    # pointer) so this test also pins the pre-r6 back-compat read path.
-    clean_v = _resolve_index_dir(clean)
+    # fragment: publish the same rows with 12 non-aligned tasks → up to
+    # 12 files per cell dir (what repeated small appends produce)
+    m = _layout(clean)
     frag = str(tmp_path / "frag")
-    df = spark.read.option("basePath", clean_v).parquet(clean_v)
-    (df.repartition(12).write.mode("overwrite")
-       .partitionBy("cell").parquet(frag))
-    shutil.copyfile(os.path.join(clean_v, "_index_meta.json"),
-                    os.path.join(frag, "_index_meta.json"))
+    df = spark.read.option("basePath", m["path"]).parquet(m["path"])
+    SnapshotCatalog(frag).write(df.repartition(12), _LAYOUT, 0,
+                                partition_by=["cell"], meta=m["meta"])
 
     def files_per_dir(p):
         return {
@@ -563,50 +561,46 @@ def test_compact_index_preserves_results_and_merges_files(spark, tmp_path):
             for d in os.scandir(p) if d.is_dir()
         }
 
-    assert max(files_per_dir(frag).values()) > 1
+    assert max(files_per_dir(_layout(frag)["path"]).values()) > 1
     stats = compact_index(spark, frag)
     assert stats["files_after"] < stats["files_before"]
-    # publication is versioned: root still resolves, compacted files
-    # live in the committed version dir; the legacy flat files are the
-    # PREVIOUS version, so they get the same one-generation grace a
-    # versioned prev gets (a concurrent reader mid-scan on the pre-r6
-    # layout keeps every file it listed)
-    frag_v = _resolve_index_dir(frag)
-    assert frag_v != frag
-    assert max(files_per_dir(frag_v).values()) == 1
-    assert os.path.exists(os.path.join(frag, "_index_meta.json"))
-    assert any("=" in d.name for d in os.scandir(frag) if d.is_dir())
+    assert max(files_per_dir(_layout(frag)["path"]).values()) == 1
+    assert _layout(frag)["meta"] == m["meta"]
     got = [(r["vec_id"], r["cosine"]) for r in
            ivf_topk_indexed(spark, frag, qv, k=10).collect()]
     assert got == want
-    # ...and the NEXT publish vacuums them (grace lasts one generation)
-    compact_index(spark, frag)
-    assert not os.path.exists(os.path.join(frag, "_index_meta.json"))
-    assert not any("=" in d.name for d in os.scandir(frag) if d.is_dir())
-    got2 = [(r["vec_id"], r["cosine"]) for r in
-            ivf_topk_indexed(spark, frag, qv, k=10).collect()]
-    assert got2 == want
+
+    # a target below one bucket's bytes splits that bucket into several
+    # files, and the results stay the same
+    compact_index(spark, frag, target_bytes=stats["bytes"] // 20)
+    assert max(files_per_dir(_layout(frag)["path"]).values()) > 1
+    got = [(r["vec_id"], r["cosine"]) for r in
+           ivf_topk_indexed(spark, frag, qv, k=10).collect()]
+    assert got == want
 
 
 def test_index_version_protocol(spark, tmp_path):
-    """The r6 versioned-layout protocol: every publish (build or
-    compaction) lands a new vNNNNNN dir behind one atomic `_current`
-    pointer replace; the root never stops resolving, the previously
-    committed version survives exactly one more publication (grace for
-    a concurrent reader that resolved the old pointer), and older
-    versions + stranded uncommitted build dirs are vacuumed."""
+    """An index layout is a snapshot of the catalog at its root: every
+    publish (build or compaction) lands in a fresh directory behind
+    one manifest replace; the superseded layout stays readable through
+    the tombstone grace window (a concurrent reader that resolved it
+    finishes its scan) and is reclaimed after it; a manifest naming a
+    directory that is gone does not count as a committed layout."""
     import os
+    import shutil
 
     from doccrawler_spark.ops.similarity import (
-        _resolve_index_dir,
+        _layout,
         compact_index,
         index_exists,
         lsh_topk_indexed,
         write_lsh_index,
     )
+    from doccrawler_spark.snapshots import SnapshotCatalog
 
     d = str(tmp_path / "vidx")
     assert not index_exists(d)
+    assert not os.path.exists(d)  # the check creates nothing
 
     emb = spark.createDataFrame(
         [(i, [(1.0 if (i >> b) & 1 else -1.0) for b in range(8)],
@@ -616,45 +610,42 @@ def test_index_version_protocol(spark, tmp_path):
     )
     write_lsh_index(emb, d, n_bits=2, n_tables=2)
     assert index_exists(d)
-    v1 = os.path.basename(_resolve_index_dir(d))
-    assert v1 == "v000001"
+    v1 = _layout(d)["path"]
+    assert _layout(d)["meta"] == {"kind": "lsh", "n_bits": 2, "n_tables": 2}
     qv = [1.0] * 8
     want = [(r["vec_id"], r["cosine"])
             for r in lsh_topk_indexed(spark, d, qv, k=5).collect()]
 
-    # rebuild → v2 committed, v1 kept as the reader-grace version
+    # rebuild → a new directory is committed; the old one survives the
+    # grace window, still complete, and goes once it has passed
     write_lsh_index(emb, d, n_bits=2, n_tables=2)
-    assert os.path.basename(_resolve_index_dir(d)) == "v000002"
-    assert os.path.isdir(os.path.join(d, v1))
+    v2 = _layout(d)["path"]
+    assert v2 != v1
+    catalog = SnapshotCatalog(d)
+    assert catalog.vacuum_superseded() == 0
+    old = spark.read.option("basePath", v1).parquet(v1)
+    assert old.select("vec_id").distinct().count() == 40
+    assert catalog.vacuum_superseded(grace_s=0) == 1
+    assert not os.path.exists(v1) and os.path.isdir(v2)
 
-    # a stranded uncommitted build dir (simulated crash) + a third
-    # publish: v3 current, v2 kept, v1 and the stray vacuumed
-    os.makedirs(os.path.join(d, "v000050"))
     stats = compact_index(spark, d)
     assert stats["files_after"] >= 1
-    cur = os.path.basename(_resolve_index_dir(d))
-    assert cur == "v000051"
-    versions = sorted(x for x in os.listdir(d) if x.startswith("v"))
-    assert versions == ["v000002", cur]
-
+    assert _layout(d)["path"] not in (v1, v2)
     got = [(r["vec_id"], r["cosine"])
            for r in lsh_topk_indexed(spark, d, qv, k=5).collect()]
     assert got == want
 
-    # a dangling pointer (its target lost — e.g. a racing publisher's
-    # vacuum under the pre-r7 protocol) must NOT resolve: index_exists
-    # goes False so the cache-layer heal rebuilds instead of reads
-    # failing forever on a path with no files
-    with open(os.path.join(d, "_current"), "w") as f:
-        f.write("v000099")
+    # a manifest whose directory was lost must NOT resolve: index_exists
+    # goes False so the cache-layer rebuilds instead of reads failing
+    # forever on a path with no files
+    shutil.rmtree(_layout(d)["path"])
     assert not index_exists(d)
 
 
-def test_ensure_index_heals_and_cleans(spark, tmp_path):
-    """The driver entry's shared /tmp index cache: a torn cache dir
-    with no resolvable layout is healed (rebuilt), and a build failure
-    of ANY exception type removes the tmp build dir instead of
-    stranding it."""
+def test_ensure_index_heals_and_cleans(spark, tmp_path, monkeypatch):
+    """The driver entry's shared /tmp index cache: a torn cache root
+    (data written, nothing committed) is rebuilt and its directory
+    reclaimed, and a build that fails leaves no committed layout."""
     import os
     import sys
 
@@ -663,43 +654,116 @@ def test_ensure_index_heals_and_cleans(spark, tmp_path):
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     from __spark_entry__ import _ensure_index
+    from doccrawler_spark import snapshots
     from doccrawler_spark.ops.similarity import (
         index_exists,
+        lsh_topk_indexed,
         write_lsh_index,
     )
 
     emb = spark.createDataFrame(
-        [(i, [1.0] * 8) for i in range(10)],
-        "vec_id long, embedding array<float>",
+        [(i, [1.0] * 8, "l") for i in range(10)],
+        "vec_id long, embedding array<float>, label string",
     )
-    # torn dir: exists, holds junk, no committed layout
+
+    def build(t):
+        write_lsh_index(emb, t, n_bits=2, n_tables=1)
+
+    # torn root: a layout directory holding junk, no manifest
     d = str(tmp_path / "cache" / "lsh_torn")
-    os.makedirs(d)
-    with open(os.path.join(d, "part-junk.parquet"), "w") as f:
+    torn = os.path.join(d, "layout", "r00000.deadbeef")
+    os.makedirs(torn)
+    with open(os.path.join(torn, "part-junk.parquet"), "w") as f:
         f.write("torn")
-    _ensure_index(d, lambda t: write_lsh_index(emb, t, n_bits=2,
-                                               n_tables=1))
+    assert not index_exists(d)
+    _ensure_index(d, build)
     assert index_exists(d)
-    assert not os.path.exists(os.path.join(d, "part-junk.parquet"))
+    assert lsh_topk_indexed(spark, d, [1.0] * 8, k=3).count() == 3
+    assert snapshots.SnapshotCatalog(d).vacuum_superseded(grace_s=0) == 1
+    assert not os.path.exists(torn)
 
-    # build failure: non-OSError exceptions still clean the tmp dir
+    # build failure at the commit: nothing committed, a retry builds
     d2 = str(tmp_path / "cache" / "lsh_fail")
+    real = snapshots._write_json
 
-    def boom(t):
-        os.makedirs(t, exist_ok=True)
-        raise ValueError("spark-side build failure stand-in")
+    def crash(path, obj):
+        if path.endswith("_r00000.manifest.json"):
+            raise OSError("injected crash at the layout commit")
+        real(path, obj)
 
-    with pytest.raises(ValueError):
-        _ensure_index(d2, boom)
-    strays = [x for x in os.listdir(os.path.dirname(d2))
-              if x.startswith(os.path.basename(d2))]
-    assert strays == []
+    monkeypatch.setattr(snapshots, "_write_json", crash)
+    with pytest.raises(OSError):
+        _ensure_index(d2, build)
+    assert not index_exists(d2)
+    monkeypatch.setattr(snapshots, "_write_json", real)
+    _ensure_index(d2, build)
+    assert index_exists(d2)
+
+
+def test_compact_index_crash_keeps_the_committed_layout(spark, tmp_path,
+                                                        monkeypatch):
+    """A crash at compact_index's one commit point (the layout's
+    manifest replace) leaves the pre-crash layout committed and
+    answering queries with the same rows; the stranded rewrite is an
+    unreferenced directory the catalog reclaims."""
+    import os
+    import random
+
+    import pytest
+
+    from doccrawler_spark import snapshots
+    from doccrawler_spark.ops.similarity import (
+        _layout,
+        compact_index,
+        hash_sample_centroids,
+        index_exists,
+        ivf_topk_indexed,
+        write_ivf_index,
+    )
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)], f"l{i % 2}")
+         for i in range(120)],
+        "vec_id long, embedding array<float>, label string",
+    )
+    d = str(tmp_path / "ivf")
+    write_ivf_index(emb, d, centroids=hash_sample_centroids(emb, 4))
+    before = _layout(d)["path"]
+    qv = [rng.uniform(-1, 1) for _ in range(8)]
+    want = [(r["vec_id"], r["cosine"])
+            for r in ivf_topk_indexed(spark, d, qv, k=10).collect()]
+
+    real = snapshots._write_json
+
+    def crash(path, obj):
+        if path.endswith(os.path.join("layout", "_r00000.manifest.json")):
+            raise OSError("injected crash at the compaction commit")
+        real(path, obj)
+
+    monkeypatch.setattr(snapshots, "_write_json", crash)
+    with pytest.raises(OSError):
+        compact_index(spark, d)
+    monkeypatch.setattr(snapshots, "_write_json", real)
+
+    assert index_exists(d)
+    assert _layout(d)["path"] == before
+    got = [(r["vec_id"], r["cosine"])
+           for r in ivf_topk_indexed(spark, d, qv, k=10).collect()]
+    assert got == want
+    layout_dir = os.path.dirname(before)
+    stranded = [n for n in os.listdir(layout_dir)
+                if n.startswith("r") and os.path.join(layout_dir, n) != before]
+    assert len(stranded) == 1
+    assert snapshots.SnapshotCatalog(d).vacuum_superseded(grace_s=0) == 1
+    assert sorted(n for n in os.listdir(layout_dir) if n.startswith("r")) \
+        == [os.path.basename(before)]
 
 
 def test_knn_join_indexed_no_matching_bucket(spark, tmp_path):
     """A query batch probing only buckets no corpus vector occupies
-    returns an empty frame with the knn_join schema (the None branch
-    of _read_partitions)."""
+    returns an empty frame with the knn_join schema (the no-directory
+    branch of _read_layout)."""
     from doccrawler_spark.ops.similarity import (
         knn_join_indexed,
         write_lsh_index,
@@ -834,9 +898,9 @@ def test_ann_index_layouts_prune_and_match(spark, tmp_path):
     p = plan_of(idx)
     assert "PartitionFilters: [" in p and "PartitionFilters: []" not in p
     # all 4 cells materialized on disk, only 2 probed
-    from doccrawler_spark.ops.similarity import _resolve_index_dir
+    from doccrawler_spark.ops.similarity import _layout
 
-    cells = [n for n in os.listdir(_resolve_index_dir(ivf_dir))
+    cells = [n for n in os.listdir(_layout(ivf_dir)["path"])
              if n.startswith("cell=")]
     assert len(cells) >= 3
 
