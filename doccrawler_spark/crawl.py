@@ -18,13 +18,27 @@ Reference semantics reproduced (SURVEY.md §3.4, against /root/reference):
 
 Spark-first physical design:
   * fetch = inner equi-join frontier ⋈ web_pages on url (runtime
-    bloom-filter join prunes the scan by frontier keys);
+    bloom-filter join prunes the scan by frontier keys); a small
+    frontier instead pushes its URL list into the scan as an IN filter
+    (point lookup) and shuffles only the matching rows, so the extract
+    UDF runs in a few coalesced tasks, not in every scan task;
+  * driver-held rows (seeds, seed probe pages, both halves of the
+    point-lookup politeness cut, sequence offsets) re-enter plans as
+    Arrow local relations (``LocalTableScan``), never as a pickled RDD
+    that every consumer rescans in a job of its own;
   * seen-set dedup = left-anti join against per-round url deltas
     (Iceberg bucket-by-url_hash at cluster scale);
   * politeness = per-host round quota via salted two-phase top-k
-    (skew-safe for hot hosts), deferred URLs keep their priority;
+    (skew-safe for hot hosts), deferred URLs keep their priority; a
+    point-lookup round ranks its cut in one partition, so both windows
+    plan with no shuffle Exchange;
   * budget = broadcast dim join + bounded per-site window (only the
     top `budget` candidate pages per site enter the window);
+  * a round whose shallowest frontier row cannot expand (min depth + 1
+    >= max_depth, read from the parquet footer statistics) skips
+    discovery whole: its frontier is the deferred rows alone and its
+    budget snapshot is not rewritten (spending nothing, it equals the
+    last one);
   * every round commits atomic snapshots (frontier, seen delta,
     crawled, budget, metrics) — resumable mid-crawl.
 """
@@ -39,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import functions as Fx
-from .shuffle import global_sequence, topk_per_group
+from .shuffle import global_sequence, local_relation, topk_per_group
 from .snapshots import SnapshotCatalog
 
 FRONTIER_SCHEMA = (
@@ -174,8 +188,8 @@ def seed_round(
             seeds_df = global_sequence(seeds_df, ["seed_url"], "seed_ix")
         n_seeds = seeds_df.count()
     else:
-        seeds_df = spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], "seed_url string, seed_ix int"
+        seeds_df = local_relation(
+            spark, [(u, i) for i, u in enumerate(seeds)], "seed_url string, seed_ix int"
         )
         n_seeds = len(seeds)
 
@@ -220,9 +234,8 @@ def seed_round(
             .select("url", "html")
         )
         if n_seeds <= cfg.seed_collect_max:
-            probe_rows = fetched_probes.collect()
-            probe_pages = spark.createDataFrame(
-                probe_rows or [], "url string, html binary"
+            probe_pages = local_relation(
+                spark, fetched_probes.collect(), "url string, html binary"
             )
             maybe_bc = F.broadcast
         else:
@@ -241,9 +254,7 @@ def seed_round(
             .filter(F.col("url").isin(probe_url_list))
             .collect()
         )
-        probe_pages = spark.createDataFrame(
-            probe_rows or [], "url string, html binary"
-        )
+        probe_pages = local_relation(spark, probe_rows, "url string, html binary")
         maybe_bc = F.broadcast
     else:
         # cluster-scale path: distributed semi-join against the seed
@@ -380,6 +391,15 @@ def run_round(
     budget_gated = cfg.budget_per_site < 2**30
     budget = catalog.read_upto(spark, "budget", round_ - 1) if budget_gated else None
     robots = catalog.read(spark, "robots", 0)
+    frontier_size = state.get("frontier_size") or 0
+    point_lookup = (cfg.fetcher is None
+                    and 0 < frontier_size <= cfg.point_lookup_max_frontier)
+    bucketed = frontier_size >= cfg.broadcast_dedup_max_frontier
+    # F2/F3 gates ahead of the fetch: when even the shallowest frontier
+    # row cannot expand, no page this round fetches can, and discovery
+    # is skipped whole.  A missing footer statistic never skips.
+    min_depth = catalog.min_value("frontier", round_ - 1, "depth")
+    expands = min_depth is None or min_depth + 1 < cfg.max_depth
 
     # ---- politeness: per-host quota, defer the rest (priority kept)
     if cfg.politeness and has_delays:
@@ -387,7 +407,10 @@ def run_round(
             F.col("crawl_delay").isNotNull(),
             F.greatest(F.lit(1), F.floor(F.lit(cfg.round_seconds) / F.col("crawl_delay"))),
         )
-        fr = frontier.join(F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
+        # a point-lookup cut holds ≤ point_lookup_max_frontier rows: in
+        # one partition both ranking windows plan with no Exchange
+        fr = (frontier.coalesce(1) if point_lookup else frontier).join(
+            F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
         unlimited = fr.filter(F.col("crawl_delay").isNull()).drop("crawl_delay")
         limited = fr.filter(F.col("crawl_delay").isNotNull())
         top, rest = topk_per_group(
@@ -415,7 +438,6 @@ def run_round(
     # needed columns from that parquet.  A .persist() here would hold
     # gigabytes of deserialized text on the JVM heap and stall in GC —
     # columnar re-reads are strictly cheaper.
-    frontier_size = state.get("frontier_size") or 0
     if cfg.fetcher is not None:
         # pluggable fetch (S3 seam): the fetcher is handed exactly this
         # round's URL set and its hits join back to the frontier rows
@@ -432,7 +454,7 @@ def run_round(
         )
     else:
         corpus = web_pages.select("url", "html")
-        if 0 < frontier_size <= cfg.point_lookup_max_frontier:
+        if point_lookup:
             # point-lookup fetch: push the round's URL list into the
             # scan as an IN filter so parquet row-group stats prune the
             # corpus (decodes only the row groups containing the URLs).
@@ -445,10 +467,17 @@ def run_round(
             cut = tagged.collect()
             schema = StructType(tagged.schema.fields[:-1])
             now = [r for r in cut if r["_now"]]
-            fetch_now = spark.createDataFrame([r[:-1] for r in now], schema)
-            deferred = spark.createDataFrame(
-                [r[:-1] for r in cut if not r["_now"]], schema)
-            corpus = corpus.filter(F.col("url").isin([r["url"] for r in now]))
+            fetch_now = local_relation(spark, [r[:-1] for r in now], schema)
+            deferred = local_relation(
+                spark, [r[:-1] for r in cut if not r["_now"]], schema)
+            # The few matching corpus rows then shuffle, so the extract
+            # UDF runs in a handful of AQE-coalesced tasks: joined to a
+            # broadcast local relation it would otherwise run inside
+            # every corpus-scan task (~2 s slower per small round over
+            # a 35-task scan of a 240k-page corpus on 4 cores).
+            corpus = corpus.filter(
+                F.col("url").isin([r["url"] for r in now])
+            ).repartition("url")
     fetched = (
         fetch_now.join(corpus, "url", "inner")
         .withColumn("page", Fx.extract_page_udf(F.col("html")))
@@ -477,6 +506,107 @@ def run_round(
     catalog.write(lineage, "metrics", round_)
     _mark("metrics")
 
+    # deferred rows entered the seen set when first enqueued —
+    # re-snapshotting them must not re-mark them as deltas
+    next_frontier = deferred.select(*_FRONTIER_COLS).select(
+        "*",
+        F.xxhash64("url").alias("url_hash"),
+        F.lit(round_).alias("round"),
+        F.lit(False).alias("is_new"),
+    )
+    if expands:
+        links, new_frontier_items = _discover(
+            spark, catalog, cfg, crawled_back, budget, robots, round_, state,
+            bucketed)
+        next_frontier = next_frontier.unionByName(new_frontier_items)
+    elif bucketed:
+        # the seen-table appends heal through round_-1 on every
+        # bucketed round, discovering or not
+        _ensure_seen_table(spark, catalog, cfg, round_ - 1)
+    catalog.write(next_frontier, "frontier", round_)
+    _mark("discover_dedup_frontier")
+
+    # ---- budget update: used' = min(max, used + Σ n_batches)
+    # (skipped for unlimited budget — the table stays at r0 — and for
+    # a round that cannot expand, which spends nothing: read_upto then
+    # finds the last snapshot, equal to what a rewrite would hold)
+    if budget_gated and expands:
+        spend = links.groupBy("site_id").agg(F.sum("n_batches").alias("spent"))
+        new_budget = (
+            budget.join(spend, "site_id", "left")
+            .withColumn(
+                "used",
+                F.least(F.col("max"), F.col("used") + F.coalesce("spent", F.lit(0)).cast("int")),
+            )
+            .select("site_id", "used", "max")
+        )
+        catalog.write(new_budget, "budget", round_)
+
+    # ---- error sink (S8): fetch misses — frontier rows that found
+    # no corpus page — land in a per-round `errors` snapshot instead
+    # of silently vanishing (ref error_repository.py:14-21, producer
+    # crawler_service.py:62-70).  Computed ENTIRELY from committed
+    # snapshots (pruned column reads, no UDF/window lineage
+    # re-execution): missed = frontier(r-1) under the depth gate,
+    # minus crawled(r), minus politeness-deferred rows (which were
+    # re-snapshotted into frontier(r) with is_new=false).
+    # Extraction itself is total (regex scanner), so fetch misses
+    # are the only failure class here.
+    prev = (
+        catalog.read(spark, "frontier", round_ - 1)
+        .filter(F.col("depth") < cfg.max_depth)
+        .select("url", "host", "site_id", "depth", "priority")
+    )
+    not_missed = crawled_back.select("url")
+    if cfg.politeness and has_delays:
+        not_missed = not_missed.unionByName(
+            catalog.read(spark, "frontier", round_)
+            .filter(~F.col("is_new")).select("url")
+        )
+    misses = prev.join(not_missed, "url", "left_anti").select(
+        "url", "host", "site_id", "depth",
+        F.lit(round_).alias("round"), "priority",
+        F.lit("fetch_miss").alias("reason"),
+    )
+    catalog.write(misses, "errors", round_)
+    _mark("errors")
+
+    # counts straight from the committed parquet footers / a single
+    # driver-side column read — zero Spark jobs
+    n_new = catalog.count_true("frontier", round_, "is_new", spark=spark)
+    n_next = catalog.count("frontier", round_)
+    new_state = {
+        "next_priority": state["next_priority"] + n_new,
+        "round": round_,
+        "done": n_next == 0,
+        "frontier_size": n_next,
+        # surfaced error count (parquet-footer read, no Spark job)
+        "n_errors": catalog.count("errors", round_),
+    }
+    _mark("counts")
+    if _timing:
+        print(f"[phase] r{round_} {_phase_t}")
+    catalog.write_state(round_, new_state)
+    return new_state
+
+
+def _discover(
+    spark: SparkSession,
+    catalog: SnapshotCatalog,
+    cfg: CrawlConfig,
+    crawled_back: DataFrame,
+    budget: "DataFrame | None",
+    robots: DataFrame,
+    round_: int,
+    state: dict,
+    bucketed: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """Discover (X2) → budget (F9) → seen-set dedup (F8) → sequence
+    numbering over one round's committed crawled pages.  Returns
+    ``(links, new frontier rows)``; ``links`` carries the per-page
+    batch counts the budget update spends.  ``budget`` None means an
+    unlimited budget."""
+    frontier_size = state.get("frontier_size") or 0
     # ---- discover (X2) on expanding pages only (F2/F3 gates)
     expanding = crawled_back.filter(
         (~F.col("sitemap_mode")) & (F.col("depth") + 1 < cfg.max_depth)
@@ -506,14 +636,14 @@ def run_round(
     # broadcast-exchange jobs would re-execute this whole lineage
     # per consumer.  Unlimited budget has a single consumer — the
     # checkpoint would only add a full materialization job.
-    if budget_gated:
+    if budget is not None:
         links = links.localCheckpoint(eager=True)
 
     # ---- budget (F9): only the first `budget` consuming pages per
     # site can spend; bounded window after a salted top-k.
     # Fast path: an effectively-unlimited budget (throughput bench)
     # can never gate a batch, so the dim join + two windows vanish.
-    if not budget_gated:
+    if budget is None:
         kept = links.filter(F.col("n_batches") > 0).withColumn(
             "kept_links", Fx.rule_filter_links(F.col("internal"))
         )
@@ -572,7 +702,7 @@ def run_round(
     # ---- global seen-set anti-join (F8).  Only rounds strictly
     # before this one — a partially-committed attempt of THIS
     # round must not dedup against itself on resume.
-    if frontier_size < cfg.broadcast_dedup_max_frontier:
+    if not bucketed:
         # the seen-set (which grows every round) is NEVER shuffled —
         # it is scanned once (url column only, is_new filter pushed
         # into the parquet scan) against a broadcast semi-join with
@@ -614,78 +744,7 @@ def run_round(
         F.lit(round_).alias("round"),
         F.lit(True).alias("is_new"),
     )
-
-    # deferred rows entered the seen set when first enqueued —
-    # re-snapshotting them must not re-mark them as deltas
-    next_frontier = deferred.select(*_FRONTIER_COLS).select(
-        "*",
-        F.xxhash64("url").alias("url_hash"),
-        F.lit(round_).alias("round"),
-        F.lit(False).alias("is_new"),
-    ).unionByName(new_frontier_items)
-    catalog.write(next_frontier, "frontier", round_)
-    _mark("discover_dedup_frontier")
-
-    # ---- budget update: used' = min(max, used + Σ n_batches)
-    # (skipped entirely for unlimited budget — table stays at r0)
-    if budget_gated:
-        spend = links.groupBy("site_id").agg(F.sum("n_batches").alias("spent"))
-        new_budget = (
-            budget.join(spend, "site_id", "left")
-            .withColumn(
-                "used",
-                F.least(F.col("max"), F.col("used") + F.coalesce("spent", F.lit(0)).cast("int")),
-            )
-            .select("site_id", "used", "max")
-        )
-        catalog.write(new_budget, "budget", round_)
-
-    # ---- error sink (S8): fetch misses — frontier rows that found
-    # no corpus page — land in a per-round `errors` snapshot instead
-    # of silently vanishing (ref error_repository.py:14-21, producer
-    # crawler_service.py:62-70).  Computed ENTIRELY from committed
-    # snapshots (pruned column reads, no UDF/window lineage
-    # re-execution): missed = frontier(r-1) under the depth gate,
-    # minus crawled(r), minus politeness-deferred rows (which were
-    # re-snapshotted into frontier(r) with is_new=false).
-    # Extraction itself is total (regex scanner), so fetch misses
-    # are the only failure class here.
-    prev = (
-        catalog.read(spark, "frontier", round_ - 1)
-        .filter(F.col("depth") < cfg.max_depth)
-        .select("url", "host", "site_id", "depth", "priority")
-    )
-    not_missed = crawled_back.select("url")
-    if cfg.politeness and has_delays:
-        not_missed = not_missed.unionByName(
-            catalog.read(spark, "frontier", round_)
-            .filter(~F.col("is_new")).select("url")
-        )
-    misses = prev.join(not_missed, "url", "left_anti").select(
-        "url", "host", "site_id", "depth",
-        F.lit(round_).alias("round"), "priority",
-        F.lit("fetch_miss").alias("reason"),
-    )
-    catalog.write(misses, "errors", round_)
-    _mark("errors")
-
-    # counts straight from the committed parquet footers / a single
-    # driver-side column read — zero Spark jobs
-    n_new = catalog.count_true("frontier", round_, "is_new", spark=spark)
-    n_next = catalog.count("frontier", round_)
-    new_state = {
-        "next_priority": state["next_priority"] + n_new,
-        "round": round_,
-        "done": n_next == 0,
-        "frontier_size": n_next,
-        # surfaced error count (parquet-footer read, no Spark job)
-        "n_errors": catalog.count("errors", round_),
-    }
-    _mark("counts")
-    if _timing:
-        print(f"[phase] r{round_} {_phase_t}")
-    catalog.write_state(round_, new_state)
-    return new_state
+    return links, new_frontier_items
 
 
 def crawl(
@@ -764,7 +823,7 @@ def crawled_all(spark: SparkSession, catalog: SnapshotCatalog) -> DataFrame:
     depth, round, priority)."""
     paths = [catalog.data_path("crawled", r) for r in catalog.committed_rounds("crawled")]
     if not paths:
-        return spark.createDataFrame([], CRAWLED_SCHEMA)
+        return local_relation(spark, [], CRAWLED_SCHEMA)
     return spark.read.schema(CRAWLED_SCHEMA).parquet(*paths)
 
 
@@ -778,7 +837,7 @@ def errors_all(spark: SparkSession, catalog: SnapshotCatalog) -> DataFrame:
     """All logged crawl errors across rounds (S8 sink)."""
     paths = [catalog.data_path("errors", r) for r in catalog.committed_rounds("errors")]
     if not paths:
-        return spark.createDataFrame([], ERRORS_SCHEMA)
+        return local_relation(spark, [], ERRORS_SCHEMA)
     return spark.read.schema(ERRORS_SCHEMA).parquet(*paths)
 
 

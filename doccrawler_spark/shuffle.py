@@ -1,7 +1,8 @@
-"""Shuffle-aware distributed utilities: global sequence numbers and
-salted per-group top-k.
+"""Shuffle-aware distributed utilities: global sequence numbers,
+salted per-group top-k, and the one way driver-held rows enter a plan.
 
-Both exist because the naive formulations collapse to a single task:
+The first two exist because the naive formulations collapse to a
+single task:
 
 * ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY moves the
   whole dataset through ONE partition — unusable at 10^10 rows.
@@ -16,18 +17,46 @@ Both exist because the naive formulations collapse to a single task:
   of each host (parallel), keeps k per sub-group, then ranks the
   surviving ≤ salt·k rows per host — the final skewed window sees a
   bounded row count regardless of host size.
+
+:func:`local_relation` exists because ``createDataFrame(list_of_rows)``
+builds a pickled Python RDD, and every consumer of it pays a scan job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 _SEQ_PID = "__seq_pid"
 _SEQ_RN = "__seq_rn"
 _SEQ_OFF = "__seq_off"
 _SALT = "__salt"
 _SUB_RN = "__sub_rn"
+
+
+def local_relation(
+    spark: SparkSession, rows: list, schema: "StructType | str"
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema``
+    field order) that plans as a ``LocalTableScan``: the rows travel
+    as one Arrow table typed from the Spark schema, so no consumer
+    runs a scan job.  Column-wise ``pa.array`` keeps NULLs in int
+    columns (a pandas hop would turn them into float NaN).  Past
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself
+    falls back to an RDD, so no size gate is needed here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def global_sequence(
@@ -62,8 +91,9 @@ def global_sequence(
     for row in sorted(counts, key=lambda r: r[_SEQ_PID]):
         offsets[row[_SEQ_PID]] = acc
         acc += row["count"]
-    off_df = df.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, start)],
+    off_df = local_relation(
+        df.sparkSession,
+        list(offsets.items()) or [(0, start)],
         f"{_SEQ_PID} int, {_SEQ_OFF} long",
     )
     w = Window.partitionBy(_SEQ_PID).orderBy(*[F.col(c) for c in order_cols])

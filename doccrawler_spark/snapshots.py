@@ -427,6 +427,35 @@ class SnapshotCatalog:
                     total += len(col) - col.null_count
         return total
 
+    def min_value(self, table: str, round_: int, column: str):
+        """Smallest non-null value of top-level primitive ``column``,
+        from the row groups' min statistics — no Spark job, no data
+        read.  None when the snapshot holds no value or any row group
+        that has one lacks the statistic: callers must then take their
+        general path."""
+        import pyarrow.parquet as pq
+
+        d = self.data_path(table, round_)
+        out = None
+        for name in sorted(os.listdir(d)):
+            if not name.endswith(".parquet"):
+                continue
+            f = pq.ParquetFile(os.path.join(d, name))
+            ci = _leaf_index(f.metadata, column)
+            if ci < 0:
+                return None
+            for g in range(f.metadata.num_row_groups):
+                rg = f.metadata.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                stats = rg.column(ci).statistics
+                if stats is not None and stats.has_min_max:
+                    out = stats.min if out is None else min(out, stats.min)
+                elif (stats is None or not stats.has_null_count
+                      or stats.null_count < rg.num_rows):
+                    return None  # values without a min statistic
+        return out
+
     # mixed row groups above this many total rows switch count_true to
     # a distributed Spark count instead of a driver-side column read
     COUNT_TRUE_DRIVER_MAX_ROWS = 50_000_000

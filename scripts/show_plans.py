@@ -1,14 +1,18 @@
 #!/usr/bin/env python
 """Capture the physical plans of the engine's key operators and check
 the load-bearing plan properties (broadcast side, pushed filters,
-whole-stage codegen, TakeOrderedAndProject) — writes BENCH/PLANS.md."""
+whole-stage codegen, TakeOrderedAndProject) — writes BENCH/PLANS.md.
+
+Scratch data goes to one temporary directory, removed on exit."""
 
 from __future__ import annotations
 
 import datetime
 import io
 import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,6 +31,14 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
+    tmp = tempfile.mkdtemp(prefix="plans_")
+    try:
+        write_plans(tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def write_plans(tmp: str) -> None:
     from doccrawler_spark.session import get_spark
     from pyspark.sql import functions as F
 
@@ -40,9 +52,7 @@ def main() -> None:
         [(f"https://h.test/{i}", bytearray(b"<p>x</p>")) for i in range(1000)],
         "url string, html binary",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp()
+    d = tempfile.mkdtemp(dir=tmp)
     web.write.parquet(f"{d}/web")
     webp = spark.read.parquet(f"{d}/web")
     fr = spark.createDataFrame([(f"https://h.test/{i}",) for i in range(40)], "url string")
@@ -127,7 +137,7 @@ def main() -> None:
         write_lsh_index,
     )
 
-    idx_root = tempfile.mkdtemp(prefix="plans_ann_")
+    idx_root = tempfile.mkdtemp(prefix="ann_", dir=tmp)
     write_ivf_index(emb, f"{idx_root}/ivf",
                     centroids=hash_sample_centroids(emb, 8))
     ivf_df = ivf_topk_indexed(spark, f"{idx_root}/ivf", list(qv), k=10,
@@ -211,8 +221,6 @@ def main() -> None:
     # branch, then assert the anti-join reads the seen side
     # bucket-in-place — Exchange ONLY on the candidate side (the plan
     # slice from the seen FileScan onward must contain none).
-    import tempfile
-
     from doccrawler_spark.crawl import CrawlConfig, crawl
     from doccrawler_spark.webgen import gen_seeds, tiny_spec, web_pages_pandas
 
@@ -222,7 +230,7 @@ def main() -> None:
         schema="url string, warc_ts timestamp, html binary, text string, lang string",
     )
     seeds = [s["seed_url"] for s in gen_seeds(spec)]
-    snap_root = tempfile.mkdtemp(prefix="plans_crawl_")
+    snap_root = tempfile.mkdtemp(prefix="crawl_", dir=tmp)
     catalog = crawl(spark, web, seeds, snap_root,
                     CrawlConfig(max_depth=3, broadcast_dedup_max_frontier=0,
                                 seen_buckets=8))
@@ -246,6 +254,56 @@ def main() -> None:
         ["LeftAnti", "Bucketed: true"],
     ))
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+    # 9. a point-lookup crawl round (the small-round path) on a
+    # crawl-delayed host: the crawled write reads the fetched rows from
+    # an Arrow local relation (no pickled-RDD scan job per consumer),
+    # and the politeness cut ranks in one partition, with no Exchange.
+    # Plans are captured at the engine's own write and collect calls.
+    from doccrawler_spark.snapshots import SnapshotCatalog
+    from doccrawler_spark.webgen import SiteSpec, WebSpec
+
+    slow = WebSpec(sites=(SiteSpec("docs.slow.test", 40, branching=8,
+                                   crawl_delay=20.0),))
+    slow_web = spark.createDataFrame(
+        web_pages_pandas(slow),
+        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    captured: dict[str, str] = {}
+    DataFrame = type(slow_web)  # the concrete (classic) DataFrame class
+    real_write, real_collect = SnapshotCatalog.write, DataFrame.collect
+
+    def write(self, df, table, round_, *a, **k):
+        if table == "crawled":
+            captured.setdefault("crawled", plan_of(df))
+        return real_write(self, df, table, round_, *a, **k)
+
+    def collect(df):
+        if "_now" in df.columns:
+            captured.setdefault("cut", plan_of(df))
+        return real_collect(df)
+
+    SnapshotCatalog.write, DataFrame.collect = write, collect
+    try:
+        crawl(spark, slow_web, [s["seed_url"] for s in gen_seeds(slow)],
+              tempfile.mkdtemp(prefix="crawl_polite_", dir=tmp),
+              CrawlConfig(max_depth=3, max_rounds=1))
+    finally:
+        SnapshotCatalog.write, DataFrame.collect = real_write, real_collect
+    sections.append((
+        "Point-lookup crawl round: the crawled write (fetch join + fused "
+        "extract) over the politeness cut's Arrow local relation",
+        captured["crawled"],
+        ["LocalTableScan", "!Scan ExistingRDD", "ArrowEvalPython"],
+    ))
+    # (the robots dim still broadcasts: BroadcastExchange is expected,
+    # a planner-inserted shuffle — ENSURE_REQUIREMENTS — is not)
+    sections.append((
+        "Point-lookup crawl round: the politeness cut (salted top-k "
+        "over one partition; both windows, no shuffle Exchange)",
+        captured["cut"],
+        ["Window", "Coalesce", "!ENSURE_REQUIREMENTS", "!hashpartitioning"],
+    ))
 
     md = [f"# BENCH/PLANS — physical plans of key operators ({datetime.date.today()})",
           "", "Regenerate with `python scripts/show_plans.py`. Each section lists",

@@ -523,6 +523,68 @@ def test_count_nonnull_matches_spark_count(spark, tmp_path):
     assert catalog.count_nonnull("t", 0, "no_such_column") == 0
 
 
+def test_min_value_from_footer_stats(spark, tmp_path):
+    """min_value reads row-group min statistics across files, skips
+    all-NULL groups, and answers None — never a guess — for an absent
+    column, a snapshot without values, or a row group whose values
+    carry no statistic."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    catalog = SnapshotCatalog(str(tmp_path / "snap"))
+    df = spark.range(0, 2000).select(
+        "id",
+        F.when(F.col("id") < 500, None)
+        .otherwise(F.col("id") % 7 + 3).cast("int").alias("depth"),
+        F.lit(None).cast("int").alias("none"),
+    ).repartition(4, "id")
+    catalog.write(df, "t", 0)
+    assert catalog.min_value("t", 0, "depth") == 3
+    assert catalog.min_value("t", 0, "id") == 0
+    assert catalog.min_value("t", 0, "none") is None
+    assert catalog.min_value("t", 0, "no_such_column") is None
+    catalog.write(df.limit(0), "t", 1)
+    assert catalog.min_value("t", 1, "depth") is None
+
+    pq.write_table(pa.table({"id": pa.array([5], pa.int64()),
+                             "depth": pa.array([9], pa.int32())}),
+                   os.path.join(catalog.data_path("t", 0), "nostats.parquet"),
+                   write_statistics=False)
+    assert catalog.min_value("t", 0, "depth") is None
+
+
+@pytest.mark.parametrize("resume_after", [None, 2], ids=["uninterrupted", "resume"])
+def test_terminal_rounds_skip_discovery(spark, tmp_path, resume_after):
+    """A round whose shallowest frontier row cannot expand skips
+    discovery: its frontier is the politeness-deferred rows alone and
+    it writes no budget snapshot.  The crawl still equals the oracle
+    in order, text, seen set, budget and misses, run straight through
+    or stopped after the first such round and resumed."""
+    from doccrawler_spark.crawl import errors_all
+
+    # quota 60/20 = 3 pages a round: the seed's depth-2 children are
+    # fetched over several terminal-depth rounds that defer the rest
+    spec = WebSpec(sites=(
+        SiteSpec("docs.slow.test", 40, branching=8, crawl_delay=20.0),
+    ))
+    oracle, catalog, _, golden = _run_both(
+        spark, tmp_path, spec, max_depth=3, politeness=True,
+        round_seconds=60.0, resume_after=resume_after,
+    )
+    assert oracle.rounds >= 4
+    _assert_equivalent(spark, oracle, catalog, golden)
+    assert errors_all(spark, catalog).count() == len(oracle.misses)
+
+    # round 1 fetches the depth-1 seed and expands; every later round
+    # is at the terminal depth, skips, and re-snapshots deferred rows
+    assert catalog.committed_rounds("budget") == [0, 1]
+    assert catalog.count("frontier", 2) > 0
+    assert catalog.count_true("frontier", 2, "is_new") == 0
+
+
 def test_invariants(spark, tmp_path):
     """Property checks: no URL fetched twice per site, nothing at depth
     >= MAX_DEPTH, seen-set monotone (SURVEY.md §5.2 item 4)."""
