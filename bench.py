@@ -15,7 +15,8 @@ Env knobs:
   BENCH_CRAWL_GATE     default 110 (rounds_sec below this = clean
                        patch; stop retrying — the probe-gate protocol)
   BENCH_QUERY_REPEATS  default 2   (fresh-plan reps per query, best-of;
-                       a >2x spread earns one tiebreak rep)
+                       a >2x spread earns one tiebreak rep; each rep
+                       runs the leaf into a noop sink)
   BENCH_NO_ANN_COMPACT set to skip the compact_index maintenance pass
   BENCH_NO_HTTP_FETCH  set to skip the loopback real-HTTP fetch cell
 """
@@ -275,6 +276,49 @@ QUERY_SUBSET = [
 ]
 
 
+def warm_queries(spark, qs: dict, sf_dir: str) -> None:
+    """Untimed session warm-up: the first query after the crawl pays
+    2-5 s of JIT / codegen-cache / parquet-footer warm-up that belongs
+    to the session, not the operator (r3 showed whichever query ran
+    first absorbing it).  The indexed-ANN warm-ups also materialize
+    their write-once index layouts (cached per input), so the timed
+    rows measure QUERY latency on the laid-out table — the
+    write-once-query-many semantics the layout exists for (the
+    one-time build cost is reported in BENCH/BASELINE.md, not smuggled
+    into a per-query number)."""
+    try:
+        for name in ("groupby_agg", "token_stats", "ivf_topk_indexed",
+                     "lsh_topk_indexed", "knn_join_indexed"):
+            _run_all_columns(qs[name](spark, sf_dir))
+    except Exception:  # pragma: no cover
+        pass
+
+
+def _run_all_columns(df) -> None:
+    """Run ``df`` into a ``noop`` sink, which computes every output
+    column; a ``.count()`` lets Catalyst prune columns away."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, qs: dict, name: str, sf_dir: str, reps: int) -> float:
+    """Best-of-``reps`` seconds of one query leaf (r8: a single-shot row
+    let one CPU-steal spike print a 3x number into the official
+    record — r7: ngram_jaccard 10.1 s vs 3.3 s for the same code
+    minutes apart).  Each rep REBUILDS the DataFrame (``qs[name](...)``
+    returns a fresh plan — re-using one object would replay cached AQE
+    shuffle stages and fake a 0.03 s rerun); a rep that disagrees with
+    the best by >2x earns one extra tiebreak rep."""
+    def once() -> float:
+        t0 = time.time()
+        _run_all_columns(qs[name](spark, sf_dir))
+        return time.time() - t0
+
+    times = [once() for _ in range(max(1, reps))]
+    if max(times) > 2 * min(times):
+        times.append(once())
+    return round(min(times), 3)
+
+
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from doccrawler_spark.session import get_spark
@@ -297,45 +341,11 @@ def main() -> None:
         import __spark_entry__ as E
 
         qs = E.queries()
-        # warm-up: the first query after the crawl pays 2-5 s of JIT /
-        # codegen-cache / parquet-footer warm-up that belongs to the
-        # session, not the operator (r3 showed whichever query ran
-        # first absorbing it) — pay it once here, untimed.  The
-        # indexed-ANN warm-ups also materialize their write-once index
-        # layouts (cached per input), so the timed rows below measure
-        # QUERY latency on the laid-out table — the
-        # write-once-query-many semantics the layout exists for (the
-        # one-time build cost is reported in BENCH/BASELINE.md, not
-        # smuggled into a per-query number)
-        try:
-            qs["groupby_agg"](spark, sf_dir).count()
-            qs["token_stats"](spark, sf_dir).count()
-            qs["ivf_topk_indexed"](spark, sf_dir).count()
-            qs["lsh_topk_indexed"](spark, sf_dir).count()
-            qs["knn_join_indexed"](spark, sf_dir).count()
-        except Exception:  # pragma: no cover
-            pass
-        # best-of-N per query (r8): the crawl leg is probe-gated, but a
-        # single-shot query row let one CPU-steal spike print a 3x
-        # number into the official record (r7: ngram_jaccard 10.1 s vs
-        # 3.3 s for the same code minutes apart).  Each rep REBUILDS
-        # the DataFrame (qs[name](...) returns a fresh plan — re-using
-        # one object would replay cached AQE shuffle stages and fake a
-        # 0.03 s rerun); a rep that disagrees with the best by >2x
-        # earns one extra tiebreak rep.
+        warm_queries(spark, qs, sf_dir)
         q_reps = int(os.environ.get("BENCH_QUERY_REPEATS", "2"))
         for name in QUERY_SUBSET:
             try:
-                times = []
-                for _ in range(max(1, q_reps)):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    times.append(time.time() - t0)
-                if max(times) > 2 * min(times):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).count()
-                    times.append(time.time() - t0)
-                queries[name] = round(min(times), 3)
+                queries[name] = time_query(spark, qs, name, sf_dir, q_reps)
             except Exception as e:  # pragma: no cover
                 queries[name] = -1.0
                 print(f"[bench] {name} FAILED: {e}", file=sys.stderr)

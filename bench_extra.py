@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Query-only measurement harness for optimization work (guide §1).
 
-Times the same declared queries as the frozen ``bench.py`` with the
-same methodology (fresh plan per rep, best-of-N, .count() action) but
-WITHOUT the crawl leg, so a query-level change can be measured in ~1
+Times ``bench.QUERY_SUBSET`` through ``bench.py``'s own timing loop
+(``bench.time_query``: fresh plan per rep, best-of-N, a ``noop`` sink)
+but WITHOUT the crawl leg, so a query-level change can be measured in ~1
 minute instead of ~10.  Also captures ``.explain('formatted')`` per
 query when asked — the plan evidence committed under ``plans/r09/``.
 
@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 
 def main() -> None:
@@ -38,34 +37,19 @@ def main() -> None:
                       shuffle_partitions=shuffle_parts)
 
     import __spark_entry__ as E
+    import bench
 
     qs = E.queries()
     only = os.environ.get("BENCH_ONLY")
-    names = [n for n in (
-        "exact_dedup", "ngram_jaccard", "minhash_lsh", "minhash_verified",
-        "simhash", "embedding_neardup", "cosine_topk", "lsh_topk", "ivf_topk",
-        "lsh_topk_indexed", "ivf_topk_indexed", "knn_join", "knn_join_indexed",
-        "token_stats", "quality_scores", "lang_id", "fingerprint",
-        "hybrid_topk", "chunk_documents", "multimodal_features",
-        "multimodal_frames", "groupby_agg", "broadcast_join", "anti_join",
-        "topk_per_group", "sessionize",
-    ) if not only or n in only.split(",")]
+    names = [n for n in bench.QUERY_SUBSET
+             if not only or n in only.split(",")]
 
     plans_dir = os.environ.get("BENCH_PLANS_DIR")
     suffix = os.environ.get("BENCH_PLANS_SUFFIX", "before")
     if plans_dir:
         os.makedirs(plans_dir, exist_ok=True)
 
-    # same session warm-up as bench.py (JIT/codegen/parquet-footer)
-    try:
-        qs["groupby_agg"](spark, sf_dir).count()
-        qs["token_stats"](spark, sf_dir).count()
-        qs["ivf_topk_indexed"](spark, sf_dir).count()
-        qs["lsh_topk_indexed"](spark, sf_dir).count()
-        qs["knn_join_indexed"](spark, sf_dir).count()
-    except Exception:
-        pass
-
+    bench.warm_queries(spark, qs, sf_dir)
     q_reps = int(os.environ.get("BENCH_QUERY_REPEATS", "2"))
     queries: dict[str, float] = {}
     for name in names:
@@ -78,16 +62,7 @@ def main() -> None:
                                        f"{name}_{suffix}.txt"), "w") as f:
                     f.write(plan)
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            times = []
-            for _ in range(max(1, q_reps)):
-                t0 = time.time()
-                qs[name](spark, sf_dir).count()
-                times.append(time.time() - t0)
-            if max(times) > 2 * min(times):
-                t0 = time.time()
-                qs[name](spark, sf_dir).count()
-                times.append(time.time() - t0)
-            queries[name] = round(min(times), 3)
+            queries[name] = bench.time_query(spark, qs, name, sf_dir, q_reps)
         except Exception as e:
             queries[name] = -1.0
             print(f"[bench_extra] {name} FAILED: {e}", file=sys.stderr)

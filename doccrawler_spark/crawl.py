@@ -82,7 +82,6 @@ class CrawlConfig:
     politeness: bool = True            # north_rule addition (absent in ref)
     round_seconds: float = 60.0        # per-host quota = round_seconds/delay
     max_rounds: int = 64
-    salt: int = 32                     # skew salt for hot-host windows
     # frontier-size cutoff below which seen-set dedup uses the
     # broadcast semi/anti path (seen never shuffled); above it, the
     # hash-bucketed seen TABLE (one append per round, anti-join reads
@@ -102,11 +101,10 @@ class CrawlConfig:
     # degrades (and eventually stack-overflows) past ~1k values, so
     # keep this small; big rounds stream.
     point_lookup_max_frontier: int = 512
-    # seed-count cutoff below which round-0 probes use the driver-local
-    # IN-list point-lookup path (plan-time parquet pruning + broadcast
-    # joins); above it, probes run as a distributed semi-join and the
-    # probe relation is snapshotted instead of collected (10^6+-seed
-    # crawls never materialize on the driver)
+    # seed-count cutoff below which the round-0 probe rows are
+    # collected into a driver-local relation (broadcast joins); above
+    # it, they are snapshotted instead (10^6+-seed crawls never
+    # materialize on the driver)
     seed_collect_max: int = 10_000
     # pluggable page fetcher (the S3 seam, doccrawler_spark/fetch.py):
     # None = the sandbox's no-network equi-join against ``web_pages``;
@@ -220,52 +218,33 @@ def seed_round(
         )).alias("url")
     ).distinct()
 
+    # one probe source: the pluggable fetcher (real HTTP in
+    # deployment; misses, html IS NULL, drop exactly like join misses),
+    # host-repartitioned like the round fetch so the ~6 probe urls of a
+    # seed authority land on one task under the per_host cap — or the
+    # corpus semi-joined to the probe urls
     if cfg.fetcher is not None:
-        # pluggable fetch (real HTTP in deployment): same URL set, same
-        # hit shape; misses (html IS NULL) drop exactly like join
-        # misses.  Small seed sets keep the driver-local-relation
-        # semantics of the point-lookup path; big ones snapshot.
-        # Host-repartitioned like the round fetch: the ~6 probe URLs
-        # per seed authority land on one task under the per_host cap.
-        fetched_probes = (
+        probe_source = (
             cfg.fetcher(probe_urls_df.repartition(
                 Fx.host_col(F.col("url"))))
             .filter(F.col("html").isNotNull())
             .select("url", "html")
         )
-        if n_seeds <= cfg.seed_collect_max:
-            probe_pages = local_relation(
-                spark, fetched_probes.collect(), "url string, html binary"
-            )
-            maybe_bc = F.broadcast
-        else:
-            catalog.write(fetched_probes, "seed_probes", 0)
-            probe_pages = catalog.read(spark, "seed_probes", 0)
-            maybe_bc = lambda df: df
-    elif n_seeds <= cfg.seed_collect_max:
-        # point-lookup path: a static IN-list filter Catalyst pushes
-        # into the parquet scan as row-group-prunable predicates (no
-        # join, no full decode); the ≤4·|seeds| surviving rows live in
-        # a driver-local relation so every downstream broadcast join
-        # references plain local data instead of corpus-scan lineage.
-        probe_url_list = [r["url"] for r in probe_urls_df.collect()]
-        probe_rows = (
-            web_pages.select("url", "html")
-            .filter(F.col("url").isin(probe_url_list))
-            .collect()
-        )
-        probe_pages = local_relation(spark, probe_rows, "url string, html binary")
+    else:
+        probe_source = web_pages.select("url", "html").join(
+            probe_urls_df, "url", "left_semi")
+    if n_seeds <= cfg.seed_collect_max:
+        # the ≤5·|seeds| probe rows live in a driver-local relation, so
+        # every downstream broadcast join references plain local data
+        # instead of corpus-scan lineage
+        probe_pages = local_relation(
+            spark, probe_source.collect(), "url string, html binary")
         maybe_bc = F.broadcast
     else:
-        # cluster-scale path: distributed semi-join against the seed
-        # urls, snapshotted once (it feeds FOUR downstream joins — a
-        # re-executed corpus scan per consumer would be 4x the cost),
-        # never collected.
-        catalog.write(
-            web_pages.select("url", "html")
-            .join(probe_urls_df, "url", "left_semi"),
-            "seed_probes", 0,
-        )
+        # cluster-scale: snapshotted once (it feeds FOUR downstream
+        # joins — a re-executed probe per consumer would be 4x the
+        # cost), never collected
+        catalog.write(probe_source, "seed_probes", 0)
         probe_pages = catalog.read(spark, "seed_probes", 0)
         maybe_bc = lambda df: df  # too big to broadcast; AQE picks
 
@@ -397,8 +376,8 @@ def run_round(
     bucketed = frontier_size >= cfg.broadcast_dedup_max_frontier
     # F2/F3 gates ahead of the fetch: when even the shallowest frontier
     # row cannot expand, no page this round fetches can, and discovery
-    # is skipped whole.  A missing footer statistic never skips.
-    min_depth = catalog.min_value("frontier", round_ - 1, "depth")
+    # is skipped whole
+    min_depth = catalog.stats("frontier", round_ - 1, "depth").min
     expands = min_depth is None or min_depth + 1 < cfg.max_depth
 
     # ---- politeness: per-host quota, defer the rest (priority kept)
@@ -418,7 +397,6 @@ def run_round(
             "host",
             ["priority"],
             F.col("quota"),
-            salt=cfg.salt,
             unique_col="url",
         )
         fetch_now = unlimited.unionByName(top.drop("crawl_delay", "quota"))
@@ -571,16 +549,18 @@ def run_round(
     catalog.write(misses, "errors", round_)
     _mark("errors")
 
-    # counts straight from the committed parquet footers / a single
-    # driver-side column read — zero Spark jobs
-    n_new = catalog.count_true("frontier", round_, "is_new", spark=spark)
+    # end-of-round counts from the committed parquet footers — zero
+    # Spark jobs.  New rows are numbered densely from next_priority and
+    # deferred rows keep their older, smaller priorities, so the
+    # frontier's priority max + 1 is next_priority + (new rows).
+    top = catalog.stats("frontier", round_, "priority").max
     n_next = catalog.count("frontier", round_)
     new_state = {
-        "next_priority": state["next_priority"] + n_new,
+        "next_priority": (state["next_priority"] if top is None
+                          else max(state["next_priority"], top + 1)),
         "round": round_,
         "done": n_next == 0,
         "frontier_size": n_next,
-        # surfaced error count (parquet-footer read, no Spark job)
         "n_errors": catalog.count("errors", round_),
     }
     _mark("counts")
@@ -652,8 +632,7 @@ def _discover(
             F.broadcast(budget), "site_id", "left"
         )
         cand, _over = topk_per_group(
-            consuming, "site_id", ["priority"], F.col("max"), salt=cfg.salt,
-            unique_col="url",
+            consuming, "site_id", ["priority"], F.col("max"), unique_col="url",
         )
         w = Window.partitionBy("site_id").orderBy("priority").rowsBetween(
             Window.unboundedPreceding, -1
@@ -779,8 +758,8 @@ def crawl(
     # politeness machinery is skipped wholesale when no host declares a
     # crawl-delay (checked once, not per round, from the robots
     # snapshot's footer null counts — no Spark job)
-    has_delays = cfg.politeness and catalog.count_nonnull(
-        "robots", 0, "crawl_delay") > 0
+    has_delays = cfg.politeness and catalog.stats(
+        "robots", 0, "crawl_delay").non_null > 0
 
     rounds_sec = 0.0
     while not state["done"] and state["round"] < cfg.max_rounds:

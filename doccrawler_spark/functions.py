@@ -78,11 +78,6 @@ def path_col(url: Column) -> Column:
     return F.regexp_replace(url, r"^https?://[^/?#\s]+", "")
 
 
-def keep_url_col(url: Column) -> Column:
-    """Native form of kernels.filters.keep_url (rule filter F7)."""
-    return ~url.rlike(_EXCLUDE_PATTERN) & ~url.rlike(_LOCALE_PATTERN)
-
-
 def rule_filter_links(links: Column) -> Column:
     """Filter an ARRAY<STRING> of links with the relevance rules —
     JVM-side higher-order function, no Python."""
@@ -122,25 +117,6 @@ def sparse_dot_with_query(indices: Column, values: Column, query_map: dict[int, 
 # ------------------------------------------------------------ pandas UDFs
 
 
-@F.pandas_udf(T.StringType())
-def extract_merged_text_udf(html: pd.Series) -> pd.Series:
-    """html BINARY → final merged fit-markdown (X1+X3+X4 in one parse).
-
-    The reference extracts visible markdown during the crawl and splices
-    hidden snippets in a second Playwright pass (crawler_usecase.py:153-157);
-    the final per-url content is identical, so the engine computes it in
-    one vectorized stage.
-    """
-
-    def one(b) -> str | None:
-        if b is None:
-            return None
-        md, hidden = extract_page(bytes(b).decode("utf-8", "replace"))
-        return merge_content(md, hidden)
-
-    return html.map(one)
-
-
 _PAGE_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
     T.StructField("links", T.ArrayType(T.StringType())),
@@ -167,12 +143,6 @@ def extract_page_udf(html: pd.Series) -> pd.DataFrame:
 
 def _decode(b) -> str | None:
     return None if b is None else bytes(b).decode("utf-8", "replace")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def discover_links_udf(html: pd.Series) -> pd.Series:
-    """html BINARY → raw <a href> targets in document order (X2)."""
-    return html.map(lambda b: None if b is None else discover_links(_decode(b)))
 
 
 _SEED_PROBE_SCHEMA = T.StructType([

@@ -57,11 +57,6 @@ def url_hash(url: str) -> int:
     return int.from_bytes(h[:8], "big") & 0x7FFFFFFFFFFFFFFF
 
 
-def same_host(page_url: str, link: str) -> bool:
-    """True when ``link`` is on the same netloc as ``page_url``."""
-    return host_of(page_url) == host_of(link)
-
-
 def filter_urls_by_domain(page_url: str, links: list[str]) -> list[str]:
     """Keep links on the current page's netloc (helper.py:70-73)."""
     base = host_of(page_url)

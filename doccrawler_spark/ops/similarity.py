@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..shuffle import local_relation
 from .dedup import _plan_bytes, _round6_half_up
 
 
@@ -361,7 +362,7 @@ def _read_layout(spark, m: dict, subdirs: list[str] | None = None) -> DataFrame:
         subdirs = [os.path.join(base, d) for d in subdirs
                    if os.path.isdir(os.path.join(base, d))]
         if not subdirs:
-            return spark.createDataFrame([], schema)
+            return local_relation(spark, [], schema)
     return spark.read.schema(schema).option("basePath", base).parquet(*subdirs)
 
 

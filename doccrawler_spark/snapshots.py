@@ -23,6 +23,7 @@ import os
 import re
 import time
 import uuid
+from typing import Any, NamedTuple
 
 
 def _write_json(path: str, obj) -> None:
@@ -58,14 +59,12 @@ def _newest_mtime(path: str) -> float:
     return t
 
 
-def _read_parquet(spark, path: str, schema_json: str | None):
-    """Read parquet with a recorded schema when there is one, else
-    infer it (inference runs a one-task Spark job over the footers)."""
-    if schema_json is None:
-        return spark.read.parquet(path)
+def _read_snapshot(spark, m: dict):
+    """Read a committed snapshot at the path and with the schema its
+    manifest ``m`` records — no footer-inference job."""
     from pyspark.sql.types import StructType
 
-    return spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(m["schema"]))).parquet(m["path"])
 
 
 def _leaf_index(metadata, column: str) -> int:
@@ -77,6 +76,15 @@ def _leaf_index(metadata, column: str) -> int:
         if schema.column(i).path == column:
             return i
     return -1
+
+
+class ColumnStats(NamedTuple):
+    """One column's footer statistics over a snapshot's files."""
+
+    rows: int
+    non_null: int
+    min: Any
+    max: Any
 
 
 class SnapshotCatalog:
@@ -110,15 +118,18 @@ class SnapshotCatalog:
         except (FileNotFoundError, json.JSONDecodeError):
             return None
 
+    def _committed(self, table: str, round_: int) -> dict:
+        m = self.manifest(table, round_)
+        if m is None:
+            raise FileNotFoundError(
+                f"no committed snapshot for table {table!r} at round {round_}")
+        return m
+
     def data_path(self, table: str, round_: int) -> str:
         """The snapshot's COMMITTED data directory, as its manifest
-        records it (a manifest without a path, from a catalog written
-        before paths were recorded, means the bare stem).  Readers must
-        resolve through this, never ``data_dir``."""
-        m = self.manifest(table, round_)
-        if m and m.get("path"):
-            return m["path"]
-        return self.data_dir(table, round_)
+        records it.  Readers must resolve through this, never
+        ``data_dir``."""
+        return self._committed(table, round_)["path"]
 
     # ---------------------------------------------------------- write
     def write(self, df, table: str, round_: int, partition_by: list[str] | None = None,
@@ -159,7 +170,7 @@ class SnapshotCatalog:
             self._publish_stream_entry(table, round_)
         if prev is not None:
             # deferred deletion (the Iceberg expire-snapshots pattern)
-            self._tombstone(prev.get("path") or self.data_dir(table, round_))
+            self._tombstone(prev["path"])
         self.vacuum_superseded()
 
     # superseded-snapshot grace window: longer than any reasonable
@@ -281,10 +292,6 @@ class SnapshotCatalog:
 
         src = self.data_path(table, round_)
         dst = os.path.join(self._stream_table_dir(table), f"r{round_:05d}")
-        # heal a pre-r4 symlink publication in place (the data files it
-        # pointed at are the same committed bytes)
-        if os.path.islink(dst):
-            os.unlink(dst)
         os.makedirs(dst, exist_ok=True)
         marker = os.path.join(dst, "_published.json")
         src_names = {n for n in os.listdir(src) if n.endswith(".parquet")}
@@ -340,9 +347,8 @@ class SnapshotCatalog:
 
     def stream_dir(self, table: str) -> str:
         """Directory whose ``r*`` children are EXACTLY the committed
-        rounds of ``table`` (heals rounds committed by an older engine
-        version or a publish interrupted mid-copy) — the safe source
-        for readStream."""
+        rounds of ``table`` (heals a publish interrupted mid-copy or
+        before it began) — the safe source for readStream."""
         for r in self.committed_rounds(table):
             self._publish_stream_entry(table, r)
         return self._stream_table_dir(table)
@@ -364,15 +370,12 @@ class SnapshotCatalog:
 
     def read(self, spark, table: str, round_: int | None = None):
         """Read a table snapshot (latest when ``round_`` is None) with
-        the schema its manifest records — no Spark job.  A manifest
-        without one (written before schemas were recorded) falls back
-        to inference."""
+        the schema its manifest records — no Spark job."""
         if round_ is None:
             round_ = self.latest_round(table)
         if round_ is None:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        m = self.manifest(table, round_) or {}
-        return _read_parquet(spark, self.data_path(table, round_), m.get("schema"))
+        return _read_snapshot(spark, self._committed(table, round_))
 
     def exists(self, table: str, round_: int) -> bool:
         return os.path.exists(self._manifest_path(table, round_))
@@ -388,138 +391,54 @@ class SnapshotCatalog:
             )
         return self.read(spark, table, rounds[-1])
 
-    def count(self, table: str, round_: int) -> int:
-        """Exact row count from the snapshot's parquet footers — no
-        Spark job, no data scan (Iceberg equivalent: snapshot summary
-        record counts)."""
+    def _row_groups(self, table: str, round_: int, column: str | None):
+        """Yield ``(rows, non_null, min, max)`` of top-level primitive
+        ``column`` for every row group of the snapshot's files, from
+        the footer statistics — no Spark job.  A row group without
+        them has that one column read driver-side, so every figure is
+        exact; a file without the column (or ``column`` None) yields
+        its rows as NULLs."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         d = self.data_path(table, round_)
-        total = 0
-        for name in os.listdir(d):
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
-        return total
-
-    def count_nonnull(self, table: str, round_: int, column: str) -> int:
-        """Rows where top-level primitive ``column`` is not null, from
-        the row groups' null-count statistics — no Spark job.  A row
-        group without the statistic has that one column read
-        driver-side."""
-        import pyarrow.parquet as pq
-
-        d = self.data_path(table, round_)
-        total = 0
         for name in sorted(os.listdir(d)):
             if not name.endswith(".parquet"):
                 continue
             f = pq.ParquetFile(os.path.join(d, name))
-            ci = _leaf_index(f.metadata, column)
-            if ci < 0:
-                continue
+            ci = _leaf_index(f.metadata, column) if column else -1
             for g in range(f.metadata.num_row_groups):
                 rg = f.metadata.row_group(g)
-                stats = rg.column(ci).statistics
-                if stats is not None and stats.has_null_count:
-                    total += rg.num_rows - stats.null_count
+                n = rg.num_rows
+                s = rg.column(ci).statistics if ci >= 0 else None
+                if ci < 0 or (s is not None and s.has_null_count
+                              and s.null_count == n):
+                    yield n, 0, None, None
+                elif s is not None and s.has_null_count and s.has_min_max:
+                    yield n, n - s.null_count, s.min, s.max
                 else:
                     col = f.read_row_group(g, columns=[column])[column]
-                    total += len(col) - col.null_count
-        return total
+                    mm = pc.min_max(col)
+                    yield n, n - col.null_count, mm["min"].as_py(), mm["max"].as_py()
 
-    def min_value(self, table: str, round_: int, column: str):
-        """Smallest non-null value of top-level primitive ``column``,
-        from the row groups' min statistics — no Spark job, no data
-        read.  None when the snapshot holds no value or any row group
-        that has one lacks the statistic: callers must then take their
-        general path."""
-        import pyarrow.parquet as pq
+    def count(self, table: str, round_: int) -> int:
+        """Exact row count from the snapshot's parquet footers (Iceberg
+        equivalent: snapshot summary record counts)."""
+        return sum(n for n, *_ in self._row_groups(table, round_, None))
 
-        d = self.data_path(table, round_)
-        out = None
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            f = pq.ParquetFile(os.path.join(d, name))
-            ci = _leaf_index(f.metadata, column)
-            if ci < 0:
-                return None
-            for g in range(f.metadata.num_row_groups):
-                rg = f.metadata.row_group(g)
-                if rg.num_rows == 0:
-                    continue
-                stats = rg.column(ci).statistics
-                if stats is not None and stats.has_min_max:
-                    out = stats.min if out is None else min(out, stats.min)
-                elif (stats is None or not stats.has_null_count
-                      or stats.null_count < rg.num_rows):
-                    return None  # values without a min statistic
-        return out
-
-    # mixed row groups above this many total rows switch count_true to
-    # a distributed Spark count instead of a driver-side column read
-    COUNT_TRUE_DRIVER_MAX_ROWS = 50_000_000
-
-    def count_true(
-        self, table: str, round_: int, column: str, spark=None
-    ) -> int:
-        """Rows where a boolean ``column`` is true — from parquet
-        ROW-GROUP STATISTICS wherever possible (a row group whose
-        min == max is homogeneous: contributes num_rows or 0 with zero
-        data read — frontier deltas are written new-rows-then-deferred,
-        so most groups are homogeneous).  Only MIXED row groups read
-        the column, and only driver-side below a row cap; above it (a
-        10^10-row frontier delta must never stream through the driver)
-        the residual count runs as a distributed Spark job over the
-        same files (Iceberg equivalent: snapshot summary counts)."""
-        import pyarrow.parquet as pq
-        import pyarrow.compute as pc
-
-        d = self.data_path(table, round_)
-        total = 0
-        # files with >=1 non-homogeneous group: (path, stats_part, groups)
-        mixed_files: list[tuple[str, int, list[int]]] = []
-        n_mixed_rows = 0
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(d, name)
-            f = pq.ParquetFile(path)
-            ci = _leaf_index(f.metadata, column)
-            file_stats = 0
-            file_mixed: list[int] = []
-            for g in range(f.metadata.num_row_groups):
-                rg = f.metadata.row_group(g)
-                stats = rg.column(ci).statistics if ci >= 0 else None
-                if stats is not None and stats.has_min_max and (
-                    stats.min == stats.max
-                ) and not (stats.null_count or 0):
-                    file_stats += rg.num_rows if stats.min else 0
-                else:
-                    file_mixed.append(g)
-                    n_mixed_rows += rg.num_rows
-            if file_mixed:
-                mixed_files.append((path, file_stats, file_mixed))
-            else:
-                total += file_stats
-        if not mixed_files:
-            return total
-        if spark is not None and n_mixed_rows > self.COUNT_TRUE_DRIVER_MAX_ROWS:
-            # whole-file distributed recount of only the mixed files
-            # (their stats_part is NOT pre-added, so no double count)
-            from pyspark.sql import functions as F
-
-            paths = sorted(p for p, _, _ in mixed_files)
-            return total + (
-                spark.read.parquet(*paths).filter(F.col(column)).count()
-            )
-        for path, file_stats, groups in mixed_files:
-            total += file_stats
-            f = pq.ParquetFile(path)
-            for g in groups:
-                t = f.read_row_group(g, columns=[column])
-                total += pc.sum(pc.cast(t[column], "int64")).as_py() or 0
-        return total
+    def stats(self, table: str, round_: int, column: str) -> ColumnStats:
+        """Rows, non-null count, min and max of top-level primitive
+        ``column`` over the snapshot, from its footers (Iceberg
+        equivalent: manifest column metrics).  ``min``/``max`` are None
+        only when the column is absent or holds no value."""
+        rows = non_null = 0
+        lo = hi = None
+        for n, nn, mn, mx in self._row_groups(table, round_, column):
+            rows, non_null = rows + n, non_null + nn
+            if mn is not None:
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+        return ColumnStats(rows, non_null, lo, hi)
 
     # ---------------------------------------------------- maintenance
     def compact(self, spark, table: str, rounds: list[int] | None = None,
@@ -555,14 +474,14 @@ class SnapshotCatalog:
         job whose fixed scheduling latency would otherwise be paid
         rounds-many times in sequence, which measured 30–42 s for a
         ~10-round 240k-page crawl at local[32]."""
-        # (round, dir, files before, files after, manifest schema)
-        plan: list[tuple[int, str, int, int, str | None]] = []
+        # (round, manifest, files before, files after)
+        plan: list[tuple[int, dict, int, int]] = []
         for r in (rounds if rounds is not None
                   else self.committed_rounds(table)):
             m = self.manifest(table, r)
-            if m is None or m.get("partition_by"):
+            if m is None or m["partition_by"]:
                 continue
-            d = self.data_path(table, r)
+            d = m["path"]
             before = [n for n in os.listdir(d) if n.endswith(".parquet")]
             if len(before) < max(2, min_files):
                 continue
@@ -571,13 +490,13 @@ class SnapshotCatalog:
             n_files = max(1, -(-n_bytes // max(1, target_bytes_per_file)))
             if n_files >= len(before):
                 continue
-            plan.append((r, d, len(before), n_files, m.get("schema")))
+            plan.append((r, m, len(before), n_files))
         if not plan:
             return {}
 
         def _one(item):
-            r, d, n_before, n_files, schema = item
-            self.write(_read_parquet(spark, d, schema).coalesce(n_files), table, r)
+            r, m, n_before, n_files = item
+            self.write(_read_snapshot(spark, m).coalesce(n_files), table, r)
             after = [n for n in os.listdir(self.data_path(table, r))
                      if n.endswith(".parquet")]
             return r, (n_before, len(after))

@@ -197,13 +197,20 @@ def test_resume_invisible_partial_round(spark, tmp_path):
     _assert_equivalent(spark, oracle, catalog, golden)
 
 
-def test_crash_at_frontier_commit_resumes_to_oracle(spark, tmp_path,
-                                                   monkeypatch):
-    """A crash at a crawl round's one commit point (the ``frontier``
-    manifest replace, after the round's data is written): the round's
-    directory is left unreferenced and the catalog reclaims it, and a
-    resume gives the same seen set, crawl order, text and budget as a
-    run with no crash."""
+@pytest.mark.parametrize("commit", [
+    os.path.join("frontier", "_r00002.manifest.json"),
+    os.path.join("errors", "_r00002.manifest.json"),
+    os.path.join("_crawl_state", "r00002.json"),
+], ids=["frontier", "errors", "state"])
+def test_crash_at_round_commit_resumes_to_oracle(spark, tmp_path, monkeypatch,
+                                                 commit):
+    """A crash at one of round 2's commits: the ``frontier`` or
+    ``errors`` manifest replace (the table's new directory is left
+    unreferenced and the catalog reclaims it), or the driver-state
+    write after every snapshot is committed (nothing is stranded, and
+    the re-run round must derive the same ``next_priority`` from its
+    rewritten frontier).  A resume gives the same seen set, crawl
+    order, text and budget as a run with no crash."""
     from doccrawler_spark import snapshots
 
     spec = tiny_spec()
@@ -216,10 +223,9 @@ def test_crash_at_frontier_commit_resumes_to_oracle(spark, tmp_path,
     fired = []
 
     def crash(path, obj):
-        if not fired and path.endswith(
-                os.path.join("frontier", "_r00002.manifest.json")):
+        if not fired and path.endswith(commit):
             fired.append(path)
-            raise OSError("injected crash at the frontier commit")
+            raise OSError(f"injected crash at {commit}")
         real(path, obj)
 
     monkeypatch.setattr(snapshots, "_write_json", crash)
@@ -229,46 +235,19 @@ def test_crash_at_frontier_commit_resumes_to_oracle(spark, tmp_path,
     assert fired
 
     catalog = snapshots.SnapshotCatalog(root)
-    assert not catalog.exists("frontier", 2)
-    fdir = os.path.join(root, "frontier")
-    stranded = [os.path.join(fdir, n) for n in os.listdir(fdir)
-                if n.startswith("r00002")]
-    assert len(stranded) == 1
-    assert catalog.vacuum_superseded(grace_s=0) == 1
-    assert not os.path.exists(stranded[0])
-
-    catalog = crawl(spark, web, seeds, root, ecfg, resume=True)
-    _assert_equivalent(spark, oracle, catalog, golden)
-
-
-def test_resume_over_manifests_without_schema(spark, tmp_path):
-    """Catalogs whose manifests carry no schema (written before
-    manifests recorded one) still resume: reads fall back to schema
-    inference, and the crawl still equals the oracle."""
-    import json
-
-    spec = tiny_spec()
-    web, pages, golden, seeds = _load(spark, spec)
-    oracle = SequentialOracle(pages, OracleConfig(max_depth=4)).run(seeds)
-
-    root = os.path.join(str(tmp_path), "snap")
-    ecfg = CrawlConfig(max_depth=4)
-    crawl(spark, web, seeds, root, CrawlConfig(**{**ecfg.__dict__, "max_rounds": 0}))
-
-    stripped = 0
-    for table in ("frontier", "robots", "budget"):
-        for name in os.listdir(os.path.join(root, table)):
-            if not name.endswith(".manifest.json"):
-                continue
-            path = os.path.join(root, table, name)
-            with open(path) as f:
-                m = json.load(f)
-            assert "schema" in m
-            del m["schema"]
-            with open(path, "w") as f:
-                json.dump(m, f)
-            stripped += 1
-    assert stripped == 3
+    assert catalog.latest_state()[0] == 1
+    table = commit.split(os.sep)[0]
+    if table == "_crawl_state":
+        assert all(catalog.exists(t, 2) for t in ("crawled", "frontier", "errors"))
+        assert catalog.vacuum_superseded(grace_s=0) == 0
+    else:
+        assert not catalog.exists(table, 2)
+        tdir = os.path.join(root, table)
+        stranded = [os.path.join(tdir, n) for n in os.listdir(tdir)
+                    if n.startswith("r00002")]
+        assert len(stranded) == 1
+        assert catalog.vacuum_superseded(grace_s=0) == 1
+        assert not os.path.exists(stranded[0])
 
     catalog = crawl(spark, web, seeds, root, ecfg, resume=True)
     _assert_equivalent(spark, oracle, catalog, golden)
@@ -437,34 +416,6 @@ def test_seen_append_one_file_per_bucket(spark, tmp_path):
     assert bad == 0
 
 
-def test_count_true_stats_and_spark_fallback(spark, tmp_path):
-    """count_true must agree with a full count across all three paths:
-    pure row-group statistics (homogeneous groups), driver-side reads
-    of mixed groups, and the distributed Spark fallback (forced by a
-    tiny row cap) — and never double-count homogeneous groups inside
-    mixed files."""
-    from pyspark.sql import functions as F
-
-    from doccrawler_spark.snapshots import SnapshotCatalog
-
-    catalog = SnapshotCatalog(str(tmp_path / "snap"))
-    # 4 partitions: some all-true, some all-false, some mixed
-    df = spark.range(0, 4000).select(
-        F.col("id"),
-        ((F.col("id") % 3 == 0) | (F.col("id") < 1000)).alias("flag"),
-    ).repartition(4, "id")
-    catalog.write(df, "t", 0)
-    expected = df.filter("flag").count()
-    assert catalog.count_true("t", 0, "flag") == expected
-    assert catalog.count_true("t", 0, "flag", spark=spark) == expected
-    old = SnapshotCatalog.COUNT_TRUE_DRIVER_MAX_ROWS
-    SnapshotCatalog.COUNT_TRUE_DRIVER_MAX_ROWS = 0  # force Spark path
-    try:
-        assert catalog.count_true("t", 0, "flag", spark=spark) == expected
-    finally:
-        SnapshotCatalog.COUNT_TRUE_DRIVER_MAX_ROWS = old
-
-
 def test_snapshot_read_launches_no_job(spark, tmp_path):
     """A committed snapshot's manifest carries its schema, so reading
     it launches no Spark job (no footer-inference job per read)."""
@@ -497,10 +448,11 @@ def test_snapshot_read_launches_no_job(spark, tmp_path):
 
 
 def test_count_nonnull_matches_spark_count(spark, tmp_path):
-    """count_nonnull (footer null counts) equals Spark's count(col) on
-    columns whose nulls spread over several files — including one that
-    sits after a nested column, whose leaf index differs from its
-    field index."""
+    """``stats`` row and non-NULL counts (footer null counts) equal
+    Spark's count(*) and count(col) on columns whose nulls spread over
+    several files -- including one that sits after a nested column,
+    whose leaf index differs from its field index.  An absent column
+    counts no value."""
     from pyspark.sql import functions as F
 
     from doccrawler_spark.snapshots import SnapshotCatalog
@@ -516,18 +468,24 @@ def test_count_nonnull_matches_spark_count(spark, tmp_path):
     catalog.write(df, "t", 0)
     files = [n for n in os.listdir(catalog.data_path("t", 0)) if n.endswith(".parquet")]
     assert len(files) >= 2
+    snap = catalog.read(spark, "t", 0)
+    for col in ("id", "v"):
+        want = snap.agg(F.count("*"), F.count(col), F.min(col), F.max(col)).first()
+        assert catalog.stats("t", 0, col) == tuple(want), col
     want = df.select(F.count("v"), F.count("id")).first()
     assert 0 < want[0] < 2000
-    assert catalog.count_nonnull("t", 0, "v") == want[0]
-    assert catalog.count_nonnull("t", 0, "id") == want[1] == 2000
-    assert catalog.count_nonnull("t", 0, "no_such_column") == 0
+    assert catalog.stats("t", 0, "v").non_null == want[0]
+    assert catalog.stats("t", 0, "id").non_null == want[1] == 2000
+    assert catalog.stats("t", 0, "no_such_column") == (2000, 0, None, None)
+    assert catalog.count("t", 0) == 2000
 
 
 def test_min_value_from_footer_stats(spark, tmp_path):
-    """min_value reads row-group min statistics across files, skips
-    all-NULL groups, and answers None — never a guess — for an absent
-    column, a snapshot without values, or a row group whose values
-    carry no statistic."""
+    """``stats`` min and max equal Spark's over row-group statistics
+    across files, skipping all-NULL groups, and stay exact when a file
+    written without statistics moves both the min and the max (it is
+    read driver-side).  An all-NULL column, an absent column and an
+    empty snapshot hold no value."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -542,18 +500,26 @@ def test_min_value_from_footer_stats(spark, tmp_path):
         F.lit(None).cast("int").alias("none"),
     ).repartition(4, "id")
     catalog.write(df, "t", 0)
-    assert catalog.min_value("t", 0, "depth") == 3
-    assert catalog.min_value("t", 0, "id") == 0
-    assert catalog.min_value("t", 0, "none") is None
-    assert catalog.min_value("t", 0, "no_such_column") is None
-    catalog.write(df.limit(0), "t", 1)
-    assert catalog.min_value("t", 1, "depth") is None
+    assert catalog.stats("t", 0, "depth") == (2000, 1500, 3, 9)
+    assert catalog.stats("t", 0, "id") == (2000, 2000, 0, 1999)
+    assert catalog.stats("t", 0, "none") == (2000, 0, None, None)
 
-    pq.write_table(pa.table({"id": pa.array([5], pa.int64()),
-                             "depth": pa.array([9], pa.int32())}),
-                   os.path.join(catalog.data_path("t", 0), "nostats.parquet"),
-                   write_statistics=False)
-    assert catalog.min_value("t", 0, "depth") is None
+    d = catalog.data_path("t", 0)
+    pq.write_table(pa.table({"id": pa.array([-1, 5000], pa.int64()),
+                             "depth": pa.array([1, 99], pa.int32())}),
+                   os.path.join(d, "nostats.parquet"), write_statistics=False)
+    snap = catalog.read(spark, "t", 0)
+    for col in ("id", "depth", "none"):
+        want = snap.agg(F.count("*"), F.count(col), F.min(col), F.max(col)).first()
+        assert catalog.stats("t", 0, col) == tuple(want), col
+    assert catalog.stats("t", 0, "depth") == (2002, 1502, 1, 99)
+    assert catalog.stats("t", 0, "id") == (2002, 2002, -1, 5000)
+    assert catalog.stats("t", 0, "none") == (2002, 0, None, None)
+    assert catalog.stats("t", 0, "no_such_column") == (2002, 0, None, None)
+    assert catalog.count("t", 0) == 2002
+    catalog.write(df.limit(0), "t", 1)
+    assert catalog.stats("t", 1, "depth") == (0, 0, None, None)
+    assert catalog.count("t", 1) == 0
 
 
 @pytest.mark.parametrize("resume_after", [None, 2], ids=["uninterrupted", "resume"])
@@ -581,8 +547,8 @@ def test_terminal_rounds_skip_discovery(spark, tmp_path, resume_after):
     # round 1 fetches the depth-1 seed and expands; every later round
     # is at the terminal depth, skips, and re-snapshots deferred rows
     assert catalog.committed_rounds("budget") == [0, 1]
-    assert catalog.count("frontier", 2) > 0
-    assert catalog.count_true("frontier", 2, "is_new") == 0
+    is_new = catalog.stats("frontier", 2, "is_new")
+    assert is_new.rows > 0 and is_new.max is False
 
 
 def test_invariants(spark, tmp_path):

@@ -46,6 +46,7 @@ def test_stream_skips_uncommitted_torn_round(spark, tmp_path):
     Also pins the r4 object-store contract: nothing under stream/ is a
     symlink (S3/GCS have no such primitive)."""
     import os
+    from pathlib import Path
 
     from doccrawler_spark.crawl import seen_all
     from doccrawler_spark.streaming import frontier_stream, streaming_seen_dedup
@@ -79,7 +80,7 @@ def test_stream_skips_uncommitted_torn_round(spark, tmp_path):
         os.path.join(dp, n)
         for dp, dns, fns in os.walk(stream_root)
         for n in dns + fns
-        if os.path.islink(os.path.join(dp, n))
+        if Path(dp, n).is_symlink()
     ]
     assert not links, f"object-store-unsafe symlinks in publish path: {links}"
 
