@@ -22,10 +22,20 @@ Spark-first physical design:
     frontier instead pushes its URL list into the scan as an IN filter
     (point lookup) and shuffles only the matching rows, so the extract
     UDF runs in a few coalesced tasks, not in every scan task;
-  * driver-held rows (seeds, seed probe pages, both halves of the
-    point-lookup politeness cut, sequence offsets) re-enter plans as
-    Arrow local relations (``LocalTableScan``), never as a pickled RDD
-    that every consumer rescans in a job of its own;
+  * driver-held rows (seeds, seed probe pages and probe results,
+    robots, both inputs and both halves of the point-lookup politeness
+    cut, sequence offsets) re-enter plans as Arrow local relations
+    (``LocalTableScan``), never as a pickled RDD that every consumer
+    rescans in a job of its own;
+  * a snapshot whose rows the driver already holds commits as Arrow,
+    with no Spark job: every round's fetch metrics (one row per crawled
+    part file, from its footer row count and ``html_len`` column), a
+    point-lookup round's errors (its fetch rows absent from the
+    committed crawled urls) and, when it cannot expand, its frontier
+    (the deferred rows), and the seed round's robots and budget.  Only
+    the fetch+extract (``crawled``) write, discovery and the seed
+    frontier (unbounded by the seed count: sitemap <loc>s) stay Spark
+    writes;
   * seen-set dedup = left-anti join against per-round url deltas
     (Iceberg bucket-by-url_hash at cluster scale);
   * politeness = per-host round quota via salted two-phase top-k
@@ -40,7 +50,7 @@ Spark-first physical design:
     budget snapshot is not rewritten (spending nothing, it equals the
     last one);
   * every round commits atomic snapshots (frontier, seen delta,
-    crawled, budget, metrics) — resumable mid-crawl.
+    crawled, budget, metrics, errors) — resumable mid-crawl.
 """
 
 from __future__ import annotations
@@ -50,10 +60,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from . import functions as Fx
-from .shuffle import global_sequence, local_relation, topk_per_group
+from .shuffle import arrow_table, global_sequence, local_relation, topk_per_group
 from .snapshots import SnapshotCatalog
 
 FRONTIER_SCHEMA = (
@@ -72,6 +81,15 @@ CRAWLED_SCHEMA = (
     "url string, site_id string, base_url string, text string, depth int, "
     "round int, priority long"
 )
+ERRORS_SCHEMA = (
+    "url string, host string, site_id string, depth int, round int, "
+    "priority long, reason string"
+)
+# one row per crawled part file of a round
+METRICS_SCHEMA = "partition_id int, pages_fetched bigint, bytes_fetched bigint, round int"
+ROBOTS_SCHEMA = "host string, disallow array<string>, crawl_delay double"
+# long: an unlimited budget (budget_per_site >= 2**30) may pass 2**31
+BUDGET_SCHEMA = "site_id string, used long, max long"
 
 
 @dataclass
@@ -101,9 +119,10 @@ class CrawlConfig:
     # degrades (and eventually stack-overflows) past ~1k values, so
     # keep this small; big rounds stream.
     point_lookup_max_frontier: int = 512
-    # seed-count cutoff below which the round-0 probe rows are
-    # collected into a driver-local relation (broadcast joins); above
-    # it, they are snapshotted instead (10^6+-seed crawls never
+    # seed-count cutoff below which the round-0 probe pages, probe
+    # results and robots rows are collected into driver-local
+    # relations (robots and budget then commit as Arrow); above it, the
+    # probe pages are snapshotted instead (10^6+-seed crawls never
     # materialize on the driver)
     seed_collect_max: int = 10_000
     # pluggable page fetcher (the S3 seam, doccrawler_spark/fetch.py):
@@ -115,6 +134,9 @@ class CrawlConfig:
     # recovered by the snapshot-derived S8 errors sink.  With a
     # fetcher set, ``web_pages`` may be None.
     fetcher: "object | None" = None
+
+
+_SITES_SCHEMA = "seed_url string, seed_ix long, site_id string, locs array<string>"
 
 
 def _with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -233,12 +255,13 @@ def seed_round(
     else:
         probe_source = web_pages.select("url", "html").join(
             probe_urls_df, "url", "left_semi")
-    if n_seeds <= cfg.seed_collect_max:
+    collected = n_seeds <= cfg.seed_collect_max
+    if collected:
         # the ≤5·|seeds| probe rows live in a driver-local relation, so
         # every downstream broadcast join references plain local data
         # instead of corpus-scan lineage
         probe_pages = local_relation(
-            spark, probe_source.collect(), "url string, html binary")
+            spark, probe_source.toArrow(), "url string, html binary")
         maybe_bc = F.broadcast
     else:
         # cluster-scale: snapshotted once (it feeds FOUR downstream
@@ -261,8 +284,36 @@ def seed_round(
         .join(probe("sm2", "html2"), "sm2", "left")
         .select("seed_url", "seed_ix", Fx.seed_probe_udf(
             "seed_url", "html", "html1", "html2").alias("probe"))
-    ).cache()
-    sites = probed.select("seed_url", "seed_ix", "probe.site_id", "probe.locs")
+        .select("seed_url", "seed_ix", "probe.site_id", "probe.locs")
+    )
+    robots = build_robots(
+        spark, probe_pages.filter(F.col("url").endswith("/robots.txt"))
+    )
+    if collected:
+        # one row per seed and per seed host: each is collected once
+        # and re-enters as a local relation, so the probe UDF and the
+        # robots parse never re-run, and robots and budget commit from
+        # the driver with no Spark job
+        sites_t = arrow_table(probed.toArrow(), _SITES_SCHEMA)
+        sites = local_relation(spark, sites_t, _SITES_SCHEMA)
+        robots_t = arrow_table(robots.toArrow(), ROBOTS_SCHEMA)
+        catalog.write(robots_t, "robots", 0)
+        robots = local_relation(spark, robots_t, ROBOTS_SCHEMA)
+        budget0 = arrow_table(
+            [(s, 0, cfg.budget_per_site)
+             for s in sites_t["site_id"].unique().to_pylist()],
+            BUDGET_SCHEMA)
+    else:
+        # cached: the entries, and budget0 below, read the probe results
+        # without re-running the probe UDF
+        sites = probed.cache()
+        catalog.write(robots, "robots", 0)
+        robots = catalog.read(spark, "robots", 0)
+        budget0 = (
+            sites.select("site_id").distinct()
+            .withColumn("used", F.lit(0))
+            .withColumn("max", F.lit(cfg.budget_per_site))
+        )
 
     sitemap_entries = (
         sites.filter(F.size("locs") > 0)
@@ -281,12 +332,6 @@ def seed_round(
         .withColumn("sitemap_mode", F.lit(False))
     )
     entries = _with_host(sitemap_entries.unionByName(bfs_entries))
-
-    robots = build_robots(
-        spark, probe_pages.filter(F.col("url").endswith("/robots.txt"))
-    )
-    catalog.write(robots, "robots", 0)
-    robots = catalog.read(spark, "robots", 0)
     entries = _drop_disallowed(entries, robots, cfg.politeness)
 
     frontier = global_sequence(
@@ -303,16 +348,12 @@ def seed_round(
         # (crawler_usecase.py:123-127); plain seeds are (:132)
         (~F.col("sitemap_mode")).alias("is_new"),
     )
+    # a Spark write: sitemap <loc>s leave its size unbounded by the
+    # seed count
     catalog.write(frontier, "frontier", 0)
-
-    # from the cached probe results: the probe UDF never re-runs
-    budget0 = (
-        sites.select("site_id").distinct()
-        .withColumn("used", F.lit(0))
-        .withColumn("max", F.lit(cfg.budget_per_site))
-    )
     catalog.write(budget0, "budget", 0)
-    probed.unpersist()
+    if not collected:
+        sites.unpersist()
 
     n_frontier = catalog.count("frontier", 0)
     state = {"next_priority": n_frontier, "round": 0,
@@ -339,6 +380,87 @@ def _ensure_seen_table(spark, catalog: SnapshotCatalog, cfg: CrawlConfig,
     return catalog.seen_table(spark, cfg.seen_buckets)
 
 
+def _politeness_cut(frontier: DataFrame, robots: DataFrame, cfg: CrawlConfig,
+                    one_partition: bool) -> tuple[DataFrame, DataFrame]:
+    """Per-host quota round_seconds/crawl_delay: ``(fetch now,
+    deferred)``; deferred rows keep their priority.  A point-lookup cut
+    holds ≤ point_lookup_max_frontier rows, and in ``one_partition``
+    both ranking windows plan with no Exchange."""
+    quota = F.when(
+        F.col("crawl_delay").isNotNull(),
+        F.greatest(F.lit(1), F.floor(F.lit(cfg.round_seconds) / F.col("crawl_delay"))),
+    )
+    fr = (frontier.coalesce(1) if one_partition else frontier).join(
+        F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
+    unlimited = fr.filter(F.col("crawl_delay").isNull()).drop("crawl_delay")
+    limited = fr.filter(F.col("crawl_delay").isNotNull())
+    top, rest = topk_per_group(
+        limited.withColumn("quota", quota),
+        "host",
+        ["priority"],
+        F.col("quota"),
+        unique_col="url",
+    )
+    return (unlimited.unionByName(top.drop("crawl_delay", "quota")),
+            rest.drop("crawl_delay", "quota"))
+
+
+def _point_lookup_cut(spark: SparkSession, catalog: SnapshotCatalog,
+                      cfg: CrawlConfig, round_: int, polite: bool):
+    """The driver-held ``(fetch now, deferred)`` Arrow rows of a
+    point-lookup round, the depth gate F1 applied to the first.  Both
+    inputs of the cut are read driver-side — frontier(r-1), and the
+    robots rows of its hosts only, so the read is bounded by the
+    frontier and not by the seed count — and re-enter the plan as
+    local relations; the cut runs in ONE action."""
+    import pyarrow.compute as pc
+
+    frontier = catalog.read_arrow("frontier", round_ - 1)
+    if not polite:
+        return (frontier.filter(pc.field("depth") < cfg.max_depth),
+                frontier.slice(0, 0))
+    robots = catalog.read_arrow(
+        "robots", 0, columns=["host", "crawl_delay"],
+        filter=pc.field("host").isin(frontier["host"].unique()))
+    now, rest = _politeness_cut(
+        local_relation(spark, frontier, FRONTIER_SCHEMA),
+        local_relation(spark, robots, "host string, crawl_delay double"),
+        cfg, one_partition=True)
+    cut = (
+        now.filter(F.col("depth") < cfg.max_depth).withColumn("_now", F.lit(True))
+        .unionByName(rest.withColumn("_now", F.lit(False)))
+        .toArrow()
+    )
+    return (cut.filter(pc.field("_now")).drop_columns(["_now"]),
+            cut.filter(~pc.field("_now")).drop_columns(["_now"]))
+
+
+def _with_consts(t, **consts):
+    """Arrow table ``t`` with each of ``consts`` as a constant column
+    (replacing a column of that name)."""
+    import pyarrow as pa
+
+    for name, v in consts.items():
+        if name in t.column_names:
+            t = t.drop_columns([name])
+        t = t.append_column(name, pa.repeat(v, t.num_rows))
+    return t
+
+
+def _fetch_metrics(catalog: SnapshotCatalog, round_: int):
+    """The round's fetch metrics (S9/O5 analogue), one row per crawled
+    part file — pages from its footer row count, bytes as the sum of
+    its ``html_len`` column — read driver-side: no Spark job."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    rows = []
+    for i, path in enumerate(catalog.files("crawled", round_)):
+        html_len = pq.read_table(path, columns=["html_len"])["html_len"]
+        rows.append((i, len(html_len), pc.sum(html_len).as_py(), round_))
+    return arrow_table(rows, METRICS_SCHEMA)
+
+
 def run_round(
     spark: SparkSession,
     catalog: SnapshotCatalog,
@@ -352,6 +474,8 @@ def run_round(
     """One fetch→extract→discover→dedup round; commits round snapshots."""
     import os
 
+    import pyarrow.compute as pc
+
     _phase_t: dict[str, float] = {}
     _timing = bool(os.environ.get("CRAWL_PHASE_TIMING"))
     _t0 = time.time()
@@ -363,7 +487,6 @@ def run_round(
             _phase_t[name] = round(now - _t0, 2)
             _t0 = now
 
-    frontier = catalog.read(spark, "frontier", round_ - 1)
     # unlimited budget (throughput mode) never gates and is never
     # updated, so the budget table stays at its round-0 snapshot —
     # one fewer read+write job per round
@@ -374,39 +497,16 @@ def run_round(
     point_lookup = (cfg.fetcher is None
                     and 0 < frontier_size <= cfg.point_lookup_max_frontier)
     bucketed = frontier_size >= cfg.broadcast_dedup_max_frontier
+    polite = cfg.politeness and has_delays
     # F2/F3 gates ahead of the fetch: when even the shallowest frontier
     # row cannot expand, no page this round fetches can, and discovery
     # is skipped whole
     min_depth = catalog.stats("frontier", round_ - 1, "depth").min
     expands = min_depth is None or min_depth + 1 < cfg.max_depth
 
-    # ---- politeness: per-host quota, defer the rest (priority kept)
-    if cfg.politeness and has_delays:
-        quota = F.when(
-            F.col("crawl_delay").isNotNull(),
-            F.greatest(F.lit(1), F.floor(F.lit(cfg.round_seconds) / F.col("crawl_delay"))),
-        )
-        # a point-lookup cut holds ≤ point_lookup_max_frontier rows: in
-        # one partition both ranking windows plan with no Exchange
-        fr = (frontier.coalesce(1) if point_lookup else frontier).join(
-            F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
-        unlimited = fr.filter(F.col("crawl_delay").isNull()).drop("crawl_delay")
-        limited = fr.filter(F.col("crawl_delay").isNotNull())
-        top, rest = topk_per_group(
-            limited.withColumn("quota", quota),
-            "host",
-            ["priority"],
-            F.col("quota"),
-            unique_col="url",
-        )
-        fetch_now = unlimited.unionByName(top.drop("crawl_delay", "quota"))
-        deferred = rest.drop("crawl_delay", "quota")
-    else:
-        fetch_now, deferred = frontier, frontier.limit(0)
-
-    # ---- depth gate F1 (items at depth >= max are consumed, not fetched)
-    fetch_now = fetch_now.filter(F.col("depth") < cfg.max_depth)
-
+    # ---- politeness: per-host quota, defer the rest (priority kept),
+    # then the depth gate F1 (items at depth >= max are consumed, not
+    # fetched).
     # ---- fetch = equi-join against web_pages (S3); misses vanish like
     # result.success=False does (crawler_service.py:62-70).
     # Extraction + link discovery run as ONE fused Arrow UDF (one
@@ -416,46 +516,48 @@ def run_round(
     # needed columns from that parquet.  A .persist() here would hold
     # gigabytes of deserialized text on the JVM heap and stall in GC —
     # columnar re-reads are strictly cheaper.
-    if cfg.fetcher is not None:
-        # pluggable fetch (S3 seam): the fetcher is handed exactly this
-        # round's URL set and its hits join back to the frontier rows
-        # below — identical downstream plan, misses vanish identically.
-        # Repartition by host FIRST: a side-effecting fetcher (http)
-        # then sees any one host on ONE task, so its per_host cap is
-        # the global per-server bound instead of tasks × per_host (the
-        # O3 politeness quota already bounds how many URLs per delayed
-        # host enter the round, which also caps this shuffle's skew)
-        corpus = (
-            cfg.fetcher(fetch_now.repartition(F.col("host")).select("url"))
-            .filter(F.col("html").isNotNull())
-            .select("url", "html")
-        )
+    if point_lookup:
+        # point-lookup fetch: the cut's ≤ point_lookup_max_frontier
+        # rows are driver-held, and re-enter the plan as local
+        # relations; the round's URL list is pushed into the scan as an
+        # IN filter so parquet row-group stats prune the corpus
+        # (decodes only the row groups containing the URLs).  The few
+        # matching corpus rows then shuffle, so the extract UDF runs in
+        # a handful of AQE-coalesced tasks: joined to a broadcast local
+        # relation it would otherwise run inside every corpus-scan task
+        # (~2 s slower per small round over a 35-task scan of a
+        # 240k-page corpus on 4 cores).
+        now_t, deferred_t = _point_lookup_cut(spark, catalog, cfg, round_, polite)
+        fetch_now = local_relation(spark, now_t, FRONTIER_SCHEMA)
+        deferred = local_relation(spark, deferred_t, FRONTIER_SCHEMA)
+        corpus = web_pages.select("url", "html").filter(
+            F.col("url").isin(now_t["url"].to_pylist())
+        ).repartition("url")
     else:
-        corpus = web_pages.select("url", "html")
-        if point_lookup:
-            # point-lookup fetch: push the round's URL list into the
-            # scan as an IN filter so parquet row-group stats prune the
-            # corpus (decodes only the row groups containing the URLs).
-            # Both halves of the politeness cut (≤ the frontier's
-            # point_lookup_max_frontier rows) are collected in ONE
-            # action and re-enter the plan as local relations, so
-            # neither the crawled nor the frontier write re-runs the cut.
-            tagged = fetch_now.withColumn("_now", F.lit(True)).unionByName(
-                deferred.withColumn("_now", F.lit(False)))
-            cut = tagged.collect()
-            schema = StructType(tagged.schema.fields[:-1])
-            now = [r for r in cut if r["_now"]]
-            fetch_now = local_relation(spark, [r[:-1] for r in now], schema)
-            deferred = local_relation(
-                spark, [r[:-1] for r in cut if not r["_now"]], schema)
-            # The few matching corpus rows then shuffle, so the extract
-            # UDF runs in a handful of AQE-coalesced tasks: joined to a
-            # broadcast local relation it would otherwise run inside
-            # every corpus-scan task (~2 s slower per small round over
-            # a 35-task scan of a 240k-page corpus on 4 cores).
-            corpus = corpus.filter(
-                F.col("url").isin([r["url"] for r in now])
-            ).repartition("url")
+        frontier = catalog.read(spark, "frontier", round_ - 1)
+        if polite:
+            fetch_now, deferred = _politeness_cut(frontier, robots, cfg,
+                                                  one_partition=False)
+        else:
+            fetch_now, deferred = frontier, frontier.limit(0)
+        fetch_now = fetch_now.filter(F.col("depth") < cfg.max_depth)
+        if cfg.fetcher is not None:
+            # pluggable fetch (S3 seam): the fetcher is handed exactly
+            # this round's URL set and its hits join back to the
+            # frontier rows below — identical downstream plan, misses
+            # vanish identically.  Repartition by host FIRST: a
+            # side-effecting fetcher (http) then sees any one host on
+            # ONE task, so its per_host cap is the global per-server
+            # bound instead of tasks × per_host (the O3 politeness quota
+            # already bounds how many URLs per delayed host enter the
+            # round, which also caps this shuffle's skew)
+            corpus = (
+                cfg.fetcher(fetch_now.repartition(F.col("host")).select("url"))
+                .filter(F.col("html").isNotNull())
+                .select("url", "html")
+            )
+        else:
+            corpus = web_pages.select("url", "html")
     fetched = (
         fetch_now.join(corpus, "url", "inner")
         .withColumn("page", Fx.extract_page_udf(F.col("html")))
@@ -474,33 +576,32 @@ def run_round(
     _mark("fetch_extract_write")
     crawled_back = catalog.read(spark, "crawled", round_)
 
-    # ---- per-partition lineage + fetch metrics (S9/O5 analogue)
-    lineage = crawled_back.groupBy(
-        F.spark_partition_id().alias("partition_id")
-    ).agg(
-        F.count("*").alias("pages_fetched"),
-        F.sum("html_len").alias("bytes_fetched"),
-    ).withColumn("round", F.lit(round_))
-    catalog.write(lineage, "metrics", round_)
+    catalog.write(_fetch_metrics(catalog, round_), "metrics", round_)
     _mark("metrics")
 
-    # deferred rows entered the seen set when first enqueued —
-    # re-snapshotting them must not re-mark them as deltas
-    next_frontier = deferred.select(*_FRONTIER_COLS).select(
-        "*",
-        F.xxhash64("url").alias("url_hash"),
-        F.lit(round_).alias("round"),
-        F.lit(False).alias("is_new"),
-    )
     if expands:
         links, new_frontier_items = _discover(
             spark, catalog, cfg, crawled_back, budget, robots, round_, state,
             bucketed)
-        next_frontier = next_frontier.unionByName(new_frontier_items)
     elif bucketed:
         # the seen-table appends heal through round_-1 on every
         # bucketed round, discovering or not
         _ensure_seen_table(spark, catalog, cfg, round_ - 1)
+    # deferred rows entered the seen set when first enqueued —
+    # re-snapshotting them must not re-mark them as deltas
+    if point_lookup and not expands:
+        # the deferred rows alone, driver-held (url_hash included)
+        next_frontier = arrow_table(
+            _with_consts(deferred_t, round=round_, is_new=False), FRONTIER_SCHEMA)
+    else:
+        next_frontier = deferred.select(*_FRONTIER_COLS).select(
+            "*",
+            F.xxhash64("url").alias("url_hash"),
+            F.lit(round_).alias("round"),
+            F.lit(False).alias("is_new"),
+        )
+        if expands:
+            next_frontier = next_frontier.unionByName(new_frontier_items)
     catalog.write(next_frontier, "frontier", round_)
     _mark("discover_dedup_frontier")
 
@@ -523,29 +624,37 @@ def run_round(
     # ---- error sink (S8): fetch misses — frontier rows that found
     # no corpus page — land in a per-round `errors` snapshot instead
     # of silently vanishing (ref error_repository.py:14-21, producer
-    # crawler_service.py:62-70).  Computed ENTIRELY from committed
-    # snapshots (pruned column reads, no UDF/window lineage
-    # re-execution): missed = frontier(r-1) under the depth gate,
-    # minus crawled(r), minus politeness-deferred rows (which were
-    # re-snapshotted into frontier(r) with is_new=false).
+    # crawler_service.py:62-70).  Computed from committed snapshots
+    # and driver-held rows, never by re-executing UDF/window lineage.
     # Extraction itself is total (regex scanner), so fetch misses
     # are the only failure class here.
-    prev = (
-        catalog.read(spark, "frontier", round_ - 1)
-        .filter(F.col("depth") < cfg.max_depth)
-        .select("url", "host", "site_id", "depth", "priority")
-    )
-    not_missed = crawled_back.select("url")
-    if cfg.politeness and has_delays:
-        not_missed = not_missed.unionByName(
-            catalog.read(spark, "frontier", round_)
-            .filter(~F.col("is_new")).select("url")
+    if point_lookup:
+        # the driver-held fetch rows whose url the committed crawled
+        # snapshot lacks
+        crawled_urls = catalog.read_arrow("crawled", round_, ["url"])["url"]
+        misses = arrow_table(_with_consts(
+            now_t.filter(~pc.field("url").isin(crawled_urls.combine_chunks())),
+            round=round_, reason="fetch_miss"), ERRORS_SCHEMA)
+    else:
+        # missed = frontier(r-1) under the depth gate, minus
+        # crawled(r), minus politeness-deferred rows (re-snapshotted
+        # into frontier(r) with is_new=false): pruned column reads
+        prev = (
+            catalog.read(spark, "frontier", round_ - 1)
+            .filter(F.col("depth") < cfg.max_depth)
+            .select("url", "host", "site_id", "depth", "priority")
         )
-    misses = prev.join(not_missed, "url", "left_anti").select(
-        "url", "host", "site_id", "depth",
-        F.lit(round_).alias("round"), "priority",
-        F.lit("fetch_miss").alias("reason"),
-    )
+        not_missed = crawled_back.select("url")
+        if polite:
+            not_missed = not_missed.unionByName(
+                catalog.read(spark, "frontier", round_)
+                .filter(~F.col("is_new")).select("url")
+            )
+        misses = prev.join(not_missed, "url", "left_anti").select(
+            "url", "host", "site_id", "depth",
+            F.lit(round_).alias("round"), "priority",
+            F.lit("fetch_miss").alias("reason"),
+        )
     catalog.write(misses, "errors", round_)
     _mark("errors")
 
@@ -805,11 +914,6 @@ def crawled_all(spark: SparkSession, catalog: SnapshotCatalog) -> DataFrame:
         return local_relation(spark, [], CRAWLED_SCHEMA)
     return spark.read.schema(CRAWLED_SCHEMA).parquet(*paths)
 
-
-ERRORS_SCHEMA = (
-    "url string, host string, site_id string, depth int, round int, "
-    "priority long, reason string"
-)
 
 
 def errors_all(spark: SparkSession, catalog: SnapshotCatalog) -> DataFrame:

@@ -107,7 +107,7 @@ def sparse_dot_with_query(indices: Column, values: Column, query_map: dict[int, 
     return F.aggregate(
         F.zip_with(
             indices, values,
-            lambda i, v: F.coalesce(m.getItem(i), F.lit(0.0)) * v.cast("double"),
+            lambda i, v: F.coalesce(m[i], F.lit(0.0)) * v.cast("double"),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,

@@ -35,28 +35,38 @@ _SALT = "__salt"
 _SUB_RN = "__sub_rn"
 
 
-def local_relation(
-    spark: SparkSession, rows: list, schema: "StructType | str"
-) -> DataFrame:
-    """A DataFrame over driver-held ``rows`` (tuples in ``schema``
-    field order) that plans as a ``LocalTableScan``: the rows travel
-    as one Arrow table typed from the Spark schema, so no consumer
-    runs a scan job.  Column-wise ``pa.array`` keeps NULLs in int
-    columns (a pandas hop would turn them into float NaN).  Past
-    ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself
-    falls back to an RDD, so no size gate is needed here."""
+def arrow_table(rows, schema: "StructType | str"):
+    """Driver-held ``rows`` (tuples in ``schema`` field order, or a
+    ``pyarrow.Table``) as one Arrow table typed from the Spark schema —
+    the form both a local relation and an Arrow snapshot commit take.
+    Column-wise ``pa.array`` keeps NULLs in int columns (a pandas hop
+    would turn them into float NaN)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        return rows.select(arrow_schema.names).cast(arrow_schema)
     cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_relation(
+    spark: SparkSession, rows, schema: "StructType | str"
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (as :func:`arrow_table`
+    takes them) that plans as a ``LocalTableScan``: the rows travel as
+    one Arrow table typed from the Spark schema, so no consumer runs a
+    scan job.  Past ``spark.sql.execution.arrow.localRelationThreshold``
+    Spark itself falls back to an RDD, so no size gate is needed here."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def global_sequence(

@@ -6,6 +6,10 @@ the sandbox (no Iceberg runtime jar, no network) the offline backend is
 Parquet directories published by an atomic manifest rename.  Both give:
 
 * numbered snapshots per table (``round`` k → immutable directory),
+* two data producers, one commit: a DataFrame is written by Spark, and
+  rows the driver already holds (a ``pyarrow.Table``) are written by
+  pyarrow as one file with no Spark job; both then publish through the
+  same manifest,
 * atomic publish (data into a fresh directory → fsync manifest →
   ``os.replace``; the replace is the one commit point),
 * time-travel (read table as of round k),
@@ -93,8 +97,10 @@ class SnapshotCatalog:
     Layout::
 
         root/
-          <table>/r00003.<uuid>/part-*.parquet   # data, written by Spark
-          <table>/_r00003.manifest.json          # atomic commit marker
+          <table>/r00003.<uuid>/part-*.parquet   # data: Spark's files, or
+                                                 # one pyarrow file
+          <table>/_r00003.manifest.json          # atomic commit marker:
+                                                 # path + Spark schema
           _crawl_state/r00003.json               # driver-side loop state
     """
 
@@ -131,10 +137,25 @@ class SnapshotCatalog:
         ``data_dir``."""
         return self._committed(table, round_)["path"]
 
+    def files(self, table: str, round_: int) -> list[str]:
+        """The committed snapshot's data files, in name order (a flat
+        snapshot's; a ``partition_by`` layout keeps them deeper)."""
+        d = self.data_path(table, round_)
+        return [os.path.join(d, n) for n in sorted(os.listdir(d))
+                if n.endswith(".parquet")]
+
     # ---------------------------------------------------------- write
-    def write(self, df, table: str, round_: int, partition_by: list[str] | None = None,
+    def write(self, data, table: str, round_: int, partition_by: list[str] | None = None,
               meta: dict | None = None) -> None:
         """Write a snapshot and atomically publish its manifest.
+
+        ``data`` is a DataFrame, written by Spark, or a
+        ``pyarrow.Table`` of rows the driver already holds, written by
+        pyarrow as one part file with no Spark job (typed from the
+        Spark schema its readers expect, e.g. by
+        :func:`shuffle.arrow_table`).  Either way the manifest records
+        the Spark schema, and everything after the data write is the
+        same.
 
         Every write, a round's first included, lands in a fresh
         ``r<round>.<uuid>`` directory, and the manifest replace is the
@@ -151,18 +172,32 @@ class SnapshotCatalog:
         index layouts); such a snapshot gets no stream view, which
         holds flat file sets only.  ``meta`` is stored in the manifest
         as given."""
+        import pyarrow as pa
+
         path = f"{self.data_dir(table, round_)}.{uuid.uuid4().hex[:8]}"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        if isinstance(data, pa.Table):
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            if partition_by:
+                raise ValueError("an Arrow commit writes a flat snapshot")
+            os.makedirs(path)
+            pq.write_table(data, os.path.join(
+                path, f"part-00000-{uuid.uuid4().hex}.parquet"))
+            schema = from_arrow_schema(data.schema).json()
+        else:
+            w = data.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(path)
+            schema = data.schema.json()
         prev = self.manifest(table, round_)
         # the schema rides in the manifest (as Iceberg table metadata
         # carries it), so readers skip Spark's one-task footer-inference
         # job per snapshot read
         _write_json(self._manifest_path(table, round_), {
             "table": table, "round": round_, "path": path,
-            "partition_by": partition_by or [], "schema": df.schema.json(),
+            "partition_by": partition_by or [], "schema": schema,
             "meta": meta or {}, "committed_at": time.time(),
             "snapshot_id": str(uuid.uuid4()),
         })
@@ -377,6 +412,27 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"no committed snapshot for table {table!r}")
         return _read_snapshot(spark, self._committed(table, round_))
 
+    def read_arrow(self, table: str, round_: int, columns: list[str] | None = None,
+                   filter=None):
+        """Read a committed flat snapshot driver-side as a
+        ``pyarrow.Table`` typed from its manifest's Spark schema — no
+        Spark job.  For snapshots bounded by a driver-side gate (a
+        point-lookup round's frontier and crawled urls, the robots rows
+        of a cut's hosts); ``filter`` is a pyarrow expression, pushed
+        down to the row groups."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        m = self._committed(table, round_)
+        schema = to_arrow_schema(StructType.fromJson(json.loads(m["schema"])))
+        if columns is not None:
+            schema = pa.schema([schema.field(c) for c in columns])
+        t = pq.read_table(self.files(table, round_), columns=schema.names,
+                          filters=filter)
+        return t.select(schema.names).cast(schema)
+
     def exists(self, table: str, round_: int) -> bool:
         return os.path.exists(self._manifest_path(table, round_))
 
@@ -401,11 +457,8 @@ class SnapshotCatalog:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        d = self.data_path(table, round_)
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            f = pq.ParquetFile(os.path.join(d, name))
+        for path in self.files(table, round_):
+            f = pq.ParquetFile(path)
             ci = _leaf_index(f.metadata, column) if column else -1
             for g in range(f.metadata.num_row_groups):
                 rg = f.metadata.row_group(g)

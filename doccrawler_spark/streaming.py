@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-METRICS_SCHEMA = "partition_id int, pages_fetched bigint, bytes_fetched bigint, round int"
+from .crawl import METRICS_SCHEMA
 
 
 def _stream_src_dir(snapshot_root: str, table: str) -> str:

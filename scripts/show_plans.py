@@ -258,8 +258,10 @@ def write_plans(tmp: str) -> None:
     # 9. a point-lookup crawl round (the small-round path) on a
     # crawl-delayed host: the crawled write reads the fetched rows from
     # an Arrow local relation (no pickled-RDD scan job per consumer),
-    # and the politeness cut ranks in one partition, with no Exchange.
-    # Plans are captured at the engine's own write and collect calls.
+    # and the politeness cut ranks its driver-read inputs in one
+    # partition, with no Exchange and no parquet scan.  Plans are
+    # captured at the engine's own write call and at whichever action
+    # brings the cut to the driver.
     from doccrawler_spark.snapshots import SnapshotCatalog
     from doccrawler_spark.webgen import SiteSpec, WebSpec
 
@@ -271,25 +273,33 @@ def write_plans(tmp: str) -> None:
     )
     captured: dict[str, str] = {}
     DataFrame = type(slow_web)  # the concrete (classic) DataFrame class
-    real_write, real_collect = SnapshotCatalog.write, DataFrame.collect
+    real_write = SnapshotCatalog.write
+    actions = {name: getattr(DataFrame, name) for name in (
+        "collect", "toArrow", "toPandas", "toLocalIterator", "_collect_as_arrow")}
 
     def write(self, df, table, round_, *a, **k):
         if table == "crawled":
             captured.setdefault("crawled", plan_of(df))
         return real_write(self, df, table, round_, *a, **k)
 
-    def collect(df):
-        if "_now" in df.columns:
-            captured.setdefault("cut", plan_of(df))
-        return real_collect(df)
+    def hooked(real):
+        def action(df, *a, **k):
+            if "_now" in df.columns:
+                captured.setdefault("cut", plan_of(df))
+            return real(df, *a, **k)
+        return action
 
-    SnapshotCatalog.write, DataFrame.collect = write, collect
+    SnapshotCatalog.write = write
+    for name, real in actions.items():
+        setattr(DataFrame, name, hooked(real))
     try:
         crawl(spark, slow_web, [s["seed_url"] for s in gen_seeds(slow)],
               tempfile.mkdtemp(prefix="crawl_polite_", dir=tmp),
               CrawlConfig(max_depth=3, max_rounds=1))
     finally:
-        SnapshotCatalog.write, DataFrame.collect = real_write, real_collect
+        SnapshotCatalog.write = real_write
+        for name, real in actions.items():
+            setattr(DataFrame, name, real)
     sections.append((
         "Point-lookup crawl round: the crawled write (fetch join + fused "
         "extract) over the politeness cut's Arrow local relation",
@@ -300,9 +310,11 @@ def write_plans(tmp: str) -> None:
     # a planner-inserted shuffle — ENSURE_REQUIREMENTS — is not)
     sections.append((
         "Point-lookup crawl round: the politeness cut (salted top-k "
-        "over one partition; both windows, no shuffle Exchange)",
+        "over one partition of driver-read local relations; both "
+        "windows, no shuffle Exchange, no parquet scan)",
         captured["cut"],
-        ["Window", "Coalesce", "!ENSURE_REQUIREMENTS", "!hashpartitioning"],
+        ["Window", "Coalesce", "LocalTableScan", "!Scan parquet",
+         "!ENSURE_REQUIREMENTS", "!hashpartitioning"],
     ))
 
     md = [f"# BENCH/PLANS — physical plans of key operators ({datetime.date.today()})",

@@ -198,19 +198,22 @@ def test_resume_invisible_partial_round(spark, tmp_path):
 
 
 @pytest.mark.parametrize("commit", [
+    os.path.join("metrics", "_r00002.manifest.json"),
     os.path.join("frontier", "_r00002.manifest.json"),
     os.path.join("errors", "_r00002.manifest.json"),
     os.path.join("_crawl_state", "r00002.json"),
-], ids=["frontier", "errors", "state"])
+], ids=["metrics", "frontier", "errors", "state"])
 def test_crash_at_round_commit_resumes_to_oracle(spark, tmp_path, monkeypatch,
                                                  commit):
-    """A crash at one of round 2's commits: the ``frontier`` or
-    ``errors`` manifest replace (the table's new directory is left
-    unreferenced and the catalog reclaims it), or the driver-state
-    write after every snapshot is committed (nothing is stranded, and
-    the re-run round must derive the same ``next_priority`` from its
-    rewritten frontier).  A resume gives the same seen set, crawl
-    order, text and budget as a run with no crash."""
+    """A crash at one of round 2's commits: the ``metrics``,
+    ``frontier`` or ``errors`` manifest replace (the table's new
+    directory is left unreferenced and the catalog reclaims it; round 2
+    is a point-lookup round, so ``metrics`` and ``errors`` crash at an
+    Arrow commit), or the driver-state write after every snapshot is
+    committed (nothing is stranded, and the re-run round must derive
+    the same ``next_priority`` from its rewritten frontier).  A resume
+    gives the same seen set, crawl order, text and budget as a run
+    with no crash."""
     from doccrawler_spark import snapshots
 
     spec = tiny_spec()
@@ -296,6 +299,10 @@ def test_seed_probe_kernel(spark, tmp_path):
               for r in catalog.read(spark, "budget", 0).collect()}
     assert budget == {s: (0, 50) for s in
                       ("Alpha_Docs", "Beta", "Gamma_Site", "d_test")}
+    # an unlimited budget past 2**31 (the throughput mode) fits too
+    catalog = crawl(spark, web, seeds, os.path.join(str(tmp_path), "unlimited"),
+                    CrawlConfig(max_rounds=0, budget_per_site=2**31))
+    assert {r["max"] for r in catalog.read(spark, "budget", 0).collect()} == {2**31}
 
 
 def test_sitemap_index_fallthrough(spark, tmp_path):
@@ -318,20 +325,57 @@ def test_sitemap_index_fallthrough(spark, tmp_path):
     _assert_equivalent(spark, oracle, catalog, golden)
 
 
-def test_error_sink_records_fetch_misses(spark, tmp_path):
+@pytest.mark.parametrize("engine_cfg", [
+    {},
+    # streamed rounds take the snapshot anti-join sink, point-lookup
+    # rounds the driver-held one
+    {"point_lookup_max_frontier": 0},
+], ids=["default", "streamed_fetch"])
+def test_error_sink_records_fetch_misses(spark, tmp_path, engine_cfg):
     """S8: every dead link (fixture seeds one every 7th page) lands in
     the errors table with reason=fetch_miss — exactly the urls the
     oracle records as misses (ref error_repository.py:14-21)."""
     from doccrawler_spark.crawl import errors_all
 
     oracle, catalog, _, golden = _run_both(
-        spark, tmp_path, tiny_spec(), max_depth=3, politeness=True
+        spark, tmp_path, tiny_spec(), max_depth=3, politeness=True,
+        **engine_cfg,
     )
     errs = errors_all(spark, catalog).collect()
     assert len(errs) > 0, "fixture has dead links; errors table is empty"
     assert all(r["reason"] == "fetch_miss" for r in errs)
     assert {r["url"] for r in errs} == set(oracle.misses)
     _assert_equivalent(spark, oracle, catalog, golden)
+
+
+@pytest.mark.parametrize("engine_cfg", [
+    {},
+    {"point_lookup_max_frontier": 0},
+], ids=["default", "streamed_fetch"])
+def test_fetch_metrics_match_crawled(spark, tmp_path, engine_cfg):
+    """Each round's metrics — one row per crawled part file — sum to
+    the round's crawled pages and to the html bytes of those pages in
+    ``web_pages``, on both fetch paths."""
+    from pyspark.sql import functions as F
+
+    oracle, catalog, web, golden = _run_both(
+        spark, tmp_path, tiny_spec(), max_depth=4, politeness=True,
+        **engine_cfg,
+    )
+    html_len = {r["url"]: r["n"]
+                for r in web.select("url", F.length("html").alias("n")).collect()}
+    rounds = catalog.committed_rounds("crawled")
+    assert catalog.committed_rounds("metrics") == rounds and len(rounds) >= 3
+    total = 0
+    for r in rounds:
+        urls = [x["url"] for x in catalog.read(spark, "crawled", r).collect()]
+        m = catalog.read(spark, "metrics", r).collect()
+        assert sum(x["pages_fetched"] for x in m) == len(urls), r
+        assert sum(x["bytes_fetched"] or 0 for x in m) == sum(html_len[u] for u in urls), r
+        assert {x["round"] for x in m} <= {r}
+        assert sorted(x["partition_id"] for x in m) == list(range(len(m)))
+        total += len(urls)
+    assert total == len(oracle.crawled)
 
 
 def test_bucketed_seen_table_e2e(spark, tmp_path):
@@ -445,6 +489,130 @@ def test_snapshot_read_launches_no_job(spark, tmp_path):
     assert fields == [("id", "bigint"), ("s", "string")]
     assert sorted(r["id"] for r in read.collect()) == list(range(100))
     assert upto.count() == 100
+
+
+def test_arrow_commit_contract(spark, tmp_path):
+    """A ``pyarrow.Table`` commits like a DataFrame: one part file in a
+    fresh directory, the same manifest schema Spark records for the
+    same rows, a read (and the commit itself) that launches no job,
+    footer ``count``/``stats`` that agree with Spark, a sealed stream
+    entry, and the same compaction and supersede-then-reclaim life.
+    ``read_arrow`` returns the rows typed as Spark reads them."""
+    import json
+    import uuid
+
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DataType, StructType
+
+    from doccrawler_spark.shuffle import arrow_table
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    ddl = "id long, n int, flag boolean, score double, tags array<string>, s string"
+    rows = [
+        (2**40, None, True, 0.5, ["a", None], "x"),
+        (-1, 7, False, None, [], None),
+        (3, 2**31 - 1, None, 1e300, None, "y"),
+    ]
+    table = arrow_table(rows, ddl)
+    catalog = SnapshotCatalog(str(tmp_path / "snap"))
+    catalog.write(spark.createDataFrame(rows, ddl), "by_spark", 0)
+
+    sc = spark.sparkContext
+    group = f"arrow-commit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "arrow commit")
+    try:
+        catalog.write(table, "t", 0)
+        read = catalog.read(spark, "t", 0)
+        schema = read.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    files = catalog.files("t", 0)
+    assert len(files) == 1 and os.path.basename(files[0]).startswith("part-")
+    assert catalog.data_path("t", 0).startswith(catalog.data_dir("t", 0) + ".")
+
+    def manifest_schema(t):
+        return StructType.fromJson(json.loads(catalog.manifest(t, 0)["schema"]))
+
+    def by_id(df):
+        return sorted(df.collect(), key=lambda r: r["id"])
+
+    assert manifest_schema("t") == manifest_schema("by_spark") == DataType.fromDDL(ddl)
+    assert schema == DataType.fromDDL(ddl)
+    assert by_id(read) == by_id(catalog.read(spark, "by_spark", 0))
+    assert by_id(read)[2]["id"] == 2**40 and by_id(read)[2]["n"] is None
+
+    assert catalog.count("t", 0) == 3
+    for col in ("id", "n", "flag", "score", "s"):
+        want = read.agg(F.count("*"), F.count(col), F.min(col), F.max(col)).first()
+        assert catalog.stats("t", 0, col) == tuple(want), col
+
+    assert catalog.read_arrow("t", 0).equals(table)
+    assert catalog.read_arrow("by_spark", 0).sort_by("id").equals(table.sort_by("id"))
+    hit = catalog.read_arrow("by_spark", 0, ["id"], filter=pc.field("id") > 0)
+    assert sorted(hit["id"].to_pylist()) == [3, 2**40]
+
+    sd = os.path.join(catalog.stream_dir("t"), "r00000")
+    assert {n for n in os.listdir(sd) if n.endswith(".parquet")} == {
+        os.path.basename(files[0])}
+    assert by_id(spark.read.parquet(sd)) == by_id(read)
+    # one file, like a one-file Spark snapshot: compaction leaves it
+    assert catalog.compact(spark, "t") == {}
+    first = catalog.data_path("t", 0)
+    catalog.write(table.slice(0, 1), "t", 0)
+    assert os.path.isdir(first) and catalog.count("t", 0) == 1
+    assert catalog.vacuum_superseded(grace_s=0) == 1
+    assert not os.path.exists(first)
+    assert [r["id"] for r in catalog.read(spark, "t", 0).collect()] == [2**40]
+
+
+def test_terminal_point_lookup_commits_launch_no_job(spark, tmp_path, monkeypatch):
+    """A terminal point-lookup round holds its metrics, errors and
+    frontier rows on the driver: those three commits launch no Spark
+    job, while its crawled write (fetch + extract) still does."""
+    import uuid
+
+    from doccrawler_spark.snapshots import SnapshotCatalog
+
+    sc = spark.sparkContext
+    groups: dict = {}
+    real = SnapshotCatalog.write
+
+    def write(self, data, table, round_, *a, **k):
+        g = groups.setdefault((table, round_), f"commit-{uuid.uuid4().hex}")
+        sc.setJobGroup(g, f"commit {table} r{round_}")
+        try:
+            return real(self, data, table, round_, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(SnapshotCatalog, "write", write)
+    # quota 60/20 = 3 pages a round: rounds 2.. fetch the depth-2
+    # children, none of which can expand
+    spec = WebSpec(sites=(
+        SiteSpec("docs.slow.test", 40, branching=8, crawl_delay=20.0),
+    ))
+    oracle, catalog, _, golden = _run_both(
+        spark, tmp_path, spec, max_depth=3, politeness=True, round_seconds=60.0,
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+
+    def jobs(table, r):
+        return list(sc.statusTracker().getJobIdsForGroup(groups[(table, r)]))
+
+    terminal = catalog.committed_rounds("crawled")[1:]
+    assert len(terminal) >= 3
+    for r in terminal:
+        assert catalog.stats("frontier", r - 1, "depth").min + 1 >= 3
+        for table in ("metrics", "errors", "frontier"):
+            assert jobs(table, r) == [], (table, r)
+        assert jobs("crawled", r), r
+    _assert_equivalent(spark, oracle, catalog, golden)
 
 
 def test_count_nonnull_matches_spark_count(spark, tmp_path):
