@@ -348,7 +348,7 @@ def _q_chunk_documents(spark, sf_dir):
     closed form holds for ARBITRARY driver text — an un-sanitized doc
     containing heading/fence markers or leading '#' lines would chunk
     differently than the closed form predicts."""
-    from doccrawler_spark.ops.dedup import _fan_out
+    from doccrawler_spark.ops.dedup import _shuffle_width
     from doccrawler_spark.pipeline import CHUNKS_SCHEMA, _chunk_frames
 
     # markdown synthesis in Python workers (r9): the JVM
@@ -378,12 +378,16 @@ def _q_chunk_documents(spark, sf_dir):
         F.col("source").alias("base_url"),
         "text",
     )
-    return _fan_out(raw, "url").mapInPandas(
+    # fan out by url RANGE, then sort within partitions: the range
+    # partitions already follow url order, so the result is totally
+    # ordered, and the range sampler reads the scan — an orderBy above
+    # the chunker would sample by re-running it (a second Python job)
+    return raw.repartitionByRange(_shuffle_width(raw), "url").mapInPandas(
         lambda batches: _chunk_frames(_synth(batches)), CHUNKS_SCHEMA
     ).select(
         "url", "site_id", "chunk_ix", F.length("chunked_data").alias("chunk_chars"),
         "is_summary",
-    ).orderBy("url", "chunk_ix")
+    ).sortWithinPartitions("url", "chunk_ix")
 
 
 def _q_crawl_errors(spark, sf_dir):

@@ -9,6 +9,7 @@ UDFs over Arrow batches.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -95,15 +96,15 @@ def dense_dot(a: Column, b: Column) -> Column:
 
 def sparse_dot_with_query(indices: Column, values: Column, query_map: dict[int, float]) -> Column:
     """dot(doc sparse vector, small query sparse vector) — the query is
-    folded into the plan as a literal MAP (tens of terms), so scoring
+    folded into the plan as a literal MAP (tens of terms) built from
+    two array literals, one of keys and one of values, so scoring
     stays in whole-stage codegen."""
     if not query_map:
         return F.lit(0.0)
-    entries = []
-    for k, v in query_map.items():
-        entries.append(F.lit(int(k)))
-        entries.append(F.lit(float(v)))
-    m = F.create_map(*entries)
+    m = F.map_from_arrays(
+        F.lit(np.fromiter(query_map.keys(), np.int32, len(query_map))),
+        F.lit(np.fromiter(query_map.values(), np.float64, len(query_map))),
+    )
     return F.aggregate(
         F.zip_with(
             indices, values,

@@ -20,15 +20,32 @@ from pyspark.sql import functions as F
 
 def _plan_bytes(df: DataFrame) -> int:
     """Catalyst's optimizer size estimate of a plan — the one size
-    probe behind every plan-side stats gate (``_fan_out``, knn_join's
-    salted windows).  Unknown stats come back as Catalyst's Long.Max
-    sentinel, and a failed probe as 2^60: both read as "huge"."""
+    probe behind every plan-side stats gate (``_fan_out``,
+    ``_shuffle_width``, knn_join's salted windows).  Unknown stats
+    come back as Catalyst's Long.Max sentinel, and a failed probe as
+    2^60: both read as "huge"."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         return 1 << 60
+
+
+def _shuffle_width(df: DataFrame) -> int:
+    """Partition count for an explicit repartition of ``df`` ahead of
+    CPU-heavy per-partition work: one per 64 MB of optimizer-estimated
+    input (the salted-window gate's task size), at least one per core.
+    Unknown stats (the ``_plan_bytes`` sentinels) take the session's
+    ``spark.sql.shuffle.partitions``.  An explicit count is exempt
+    from AQE's compute-blind coalescing, which would merge a small
+    input into one serial task."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    size = _plan_bytes(df)
+    if size >= (1 << 50):
+        return max(cores, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    return max(cores, -(-size // (64 << 20)))
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -498,6 +515,9 @@ def ngram_jaccard_pairs(
             F.col("_blk").alias("_j"),
         ).filter(F.col("_i") < F.col("_j"))  # diagonal uses left only
         d_t = dict(documents.dtypes)["doc_id"]
+        # a grouped applyInPandas, not the _score_buckets kernel: there
+        # is one group per block pair (1 below 4M pair contributions),
+        # so no per-group crossing is left to amortize.
         # pre-partition by the group key with ~2 partitions per block
         # pair: the groupBy reuses this exact hash partitioning, and an
         # EXPLICIT repartition is exempt from AQE's size-based
@@ -747,55 +767,150 @@ def _band_keys(emb_col, n_bands: int, band_bits: int):
     ])
 
 
-def _neardup_bucket_scorer(threshold: float):
-    """Per-(band,key)-bucket pair scorer of
-    :func:`embedding_neardup_pairs`: the bucket's vectors are one
-    float64 matrix, all within-bucket pair cosines are one chunked
-    GEMM, and only pairs passing ``cosine ≥ threshold`` (rounded to 6
-    decimals HALF_UP BEFORE the compare, as SQL's ``round(cos, 6)``
-    — see :func:`_round6_half_up`) ever leave the Python worker.  Rows
-    are sorted by vec_id first so the strict upper triangle IS the
-    ``vec_a < vec_b`` pair set; zero-norm vectors produce NaN cosines,
-    which fail the threshold compare and drop, as a NULL cosine
-    does in SQL."""
+def _bucket_runs(batches, keys: list[str]):
+    """Each contiguous run of equal ``keys`` values in a key-sorted
+    stream of Arrow record batches, as ONE record batch.  A run may
+    straddle batch boundaries: the open run at the end of a batch is
+    carried (as zero-copy slices) into the next one and concatenated
+    only when it closes.  Run boundaries come from vectorized Arrow
+    compares of adjacent rows, never a per-row Python loop."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def score(pdf):
+    def joined(pieces):
+        if len(pieces) == 1:
+            return pieces[0]
+        return pa.Table.from_batches(pieces).combine_chunks().to_batches()[0]
+
+    open_run: list = []
+    for b in batches:
+        n = b.num_rows
+        if n == 0:
+            continue
+        if open_run:
+            last = open_run[-1]
+            if any(last.column(k)[last.num_rows - 1].as_py()
+                   != b.column(k)[0].as_py() for k in keys):
+                yield joined(open_run)
+                open_run = []
+        starts = np.zeros(n, dtype=bool)
+        for k in keys:
+            c = b.column(k)
+            starts[1:] |= pc.not_equal(c.slice(1), c.slice(0, n - 1)) \
+                .to_numpy(zero_copy_only=False)
+        s = 0
+        for e in [*np.flatnonzero(starts).tolist(), n]:
+            open_run.append(b.slice(s, e - s))
+            if e < n:  # closed inside this batch; the last run stays open
+                yield joined(open_run)
+                open_run = []
+            s = e
+    if open_run:
+        yield joined(open_run)
+
+
+def _matrix(arr):
+    """An Arrow list column of equal-length vectors as one float64
+    (rows × dim) matrix: one flatten, one cast, one reshape — no
+    per-row conversion.  NULL rows never reach here (callers filter
+    them in the plan)."""
+    import numpy as np
+
+    vals = arr.flatten().to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False)
+    m = len(arr)
+    return vals.reshape(m, len(vals) // m if m else 0)
+
+
+def _score_buckets(df: DataFrame, keys: list[str], order: list[str],
+                   score, schema: str) -> DataFrame:
+    """Run ``score`` over every bucket (run of equal ``keys``) of
+    ``df`` with ONE Arrow call per partition — the shared kernel of
+    :func:`embedding_neardup_pairs` and ``similarity.knn_join``.
+
+    The plan hash-repartitions on the bucket key into
+    :func:`_shuffle_width` partitions (Catalyst does not scale its
+    estimate through an explode, so a band-exploded input gets up to
+    n_bands·64 MB per partition), sorts within partitions by key then
+    ``order``, and one ``mapInArrow`` walks the sorted runs
+    (:func:`_bucket_runs`).  ``score(run)`` gets one
+    bucket as a record batch and returns a list of output columns
+    (Arrow arrays, in ``schema`` order) or None; outputs of many
+    buckets leave the worker together.  A grouped ``applyInPandas``
+    pays one pandas frame per bucket instead — on small buckets that
+    per-group crossing, not the GEMM, was the operator's cost."""
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
+
+    names = DataType.fromDDL(schema).names
+    n = _shuffle_width(df)
+    flush_rows = 1 << 14
+
+    def batch(pending):
+        return pa.RecordBatch.from_arrays(
+            [pa.concat_arrays(c) for c in zip(*pending)], names=names)
+
+    def run(batches):
+        pending: list[list] = []
+        rows = 0
+        for bucket in _bucket_runs(batches, keys):
+            cols = score(bucket)
+            if cols is None or len(cols[0]) == 0:
+                continue
+            pending.append(cols)
+            rows += len(cols[0])
+            if rows >= flush_rows:
+                yield batch(pending)
+                pending, rows = [], 0
+        if pending:
+            yield batch(pending)
+
+    return (df.repartition(n, *keys).sortWithinPartitions(*keys, *order)
+            .mapInArrow(run, schema))
+
+
+def _neardup_pair_scorer(threshold: float):
+    """Bucket scorer of :func:`embedding_neardup_pairs`: the bucket's
+    vectors are one float64 matrix, all within-bucket pair cosines are
+    one chunked GEMM, and only pairs passing ``cosine ≥ threshold``
+    (rounded to 6 decimals HALF_UP BEFORE the compare, as SQL's
+    ``round(cos, 6)`` — see :func:`_round6_half_up`) ever leave the
+    worker.  Runs arrive sorted by vec_id, so the strict upper
+    triangle IS the ``vec_a < vec_b`` pair set; zero-norm vectors
+    produce NaN cosines, which fail the threshold compare and drop, as
+    a NULL cosine does in SQL."""
+
+    def score(run):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        empty = pd.DataFrame({
-            "vec_a": pdf["vec_id"][:0], "vec_b": pdf["vec_id"][:0],
-            "cosine": pd.Series([], dtype="float64"),
-        })
-        m = len(pdf)
+        m = run.num_rows
         if m < 2:
-            return empty
-        pdf = pdf.sort_values("vec_id")
-        vid = pdf["vec_id"].to_numpy()
-        M = np.asarray([np.asarray(v, dtype=np.float64)
-                        for v in pdf["embedding"]])
+            return None
+        vid = run.column("vec_id")
+        M = _matrix(run.column("embedding"))
         nrm = np.sqrt((M * M).sum(axis=1))
         # chunk both GEMM axes: an 8192² block is a 512 MB float64
         # output ceiling; only the upper block triangle is computed
         CH = 8192
-        frames = []
+        a_ix, b_ix, cos = [], [], []
         for i0 in range(0, m, CH):
-            A, an, aid = M[i0:i0 + CH], nrm[i0:i0 + CH], vid[i0:i0 + CH]
+            A, an = M[i0:i0 + CH], nrm[i0:i0 + CH]
             for j0 in range(i0, m, CH):
-                B, bn, bid = M[j0:j0 + CH], nrm[j0:j0 + CH], vid[j0:j0 + CH]
+                B, bn = M[j0:j0 + CH], nrm[j0:j0 + CH]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos6 = _round6_half_up((A @ B.T) / np.outer(an, bn))
                     mask = cos6 >= threshold  # NaN compares False
                 if i0 == j0:  # diagonal block: strict upper triangle
-                    mask &= np.triu(
-                        np.ones(mask.shape, dtype=bool), k=1)
+                    mask &= np.triu(np.ones(mask.shape, dtype=bool), k=1)
                 ii, jj = np.nonzero(mask)
-                if ii.size:
-                    frames.append(pd.DataFrame({
-                        "vec_a": aid[ii], "vec_b": bid[jj],
-                        "cosine": cos6[ii, jj],
-                    }))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+                a_ix.append(ii + i0)
+                b_ix.append(jj + j0)
+                cos.append(cos6[ii, jj])
+        a_ix, b_ix = np.concatenate(a_ix), np.concatenate(b_ix)
+        return [vid.take(pa.array(a_ix)), vid.take(pa.array(b_ix)),
+                pa.array(np.concatenate(cos), pa.float64())]
 
     return score
 
@@ -809,30 +924,33 @@ def embedding_neardup_pairs(
     bands (sign pattern of ``band_bits`` consecutive dims), never
     all-pairs.  Exact cosine is then computed per candidate; standard
     LSH recall semantics (a true pair that differs in every band is
-    missed — more bands trade compute for recall).
+    missed — more bands trade compute for recall).  A NULL embedding
+    has no cosine to anything (SQL's ``list_dot_product`` is NULL) and
+    is dropped before banding.
 
-    Each (band,key) bucket is scored as ONE chunked numpy float64 GEMM
-    via ``applyInPandas`` (r9, :func:`_neardup_bucket_scorer`).  The
-    r8 bucket self-join evaluated dot + both norms through Catalyst's
-    INTERPRETED higher-order-function eval per candidate pair (~192
-    interpreted element-ops per pair at dim 64), which dominated the
-    operator at scale (measured 12.0 s → GEMM path at sf1.0; same
-    argument as the knn_join GEMM scorer).  The threshold filter runs
-    INSIDE the worker, so only passing pairs cross the Arrow boundary,
-    and no candidate-pair relation is ever shuffled.  Bucket width is
-    governed by ``band_bits`` — the scorer materializes one bucket's
-    vectors per task."""
+    Every (band,key) bucket is scored as ONE chunked numpy float64
+    GEMM (:func:`_neardup_pair_scorer`), many buckets per Arrow call
+    (:func:`_score_buckets`: one hash exchange on the bucket key, a
+    within-partition sort, one ``mapInArrow`` per partition).  The r8
+    bucket self-join evaluated dot + both norms through Catalyst's
+    INTERPRETED higher-order-function eval per candidate pair, and
+    the r9 grouped ``applyInPandas`` scorer paid one pandas frame per
+    bucket — up to n_bands·2^band_bits of them, most a few rows.  The
+    threshold filter runs INSIDE the worker, so only passing pairs
+    cross the Arrow boundary, and no candidate-pair relation is ever
+    shuffled.  A pair colliding in several bands scores identically in
+    each bucket; the final ``dropDuplicates`` on the pair key is
+    value-stable, and its exchange also keeps a later sort's range
+    sampler from re-running the Python stage."""
     v_t = dict(embeddings.dtypes)["vec_id"]
-    banded = embeddings.select(
+    banded = embeddings.filter(F.col("embedding").isNotNull()).select(
         "vec_id", "embedding",
         F.explode(
             _band_keys(F.col("embedding"), n_bands, band_bits)
         ).alias("bk"),
     ).select("vec_id", "embedding", "bk.band", "bk.key")
-    scored = banded.groupBy("band", "key").applyInPandas(
-        _neardup_bucket_scorer(threshold),
+    scored = _score_buckets(
+        banded, ["band", "key"], ["vec_id"], _neardup_pair_scorer(threshold),
         f"vec_a {v_t}, vec_b {v_t}, cosine double",
     )
-    # a pair colliding in several bands scores identically in each
-    # bucket — dedup on the pair key alone is value-stable
     return scored.dropDuplicates(["vec_a", "vec_b"])

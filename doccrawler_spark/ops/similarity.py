@@ -3,20 +3,22 @@ label)``: brute-force cosine top-k (the exact baseline) and a
 sign-bucketed LSH variant (the scale path).
 
 The per-query operators are JVM-native (zip_with/aggregate HOFs) — no
-Python in their scoring loop; the bulk ``knn_join`` scores each LSH
-bucket as one numpy GEMM in an Arrow worker, where per-pair
-interpreted HOF eval would dominate.  At cluster scale the
+Python in their scoring loop, and a literal query vector enters the
+plan as ONE array literal; the bulk ``knn_join`` scores each LSH
+bucket as one numpy GEMM in an Arrow worker, many buckets per Arrow
+call, where per-pair interpreted HOF eval would dominate.  At cluster scale the
 brute-force path is a single map-side scan + TakeOrderedAndProject
 (per-partition top-k then merge, which Catalyst emits for
 orderBy+limit automatically)."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..shuffle import local_relation
-from .dedup import _plan_bytes, _round6_half_up
+from .dedup import _matrix, _plan_bytes, _round6_half_up, _score_buckets
 
 
 def _dot(a, b):
@@ -54,7 +56,7 @@ def cosine_topk(
 
     if fan_out:
         embeddings = _fan_out(embeddings, "vec_id")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = F.lit(np.asarray(query_vec, np.float64))
     qn = sum(x * x for x in query_vec) ** 0.5
     # try_divide: a zero-norm vector (an empty document's hash
     # embedding — real corpora contain them; ANSI `/` throws) has no
@@ -119,12 +121,14 @@ def lsh_topk(
 
 def _argmax_cell(emb_col, centroids: list[list[float]]):
     """Cell id = index of the max-dot centroid (ties → smallest id).
-    Centroids are L2-normalized literals folded into the plan, so the
-    assignment is one codegen'd expression per row — no join."""
-    scores = F.array(*[
-        _dot(emb_col, F.array(*[F.lit(float(x)) for x in c]))
-        for c in centroids
-    ])
+    Centroids are L2-normalized rows of one matrix literal (n_cells
+    array literals, which constant folding merges into one) and the
+    per-centroid dot is one ``transform`` over it, so the assignment
+    is one expression per row — no join, and no plan of n_cells·dim
+    scalar literals (the fold per centroid is the same ``_dot``, bit
+    for bit)."""
+    cents = F.array(*[F.lit(np.asarray(c, np.float64)) for c in centroids])
+    scores = F.transform(cents, lambda c: _dot(emb_col, c))
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
@@ -513,8 +517,9 @@ def knn_join(
     the join prunes to matching buckets).
 
     Each (band,key) bucket is scored by :func:`_knn_gemm_topk` as one
-    numpy GEMM with a per-query top-k inside the bucket, so no bucket
-    ever yields more than |Q|·k rows and the final per-query window
+    numpy GEMM with a per-query top-k inside the bucket, many buckets
+    per Arrow call (the kernel ``embedding_neardup_pairs`` shares), so
+    no bucket ever yields more than |Q|·k rows and the final per-query window
     sees ≤ n_tables·k deduped candidates.  The per-bucket top-k is
     lossless: a global-top-k candidate outranked by < k vectors
     globally is outranked by < k inside any band bucket containing it.
@@ -559,79 +564,81 @@ def _banded(df: DataFrame, vec_col: str, n_bits: int, n_tables: int,
     ).select(*df.columns, "bk.band", "bk.key")
 
 
-def _make_bucket_scorer(k: int):
-    """Per-bucket scorer for :func:`_knn_gemm_topk`: queries × bucket
-    candidates as one float64 GEMM (numpy, Arrow-batched), per-query
-    top-k WITHIN the bucket before anything leaves the Python worker.
-    The within-bucket top-k is lossless for the global top-k (see
-    :func:`knn_join`); rounding to 6 decimals HALF_UP BEFORE selection
-    (SQL's ``round(cos, 6)``, :func:`dedup._round6_half_up`) fixes the
-    ranking ties exactly as the oracle sees them."""
+def _knn_topk_scorer(k: int):
+    """Bucket scorer of :func:`_knn_gemm_topk`: one tagged run holds the
+    bucket's queries (``_side`` 0, sorted first) and its candidates
+    (``_side`` 1, sorted by vec_id); queries × candidates is one
+    float64 GEMM, and each query keeps its top-k INSIDE the bucket
+    before anything leaves the worker.  Rounding to 6 decimals HALF_UP
+    BEFORE selection (SQL's ``round(cos, 6)``,
+    :func:`dedup._round6_half_up`) fixes the ranking ties exactly as
+    the oracle sees them; ties on the rounded cosine go to the smaller
+    vec_id, the final window's order.  Zero-norm vectors (NaN cosine)
+    never match."""
 
-    def score(qpdf, cpdf):
+    def score(run):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({
-                "q_id": qpdf["q_id"][:0], "vec_id": cpdf["vec_id"][:0],
-                "cosine": pd.Series([], dtype="float64"),
-            })
-        qid_all = qpdf["q_id"].to_numpy()
-        vid_all = cpdf["vec_id"].to_numpy()
-        out = []
+        nq = int((run.column("_side").to_numpy() == 0).sum())
+        nc = run.num_rows - nq
+        if nq == 0 or nc == 0:
+            return None
+        qrun, crun = run.slice(0, nq), run.slice(nq)
+        A_all = _matrix(qrun.column("_emb"))
+        B_all = _matrix(crun.column("_emb"))
+        an_all = np.sqrt((A_all * A_all).sum(axis=1))
+        bn_all = np.sqrt((B_all * B_all).sum(axis=1))
+        # one int64 rank key per cell orders (cosine desc, vec_id asc):
+        # the rounded cosine is an exact multiple of 1e-6, candidates
+        # arrive in vec_id order, so key = (1e6 - cos·1e6)·nc + column
+        # is unique per row and argpartition's k smallest ARE the
+        # top-k; NaN cells get the max key and are dropped after.
+        # (Measured on one bucket of 2000 queries x 20000 candidates,
+        # dim 64: 1.7 s, against 4.1 s for a stable argsort per row.)
+        NAN_KEY = np.iinfo(np.int64).max
+
+        def topk(key):
+            if key.shape[1] <= k:
+                return np.broadcast_to(np.arange(key.shape[1]), key.shape)
+            return np.argpartition(key, k - 1, axis=1)[:, :k]
+
         # BOTH axes are chunked: a hot bucket can be hit by an
         # unbounded number of bulk queries just as it can hold an
-        # unbounded number of candidates, and the GEMM output is
-        # |Q|×|C| float64 — chunking only candidates would let a
-        # 100k-query batch allocate |Q|×65536×8 ≈ 50 GB in one array.
-        # 2048×16384 bounds each GEMM output to 256 MB while keeping
-        # the BLAS kernel long enough to amortize dispatch.
+        # unbounded number of candidates; 2048×16384 bounds each GEMM
+        # output to 256 MB while keeping the BLAS kernel long enough
+        # to amortize dispatch.  Per-chunk top-k then a top-k over the
+        # chunks' survivors is lossless.
         Q_CH, C_CH = 2048, 16384
-        # Each side's list-cell → float64-matrix conversion runs ONCE
-        # (r9, guide §4.2): the query-side chunks are converted up
-        # front and cached (bounded by the bulk batch: |Q|×dim float64,
-        # ~50 MB at 100k×64), then candidate chunks convert once each
-        # in the outer loop — the r8 nesting rebuilt the candidate
-        # matrix + norms inside the query loop, so a hot bucket hit by
-        # 100k bulk queries (49 q-chunks) paid the per-row conversion
-        # 49×.
-        a_chunks = []
-        for qs_ in range(0, len(qpdf), Q_CH):
-            A = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in qpdf["q_emb"].iloc[qs_:qs_ + Q_CH]])
-            a_chunks.append((A, np.sqrt((A * A).sum(axis=1)),
-                             qid_all[qs_:qs_ + Q_CH]))
-        for s in range(0, len(cpdf), C_CH):
-            B = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in cpdf["embedding"].iloc[s:s + C_CH]])
-            vid = vid_all[s:s + C_CH]
-            bn = np.sqrt((B * B).sum(axis=1))
-            for A, qn, qid in a_chunks:
+        q_ix, c_ix, cos = [], [], []
+        for q0 in range(0, nq, Q_CH):
+            A, an = A_all[q0:q0 + Q_CH], an_all[q0:q0 + Q_CH]
+            keys, cols, vals = [], [], []
+            for c0 in range(0, nc, C_CH):
+                B, bn = B_all[c0:c0 + C_CH], bn_all[c0:c0 + C_CH]
+                col = np.arange(c0, c0 + len(B))
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos6 = _round6_half_up((A @ B.T) / np.outer(qn, bn))
-                for i in range(len(qid)):
-                    row = cos6[i]
-                    idx = np.nonzero(np.isfinite(row))[0]  # zero-norm → drop
-                    if idx.size == 0:
-                        continue
-                    sel = idx[np.lexsort((vid[idx], -row[idx]))[:k]]
-                    out.append(pd.DataFrame({
-                        "q_id": np.full(sel.size, qid[i]),
-                        "vec_id": vid[sel], "cosine": row[sel],
-                    }))
-        if not out:
-            return pd.DataFrame({
-                "q_id": qpdf["q_id"][:0], "vec_id": cpdf["vec_id"][:0],
-                "cosine": pd.Series([], dtype="float64"),
-            })
-        # per-chunk top-k → final within-bucket top-k across chunks
-        # (lossless: a candidate beaten by ≥k inside its chunk is
-        # beaten by ≥k in the bucket)
-        res = pd.concat(out, ignore_index=True)
-        res = res.sort_values(["q_id", "cosine", "vec_id"],
-                              ascending=[True, False, True])
-        return res.groupby("q_id", sort=False).head(k)
+                    cos6 = _round6_half_up((A @ B.T) / np.outer(an, bn))
+                    key = np.where(
+                        np.isfinite(cos6),
+                        (1_000_000 - np.rint(cos6 * 1e6).astype(np.int64))
+                        * nc + col, NAN_KEY)
+                sel = topk(key)
+                keys.append(np.take_along_axis(key, sel, axis=1))
+                cols.append(col[sel])
+                vals.append(np.take_along_axis(cos6, sel, axis=1))
+            key, col, val = (np.hstack(x) for x in (keys, cols, vals))
+            sel = topk(key)
+            key, col, val = (np.take_along_axis(x, sel, axis=1)
+                             for x in (key, col, val))
+            qi, j = np.nonzero(key != NAN_KEY)
+            q_ix.append(qi + q0)
+            c_ix.append(col[qi, j])
+            cos.append(val[qi, j])
+        q_ix, c_ix = np.concatenate(q_ix), np.concatenate(c_ix)
+        return [qrun.column("q_id").take(pa.array(q_ix)),
+                crun.column("vec_id").take(pa.array(c_ix)),
+                pa.array(np.concatenate(cos), pa.float64())]
 
     return score
 
@@ -645,17 +652,24 @@ def _knn_gemm_topk(q: DataFrame, c: DataFrame, k: int, salt: int,
     query×candidate pairs a bulk batch produces when the corpus's
     embedding space is clustered and LSH buckets run hot (measured:
     two executor threads burned 40+ CPU-minutes inside
-    ``ArrayTransform.nullSafeEval`` on a 300k-doc crawl corpus).  Here
-    each (band,key[,_salt]) bucket is scored as ONE numpy float64
-    GEMM via cogrouped ``applyInPandas``, with per-query top-k applied
-    inside the bucket, so (a) the per-element interpreter dispatch
-    becomes a BLAS inner loop and (b) only ≤ |Q|·k rows per bucket
-    ever leave the Python worker — the Arrow transfer is matrices in,
-    top-k out, never per-pair rows.  ``salted`` sub-splits hot
-    buckets by ``pmod(xxhash64(vec_id), salt)`` — queries replicate
-    across the salt range (a |Q|×salt explode, query side only) so
-    every sub-bucket still sees every probing query.  Zero-norm
-    vectors (empty documents) have no cosine and never match."""
+    ``ArrayTransform.nullSafeEval`` on a 300k-doc crawl corpus).
+
+    Here the two sides are tagged (``_side``) and unioned, and every
+    (band,key[,_salt]) bucket is scored as ONE numpy float64 GEMM by
+    the shared bucket kernel (``dedup._score_buckets``: one hash
+    exchange on the bucket key, a sort, one ``mapInArrow`` per
+    partition walking many buckets), with per-query top-k applied
+    inside the bucket (:func:`_knn_topk_scorer`).  So (a) the
+    per-element interpreter dispatch becomes a BLAS inner loop, (b)
+    only ≤ |Q|·k rows per bucket ever leave the Python worker, and (c)
+    no bucket pays a per-group pandas frame, as the r8 cogrouped
+    ``applyInPandas`` did.  ``salted`` sub-splits hot buckets by
+    ``pmod(xxhash64(vec_id), salt)`` — queries replicate across the
+    salt range (a |Q|×salt explode, query side only) so every
+    sub-bucket still sees every probing query.  Zero-norm and NULL
+    vectors (empty documents) have no cosine and never match; NULL
+    rows are dropped before the exchange.  The pair dedup's exchange
+    sits between the kernel and the per-query window."""
     q_t = dict(q.dtypes)["q_id"]
     v_t = dict(c.dtypes)["vec_id"]
     keys = ["band", "key"]
@@ -667,11 +681,17 @@ def _knn_gemm_topk(q: DataFrame, c: DataFrame, k: int, salt: int,
             "_salt",
             F.explode(F.sequence(F.lit(0).cast("long"),
                                  F.lit(salt - 1).cast("long"))))
-    qs = q.select("q_id", "q_emb", *keys)
-    cs = c.select("vec_id", "embedding", *keys)
-    scored = (qs.groupBy(*keys).cogroup(cs.groupBy(*keys))
-              .applyInPandas(_make_bucket_scorer(k),
-                             f"q_id {q_t}, vec_id {v_t}, cosine double"))
+    qs = q.filter(F.col("q_emb").isNotNull()).select(
+        F.lit(0).alias("_side"), "q_id",
+        F.lit(None).cast(v_t).alias("vec_id"),
+        F.col("q_emb").alias("_emb"), *keys)
+    cs = c.filter(F.col("embedding").isNotNull()).select(
+        F.lit(1).alias("_side"), F.lit(None).cast(q_t).alias("q_id"),
+        "vec_id", F.col("embedding").alias("_emb"), *keys)
+    scored = _score_buckets(
+        qs.unionByName(cs), keys, ["_side", "vec_id"], _knn_topk_scorer(k),
+        f"q_id {q_t}, vec_id {v_t}, cosine double",
+    )
     from pyspark.sql import Window
 
     order = [F.desc("cosine"), F.asc("vec_id")]
@@ -719,8 +739,9 @@ def knn_join_indexed(
         # per-directory listings cost more than one recursive root
         # listing (measured 28.6 s vs ~1.5 s at 1024 dirs), and with
         # near-full coverage pruning saves nothing — the index's win
-        # here is the PRECOMPUTED banding, not the scan cut.  The
-        # (band,key) join still discards any unprobed buckets.
+        # here is the PRECOMPUTED banding, not the scan cut.  Unprobed
+        # buckets are shuffled and sorted with the rest, and the bucket
+        # kernel skips each run that holds no query.
         c = _read_layout(spark, m)
     else:
         c = _read_layout(spark, m, dirs)

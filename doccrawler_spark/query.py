@@ -12,6 +12,7 @@ jina_reranker_service.py:17-41.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -89,7 +90,7 @@ def hybrid_query(
     for p in filters_to_predicates(filters, vectors.schema):
         df = df.filter(p)
 
-    dense_lit = F.array(*[F.lit(float(x)) for x in dense_q])
+    dense_lit = F.lit(np.asarray(dense_q, np.float64))
     score = (
         F.lit(float(alpha)) * Fx.dense_dot(dense_lit, F.col("values"))
         + F.lit(1.0 - float(alpha))

@@ -86,9 +86,12 @@ def global_sequence(
     n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     if int(n) == 1:
         w = Window.orderBy(*[F.col(c) for c in order_cols])
+        # row_number is an int; the range path's offsets are longs, and
+        # a size gate must not change the column's type
         return (
             df.coalesce(1)
-            .withColumn(out_col, F.row_number().over(w) - 1 + F.lit(start))
+            .withColumn(out_col, (F.row_number().over(w) - 1
+                                  + F.lit(start)).cast("long"))
         )
     ranged = df.repartitionByRange(int(n), *order_cols).withColumn(
         _SEQ_PID, F.spark_partition_id()

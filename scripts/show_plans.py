@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -99,17 +100,37 @@ def write_plans(tmp: str) -> None:
         ["ReadSchema: struct<doc_id", "*("],
     ))
 
-    # 5. embedding near-dup: banded LSH bucket join — NEVER a cartesian
-    # product; singleton buckets pruned via LeftSemi before the self-join
+    # 5. embedding near-dup: banded LSH buckets — NEVER a cartesian
+    # product; one Python operator walks many buckets per Arrow call,
+    # below the pair dedup's hash Exchange (which keeps a later sort's
+    # range sampler from re-running the Python stage)
     from doccrawler_spark.ops.dedup import embedding_neardup_pairs
 
+    def one_python_op_below_hash_exchange(plan: str) -> str:
+        """Verdict lines: exactly one Python operator in the plan, and a
+        hash Exchange above it (printed before it in the simple tree)."""
+        tree = plan[plan.index("-- simple"):]
+        py = re.findall(r"\b(\w*(?:InArrow|InPandas|EvalPython)\w*)", tree)
+        above = tree[:tree.index(py[0])] if py else ""
+        return "\n".join([
+            "[ok] one Python operator" if len(py) == 1
+            else f"[bad] {len(py)} Python operators",
+            "[ok] hash Exchange above it"
+            if "Exchange hashpartitioning" in above
+            else "[bad] no hash Exchange above it",
+        ])
+
+    kernel_checks = ["MapInArrow", "[ok] one Python operator",
+                     "[ok] hash Exchange above it", "![bad]"]
+    nd_plan = plan_of(embedding_neardup_pairs(emb, threshold=0.3))
     sections.append((
-        "Embedding near-dup (banded sign-bit LSH buckets scored by the "
-        "per-bucket Arrow-GEMM pair kernel, r9; threshold applied "
+        "Embedding near-dup (banded sign-bit LSH buckets, one hash "
+        "exchange on the bucket key, one mapInArrow GEMM kernel per "
+        "partition walking sorted bucket runs; threshold applied "
         "in-worker — never all-pairs, no candidate-pair shuffle)",
-        plan_of(embedding_neardup_pairs(emb, threshold=0.3)),
-        ["FlatMapGroupsInPandas", "!CartesianProduct",
-         "!BroadcastNestedLoopJoin"],
+        nd_plan + "\n" + one_python_op_below_hash_exchange(nd_plan),
+        kernel_checks + ["!FlatMapGroupsInPandas", "!CartesianProduct",
+                         "!BroadcastNestedLoopJoin"],
     ))
 
     # 6. bulk ANN knn_join: bucket equi-join + bounded per-query window
@@ -118,12 +139,14 @@ def write_plans(tmp: str) -> None:
     q = emb.limit(5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
+    kj_plan = plan_of(knn_join(emb, q, k=5, n_bits=4, n_tables=4))
     sections.append((
-        "knn_join (multi-band cogrouped Arrow-GEMM scorer + bounded "
-        "per-query window, no cartesian; r8)",
-        plan_of(knn_join(emb, q, k=5, n_bits=4, n_tables=4)),
-        ["FlatMapCoGroupsInPandas", "Window", "!CartesianProduct",
-         "!BroadcastNestedLoopJoin"],
+        "knn_join (tagged query+corpus union, the shared mapInArrow "
+        "bucket GEMM kernel with per-query top-k + bounded per-query "
+        "window, no cartesian)",
+        kj_plan + "\n" + one_python_op_below_hash_exchange(kj_plan),
+        kernel_checks + ["Union", "Window", "!FlatMapCoGroupsInPandas",
+                         "!CartesianProduct", "!BroadcastNestedLoopJoin"],
     ))
 
     # 6b. write-time ANN layouts: the indexed IVF/LSH scans must PRUNE —
@@ -174,9 +197,7 @@ def write_plans(tmp: str) -> None:
     _wli(emb, f"{idx_root}/knn_lsh", n_bits=4, n_tables=4)
     kji = knn_join_indexed(spark, f"{idx_root}/knn_lsh", q, k=5)
     kji_plan = plan_of(kji)
-    import re as _re
-
-    m = _re.search(r"InMemoryFileIndex\((\d+) paths\)", kji_plan)
+    m = re.search(r"InMemoryFileIndex\((\d+) paths\)", kji_plan)
     from doccrawler_spark.ops.similarity import _layout
 
     n_layout_dirs = sum(
@@ -188,17 +209,39 @@ def write_plans(tmp: str) -> None:
         f"{n_layout_dirs} layout dirs)"
     )
     # pruning is driver-side path addressing (the file index holds ONLY
-    # probed dirs) — there is no partition-filter pushdown to assert
-    # since r8's cogrouped scorer replaced the (band,key) equi-join
-    checks = ["FlatMapCoGroupsInPandas", "!CartesianProduct"]
+    # probed dirs) — there is no partition-filter pushdown to assert,
+    # since the bucket kernel, not a (band,key) equi-join, pairs sides
+    checks = kernel_checks + ["!FlatMapCoGroupsInPandas", "!CartesianProduct"]
     if m and int(m.group(1)) < n_layout_dirs:
         checks.append("InMemoryFileIndex(%s paths)" % m.group(1))
     sections.append((
         "knn_join_indexed (bulk ANN over the write-time (band,key) "
-        "layout: banded query batch cogrouped with the pruned bucket "
-        "scan) " + pruned_note,
-        kji_plan,
+        "layout: banded query batch unioned with the pruned bucket "
+        "scan into the shared bucket kernel) " + pruned_note,
+        kji_plan + "\n" + one_python_op_below_hash_exchange(kji_plan),
         checks,
+    ))
+
+    # 6d. chunk_documents: the url RANGE exchange sits below the
+    # chunker, so its sampler reads the scan, and the leaf sorts within
+    # partitions — no range exchange (and no second run of the Python
+    # stage) above MapInPandas
+    import __spark_entry__ as E
+
+    cd_plan = plan_of(E.queries()["chunk_documents"](spark, sf))
+    cd_tree = cd_plan[cd_plan.index("-- simple"):]
+    cd_py = cd_tree.find("MapInPandas")
+    range_below = (
+        cd_py >= 0 and "Exchange" not in cd_tree[:cd_py]
+        and "Exchange rangepartitioning(url" in cd_tree[cd_py:]
+    )
+    sections.append((
+        "chunk_documents (url range Exchange below the chunker's "
+        "MapInPandas, then a within-partition sort)",
+        cd_plan + "\n" + ("[ok] range Exchange below MapInPandas, none above"
+                          if range_below else
+                          "[bad] range Exchange not below MapInPandas only"),
+        ["MapInPandas", "[ok] range Exchange below MapInPandas", "![bad]"],
     ))
 
     # 7. minhash signatures: ONE md5 per TOKEN, shingle keys by integer

@@ -907,3 +907,29 @@ def test_crawl_compacts_on_done(spark, tmp_path):
     crawl(spark, web, seeds, os.path.join(str(tmp_path), "s2"),
           CrawlConfig(max_depth=3, max_rounds=1), timings=t2)
     assert "compact_sec" not in t2
+
+
+@pytest.mark.parametrize("ranged", (False, True), ids=("one_partition", "ranged"))
+def test_seed_frontier_priority_is_long(spark, tmp_path, monkeypatch, ranged):
+    """The seed round's ``frontier`` commits ``priority`` as ``long`` on
+    both sides of ``global_sequence``'s ``num_partitions`` gate (one
+    partition below 1000 seeds, a range exchange above), as every
+    later frontier does: a size gate must not change a column type."""
+    import json
+
+    from pyspark.sql.types import LongType, StructType
+
+    from doccrawler_spark import crawl as crawl_mod
+
+    real = crawl_mod.global_sequence
+
+    def forced(df, *a, num_partitions=None, **k):
+        return real(df, *a, num_partitions=None if ranged else 1, **k)
+
+    monkeypatch.setattr(crawl_mod, "global_sequence", forced)
+    web, _, _, seeds = _load(spark, tiny_spec())
+    catalog = crawl(spark, web, seeds, str(tmp_path / "snap"),
+                    CrawlConfig(max_depth=3, max_rounds=0))
+    schema = StructType.fromJson(
+        json.loads(catalog.manifest("frontier", 0)["schema"]))
+    assert schema["priority"].dataType == LongType()

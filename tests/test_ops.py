@@ -946,3 +946,34 @@ def test_ann_tolerates_zero_norm_vectors(spark):
 
     pairs = embedding_neardup_pairs(emb, threshold=-1.0).collect()
     assert all(99 not in (r["vec_a"], r["vec_b"]) for r in pairs)
+
+
+def test_bucket_kernel_width_follows_input_size(spark, monkeypatch):
+    """The bucket kernel's exchange is sized from the input estimate:
+    one partition per core when small, one per 64 MB when large, and
+    the session's shuffle width when stats are unknown.  The width
+    never changes the rows."""
+    import random
+    import re
+
+    from doccrawler_spark.ops import dedup
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>")
+    cores = spark.sparkContext.defaultParallelism
+    want = sorted(dedup.embedding_neardup_pairs(
+        emb, threshold=0.5, n_bands=2, band_bits=4).collect())
+    assert want
+    big = (64 << 20) * (cores + 3)
+    for size, width in [(1 << 10, cores), (big, cores + 3),
+                        (1 << 62, max(cores, 8))]:
+        monkeypatch.setattr(dedup, "_plan_bytes", lambda df, s=size: s)
+        assert dedup._shuffle_width(emb) == width
+        out = dedup.embedding_neardup_pairs(emb, threshold=0.5, n_bands=2,
+                                            band_bits=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert re.findall(r"hashpartitioning\(band#\d+, key#\d+, (\d+)\)",
+                          plan) == [str(width)]
+        assert sorted(out.collect()) == want

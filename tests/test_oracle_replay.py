@@ -1,10 +1,11 @@
 """Driver queries vs their DuckDB ``oracle_sql()`` replay on synthesized
 edge-case tables: NULL, empty, whitespace-only and non-ASCII text with
-planted duplicates, and embeddings with zero-norm vectors (one of
-them a knn_join query) and a near-dup cluster.  No testdata tier
-carries any of these, so the tables are written here; each leaf must
-return exactly the rows the oracle computes over the same parquet
-files."""
+planted duplicates, and embeddings with zero-norm vectors and a NULL
+one (both among the knn_join queries) and a near-dup cluster.  No
+testdata tier carries any of these, so the tables are written here;
+each leaf must return exactly the rows the oracle computes over the
+same parquet files, on both sides of the ``_fan_out`` gate and with
+LSH buckets straddling Arrow batches."""
 
 import math
 import os
@@ -68,9 +69,13 @@ def _embeddings() -> pd.DataFrame:
     # vec_id 0 is zero-norm too: knn_join's 5 queries are the lowest
     # vec_ids, so one of them has no neighbour at all
     vecs.insert(0, [0.0] * dim)
+    # vec_id 2 is NULL: no cosine (DuckDB's list_dot_product is NULL),
+    # so no pair and, as a query, no neighbour
+    vecs.insert(2, None)
     return pd.DataFrame({
         "vec_id": pd.Series(range(len(vecs)), dtype="int64"),
-        "embedding": [[float(x) for x in v] for v in vecs],
+        "embedding": [[float(x) for x in v] if v is not None else None
+                      for v in vecs],
         "label": pd.Series([i % 4 for i in range(len(vecs))],
                            dtype="int32"),
     })
@@ -105,21 +110,104 @@ def _rows(pdf: pd.DataFrame, cols) -> list:
     return sorted(rows, key=lambda r: tuple((x is None, str(x)) for x in r))
 
 
-@pytest.mark.parametrize("leaf", LEAVES)
-def test_query_equals_oracle_replay(spark, edge_dir, leaf):
+def _oracle(edge_dir, leaf) -> pd.DataFrame:
     import duckdb
 
     import __spark_entry__ as E
 
-    got = E.queries()[leaf](spark, edge_dir).toPandas()
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"'{os.path.join(edge_dir, t + '.parquet')}'")
     want = con.execute(E.oracle_sql()[leaf]).fetchdf()
     con.close()
+    return want
 
+
+def _assert_replay(spark, edge_dir, leaf):
+    import __spark_entry__ as E
+
+    got = E.queries()[leaf](spark, edge_dir).toPandas()
+    want = _oracle(edge_dir, leaf)
     cols = list(got.columns)
     assert sorted(cols) == sorted(want.columns)
     assert len(want) > 0, f"{leaf}: oracle returned no rows"
     assert _rows(got, cols) == _rows(want, cols)
+
+
+@pytest.mark.parametrize("leaf", LEAVES)
+def test_query_equals_oracle_replay(spark, edge_dir, leaf):
+    _assert_replay(spark, edge_dir, leaf)
+
+
+# the leaves whose plan passes through dedup._fan_out
+FAN_OUT_LEAVES = ("exact_dedup", "simhash", "ngram_jaccard", "minhash_lsh",
+                  "minhash_verified")
+
+
+@pytest.mark.parametrize("way", ("spread", "pass"))
+@pytest.mark.parametrize("leaf", FAN_OUT_LEAVES)
+def test_fan_out_gate_is_invisible(spark, edge_dir, leaf, way, monkeypatch):
+    """``_fan_out`` is a size gate: spreading the input or passing it
+    through must return the same rows — forced each way here, since
+    the edge tables alone only ever take the spreading branch."""
+    from doccrawler_spark.ops import dedup
+
+    calls = []
+
+    def forced(df, *cols):
+        calls.append(cols)
+        if way == "pass":
+            return df
+        n = df.sparkSession.sparkContext.defaultParallelism
+        return df.repartition(n, *cols) if cols else df.repartition(n)
+
+    monkeypatch.setattr(dedup, "_fan_out", forced)
+    _assert_replay(spark, edge_dir, leaf)
+    assert calls, f"{leaf} never reached _fan_out"
+
+
+def test_bucket_kernel_runs_straddle_arrow_batches(spark, edge_dir):
+    """The LSH bucket kernel walks sorted runs across Arrow batches and
+    carries an open run into the next batch.  With 3 rows per batch
+    every bucket of more than 3 rows (the 6-vector near-dup cluster
+    shares all its buckets) straddles a boundary; near-dup pairs and
+    knn_join (salted and unsalted) must not change, and must equal
+    the oracle."""
+    from pyspark.sql import functions as F
+
+    from doccrawler_spark.ops.dedup import embedding_neardup_pairs
+    from doccrawler_spark.ops.similarity import knn_join
+
+    emb = spark.read.parquet(os.path.join(edge_dir, "embeddings.parquet"))
+    q = emb.orderBy("vec_id").limit(5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
+
+    def results():
+        nd = embedding_neardup_pairs(emb, threshold=0.3).toPandas()
+        out = {"embedding_neardup": _rows(nd, ["vec_a", "vec_b", "cosine"])}
+        for salted in (False, True):
+            kj = knn_join(emb, q, k=5, n_bits=4, n_tables=4, salt=4,
+                          salted=salted).toPandas()
+            out[f"knn_join salted={salted}"] = _rows(
+                kj, ["q_id", "vec_id", "rank", "cosine"])
+        return out
+
+    default = results()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "3")
+    try:
+        small = results()
+    finally:
+        spark.conf.unset(key)
+    assert small == default
+    # the cluster's 15 pairs come from buckets of ≥ 6 rows
+    assert len(default["embedding_neardup"]) >= 15
+
+    want = _oracle(edge_dir, "embedding_neardup")
+    assert default["embedding_neardup"] == _rows(
+        want, ["vec_a", "vec_b", "cosine"])
+    want = _rows(_oracle(edge_dir, "knn_join"),
+                 ["q_id", "vec_id", "rank", "cosine"])
+    assert default["knn_join salted=False"] == want
+    assert default["knn_join salted=True"] == want
